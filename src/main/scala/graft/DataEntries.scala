@@ -268,8 +268,14 @@ object DataEntries {
         graft.index.Reorder.sortedWrite(
           docs(s, dir).select("doc_id", "n_chars"), "n_chars",
           bucketWidth = 100L, path)
-        java.nio.file.Files.write(marker.toPath,
+        // the overwrite cleared the store, stale marker included; the new
+        // marker lands whole by rename, so a crash leaves none or this one
+        require(!marker.exists(), s"sorted store $path kept a marker through its rewrite")
+        val tmp = new java.io.File(s"$path/_corpus_id.tmp")
+        java.nio.file.Files.write(tmp.toPath,
           ident.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.move(tmp.toPath, marker.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
       graft.index.Reorder.sortedTopK(s, path, "n_chars", "doc_id", 25)
         .select(col("doc_id"), col("n_chars"))

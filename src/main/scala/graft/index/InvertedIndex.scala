@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 
@@ -65,6 +66,11 @@ case class BuildBlock(
 )
 
 case class CorpusStats(doc_count: Long, sum_dl: Long, avgdl: Double)
+
+/** What one build wrote: row counts of its postings (kind 0), doc-length
+ *  (kind 1) and term-stats tables, and the wall time of the blocks write and
+ *  of the termstats write. */
+case class WriteReport(postings: Long, docLens: Long, termStats: Long, blocksMs: Long, termStatsMs: Long)
 
 /** In-memory handle on a built index. */
 case class Index(
@@ -328,15 +334,15 @@ object InvertedIndex {
    * so the write-then-derive ordering IS the optimization.)
    */
   def buildAndWrite(docs: DataFrame, idCol: String, textCol: String, dir: String,
-                    analyzer: String = Analyzer.Simple): Index = {
+                    analyzer: String = Analyzer.Simple): Index =
+    buildAndWriteReport(docs, idCol, textCol, dir, analyzer)._1
+
+  /** [[buildAndWrite]], also returning the row counts of the tables it wrote
+   *  and the wall time of each write, all taken from the write jobs. */
+  private[graft] def buildAndWriteReport(docs: DataFrame, idCol: String, textCol: String,
+                                         dir: String, analyzer: String): (Index, WriteReport) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    def phase[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[graft-build] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     // ONE job does tokenize + fragment shuffle + the kind-partitioned block
     // write — no persist and no separate materialize pass. The earlier
     // cache-then-derive design paid the whole pipeline twice (once into the
@@ -350,22 +356,24 @@ object InvertedIndex {
     // touches the payload bytes. Rows are pre-sorted (kind, term, bucket)
     // inside each task so the dynamic partitioning needs no extra sort and
     // term row-group stats stay tight for the read-side seek.
-    // Corpus stats ride the SAME job as the block write: an `observe`
-    // (CollectMetrics — Spark's exactly-once job-level aggregate, safe under
-    // task retries where accumulators are not) sums the kind=1 metadata
-    // columns as the rows stream into parquet. That removes one of the two
-    // post-write stats jobs entirely — at bench scale those jobs are
-    // fixed-overhead (~1 s each regardless of core count), i.e. pure serial
-    // tail that erodes N->4N wall scaling; at 10^12 docs it is one fewer
-    // full re-listing of the block store.
+    // Corpus stats and the per-kind row counts ride the SAME job as the
+    // block write: an `observe` (CollectMetrics — Spark's exactly-once
+    // job-level aggregate, safe under task retries where accumulators are
+    // not) sums the metadata columns as the rows stream into parquet. At
+    // bench scale a post-write stats or count job is fixed overhead (~1 s
+    // regardless of core count), i.e. pure serial tail that erodes N->4N
+    // wall scaling; at 10^12 docs each is a full re-listing of the store.
+    val tallies = Seq(
+      sum(when($"kind" === 1, $"cnt").otherwise(0L)).as("n"),
+      sum(when($"kind" === 1, $"sum_tf").otherwise(0L)).as("sd"),
+      count(when($"kind" === 0, 1)).as("postings"),
+      count(when($"kind" === 1, 1)).as("doclens"))
     val obs = new org.apache.spark.sql.Observation("graft-corpus-stats")
-    phase("blocks")(mergedBlocksOf(docs, idCol, textCol, analyzer)
-      .observe(obs,
-        sum(when($"kind" === 1, $"cnt").otherwise(0L)).as("n"),
-        sum(when($"kind" === 1, $"sum_tf").otherwise(0L)).as("sd"))
+    val blocksMs = timedMs(mergedBlocksOf(docs, idCol, textCol, analyzer)
+      .observe(obs, tallies.head, tallies.tail: _*)
       .sortWithinPartitions("kind", "term", "bucket")
       .write.mode("overwrite").partitionBy("kind").parquet(s"$dir/blocks"))
-    val meta = spark.read.parquet(s"$dir/blocks")
+    val meta = table[BuildBlock](spark, s"$dir/blocks")
       .select($"kind", $"term", $"cnt", $"sum_tf")
     // the remaining derived tables are independent metadata-scale jobs:
     // commit them concurrently so the post-write tail is max(), not sum()
@@ -373,36 +381,58 @@ object InvertedIndex {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     import scala.concurrent.{Await, Future}
-    val fTs = Future(phase("termstats")(meta.filter($"kind" === 0)
-      .groupBy($"term").agg(sum($"cnt").as("df"), sum($"sum_tf").as("ttf"))
-      .as[TermStat]
-      .write.mode("overwrite").parquet(s"$dir/termstats")))
-    val fStats = Future(phase("stats") {
-      // the listener bus delivers observed metrics asynchronously after the
-      // write returns: await briefly, then fall back to the metadata scan
-      val observed = try {
-        val row = Await.result(obs.future, scala.concurrent.duration.Duration(2, "s"))
-        if (row.isNullAt(0)) None
-        else Some((row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1)))
-      } catch { case _: java.util.concurrent.TimeoutException => None }
-      val (n, sd) = observed.getOrElse {
-        val row = meta.filter($"kind" === 1).agg(sum($"cnt"), sum($"sum_tf"))
-          .as[(Option[Long], Option[Long])].head()
-        (row._1.getOrElse(0L), row._2.getOrElse(0L))
-      }
+    val fTs = Future {
+      val tsObs = new org.apache.spark.sql.Observation("graft-termstats-rows")
+      val ms = timedMs(meta.filter($"kind" === 0)
+        .groupBy($"term").agg(sum($"cnt").as("df"), sum($"sum_tf").as("ttf"))
+        .observe(tsObs, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$dir/termstats"))
+      val rows = observed(tsObs).map(_.getLong(0))
+        .getOrElse(table[TermStat](spark, s"$dir/termstats").count())
+      (rows, ms)
+    }
+    val fStats = Future {
+      // an observation that does not arrive (or saw no rows) falls back to
+      // one scan of the metadata columns
+      val row = observed(obs).filterNot(_.isNullAt(0))
+        .getOrElse(meta.agg(tallies.head, tallies.tail: _*).head())
+      def long(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
+      val (n, sd) = (long(0), long(1))
       val st = CorpusStats(n, sd, if (n == 0) 0.0 else sd.toDouble / n)
       Seq(st).toDS().write.mode("overwrite").parquet(s"$dir/stats")
-      st
-    })
-    val stats = try {
-      Await.result(fTs, scala.concurrent.duration.Duration.Inf)
-      Await.result(fStats, scala.concurrent.duration.Duration.Inf)
+      (st, long(2), long(3))
+    }
+    val ((tsRows, tsMs), (stats, postingRows, docLenRows)) = try {
+      (Await.result(fTs, scala.concurrent.duration.Duration.Inf),
+        Await.result(fStats, scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
-    Index(
+    (Index(
       postingsFromDir(spark, dir),
       docLensFromDir(spark, dir),
-      spark.read.parquet(s"$dir/termstats").as[TermStat],
-      stats, analyzer)
+      table[TermStat](spark, s"$dir/termstats"),
+      stats, analyzer),
+      WriteReport(postingRows, docLenRows, tsRows, blocksMs, tsMs))
+  }
+
+  private def timedMs(f: => Unit): Long = {
+    val t0 = System.nanoTime()
+    f
+    (System.nanoTime() - t0) / 1000000
+  }
+
+  /** The listener bus delivers observed metrics asynchronously after the
+   *  action returns: wait briefly; None sends the caller to a scan. */
+  private def observed(obs: org.apache.spark.sql.Observation): Option[org.apache.spark.sql.Row] =
+    try Some(scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration(2, "s")))
+    catch { case _: java.util.concurrent.TimeoutException => None }
+
+  /** One of the index's own parquet tables, read with the schema of its row
+   *  class. A read given no schema runs a Spark job to read the file
+   *  footers; every table the index writes has a row class, so none needs
+   *  that job. */
+  private[graft] def table[T <: Product : TypeTag](spark: SparkSession, paths: String*): Dataset[T] = {
+    val enc = Encoders.product[T]
+    spark.read.schema(enc.schema).parquet(paths: _*).as[T](enc)
   }
 
   /** Does `dir` hold the unified kind-partitioned block table (current
@@ -419,10 +449,10 @@ object InvertedIndex {
   def postingsFromDir(spark: SparkSession, dir: String): Dataset[PostingBlock] = {
     import spark.implicits._
     if (hasUnifiedBlocks(spark, dir))
-      spark.read.parquet(s"$dir/blocks").filter(col("kind") === 0)
+      table[BuildBlock](spark, s"$dir/blocks").filter(col("kind") === 0)
         .select(col("term"), col("bucket"), col("cnt"), col("max_tf"),
           col("sum_tf"), col("docs"), col("tfs")).as[PostingBlock]
-    else spark.read.parquet(s"$dir/postings").as[PostingBlock]
+    else table[PostingBlock](spark, s"$dir/postings")
   }
 
   /** Doc-length view over an on-disk index dir (kind=1 partition or the
@@ -430,10 +460,10 @@ object InvertedIndex {
   def docLensFromDir(spark: SparkSession, dir: String): Dataset[DocLenBlock] = {
     import spark.implicits._
     if (hasUnifiedBlocks(spark, dir))
-      spark.read.parquet(s"$dir/blocks").filter(col("kind") === 1)
+      table[BuildBlock](spark, s"$dir/blocks").filter(col("kind") === 1)
         .select(col("bucket"), col("cnt"), col("min_v").as("min_dl"),
           col("docs").as("ids"), col("tfs").as("dls")).as[DocLenBlock]
-    else spark.read.parquet(s"$dir/doclens").as[DocLenBlock]
+    else table[DocLenBlock](spark, s"$dir/doclens")
   }
 
   /** Persist all index tables (sorted by term so Parquet row-group min/max
@@ -448,15 +478,12 @@ object InvertedIndex {
     Seq(idx.stats).toDS().write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  def read(spark: SparkSession, dir: String, analyzer: String = Analyzer.Simple): Index = {
-    import spark.implicits._
-    val stats = spark.read.parquet(s"$dir/stats").as[CorpusStats].head()
+  def read(spark: SparkSession, dir: String, analyzer: String = Analyzer.Simple): Index =
     Index(
       postingsFromDir(spark, dir),
       docLensFromDir(spark, dir),
-      spark.read.parquet(s"$dir/termstats").as[TermStat],
-      stats,
+      table[TermStat](spark, s"$dir/termstats"),
+      table[CorpusStats](spark, s"$dir/stats").head(),
       analyzer
     )
-  }
 }

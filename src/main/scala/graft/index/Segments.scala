@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 
@@ -16,7 +16,10 @@ import graft.analysis.Analyzer
  * rows; min/max/count-distinct are single-pass partial aggregates).
  */
 /** Per-stage build metrics committed with each segment (north rule:
- *  "resumable from checkpoint with per-partition lineage + metrics"). */
+ *  "resumable from checkpoint with per-partition lineage + metrics"):
+ *  `rows` of the stage's table and `wall_ms` of the write that produced it,
+ *  both taken from that write job (postings and doc lengths share the
+ *  blocks write). */
 case class SegmentMetric(segment_id: Int, stage: String, rows: Long, wall_ms: Long)
 
 case class SegmentLineage(
@@ -46,6 +49,9 @@ case class SegmentLineage(
  *    reference's `mergeState.docMaps` exists only because Lucene renumbers);
  *    merging = union of block Datasets + one (term, bucket) shuffle that
  *    re-encodes only the boundary buckets two segments share;
+ *  - merged term stats are the per-term sums of the segments' own `termstats`
+ *    tables: segments hold disjoint doc ranges, so df and ttf add up and the
+ *    merge never re-aggregates the merged postings;
  *  - resume: a segment is committed iff its lineage row exists AND matches
  *    the recomputed range stats; `buildResumable` skips committed segments,
  *    so a killed run redoes only the in-flight slice.
@@ -67,6 +73,30 @@ object Segments {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
+  /** Content checksums of one segment's rows and the doc ids they span:
+   *  the lineage row's sha columns, plus the bounds a segment with unknown
+   *  range (a streamed micro-batch) records as its row range. */
+  private[graft] case class Digest(id_min: Long, id_max: Long,
+                                   sha_min: String, sha_max: String, sha_distinct: Long)
+
+  /** The digest of a segment with no rows. */
+  private val EmptyDigest = Digest(0L, 0L, null, null, 0L)
+
+  /** Digests of many segments in ONE grouped aggregate: every row of `docs`
+   *  belongs to the segment `seg` names. A segment with no rows gets no
+   *  entry. */
+  private[graft] def digests(docs: DataFrame, idCol: String, textCol: String,
+                             seg: Column): Map[Int, Digest] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(seg.cast("int").as("seg"), col(idCol).cast("long").as("id"),
+        sha2(col(textCol), 256).as("sha"))
+      .groupBy($"seg")
+      .agg(min($"id"), max($"id"), min($"sha"), max($"sha"), countDistinct($"sha"))
+      .as[(Int, Long, Long, String, String, Long)].collect()
+      .map { case (s, lo, hi, mn, mx, nd) => s -> Digest(lo, hi, mn, mx, nd) }.toMap
+  }
+
   /** Build ONE segment (docs with doc_id in [lo, hi]) and commit it with its
    *  lineage row. Idempotent: overwrite-mode writes + lineage-last ordering
    *  make the commit atomic at the segment granularity. */
@@ -79,25 +109,32 @@ object Segments {
       id: Int,
       lo: Long,
       hi: Long
-  ): SegmentLineage = {
+  ): SegmentLineage =
+    buildSegmentWith(docs, idCol, textCol, analyzer, dir, id, lo, hi,
+      digests(docs.filter(inSlice(col(idCol), lo, hi)), idCol, textCol, lit(id))
+        .getOrElse(id, EmptyDigest))
+
+  /** The slice filter of segment [lo, hi]. */
+  private def inSlice(id: Column, lo: Long, hi: Long): Column = id >= lo && id <= hi
+
+  /** [[buildSegment]] with its content digest supplied by the caller; it is
+   *  awaited only after the segment's tables are written. */
+  private def buildSegmentWith(docs: DataFrame, idCol: String, textCol: String,
+                               analyzer: String, dir: String, id: Int, lo: Long, hi: Long,
+                               digest: => Digest): SegmentLineage = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val slice = docs.filter(col(idCol) >= lo && col(idCol) <= hi)
-    val t0 = System.currentTimeMillis()
-    val idx = InvertedIndex.buildAndWrite(slice, idCol, textCol, segDir(dir, id), analyzer)
-    val buildMs = System.currentTimeMillis() - t0
+    val slice = docs.filter(inSlice(col(idCol), lo, hi))
+    val (idx, rep) = InvertedIndex.buildAndWriteReport(slice, idCol, textCol, segDir(dir, id), analyzer)
     Seq(
-      SegmentMetric(id, "postings", idx.postings.count(), buildMs),
-      SegmentMetric(id, "doclens", idx.docLens.count(), buildMs),
-      SegmentMetric(id, "termstats", idx.termStats.count(), buildMs)
+      SegmentMetric(id, "postings", rep.postings, rep.blocksMs),
+      SegmentMetric(id, "doclens", rep.docLens, rep.blocksMs),
+      SegmentMetric(id, "termstats", rep.termStats, rep.termStatsMs)
     ).toDS().write.mode("overwrite").parquet(s"${segDir(dir, id)}/metrics")
 
-    val sha = slice
-      .select(sha2(col(textCol), 256).as("sha"))
-      .agg(min($"sha").as("mn"), max($"sha").as("mx"), countDistinct($"sha").as("nd"))
-      .as[(String, String, Long)].head()
+    val d = digest
     val lineage = SegmentLineage(id, lo, hi, idx.stats.doc_count, idx.stats.sum_dl,
-      sha._1, sha._2, sha._3)
+      d.sha_min, d.sha_max, d.sha_distinct)
     Seq(lineage).toDS().write.mode("overwrite").parquet(s"${segDir(dir, id)}/lineage")
     lineage
   }
@@ -128,8 +165,8 @@ object Segments {
     val actions = lineage.toSeq.sortBy(_._1).map { case (id, lin) =>
       val dst = new org.apache.hadoop.fs.Path(s"$repoDir/$name/seg$id")
       val already = fsExists(spark, s"$repoDir/$name/seg$id/lineage") &&
-        scala.util.Try(spark.read.parquet(s"$repoDir/$name/seg$id/lineage")
-          .as[SegmentLineage].head()).toOption.contains(lin)
+        scala.util.Try(InvertedIndex.table[SegmentLineage](spark,
+          s"$repoDir/$name/seg$id/lineage").head()).toOption.contains(lin)
       if (already) SnapshotAction(id, "skipped")
       else {
         fs.delete(dst, true)
@@ -157,15 +194,15 @@ object Segments {
     import spark.implicits._
     val manifestPath = s"$repoDir/$name/manifest"
     require(fsExists(spark, manifestPath), s"no snapshot [$name] in $repoDir")
-    val manifest = spark.read.parquet(manifestPath).as[SegmentLineage]
+    val manifest = InvertedIndex.table[SegmentLineage](spark, manifestPath)
       .collect().sortBy(_.segment_id)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dstDir).getFileSystem(conf)
     val actions = manifest.toSeq.map { lin =>
       val id = lin.segment_id
       val present = fsExists(spark, s"${segDir(dstDir, id)}/lineage") &&
-        scala.util.Try(spark.read.parquet(s"${segDir(dstDir, id)}/lineage")
-          .as[SegmentLineage].head()).toOption.contains(lin)
+        scala.util.Try(InvertedIndex.table[SegmentLineage](spark,
+          s"${segDir(dstDir, id)}/lineage").head()).toOption.contains(lin)
       if (present) SnapshotAction(id, "present")
       else {
         val dst = new org.apache.hadoop.fs.Path(segDir(dstDir, id))
@@ -179,8 +216,8 @@ object Segments {
     // verification: every manifest row must now be readable at the target
     // and equal the manifest's lineage (content checksums included)
     manifest.foreach { lin =>
-      val got = spark.read.parquet(s"${segDir(dstDir, lin.segment_id)}/lineage")
-        .as[SegmentLineage].head()
+      val got = InvertedIndex.table[SegmentLineage](spark,
+        s"${segDir(dstDir, lin.segment_id)}/lineage").head()
       require(got == lin,
         s"restore verification failed for segment ${lin.segment_id}: $got != $lin")
     }
@@ -188,25 +225,27 @@ object Segments {
   }
 
   /** Metrics rows of all committed segments under `dir`. */
-  def readMetrics(spark: SparkSession, dir: String, nSegments: Int): Seq[SegmentMetric] = {
-    import spark.implicits._
-    (0 until nSegments).flatMap { id =>
-      val p = s"${segDir(dir, id)}/metrics"
-      if (fsExists(spark, p))
-        scala.util.Try(spark.read.parquet(p).as[SegmentMetric].collect().toSeq).getOrElse(Nil)
-      else Nil
-    }
-  }
+  def readMetrics(spark: SparkSession, dir: String, nSegments: Int): Seq[SegmentMetric] =
+    readAll[SegmentMetric](spark, (0 until nSegments).map(id => s"${segDir(dir, id)}/metrics"))
+      .sortBy(_.segment_id)
 
   /** Lineage rows of all committed segments under `dir` (empty if none). */
-  def readLineage(spark: SparkSession, dir: String, nSegments: Int): Map[Int, SegmentLineage] = {
-    import spark.implicits._
-    (0 until nSegments).flatMap { id =>
-      val p = s"${segDir(dir, id)}/lineage"
-      if (fsExists(spark, p))
-        scala.util.Try(spark.read.parquet(p).as[SegmentLineage].head()).toOption
-      else None
-    }.map(l => l.segment_id -> l).toMap
+  def readLineage(spark: SparkSession, dir: String, nSegments: Int): Map[Int, SegmentLineage] =
+    lineageOf(spark, (0 until nSegments).map(id => s"${segDir(dir, id)}/lineage"))
+
+  private def lineageOf(spark: SparkSession, paths: Seq[String]): Map[Int, SegmentLineage] =
+    readAll[SegmentLineage](spark, paths).map(l => l.segment_id -> l).toMap
+
+  /** The rows of every existing table among `paths`, in one read. Should that
+   *  read fail (an unreadable table), each table is read alone and the
+   *  unreadable ones count as absent. */
+  private def readAll[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, paths: Seq[String]): Seq[T] = {
+    val present = paths.filter(fsExists(spark, _))
+    if (present.isEmpty) Nil
+    else scala.util.Try(InvertedIndex.table[T](spark, present: _*).collect().toSeq)
+      .getOrElse(present.flatMap(p =>
+        scala.util.Try(InvertedIndex.table[T](spark, p).collect().toSeq).getOrElse(Nil)))
   }
 
   /**
@@ -223,7 +262,9 @@ object Segments {
       nSegments: Int
   ): Seq[Int] = {
     val spark = docs.sparkSession
-    val maxId = docs.agg(max(col(idCol))).head().getLong(0)
+    val maxRow = docs.agg(max(col(idCol))).head()
+    if (maxRow.isNullAt(0)) return Nil
+    val maxId = maxRow.getLong(0)
     val sp = span(maxId, nSegments)
     // a segment is committed iff its lineage exists AND its recorded row
     // range matches the range THIS run would assign it — a rerun with a
@@ -237,20 +278,30 @@ object Segments {
     val todo = (0 until nSegments).filterNot(done.contains)
     // segments are independent slices: build them as concurrent Spark jobs
     // (the analogue of the reference's parallel per-segment flushes on the
-    // seismic thread pool, plugin/NeuralSearch.java:296-308)
+    // seismic thread pool, plugin/NeuralSearch.java:296-308). The content
+    // digests of all of them are ONE grouped aggregate, submitted first so
+    // it owns a thread of its own and runs alongside the builds, which
+    // await it only to write their lineage. A row's segment is id div span
+    // on [0, maxId], which gives each segment exactly the rows its slice
+    // filter selects; rows outside [0, maxId] belong to none.
     if (todo.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, todo.size))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, todo.size) + 1)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      val seg = call_function("div", col(idCol), lit(sp))
+      val fDigests = Future(digests(
+        docs.filter(inSlice(col(idCol), 0L, maxId) && seg.isin(todo: _*)), idCol, textCol, seg))
       val fs = todo.map { id =>
         Future {
           val lo = id.toLong * sp
           val hi = math.min(lo + sp - 1, maxId)
-          buildSegment(docs, idCol, textCol, analyzer, dir, id, lo, hi)
+          buildSegmentWith(docs, idCol, textCol, analyzer, dir, id, lo, hi,
+            Await.result(fDigests, Duration.Inf).getOrElse(id, EmptyDigest))
         }
       }
-      try Await.result(Future.sequence(fs), scala.concurrent.duration.Duration.Inf)
+      try Await.result(Future.sequence(fs), Duration.Inf)
       finally pool.shutdown()
     }
     todo
@@ -260,7 +311,7 @@ object Segments {
    * Merge committed segments into one global Index. One (term, bucket)
    * shuffle over block rows — every group is <= nSegments blocks of <= 4096
    * postings, so merge work per reducer is bounded regardless of corpus
-   * size; term stats re-aggregate from the merged blocks (partial+final).
+   * size; term stats are the per-term sums of the segments' term stats.
    */
   def merge(spark: SparkSession, dir: String, nSegments: Int, analyzer: String = Analyzer.Simple): Index = {
     val lineage = readLineage(spark, dir, nSegments)
@@ -380,14 +431,12 @@ object Segments {
         s"tieredCompact verification failed for merged segment $nextId: " +
           s"re-derived (docs=$gotN, sum_dl=$gotDl) != member sums (docs=$wantN, sum_dl=$wantDl)")
 
-      val inRange = members.map(l => col(idCol).between(l.row_lo, l.row_hi))
+      val inRange = members.map(l => inSlice(col(idCol), l.row_lo, l.row_hi))
         .reduce(_ || _)
-      val sha = docs.filter(inRange)
-        .select(sha2(col(textCol), 256).as("sha"))
-        .agg(min($"sha").as("mn"), max($"sha").as("mx"), countDistinct($"sha").as("nd"))
-        .as[(String, String, Long)].head()
+      val sha = digests(docs.filter(inRange), idCol, textCol, lit(nextId))
+        .getOrElse(nextId, EmptyDigest)
       val lin = SegmentLineage(nextId, members.map(_.row_lo).min,
-        members.map(_.row_hi).max, gotN, gotDl, sha._1, sha._2, sha._3)
+        members.map(_.row_hi).max, gotN, gotDl, sha.sha_min, sha.sha_max, sha.sha_distinct)
       Seq(lin).toDS().write.mode("overwrite").parquet(s"$out/lineage")
       Seq(SegmentMetric(nextId, "compact_merge", gotN, 0L))
         .toDS().write.mode("overwrite").parquet(s"$out/metrics")
@@ -402,18 +451,16 @@ object Segments {
    *  the shape the streaming/incremental path needs, where segment ids are
    *  micro-batch ids with possible gaps. */
   def mergeAll(spark: SparkSession, dir: String, analyzer: String = Analyzer.Simple): Index = {
-    import spark.implicits._
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids =
+    val dirIds =
       (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
         .filter(st => st.isDirectory && st.getPath.getName.matches("seg\\d+"))
-        .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "lineage")))
         .map(_.getPath.getName.drop(3).toInt).sorted
+    val lineage = lineageOf(spark, dirIds.map(id => s"${segDir(dir, id)}/lineage"))
+    val ids = dirIds.filter(lineage.contains)
     require(ids.nonEmpty, s"mergeAll: no committed segments under $dir")
-    val lineage = ids.map(id =>
-      spark.read.parquet(s"${segDir(dir, id)}/lineage").as[SegmentLineage].head())
-    mergeIds(spark, dir, ids, lineage, analyzer)
+    mergeIds(spark, dir, ids, ids.map(lineage), analyzer)
   }
 
   private def mergeIds(spark: SparkSession, dir: String, ids: Seq[Int],
@@ -468,8 +515,10 @@ object Segments {
         }
       }
 
-    val termStats = postings.groupBy($"term")
-      .agg(sum($"cnt").as("df"), sum($"sum_tf").as("ttf")).as[TermStat]
+    // segments hold disjoint doc ranges: df and ttf are sums over segments
+    val termStats = ids.map(id => InvertedIndex.table[TermStat](spark, s"${segDir(dir, id)}/termstats"))
+      .reduce(_ union _)
+      .groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf")).as[TermStat]
 
     val docCount = lineage.map(_.doc_count).sum
     val sumDl = lineage.map(_.sum_dl).sum

@@ -71,13 +71,12 @@ object StreamingIndex {
       import spark2.implicits._
       val id = batchId.toInt
       val dir = s"$storeDir/seg$id"
-      val bounds = batch.agg(min(col(idCol)), max(col(idCol))).head()
       val idx = InvertedIndex.buildAndWrite(batch, idCol, textCol, dir, analyzer)
-      val sha = batch.select(sha2(col(textCol), 256).as("sha"))
-        .agg(min($"sha"), max($"sha"), countDistinct($"sha")).head()
-      Seq(SegmentLineage(id, bounds.getLong(0), bounds.getLong(1),
+      // the batch's id range is not known up front: its digest records it
+      val d = Segments.digests(batch, idCol, textCol, lit(id))(id)
+      Seq(SegmentLineage(id, d.id_min, d.id_max,
         idx.stats.doc_count, idx.stats.sum_dl,
-        sha.getString(0), sha.getString(1), sha.getLong(2)))
+        d.sha_min, d.sha_max, d.sha_distinct))
         .toDS().write.mode("overwrite").parquet(s"$dir/lineage")
     }
 

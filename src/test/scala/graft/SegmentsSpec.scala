@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.corpus.Corpus
-import graft.index.{InvertedIndex, PostingCodec, Segments}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.index.{InvertedIndex, PostingCodec, Segments, TermStat}
 import graft.query.Bm25
 
 /** Segmented build + merge + lineage/resume semantics (north rule: merge
@@ -13,6 +14,10 @@ class SegmentsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val docs = spark.read.parquet(s"$dir/documents.parquet")
+
+  /** 36 jobs measured at local[4] with 4 shuffle partitions; the headroom
+   *  covers the fallback scans of build observations that arrive late. */
+  private val SegmentedJobBudget = 44
 
   private def decodedPostings(idx: graft.index.Index): Map[(String, Long, Int), Int] =
     idx.postings.collect().flatMap { b =>
@@ -27,6 +32,46 @@ class SegmentsSpec extends SparkSpec {
     d
   }
 
+  private def statsMap(ts: org.apache.spark.sql.Dataset[TermStat]): Map[String, (Long, Long)] =
+    ts.collect().map(t => t.term -> (t.df, t.ttf)).toMap
+
+  /** Merged term stats (sums of the segments' term stats) against term
+   *  stats aggregated from the merged postings. */
+  private def assertTermStatsFromPostings(merged: graft.index.Index): Unit = {
+    val got = statsMap(merged.termStats)
+    assert(got.nonEmpty)
+    assert(got == statsMap(InvertedIndex.termStatsOf(merged.postings)))
+  }
+
+  /** The Spark jobs `f` starts. Listener events arrive asynchronously, so
+   *  a marker job before and after `f` brackets them: the count closes
+   *  once the listener has seen the second marker. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"segspec-marker-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markers = new java.util.concurrent.atomic.AtomicInteger
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == tag)) {
+          if (markers.incrementAndGet() == 2) closed.countDown()
+        } else if (markers.get == 1) jobs.incrementAndGet()
+    }
+    def marker(): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker()
+      val r = f
+      marker()
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener missed a marker job")
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("merge of 3 segments is identical to the single-shot build") {
     val store = freshStore()
     val built = Segments.buildResumable(docs, "doc_id", "text", Analyzer.Simple, store, 3)
@@ -39,6 +84,7 @@ class SegmentsSpec extends SparkSpec {
     val mStats = merged.termStats.collect().map(t => t.term -> (t.df, t.ttf)).toMap
     val fStats = full.termStats.collect().map(t => t.term -> (t.df, t.ttf)).toMap
     assert(mStats == fStats)
+    assertTermStatsFromPostings(Segments.mergeAll(spark, store))
   }
 
   test("BM25 top-k over merged segments matches the single-shot index") {
@@ -189,5 +235,91 @@ class SegmentsSpec extends SparkSpec {
     val repo = freshStore(); val back = freshStore() + "/restored"
     assert(Segments.snapshot(spark, dst, repo, "c1", 8).map(_.action).forall(_ == "copied"))
     assert(Segments.restore(spark, repo, "c1", back).map(_.action).forall(_ == "restored"))
+  }
+
+  test("segment metrics count the rows of the tables each segment wrote") {
+    val store = freshStore()
+    Segments.buildResumable(docs, "doc_id", "text", Analyzer.Simple, store, 3)
+    val metrics = Segments.readMetrics(spark, store, 3)
+    assert(metrics.map(_.segment_id).distinct == Seq(0, 1, 2))
+    for (id <- 0 until 3) {
+      val seg = s"$store/seg$id"
+      val want = Map(
+        "postings" -> InvertedIndex.postingsFromDir(spark, seg).count(),
+        "doclens" -> InvertedIndex.docLensFromDir(spark, seg).count(),
+        "termstats" -> spark.read.parquet(s"$seg/termstats").count())
+      val mine = metrics.filter(_.segment_id == id)
+      assert(mine.map(m => m.stage -> m.rows).toMap == want)
+      // postings and doc lengths are written by one job, term stats by another
+      val ms = mine.map(m => m.stage -> m.wall_ms).toMap
+      assert(ms("postings") == ms("doclens") && ms.values.forall(_ >= 0))
+    }
+  }
+
+  test("merged term stats are the sums of the segments' term stats") {
+    // a store with a gap in its segment ids
+    val gap = freshStore()
+    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    Segments.buildSegment(docs, "doc_id", "text", "simple", gap, 0, 0, maxId / 2)
+    Segments.buildSegment(docs, "doc_id", "text", "simple", gap, 2, maxId / 2 + 1, maxId)
+    val merged = Segments.mergeAll(spark, gap)
+    assert(statsMap(merged.termStats) ==
+      statsMap(InvertedIndex.build(docs, "doc_id", "text").termStats))
+    assertTermStatsFromPostings(merged)
+    // a store holding a tiered-compaction output segment
+    val store = freshStore(); val dst = freshStore() + "/compacted"
+    Segments.buildResumable(docs, "doc_id", "text", Analyzer.Simple, store, 4)
+    Segments.tieredCompact(docs, "doc_id", "text", store, dst, 4)
+    assertTermStatsFromPostings(Segments.mergeAll(spark, dst))
+  }
+
+  test("batched lineage digests equal a per-slice recomputation") {
+    import spark.implicits._
+    // ids outside [0, maxId] (negative, null) belong to no segment; with
+    // 5 segments of span 3 over [0, 12], segments 1 and 3 are empty and
+    // the last one, [12, 12], is short
+    val small = Seq[(Option[Long], String)](
+      (Some(-2L), "import os"), (Some(-1L), "def f return"), (None, "class c"),
+      (Some(0L), "import os"), (Some(1L), "import os"), (Some(2L), "def g return x"),
+      (Some(7L), "def f return"), (Some(8L), "import sys"), (Some(12L), "x = 1"))
+      .toDF("doc_id", "text")
+    val store = freshStore()
+    assert(Segments.buildResumable(small, "doc_id", "text", Analyzer.Simple, store, 5) ==
+      (0 until 5))
+    val lin = Segments.readLineage(spark, store, 5)
+    assert(lin.keySet == (0 until 5).toSet)
+    assert(lin(4).row_lo == 12 && lin(4).row_hi == 12)
+    lin.values.foreach { l =>
+      val slice = small.filter(col("doc_id").between(l.row_lo, l.row_hi))
+      val want = slice.select(sha2(col("text"), 256).as("sha"))
+        .agg(min("sha"), max("sha"), countDistinct("sha"), count(lit(1)))
+        .as[(String, String, Long, Long)].head()
+      assert((l.sha_min, l.sha_max, l.sha_distinct, l.doc_count) == want,
+        s"segment ${l.segment_id}")
+    }
+    assert(lin(1).sha_distinct == 0 && lin(3).sha_distinct == 0)
+    assert(lin(0).sha_distinct == 2 && lin(0).doc_count == 3)
+    val merged = Segments.mergeAll(spark, store)
+    assert(merged.stats == InvertedIndex.build(
+      small.filter(col("doc_id").between(0L, 12L)), "doc_id", "text").stats)
+  }
+
+  test("buildResumable over no documents builds nothing") {
+    val store = freshStore()
+    assert(Segments.buildResumable(docs.limit(0), "doc_id", "text", Analyzer.Simple, store, 3) == Nil)
+    assert(new java.io.File(store).list().isEmpty)
+  }
+
+  test("Spark job budget: segmented build + merge, and an index read") {
+    val store = freshStore()
+    val (_, jobs) = jobsOf {
+      Segments.buildResumable(docs, "doc_id", "text", Analyzer.Simple, store, 4)
+      Segments.mergeAll(spark, store).termStats.collect()
+    }
+    info(s"4-segment buildResumable + mergeAll + termStats.collect(): $jobs jobs")
+    assert(jobs <= SegmentedJobBudget, s"$jobs jobs")
+    val (idx, readJobs) = jobsOf(InvertedIndex.read(spark, s"$store/seg0"))
+    assert(readJobs == 1, s"$readJobs jobs")
+    assert(idx.stats.doc_count > 0)
   }
 }
