@@ -43,8 +43,12 @@ object CorpusEntries {
     val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
     val store = s"$root/${key}_${corpusIdent(dir)}"
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+    // this corpus's generations only: `<key>_<hex ident>` exactly — a prefix
+    // match would also take a sibling corpus whose key extends this one
+    // (`sf1` vs `sf1_backup`)
+    val generation = (java.util.regex.Pattern.quote(key) + "_[0-9a-f]+").r
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(key + "_") && f.getName != new java.io.File(store).getName)
+      .filter(f => generation.matches(f.getName) && f.getName != new java.io.File(store).getName)
       .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f.getPath), true))
     val corpusDir = s"$store/corpus"
     if (!new java.io.File(s"$corpusDir/_SUCCESS").exists()) {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.query.BoundedTopK
 import graft.stats.EventStats
 
 /** One clustered posting row: the docs of `term`'s (pruned) posting list that
@@ -362,26 +363,21 @@ object Seismic {
         col("cluster_id").asc, col("doc_id").asc)
       .mapPartitions { it =>
         val buf = it.buffered
-        val ord = Ordering.by[(Long, Double), (Double, Long)] { case (id, s) => (s, -id) }
-        val pq = new scala.collection.mutable.PriorityQueue[(Long, Double)]()(ord.reverse)
+        val top = new BoundedTopK(kk)
         val seen = new java.util.HashSet[Long]()
         while (buf.hasNext) {
           val (term, cid, ub, _, _, _) = buf.head
           // theta-tied bounds still score: a theta-tied doc with a smaller
           // doc_id wins the tie, so only strictly-below bounds are safe
-          val skip = pq.size == kk && ub < pq.head._2 / hf
+          val skip = top.full && ub < top.threshold / hf
           var more = true
           while (more) {
             val (_, _, _, id, toks, ws) = buf.next()
-            if (!skip && seen.add(id)) {
-              val c = (id, dotMap(toks, ws, qB.value))
-              if (pq.size < kk) pq.enqueue(c)
-              else if (ord.gt(c, pq.head)) { pq.dequeue(); pq.enqueue(c) }
-            }
+            if (!skip && seen.add(id)) top.offer(id, dotMap(toks, ws, qB.value))
             more = buf.hasNext && buf.head._1 == term && buf.head._2 == cid
           }
         }
-        pq.iterator
+        top.iterator
       }
 
     // cross-partition copies of the same doc carry bit-identical scores

@@ -15,15 +15,14 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PostingBlock, PostingCode
  * lengths rather than Lucene's lossy SmallFloat-encoded norms (SURVEY.md
  * §7.4) so the engine is self-consistent and oracle-checkable.
  *
- * Execution model: matched posting blocks are co-grouped with the forward
- * doc-length blocks on `bucket` (the 4096-doc span), scored into a dense
- * per-bucket float window — the exact analogue of the reference's 4096-doc
- * bulk-scoring window (reference: query/HybridBulkScorer.java:75-100) — then
- * reduced per bucket to a bounded top-k heap (reference:
- * search/collector/HybridTopScoreDocCollector.java:135-190 HitQueue) before
- * the global TakeOrderedAndProject. Blocks whose summed block-max upper
- * bounds cannot beat the running per-partition threshold are skipped without
- * decoding (block-max WAND, reference: query/HybridQueryScorer.java:155-176).
+ * Execution: every scorer here but [[topKWand]] runs on [[BucketKernel]]
+ * (matched posting blocks co-grouped per 4096-doc bucket with that bucket's
+ * doc-length window), scores into a dense per-bucket float window, and
+ * [[topK]] reduces each bucket through a [[BoundedTopK]] heap before the
+ * global TakeOrderedAndProject. [[topKWand]] streams the same buckets with
+ * one running heap per partition and skips buckets whose block-max upper
+ * bound cannot beat it (block-max WAND, reference:
+ * query/HybridQueryScorer.java:155-176).
  */
 object Bm25 {
 
@@ -41,16 +40,6 @@ object Bm25 {
   def tfNorm(tf: Double, dl: Int, avgdl: Double): Double =
     tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
-  /**
-   * Score a bag of query terms (OR semantics, per-term scores summed — the
-   * Lucene BooleanQuery-of-TermQuery shape a `match` query compiles to).
-   *
-   * @param boosts  per-term multiplicative boost (default 1.0)
-   * @param limitPerBucket if >0, keep only the top `limitPerBucket` candidates
-   *        per 4096-doc bucket (safe when >= final k and no post-filter runs)
-   * @return DataFrame(doc_id: Long, score: Double) — all matching docs,
-   *         unsorted; callers apply filter/top-k.
-   */
   /** Per-term BM25 weight map for a query (idf x boost), from the broadcast-
    *  sized term-stats lookup — the Lucene TermStatistics analogue. */
   private def termWeights(idx: Index, terms: Seq[String], boosts: Map[String, Double]): Map[String, Double] = {
@@ -59,16 +48,9 @@ object Bm25 {
     // dominates real scores when every term weight is non-negative — a
     // negative weight would make pruning silently drop true top-k docs
     boosts.foreach { case (t, b) => require(b > 0, s"boost for '$t' must be > 0, got $b") }
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    val uniq = terms.distinct
-    val statsMap: Map[String, Long] = idx.termStats
-      .filter($"term".isin(uniq: _*))
-      .collect()
-      .map(t => t.term -> t.df)
-      .toMap
+    val statsMap = termDfs(idx, terms)
     val n = idx.stats.doc_count
-    uniq.flatMap { t =>
+    terms.distinct.flatMap { t =>
       statsMap.get(t).map(df => t -> idf(df, n) * boosts.getOrElse(t, 1.0))
     }.toMap
   }
@@ -82,6 +64,16 @@ object Bm25 {
       .collect().map(t => t.term -> t.df).toMap
   }
 
+  /**
+   * Score a bag of query terms (OR semantics, per-term scores summed — the
+   * Lucene BooleanQuery-of-TermQuery shape a `match` query compiles to).
+   *
+   * @param boosts  per-term multiplicative boost (default 1.0)
+   * @param limitPerBucket if >0, keep only the top `limitPerBucket` candidates
+   *        per 4096-doc bucket (safe when >= final k and no post-filter runs)
+   * @return DataFrame(doc_id: Long, score: Double) — all matching docs,
+   *         unsorted; callers apply filter/top-k.
+   */
   def scoreTerms(
       idx: Index,
       terms: Seq[String],
@@ -104,87 +96,57 @@ object Bm25 {
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
 
     val matched = idx.postings.filter($"term".isin(weightPerTerm.keys.toSeq: _*))
-    // Ship only the doc-length blocks of buckets that can match: the semi
-    // join keeps the per-query shuffle proportional to the posting volume of
-    // the query terms, not to corpus size. The derivation re-reads only the
-    // column-pruned (term, bucket) metadata of the postings scan, so the
-    // payload bytes are not scanned twice.
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
     val lim = limitPerBucket
     val minTerms = minTermsMatch
     val span = InvertedIndex.BucketSpan
 
-    val scored: Dataset[(Long, Double)] = matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        // deterministic accumulation order: shuffle arrival order varies run
-        // to run, and a different FP summation order shifts near-tied scores
-        // by an ulp — enough to flip a rank at a page boundary
-        val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-        if (blocks.isEmpty) Iterator.empty
-        else {
-          // dense doc-length window for this 4096-doc span
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val scores = new Array[Double](span)
-          val seen = new Array[Boolean](span)
-          // distinct matched query terms per doc (one merged block per
-          // (term, bucket), so one increment per term) — the msm gate
-          val cnts = if (minTerms > 1) new Array[Int](span) else null
-          var i = 0
-          while (i < blocks.length) {
-            val b = blocks(i)
-            val w = weightPerTerm(b.term)
-            val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-            val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-            var j = 0
-            while (j < b.cnt) {
-              val local = ids(j)
-              scores(local) += w * tfNorm(tfs(j), dlArr(local), avgdl)
-              seen(local) = true
-              if (cnts != null) cnts(local) += 1
-              j += 1
-            }
-            i += 1
-          }
-          val base = bucket << InvertedIndex.BucketBits
-          @inline def qualifies(d: Int): Boolean =
-            seen(d) && dlArr(d) > 0 && (cnts == null || cnts(d) >= minTerms)
-          // liveDocs gate: a seen doc with no forward entry (dl slot 0) is
-          // tombstoned (Deletes.maskDocLens removed it) — a live doc with
-          // any posting always has dl >= 1, so this never drops live hits
-          if (lim <= 0) {
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-            var d = 0
-            while (d < span) {
-              if (qualifies(d)) out += ((base + d, scores(d)))
-              d += 1
-            }
-            out.iterator
-          } else {
-            // bounded min-heap: keep best `lim` by (score desc, doc_id asc)
-            val ord = Ordering.by[(Long, Double), (Double, Long)] { case (id, s) => (s, -id) }
-            val pq = new scala.collection.mutable.PriorityQueue[(Long, Double)]()(ord.reverse)
-            var d = 0
-            while (d < span) {
-              if (qualifies(d)) {
-                val cand = (base + d, scores(d))
-                if (pq.size < lim) pq.enqueue(cand)
-                else if (ord.gt(cand, pq.head)) { pq.dequeue(); pq.enqueue(cand) }
-              }
-              d += 1
-            }
-            pq.iterator
-          }
+    val scored: Dataset[(Long, Double)] = BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
+      // deterministic accumulation order: shuffle arrival order varies run
+      // to run, and a different FP summation order shifts near-tied scores
+      // by an ulp — enough to flip a rank at a page boundary
+      val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
+      val scores = new Array[Double](span)
+      val seen = new Array[Boolean](span)
+      // distinct matched query terms per doc (one merged block per
+      // (term, bucket), so one increment per term) — the msm gate
+      val cnts = if (minTerms > 1) new Array[Int](span) else null
+      var i = 0
+      while (i < blocks.length) {
+        val b = blocks(i)
+        val w = weightPerTerm(b.term)
+        val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
+        val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
+        var j = 0
+        while (j < b.cnt) {
+          val local = ids(j)
+          scores(local) += w * tfNorm(tfs(j), dlArr(local), avgdl)
+          seen(local) = true
+          if (cnts != null) cnts(local) += 1
+          j += 1
         }
+        i += 1
       }
+      val base = bucket << InvertedIndex.BucketBits
+      @inline def qualifies(d: Int): Boolean =
+        seen(d) && dlArr(d) > 0 && (cnts == null || cnts(d) >= minTerms)
+      if (lim <= 0) {
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+        var d = 0
+        while (d < span) {
+          if (qualifies(d)) out += ((base + d, scores(d)))
+          d += 1
+        }
+        out.iterator
+      } else {
+        val top = new BoundedTopK(lim)
+        var d = 0
+        while (d < span) {
+          if (qualifies(d)) top.offer(base + d, scores(d))
+          d += 1
+        }
+        top.iterator
+      }
+    }
 
     scored.toDF("doc_id", "score")
   }
@@ -225,10 +187,9 @@ object Bm25 {
    * term matching the SQL LIKE pattern — Lucene's PrefixQuery / WildcardQuery
    * under the default CONSTANT_SCORE rewrite (MultiTermQuery doesn't rank,
    * it filters). The pattern filter runs on the postings scan (a prefix
-   * pattern pushes down as StringStartsWith), the matched blocks cogroup
-   * with the forward blocks of only their buckets (posting-proportional
-   * shuffle), a bucket-local seen array dedups docs across the expanded
-   * terms, and the dl-gate drops tombstoned docs like every scorer.
+   * pattern pushes down as StringStartsWith), the matched blocks run on
+   * [[BucketKernel]], a bucket-local seen array dedups docs across the
+   * expanded terms, and the dl-gate drops tombstoned docs like every scorer.
    *
    * @return DataFrame(doc_id: Long) — distinct matching live docs.
    */
@@ -244,36 +205,23 @@ object Bm25 {
     val spark = idx.postings.sparkSession
     import spark.implicits._
     val matched = idx.postings.filter(termPredicate)
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
     val span = InvertedIndex.BucketSpan
-    matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val dlArr = new Array[Int](span)
-        dlIt.foreach { dlb =>
-          val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-          val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-          var i = 0
-          while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-        }
-        val seen = new Array[Boolean](span)
-        blocksIt.foreach { b =>
-          val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-          var j = 0
-          while (j < b.cnt) { seen(ids(j)) = true; j += 1 }
-        }
-        val base = bucket << InvertedIndex.BucketBits
-        val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var d = 0
-        while (d < span) {
-          if (seen(d) && dlArr(d) > 0) out += base + d
-          d += 1
-        }
-        out.iterator
+    BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
+      val seen = new Array[Boolean](span)
+      blocksIt.foreach { b =>
+        val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
+        var j = 0
+        while (j < b.cnt) { seen(ids(j)) = true; j += 1 }
       }
-      .toDF("doc_id")
+      val base = bucket << InvertedIndex.BucketBits
+      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var d = 0
+      while (d < span) {
+        if (seen(d) && dlArr(d) > 0) out += base + d
+        d += 1
+      }
+      out.iterator
+    }.toDF("doc_id")
   }
 
   /** Top-k by (score desc, doc_id asc) — Spark plans this as
@@ -290,8 +238,8 @@ object Bm25 {
    *  (summed BEFORE the tf saturation — the whole point: two synonyms
    *  occurring once each must score like one term occurring twice, not like
    *  two independent terms), df = the MAX member df (Lucene's blended
-   *  docFreq upper bound). Same bucket-cogroup kernel and dl/liveness gates
-   *  as every scorer here. */
+   *  docFreq upper bound). Same [[BucketKernel]] and dl/liveness gates as
+   *  every scorer here. */
   def synonymTopK(idx: Index, synonyms: Seq[String], k: Int): DataFrame = {
     require(k > 0, s"k must be > 0, got $k")
     synonymScore(idx, synonyms)
@@ -311,44 +259,29 @@ object Bm25 {
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
     val w = idf(dfs.values.max, idx.stats.doc_count)
     val matched = idx.postings.filter($"term".isin(dfs.keys.toSeq: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
     val span = InvertedIndex.BucketSpan
-    matched.groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-        if (blocks.isEmpty) Iterator.empty
-        else {
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val tfSum = new Array[Int](span)
-          var i = 0
-          while (i < blocks.length) {
-            val b = blocks(i)
-            val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-            val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-            var j = 0
-            while (j < b.cnt) { tfSum(ids(j)) += tfs(j); j += 1 }
-            i += 1
-          }
-          val base = bucket << InvertedIndex.BucketBits
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-          var d = 0
-          while (d < span) {
-            if (tfSum(d) > 0 && dlArr(d) > 0)
-              out += ((base + d, w * tfNorm(tfSum(d), dlArr(d), avgdl)))
-            d += 1
-          }
-          out.iterator
-        }
+    BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
+      val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
+      val tfSum = new Array[Int](span)
+      var i = 0
+      while (i < blocks.length) {
+        val b = blocks(i)
+        val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
+        val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
+        var j = 0
+        while (j < b.cnt) { tfSum(ids(j)) += tfs(j); j += 1 }
+        i += 1
       }
-      .toDF("doc_id", "score")
+      val base = bucket << InvertedIndex.BucketBits
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+      var d = 0
+      while (d < span) {
+        if (tfSum(d) > 0 && dlArr(d) > 0)
+          out += ((base + d, w * tfNorm(tfSum(d), dlArr(d), avgdl)))
+        d += 1
+      }
+      out.iterator
+    }.toDF("doc_id", "score")
   }
 
   /**
@@ -428,8 +361,7 @@ object Bm25 {
 
     val topped: Dataset[(Long, Double)] = rows.mapPartitions { it =>
       val buf = it.buffered
-      val ord = Ordering.by[(Long, Double), (Double, Long)] { case (id, s) => (s, -id) }
-      val pq = new scala.collection.mutable.PriorityQueue[(Long, Double)]()(ord.reverse)
+      val top = new BoundedTopK(kk)
       val group = scala.collection.mutable.ArrayBuffer.empty[(PostingBlock, DocLenBlock)]
       while (buf.hasNext) {
         group.clear()
@@ -440,13 +372,9 @@ object Bm25 {
         group.foreach { case (b, _) =>
           ub += weightPerTerm(b.term) * tfNorm(b.max_tf, dlb.min_dl, avgdl)
         }
-        val skip = pq.size == kk && ub < pq.head._2
+        val skip = top.full && ub < top.threshold
         if (!skip) {
-          val dlArr = new Array[Int](span)
-          val ids0 = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-          val dls0 = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-          var i = 0
-          while (i < dlb.cnt) { dlArr(ids0(i)) = dls0(i); i += 1 }
+          val dlArr = BucketKernel.dlWindow(dlb)
           val scores = new Array[Double](span)
           val seen = new Array[Boolean](span)
           group.foreach { case (b, _) =>
@@ -464,17 +392,13 @@ object Bm25 {
           val base = bucket << InvertedIndex.BucketBits
           var d = 0
           while (d < span) {
-            // liveDocs gate — see scoreTerms: dl slot 0 == tombstoned
-            if (seen(d) && dlArr(d) > 0) {
-              val cand = (base + d, scores(d))
-              if (pq.size < kk) pq.enqueue(cand)
-              else if (ord.gt(cand, pq.head)) { pq.dequeue(); pq.enqueue(cand) }
-            }
+            // liveDocs gate — see BucketKernel: dl slot 0 == tombstoned
+            if (seen(d) && dlArr(d) > 0) top.offer(base + d, scores(d))
             d += 1
           }
         }
       }
-      pq.iterator
+      top.iterator
     }
 
     topped.toDF("doc_id", "score").orderBy($"score".desc, $"doc_id".asc).limit(k)

@@ -2,7 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, Positions, PostingCodec}
+import graft.index.{Index, InvertedIndex, PosBlock}
 
 /**
  * The `intervals` query's composable source algebra — Lucene's
@@ -21,11 +21,9 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, Positions, Post
  *    interval to start after the previous one ends), with total interior
  *    gaps `(window width - sum of member widths) <= max_gaps`.
  *
- * Execution is the repo's standard positional shape: the leaf terms'
- * position blocks cogroup with the forward doc-length blocks per 4096-doc
- * bucket; each candidate doc evaluates the tree over its in-memory
- * position arrays — per-query shuffle proportional to the leaf terms'
- * posting volume, never corpus size. Per-doc work is bounded by the DFS
+ * Execution: the leaf terms' position blocks run on [[BucketKernel]]; each
+ * candidate doc (any leaf term present, live) evaluates the tree over its
+ * in-memory position arrays. Per-doc work is bounded by the DFS
  * over term frequencies with the width prune, exactly like the span
  * matchers in [[Phrase]].
  */
@@ -208,55 +206,41 @@ object Intervals {
     val source = resolve(idx, rawSource)
     val uniq = source.leafTerms.distinct
 
-    val matched = pos.filter($"term".isin(uniq: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-
-    matched.groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-        dlIt.foreach { dlb =>
-          val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-          val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-          var i = 0
-          while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
+    BucketKernel(idx, pos.filter($"term".isin(uniq: _*))) { (bucket, blocksIt, dlArr) =>
+      val byTerm = BucketKernel.byTerm(blocksIt)
+      // per-local-doc lookup for each leaf term present in this bucket
+      val lookups: Map[String, java.util.HashMap[Integer, Array[Int]]] =
+        byTerm.map { case (t, entries) =>
+          val m = new java.util.HashMap[Integer, Array[Int]]()
+          entries.foreach { case (d, ps) => m.put(d, ps) }
+          t -> m
         }
-        // per-local-doc lookup for each leaf term present in this bucket
-        val lookups: Map[String, java.util.HashMap[Integer, Array[Int]]] =
-          byTerm.map { case (t, entries) =>
-            val m = new java.util.HashMap[Integer, Array[Int]]()
-            entries.foreach { case (d, ps) => m.put(d, ps) }
-            t -> m
-          }
-        // candidate docs: union of the leaf terms' doc sets in this bucket
-        val cands = new java.util.TreeSet[Integer]()
-        byTerm.values.foreach(_.foreach { case (d, _) => cands.add(d) })
-        val base = bucket << InvertedIndex.BucketBits
-        val it = cands.iterator()
-        new Iterator[Long] {
-          private var nextDoc: Long = -1L
-          private def advance(): Unit = {
-            nextDoc = -1L
-            while (nextDoc < 0 && it.hasNext) {
-              val local: Int = it.next()
-              if (dlArr(local) != 0) { // liveDocs gate
-                def posOf(t: String): Array[Int] = {
-                  val m = lookups.get(t).orNull
-                  val a = if (m == null) null else m.get(local)
-                  if (a == null) Array.emptyIntArray else a
-                }
-                if (eval(source, posOf).nonEmpty) nextDoc = base + local
+      // candidate docs: union of the leaf terms' doc sets in this bucket
+      val cands = new java.util.TreeSet[Integer]()
+      byTerm.values.foreach(_.foreach { case (d, _) => cands.add(d) })
+      val base = bucket << InvertedIndex.BucketBits
+      val it = cands.iterator()
+      new Iterator[Long] {
+        private var nextDoc: Long = -1L
+        private def advance(): Unit = {
+          nextDoc = -1L
+          while (nextDoc < 0 && it.hasNext) {
+            val local: Int = it.next()
+            if (dlArr(local) != 0) { // liveDocs gate
+              def posOf(t: String): Array[Int] = {
+                val m = lookups.get(t).orNull
+                val a = if (m == null) null else m.get(local)
+                if (a == null) Array.emptyIntArray else a
               }
+              if (eval(source, posOf).nonEmpty) nextDoc = base + local
             }
           }
-          advance()
-          def hasNext: Boolean = nextDoc >= 0
-          def next(): Long = { val v = nextDoc; advance(); v }
         }
+        advance()
+        def hasNext: Boolean = nextDoc >= 0
+        def next(): Long = { val v = nextDoc; advance(); v }
       }
-      .toDF("doc_id")
+    }.toDF("doc_id")
   }
 
   /** Per-doc evaluation: the source's MINIMAL intervals, sorted by

@@ -1,8 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, Positions, PostingCodec}
+import graft.index.{Index, InvertedIndex, PosBlock, Positions}
 
 /**
  * Exact phrase scoring over the positional block table — Lucene's
@@ -17,10 +16,11 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, Positions, Post
  *    Similarity.scorer(boost, collectionStats, termStats...) with one
  *    TermStatistics per position.
  *
- * Execution: matched position blocks cogroup with the forward doc-length
- * blocks on `bucket` (the scoreTerms shape — per-query shuffle proportional
- * to the phrase's posting volume, never corpus size); each bucket verifies
- * consecutiveness with sorted-array binary probes, no per-doc hashing.
+ * Execution: every matcher here runs on [[BucketKernel]] (matched position
+ * blocks co-grouped per 4096-doc bucket with that bucket's doc-length
+ * window); the multi-slot ones take their candidate docs from its slot
+ * conjunction and verify consecutiveness / span width with sorted-array
+ * binary probes, no per-doc hashing.
  */
 object Phrase {
 
@@ -35,87 +35,59 @@ object Phrase {
    *  unsorted — the clause shape hybrid's per-sub-query collection expects. */
   def score(idx: Index, pos: Dataset[PosBlock], phrase: Seq[String]): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least 2 terms")
+    phraseScore(idx, pos, phrase) { docPs =>
+      // phrase freq: start positions p with term i at p + i
+      var freq = 0
+      val starts = docPs(0)
+      var s = 0
+      while (s < starts.length) {
+        val p = starts(s) // position of slot 0 -> start = p
+        var i = 1
+        var hit = true
+        while (hit && i < docPs.length) {
+          hit = java.util.Arrays.binarySearch(docPs(i), p + i) >= 0
+          i += 1
+        }
+        if (hit) freq += 1
+        s += 1
+      }
+      freq
+    }
+  }
+
+  /** Phrase BM25 over [[BucketKernel]]'s slot conjunction: `freqOf(docPs)`
+   *  is a candidate doc's phrase frequency from its per-slot positions (0 =
+   *  no match); the weight is the idf summed PER PHRASE SLOT (duplicate
+   *  terms counted, left to right). A phrase with an unindexed term matches
+   *  nothing, as in Lucene. */
+  private def phraseScore(idx: Index, pos: Dataset[PosBlock], phrase: Seq[String])(
+      freqOf: Array[Array[Int]] => Double): DataFrame = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-
-    val uniq = phrase.distinct
-    val dfMap: Map[String, Long] = idx.termStats
-      .filter($"term".isin(uniq: _*)).collect().map(t => t.term -> t.df).toMap
-    // Lucene: a phrase with any unindexed term matches nothing
-    if (uniq.exists(t => !dfMap.contains(t)))
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val n = idx.stats.doc_count
     val avgdl = idx.stats.avgdl
-    // idf summed PER PHRASE SLOT (duplicate terms counted), left-to-right
-    val w = phrase.foldLeft(0.0)((acc, t) => acc + Bm25.idf(dfMap(t), n))
     val terms = phrase.toArray
-
-    val matched = pos.filter($"term".isin(uniq: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-
-    val scored: Dataset[(Long, Double)] = matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        if (terms.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val span = InvertedIndex.BucketSpan
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          // per-term (sorted by localId) entry arrays; lead = rarest term in
-          // this bucket drives the doc loop (fewest candidates to probe)
-          val perTerm: Array[Array[(Int, Array[Int])]] = terms.map(byTerm(_))
-          val leadIdx = perTerm.indices.minBy(i => perTerm(i).length)
-          val others = perTerm.indices.filter(_ != leadIdx)
-          // localId -> positions lookups for the non-lead terms
-          val lookups: Map[Int, java.util.HashMap[Integer, Array[Int]]] =
-            others.map { i =>
-              val m = new java.util.HashMap[Integer, Array[Int]]()
-              perTerm(i).foreach { case (d, ps) => m.put(d, ps) }
-              i -> m
-            }.toMap
+    val scored: Dataset[(Long, Double)] = slotWeight(idx, phrase) match {
+      case None => spark.emptyDataset[(Long, Double)]
+      case Some(w) =>
+        BucketKernel(idx, pos.filter($"term".isin(phrase.distinct: _*))) { (bucket, blocksIt, dlArr) =>
           val base = bucket << InvertedIndex.BucketBits
-          perTerm(leadIdx).iterator.flatMap { case (local, leadPs) =>
-            // all terms present in this doc?
-            val docPs = new Array[Array[Int]](terms.length)
-            docPs(leadIdx) = leadPs
-            var ok = true
-            others.foreach { i =>
-              val ps = lookups(i).get(local)
-              if (ps == null) ok = false else docPs(i) = ps
-            }
-            if (!ok || dlArr(local) == 0) None // dl gate: liveDocs (see Bm25)
-            else {
-              // phrase freq: start positions p with term i at p + i
-              var freq = 0
-              val starts = docPs(0)
-              var s = 0
-              while (s < starts.length) {
-                val p = starts(s) // position of slot 0 -> start = p
-                var i = 1
-                var hit = true
-                while (hit && i < terms.length) {
-                  hit = java.util.Arrays.binarySearch(docPs(i), p + i) >= 0
-                  i += 1
-                }
-                if (hit) freq += 1
-                s += 1
-              }
-              if (freq == 0) None
+          BucketKernel.conjunction(BucketKernel.byTerm(blocksIt), terms, dlArr).flatMap {
+            case (local, docPs) =>
+              val freq = freqOf(docPs)
+              if (freq == 0.0) None
               else Some((base + local, w * Bm25.tfNorm(freq, dlArr(local), avgdl)))
-            }
           }
         }
-      }
-
+    }
     scored.toDF("doc_id", "score")
+  }
+
+  /** idf summed per slot; None when any term is unindexed. */
+  private def slotWeight(idx: Index, phrase: Seq[String]): Option[Double] = {
+    val dfs = Bm25.termDfs(idx, phrase)
+    val n = idx.stats.doc_count
+    if (phrase.exists(t => !dfs.contains(t))) None
+    else Some(phrase.foldLeft(0.0)((acc, t) => acc + Bm25.idf(dfs(t), n)))
   }
 
   /** `match_phrase` with `slop > 0` — Lucene's SloppyPhraseMatcher
@@ -147,83 +119,25 @@ object Phrase {
    *  the DuckDB oracle re-derives independently: one match per ADJACENT
    *  cross-list pair in the merged (shifted position, slot) order, with
    *  matchLength = the pair's gap (PhraseSpec proves the reduction by
-   *  brute force; the k>=3 path is covered by hand-traced fixtures and a
-   *  matched-set parity check against exhaustive window search). */
+   *  brute force; the k>=3 path is covered by hand-traced fixtures, a
+   *  matched-set parity check against exhaustive window search, and a
+   *  freq-value fuzz against a Lucene SloppyPhraseMatcher trace model). */
   def sloppyScore(idx: Index, pos: Dataset[PosBlock], phrase: Seq[String],
                   slop: Int): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least 2 terms")
     require(slop >= 1, s"sloppyScore requires slop >= 1, got $slop (use score for slop 0)")
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-
-    val uniq = phrase.distinct
-    val dfMap: Map[String, Long] = idx.termStats
-      .filter($"term".isin(uniq: _*)).collect().map(t => t.term -> t.df).toMap
-    if (uniq.exists(t => !dfMap.contains(t)))
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val n = idx.stats.doc_count
-    val avgdl = idx.stats.avgdl
-    val w = phrase.foldLeft(0.0)((acc, t) => acc + Bm25.idf(dfMap(t), n))
-    val terms = phrase.toArray
-    val slopLocal = slop
-    val (rptGroups, groupOf) = repeatGroups(terms)
-
-    val matched = pos.filter($"term".isin(uniq: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-
-    val scored: Dataset[(Long, Double)] = matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        if (terms.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val span = InvertedIndex.BucketSpan
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val perTerm: Array[Array[(Int, Array[Int])]] = terms.map(byTerm(_))
-          val leadIdx = perTerm.indices.minBy(i => perTerm(i).length)
-          val others = perTerm.indices.filter(_ != leadIdx)
-          val lookups: Map[Int, java.util.HashMap[Integer, Array[Int]]] =
-            others.map { i =>
-              val m = new java.util.HashMap[Integer, Array[Int]]()
-              perTerm(i).foreach { case (d, ps) => m.put(d, ps) }
-              i -> m
-            }.toMap
-          val base = bucket << InvertedIndex.BucketBits
-          perTerm(leadIdx).iterator.flatMap { case (local, leadPs) =>
-            val docPs = new Array[Array[Int]](terms.length)
-            docPs(leadIdx) = leadPs
-            var ok = true
-            others.foreach { i =>
-              val ps = lookups(i).get(local)
-              if (ps == null) ok = false else docPs(i) = ps
-            }
-            if (!ok || dlArr(local) == 0) None // dl gate: liveDocs (see Bm25)
-            else {
-              // shifted position lists (pos - slot), still sorted ascending
-              val shifted = Array.tabulate(terms.length) { i =>
-                val src = docPs(i)
-                val out = new Array[Int](src.length)
-                var j = 0
-                while (j < src.length) { out(j) = src(j) - i; j += 1 }
-                out
-              }
-              val freq = sloppyFreq(shifted, slopLocal, rptGroups, groupOf)
-              if (freq == 0.0) None
-              else Some((base + local, w * Bm25.tfNorm(freq, dlArr(local), avgdl)))
-            }
-          }
-        }
+    val (rptGroups, groupOf) = repeatGroups(phrase.toArray)
+    phraseScore(idx, pos, phrase) { docPs =>
+      // shifted position lists (pos - slot), still sorted ascending
+      val shifted = Array.tabulate(docPs.length) { i =>
+        val src = docPs(i)
+        val out = new Array[Int](src.length)
+        var j = 0
+        while (j < src.length) { out(j) = src(j) - i; j += 1 }
+        out
       }
-
-    scored.toDF("doc_id", "score")
+      sloppyFreq(shifted, slop, rptGroups, groupOf)
+    }
   }
 
   /** Lucene SloppyPhraseScorer.phraseFreq for distinct phrase terms (the
@@ -379,90 +293,53 @@ object Phrase {
       .filter($"term".startsWith(prefix))
       .select($"term", $"df").orderBy($"term".asc).limit(maxExpansions)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val uniqFixed = fixed.distinct
-    val dfMap: Map[String, Long] = idx.termStats
-      .filter($"term".isin(uniqFixed: _*)).collect().map(t => t.term -> t.df).toMap
-    if (expansions.isEmpty || uniqFixed.exists(t => !dfMap.contains(t)))
+    val fixedWeight = slotWeight(idx, fixed)
+    if (expansions.isEmpty || fixedWeight.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
     val n = idx.stats.doc_count
     val avgdl = idx.stats.avgdl
     // MultiPhraseQuery feeds the Similarity one TermStatistics per term:
     // fixed slots per occurrence + every expansion term once
-    val w = fixed.foldLeft(0.0)((acc, t) => acc + Bm25.idf(dfMap(t), n)) +
-      expansions.foldLeft(0.0)((acc, e) => acc + Bm25.idf(e._2, n))
+    val w = fixedWeight.get + expansions.foldLeft(0.0)((acc, e) => acc + Bm25.idf(e._2, n))
     val expSet = expansions.map(_._1).toSet
     val k = fixed.size // slot index of the prefix = k
     val fixedArr = fixed.toArray
-    val allTerms = (uniqFixed ++ expSet).distinct
+    val allTerms = (fixed.distinct ++ expSet).distinct
 
-    val matched = pos.filter($"term".isin(allTerms: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-
-    val scored: Dataset[(Long, Double)] = matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        if (fixedArr.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val span = InvertedIndex.BucketSpan
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val perFixed: Array[Array[(Int, Array[Int])]] = fixedArr.map(byTerm(_))
-          // union of the expansion terms' positions per local doc — the
-          // MultiPhraseQuery "any synonym at this slot" position set
-          val expPos = new java.util.HashMap[Integer, java.util.TreeSet[Integer]]()
-          expSet.foreach { t =>
-            byTerm.get(t).foreach(_.foreach { case (d, ps) =>
-              var set = expPos.get(d)
-              if (set == null) { set = new java.util.TreeSet[Integer](); expPos.put(d, set) }
-              ps.foreach(p => set.add(p))
-            })
-          }
-          val others = (1 until k).toArray
-          val lookups: Map[Int, java.util.HashMap[Integer, Array[Int]]] =
-            others.map { i =>
-              val m = new java.util.HashMap[Integer, Array[Int]]()
-              perFixed(i).foreach { case (d, ps) => m.put(d, ps) }
-              i -> m
-            }.toMap
-          val base = bucket << InvertedIndex.BucketBits
-          perFixed(0).iterator.flatMap { case (local, leadPs) =>
-            val exp = expPos.get(local)
-            val docPs = new Array[Array[Int]](k)
-            docPs(0) = leadPs
-            var ok = exp != null
-            var i = 0
-            while (ok && i < others.length) {
-              val ps = lookups(others(i)).get(local)
-              if (ps == null) ok = false else docPs(others(i)) = ps
-              i += 1
-            }
-            if (!ok || dlArr(local) == 0) None
-            else {
-              var freq = 0
-              val starts = docPs(0)
-              var s = 0
-              while (s < starts.length) {
-                val p = starts(s)
-                var j = 1
-                var hit = true
-                while (hit && j < k) {
-                  hit = java.util.Arrays.binarySearch(docPs(j), p + j) >= 0
-                  j += 1
-                }
-                if (hit && exp.contains(p + k)) freq += 1
-                s += 1
+    val scored: Dataset[(Long, Double)] =
+      BucketKernel(idx, pos.filter($"term".isin(allTerms: _*))) { (bucket, blocksIt, dlArr) =>
+        val byTerm = BucketKernel.byTerm(blocksIt)
+        // union of the expansion terms' positions per local doc — the
+        // MultiPhraseQuery "any synonym at this slot" position set
+        val expPos = new java.util.HashMap[Integer, java.util.TreeSet[Integer]]()
+        expSet.foreach { t =>
+          byTerm.get(t).foreach(_.foreach { case (d, ps) =>
+            var set = expPos.get(d)
+            if (set == null) { set = new java.util.TreeSet[Integer](); expPos.put(d, set) }
+            ps.foreach(p => set.add(p))
+          })
+        }
+        val base = bucket << InvertedIndex.BucketBits
+        BucketKernel.conjunction(byTerm, fixedArr, dlArr).flatMap { case (local, docPs) =>
+          val exp = expPos.get(local)
+          if (exp == null) None
+          else {
+            var freq = 0
+            val starts = docPs(0)
+            var s = 0
+            while (s < starts.length) {
+              val p = starts(s)
+              var j = 1
+              var hit = true
+              while (hit && j < k) {
+                hit = java.util.Arrays.binarySearch(docPs(j), p + j) >= 0
+                j += 1
               }
-              if (freq == 0) None
-              else Some((base + local, w * Bm25.tfNorm(freq, dlArr(local), avgdl)))
+              if (hit && exp.contains(p + k)) freq += 1
+              s += 1
             }
+            if (freq == 0) None
+            else Some((base + local, w * Bm25.tfNorm(freq, dlArr(local), avgdl)))
           }
         }
       }
@@ -472,8 +349,8 @@ object Phrase {
   /** `span_near` existence filter (see [[graft.hybrid.SpanNearQ]]): live
    *  docs where one position per term can be chosen, all distinct, with
    *  span width `(max - min + 1) - k <= slop`, strictly increasing when
-   *  `inOrder`. Same cogroup shape as [[score]] — shuffle proportional to
-   *  the terms' positional posting volume, never corpus size. The per-doc
+   *  `inOrder`. Candidates come from [[BucketKernel]]'s slot conjunction,
+   *  as in [[score]]. The per-doc
    *  check is bounded by the doc's term frequencies: ordered matching is a
    *  greedy O(Σtf·log tf) pass (taking the smallest valid next position is
    *  optimal — a smaller prefix end leaves a superset of completions);
@@ -492,7 +369,7 @@ object Phrase {
    *  slot is (positions-of-its-field, field, term) — a masked slot draws
    *  its occurrence positions from another field's positional index while
    *  participating in the primary field's span-width arithmetic. Each
-   *  distinct (field, term) pair becomes its own cogroup key (tagged, so
+   *  distinct (field, term) pair becomes its own slot term (tagged, so
    *  the same term from two fields stays two streams); the kernel,
    *  bucket-pruned shuffle contract, and liveness gate are exactly
    *  [[spanNearMatch]]'s. Whether cross-field positions are comparable is
@@ -514,62 +391,21 @@ object Phrase {
     spanNearKernel(idx, matched, tagged, slop, inOrder)
   }
 
-  private def spanNearKernel(idx: Index, matched0: Dataset[PosBlock],
+  private def spanNearKernel(idx: Index, matched: Dataset[PosBlock],
                              termsArr: Array[String], slop: Int,
                              inOrder: Boolean): DataFrame = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val uniq = termsArr.distinct.toSeq
-    val k = termsArr.length
-
-    val matched = matched0
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-
-    val hits: Dataset[Long] = matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        if (uniq.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val span = InvertedIndex.BucketSpan
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val perTerm: Array[Array[(Int, Array[Int])]] = termsArr.map(byTerm(_))
-          val leadIdx = perTerm.indices.minBy(i => perTerm(i).length)
-          val others = perTerm.indices.filter(_ != leadIdx)
-          val lookups: Map[Int, java.util.HashMap[Integer, Array[Int]]] =
-            others.map { i =>
-              val m = new java.util.HashMap[Integer, Array[Int]]()
-              perTerm(i).foreach { case (d, ps) => m.put(d, ps) }
-              i -> m
-            }.toMap
-          val base = bucket << InvertedIndex.BucketBits
-          perTerm(leadIdx).iterator.flatMap { case (local, leadPs) =>
-            val docPs = new Array[Array[Int]](k)
-            docPs(leadIdx) = leadPs
-            var ok = true
-            others.foreach { i =>
-              val ps = lookups(i).get(local)
-              if (ps == null) ok = false else docPs(i) = ps
-            }
-            if (!ok || dlArr(local) == 0) None // dl gate: liveDocs
-            else {
-              val matchFound =
-                if (inOrder) orderedSpanExists(docPs, slop)
-                else unorderedSpanExists(docPs, slop)
-              if (matchFound) Some(base + local) else None
-            }
-          }
-        }
+    val hits: Dataset[Long] = BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
+      val base = bucket << InvertedIndex.BucketBits
+      BucketKernel.conjunction(BucketKernel.byTerm(blocksIt), termsArr, dlArr).flatMap {
+        case (local, docPs) =>
+          val matchFound =
+            if (inOrder) orderedSpanExists(docPs, slop)
+            else unorderedSpanExists(docPs, slop)
+          if (matchFound) Some(base + local) else None
       }
-
+    }
     hits.toDF("doc_id")
   }
 
@@ -584,28 +420,15 @@ object Phrase {
     require(end >= 1, s"span_first [end] must be >= 1, got $end")
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val matched = pos.filter($"term" === term)
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-    matched.groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-        dlIt.foreach { dlb =>
-          val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-          val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-          var i = 0
-          while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-        }
-        val base = bucket << InvertedIndex.BucketBits
-        blocksIt.flatMap { b =>
-          Positions.decodeEntries(b).iterator.collect {
-            case (local, ps) if dlArr(local) != 0 && ps.nonEmpty && ps(0) < end =>
-              base + local
-          }
+    BucketKernel(idx, pos.filter($"term" === term)) { (bucket, blocksIt, dlArr) =>
+      val base = bucket << InvertedIndex.BucketBits
+      blocksIt.flatMap { b =>
+        Positions.decodeEntries(b).iterator.collect {
+          case (local, ps) if dlArr(local) != 0 && ps.nonEmpty && ps(0) < end =>
+            base + local
         }
       }
-      .toDF("doc_id")
+    }.toDF("doc_id")
   }
 
   /** `span_not` matched set: docs with at least one occurrence of
@@ -620,45 +443,32 @@ object Phrase {
     require(include != exclude, "span_not include and exclude must differ")
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val matched = pos.filter($"term".isin(include, exclude))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-    matched.groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        byTerm.get(include) match {
-          case None => Iterator.empty
-          case Some(inc) =>
-            val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-            dlIt.foreach { dlb =>
-              val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-              val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-              var i = 0
-              while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
+    BucketKernel(idx, pos.filter($"term".isin(include, exclude))) { (bucket, blocksIt, dlArr) =>
+      val byTerm = BucketKernel.byTerm(blocksIt)
+      byTerm.get(include) match {
+        case None => Iterator.empty
+        case Some(inc) =>
+          val excMap = new java.util.HashMap[Integer, Array[Int]]()
+          byTerm.getOrElse(exclude, Array.empty[(Int, Array[Int])])
+            .foreach { case (d, ps) => excMap.put(d, ps) }
+          val base = bucket << InvertedIndex.BucketBits
+          inc.iterator.flatMap { case (local, ips) =>
+            if (dlArr(local) == 0) None
+            else {
+              val eps = excMap.get(local)
+              val clear =
+                if (eps == null) ips.nonEmpty
+                else ips.exists { p =>
+                  // any exclude position q in [p - pre, p + post]?
+                  var idx2 = java.util.Arrays.binarySearch(eps, p - pre)
+                  if (idx2 < 0) idx2 = -idx2 - 1
+                  !(idx2 < eps.length && eps(idx2) <= p + post)
+                }
+              if (clear) Some(base + local) else None
             }
-            val excMap = new java.util.HashMap[Integer, Array[Int]]()
-            byTerm.getOrElse(exclude, Array.empty[(Int, Array[Int])])
-              .foreach { case (d, ps) => excMap.put(d, ps) }
-            val base = bucket << InvertedIndex.BucketBits
-            inc.iterator.flatMap { case (local, ips) =>
-              if (dlArr(local) == 0) None
-              else {
-                val eps = excMap.get(local)
-                val clear =
-                  if (eps == null) ips.nonEmpty
-                  else ips.exists { p =>
-                    // any exclude position q in [p - pre, p + post]?
-                    var idx2 = java.util.Arrays.binarySearch(eps, p - pre)
-                    if (idx2 < 0) idx2 = -idx2 - 1
-                    !(idx2 < eps.length && eps(idx2) <= p + post)
-                  }
-                if (clear) Some(base + local) else None
-              }
-            }
-        }
+          }
       }
-      .toDF("doc_id")
+    }.toDF("doc_id")
   }
 
   /** `span_containing` / `span_within` matched set: docs where some
@@ -679,57 +489,25 @@ object Phrase {
     require(little.nonEmpty, "span_containing [little] requires a term")
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val uniq = (bigTerms :+ little).distinct
-    val k = bigTerms.size
     val termsArr = bigTerms.toArray
-
-    val matched = pos.filter($"term".isin(uniq: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-
-    matched.groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val byTerm = blocksIt.map(b => b.term -> Positions.decodeEntries(b)).toMap
-        if (uniq.exists(t => !byTerm.contains(t))) Iterator.empty
-        else {
-          val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val perTerm: Array[Array[(Int, Array[Int])]] = termsArr.map(byTerm(_))
-          val lookups = perTerm.map { entries =>
-            val m = new java.util.HashMap[Integer, Array[Int]]()
-            entries.foreach { case (d, ps) => m.put(d, ps) }
-            m
-          }
-          val littleMap = new java.util.HashMap[Integer, Array[Int]]()
-          byTerm(little).foreach { case (d, ps) => littleMap.put(d, ps) }
-          val base = bucket << InvertedIndex.BucketBits
-          perTerm(0).iterator.flatMap { case (local, _) =>
-            val lps = littleMap.get(local)
-            if (lps == null || dlArr(local) == 0) None
-            else {
-              val docPs = new Array[Array[Int]](k)
-              var ok = true
-              var i = 0
-              while (ok && i < k) {
-                val ps = lookups(i).get(local)
-                if (ps == null) ok = false else docPs(i) = ps
-                i += 1
-              }
-              val found = ok && (
+    BucketKernel(idx, pos.filter($"term".isin((bigTerms :+ little).distinct: _*))) {
+      (bucket, blocksIt, dlArr) =>
+        val byTerm = BucketKernel.byTerm(blocksIt)
+        byTerm.get(little) match {
+          case None => Iterator.empty
+          case Some(littleEntries) =>
+            val littleMap = new java.util.HashMap[Integer, Array[Int]]()
+            littleEntries.foreach { case (d, ps) => littleMap.put(d, ps) }
+            val base = bucket << InvertedIndex.BucketBits
+            BucketKernel.conjunction(byTerm, termsArr, dlArr).flatMap { case (local, docPs) =>
+              val lps = littleMap.get(local)
+              val found = lps != null && (
                 if (inOrder) orderedContainedExists(docPs, slop, lps)
                 else unorderedContainedExists(docPs, slop, lps))
               if (found) Some(base + local) else None
             }
-          }
         }
-      }
-      .toDF("doc_id")
+    }.toDF("doc_id")
   }
 
   /** any little position inside [mn, mx]? (little sorted ascending) */

@@ -124,10 +124,9 @@ object Search {
       }.toDF("term", "tf")
     val dlRow = idx.docLens.filter(col("bucket") === bkt)
       .as[DocLenBlock].flatMap { b =>
-        val ids = PostingCodec.decodeDeltas(b.ids, b.cnt)
-        val dls = PostingCodec.decodeInts(b.dls, b.cnt)
-        val i = java.util.Arrays.binarySearch(ids, local)
-        if (i >= 0) Iterator.single(dls(i).toLong) else Iterator.empty
+        // a doc with a matched term has dl >= 1; 0 = not in this block
+        val dl = BucketKernel.dlWindow(b)(local)
+        if (dl > 0) Iterator.single(dl.toLong) else Iterator.empty
       }.toDF("dl")
     val n = idx.stats.doc_count
     val avgdl = idx.stats.avgdl
@@ -180,65 +179,49 @@ object Search {
       .toDF("query_id", "rank", "doc_id", "score")
     if (qTerms.isEmpty) return empty
     val matched = idx.postings.filter($"term".isin(qTerms.keys.toSeq: _*))
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
     val span = InvertedIndex.BucketSpan
     val nQ = requests.size
-    val scored = matched
-      .groupByKey(_.bucket)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-        if (blocks.isEmpty) Iterator.empty
-        else {
-          val dlArr = new Array[Int](span)
-          dlIt.foreach { dlb =>
-            val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-            val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
-            var i = 0
-            while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
-          }
-          val scores = Array.ofDim[Double](nQ, span)
-          val seen = Array.ofDim[Boolean](nQ, span)
-          var i = 0
-          while (i < blocks.length) {
-            val b = blocks(i)
-            val qws = qTerms(b.term)
-            val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-            val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-            var j = 0
-            while (j < b.cnt) {
-              val local = ids(j)
-              // one decode + one tfNorm per posting, shared by every
-              // request containing this term
-              val tfn = Bm25.tfNorm(tfs(j), dlArr(local), avgdl)
-              var q = 0
-              while (q < qws.length) {
-                val (qi, w) = qws(q)
-                scores(qi)(local) += w * tfn
-                seen(qi)(local) = true
-                q += 1
-              }
-              j += 1
-            }
-            i += 1
-          }
-          val base = bucket << InvertedIndex.BucketBits
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
+    val scored = BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
+      val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
+      val scores = Array.ofDim[Double](nQ, span)
+      val seen = Array.ofDim[Boolean](nQ, span)
+      var i = 0
+      while (i < blocks.length) {
+        val b = blocks(i)
+        val qws = qTerms(b.term)
+        val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
+        val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
+        var j = 0
+        while (j < b.cnt) {
+          val local = ids(j)
+          // one decode + one tfNorm per posting, shared by every
+          // request containing this term
+          val tfn = Bm25.tfNorm(tfs(j), dlArr(local), avgdl)
           var q = 0
-          while (q < nQ) {
-            var d = 0
-            while (d < span) {
-              // dl gate = liveDocs (a tombstoned doc has no forward entry)
-              if (seen(q)(d) && dlArr(d) > 0) out += ((q, base + d, scores(q)(d)))
-              d += 1
-            }
+          while (q < qws.length) {
+            val (qi, w) = qws(q)
+            scores(qi)(local) += w * tfn
+            seen(qi)(local) = true
             q += 1
           }
-          out.iterator
+          j += 1
         }
+        i += 1
       }
-      .toDF("qi", "doc_id", "score")
+      val base = bucket << InvertedIndex.BucketBits
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
+      var q = 0
+      while (q < nQ) {
+        var d = 0
+        while (d < span) {
+          // dl gate = liveDocs (a tombstoned doc has no forward entry)
+          if (seen(q)(d) && dlArr(d) > 0) out += ((q, base + d, scores(q)(d)))
+          d += 1
+        }
+        q += 1
+      }
+      out.iterator
+    }.toDF("qi", "doc_id", "score")
     val named = scored.withColumn("query_id",
       element_at(lit(requests.map(_._1).toArray), col("qi") + 1))
     graft.ops.TopN.perGroupRanked(named, Seq("query_id"), "doc_id", k,

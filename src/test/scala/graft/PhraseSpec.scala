@@ -375,6 +375,135 @@ class PhraseSpec extends SparkSpec {
     }
   }
 
+  /** Independent model of Lucene's SloppyPhraseMatcher for single-term
+   *  slots, written after its own structure: PhrasePositions (position =
+   *  document position - offset), a PhraseQueue ordered by (position,
+   *  offset), repeat groups gathered from equal first positions and sorted
+   *  by offset, the stagger of advanceRepeatGroups, collision resolution by
+   *  advancing the lesser pp, and nextMatch() driven until it returns false,
+   *  each match adding sloppyWeight = 1 / (1 + matchLength). */
+  private def luceneSloppyFreq(terms: Array[String], docPos: Array[Array[Int]],
+                               slop: Int): Double = {
+    final class PP(val offset: Int, val term: String, tps: Array[Int]) {
+      var position = 0
+      var rptGroup = -1
+      var rptInd = 0
+      private var count = 0
+      private var upto = 0
+      def firstPosition(): Unit = { count = tps.length; upto = 0; nextPosition() }
+      def nextPosition(): Boolean =
+        if (count > 0) { count -= 1; position = tps(upto) - offset; upto += 1; true }
+        else false
+    }
+    val pps = terms.indices.map(i => new PP(i, terms(i), docPos(i))).toArray
+    def lessThan(a: PP, b: PP): Boolean =
+      if (a.position == b.position) a.offset < b.offset else a.position < b.position
+    // the queue's content as a set: a pp advanced while queued is re-queued
+    // before the next pop (advanceRpts), so pop/top read the true minimum
+    val pq = scala.collection.mutable.ArrayBuffer.empty[PP]
+    def top(): PP = pq.reduce((a, b) => if (lessThan(b, a)) b else a)
+    def pop(): PP = { val t = top(); pq -= t; t }
+    var end = Int.MinValue
+    def tpPos(pp: PP): Int = pp.position + pp.offset
+    def advancePP(pp: PP): Boolean =
+      if (!pp.nextPosition()) false
+      else { if (pp.position > end) end = pp.position; true }
+
+    // initFirstTime: place, gather repeat groups, stagger, fill the queue
+    pps.foreach(_.firstPosition())
+    val rptTerms = terms.groupBy(identity).collect { case (t, ts) if ts.length > 1 => t }.toSet
+    val groups = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[PP]]
+    val rpp = pps.filter(pp => rptTerms.contains(pp.term))
+    for (i <- rpp.indices if rpp(i).rptGroup < 0; j <- i + 1 until rpp.length) {
+      val (pp, pp2) = (rpp(i), rpp(j))
+      if (pp2.rptGroup < 0 && pp2.offset != pp.offset && tpPos(pp2) == tpPos(pp)) {
+        if (pp.rptGroup < 0) {
+          pp.rptGroup = groups.size
+          groups += scala.collection.mutable.ArrayBuffer(pp)
+        }
+        pp2.rptGroup = pp.rptGroup
+        groups(pp.rptGroup) += pp2
+      }
+    }
+    val rptGroups = groups.map(_.sortBy(_.offset).toArray).toArray
+    rptGroups.foreach(rg => rg.indices.foreach(i => rg(i).rptInd = i))
+    val hasRpts = rptGroups.nonEmpty
+    var positioned = rptGroups.forall { rg =>
+      (1 until rg.length).forall(j => (0 until j).forall(_ => rg(j).nextPosition()))
+    }
+    if (positioned) pps.foreach { pp => if (pp.position > end) end = pp.position; pq += pp }
+
+    def collide(pp: PP): Int = {
+      val rg = rptGroups(pp.rptGroup)
+      rg.find(pp2 => (pp2 ne pp) && tpPos(pp2) == tpPos(pp)).map(_.rptInd).getOrElse(-1)
+    }
+    def lesser(a: PP, b: PP): PP =
+      if (a.position < b.position || (a.position == b.position && a.offset < b.offset)) a else b
+    def advanceRpts(pp0: PP): Boolean = {
+      if (pp0.rptGroup < 0) return true
+      val rg = rptGroups(pp0.rptGroup)
+      var pp = pp0
+      var k = collide(pp)
+      while (k >= 0) {
+        pp = lesser(pp, rg(k))
+        if (!advancePP(pp)) return false
+        k = collide(pp)
+      }
+      true
+    }
+    var matchLength = Int.MaxValue
+    def nextMatch(): Boolean = {
+      if (!positioned) return false
+      var pp = pop()
+      matchLength = end - pp.position
+      var next = top().position
+      while (advancePP(pp) && (!hasRpts || advanceRpts(pp))) {
+        if (pp.position > next) { // done minimizing the current match length
+          pq += pp
+          if (matchLength <= slop) return true
+          pp = pop()
+          next = top().position
+          matchLength = end - pp.position
+        } else {
+          val matchLength2 = end - pp.position
+          if (matchLength2 < matchLength) matchLength = matchLength2
+        }
+      }
+      positioned = false
+      matchLength <= slop
+    }
+    var freq = 0.0
+    while (nextMatch()) freq += 1.0 / (1 + matchLength)
+    freq
+  }
+
+  test("sloppyFreq values equal a Lucene SloppyPhraseMatcher trace model " +
+    "(3-slot phrases with repeated terms, fuzz)") {
+    val rnd = new scala.util.Random(23)
+    val phrases = Seq("a b a", "a a b", "b a a", "a a a", "a b b", "b a b", "a c a", "a a c")
+      .map(_.split(" "))
+    var compared = 0
+    var matched = 0
+    for (_ <- 1 to 3000) {
+      val ph = phrases(rnd.nextInt(phrases.size))
+      val vocab = Array("a", "b", "c")
+      val doc = Array.fill(3 + rnd.nextInt(12))(vocab(rnd.nextInt(3)))
+      val slop = 1 + rnd.nextInt(5)
+      val docPos = ph.map(t => doc.indices.filter(doc(_) == t).toArray)
+      if (docPos.forall(_.nonEmpty)) {
+        val (rg, go) = Phrase.repeatGroups(ph)
+        val shifted = docPos.zipWithIndex.map { case (ps, i) => ps.map(_ - i) }
+        val got = Phrase.sloppyFreq(shifted, slop, rg, go)
+        val want = luceneSloppyFreq(ph, docPos, slop)
+        assert(got == want, s"phrase=${ph.mkString(" ")} doc=${doc.mkString(" ")} " +
+          s"slop=$slop got=$got want=$want")
+        compared += 1
+        if (want > 0) matched += 1
+      }
+    }
+    assert(compared >= 200 && matched >= 100, s"compared=$compared matched=$matched")
+  }
+
   test("sloppy phrase repeats: matched set equals exhaustive injective search") {
     // freq > 0 iff SOME injective choice (distinct doc positions within a
     // repeat group) has shifted window max-min <= slop

@@ -243,11 +243,13 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p.take(3000))
   }
 
-  test("intervals pattern expansion is dictionary-only; the positional cogroup " +
-    "prunes by the EXPANDED term set") {
-    import graft.query.Intervals
-    // expansion side: the prefix predicate reaches the disk-backed termStats
-    // scan as a pushed StartsWith — the expansion never touches postings
+  test("every bucket-kernel user plans one CoGroup over a broadcast bucket " +
+    "semi-join on docLens, no Window or global Sort, at a fixed job count") {
+    import graft.query.{Intervals, Phrase, Search}
+    import Intervals.{IAllOf, IMatch, IPrefix}
+    // intervals pattern expansion is dictionary-only: the prefix predicate
+    // reaches the disk-backed termStats scan as a pushed StartsWith, so the
+    // expansion never touches postings
     val tmp = java.nio.file.Files.createTempDirectory("plan-iv-").toString
     import spark.implicits._
     val docs = (0L until 200L).map(i => (i, s"alpha beta w$i")).toDF("doc_id", "text")
@@ -257,34 +259,49 @@ class PlanSpec extends SparkSpec {
     assert(ep.contains("PushedFilters") &&
       (ep.contains("StringStartsWith(term") || ep.contains("StartsWith(term")),
       "expansion predicate must reach the termStats scan: " + ep.take(3000))
-    assert(Intervals.resolve(disk, Intervals.IPrefix("al")) ==
-      Intervals.ITermSet(Seq("alpha")))
-    // match side: after resolve, the positional scan filters by the CONCRETE
-    // expanded terms (bounded isin), evaluated in the same cogroup kernel as
-    // every positional matcher — no Window, no global sort
-    val pos = graft.index.Positions.build(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-      "doc_id", "text")
-    val p = plan(Intervals.matchDocs(idx, pos, Intervals.IAllOf(Seq(
-      Intervals.IPrefix("ta"), Intervals.IMatch(Seq("join"))),
-      maxGaps = 2, ordered = true)))
-    assert(p.contains("CoGroup"), p.take(3000))
-    assert(!p.contains("Window"), p.take(3000))
-    assert(!p.contains("rangepartitioning"), p.take(3000))
-    assert(p.contains("table"), // 'ta%' expands to the concrete term
-      "the expanded term must appear as a literal scan filter: " + p.take(3000))
-  }
+    assert(Intervals.resolve(disk, IPrefix("al")) == Intervals.ITermSet(Seq("alpha")))
 
-  test("span_near matched set stays a cogroup over pruned positional blocks — no Window, no global sort") {
-    val pos = graft.index.Positions.build(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-      "doc_id", "text")
-    val p = plan(graft.query.Phrase.spanNearMatch(
-      idx, pos, Seq("table", "hash"), slop = 2, inOrder = false))
-    assert(p.contains("CoGroup"), p.take(3000))
-    assert(!p.contains("Window"), p.take(3000))
-    // partition-local sorts feed the cogroup; a GLOBAL sort would show as a
-    // range-partitioned exchange
-    assert(!p.contains("rangepartitioning"), p.take(3000))
+    val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
+    // (name, query, Spark jobs of one warm call + collect): the term-stats
+    // lookups plus the kernel stage's jobs — pinned, so an added scan, join
+    // or collect shows
+    val rows: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("bm25 plain", () => Bm25.topK(idx, Seq("join", "merge"), 10), 6),
+      ("bm25 synonym", () => Bm25.synonymTopK(idx, Seq("join", "merge"), 10), 6),
+      ("bm25 matchLike", () => Bm25.matchLike(idx, "ta%"), 5),
+      ("msearch", () => Search.msearch(idx,
+        Seq("q1" -> Seq("join", "merge"), "q2" -> Seq("hash")), 10), 8),
+      ("phrase exact", () => Phrase.score(idx, pos, Seq("hash", "join")), 6),
+      ("phrase sloppy", () => Phrase.sloppyScore(idx, pos, Seq("hash", "join"), 2), 6),
+      ("phrase prefix", () => Phrase.phrasePrefixScore(idx, pos, Seq("hash"), "jo"), 7),
+      ("span_near", () => Phrase.spanNearMatch(
+        idx, pos, Seq("table", "hash"), slop = 2, inOrder = false), 5),
+      ("span_first", () => Phrase.spanFirstMatch(idx, pos, "join", 3), 5),
+      ("span_not", () => Phrase.spanNotMatch(idx, pos, "join", "hash", 1, 1), 5),
+      ("span_containing", () => Phrase.spanContainingMatch(
+        idx, pos, Seq("hash", "join"), 2, inOrder = false, "table"), 5),
+      // after resolve, the positional scan filters by the CONCRETE expanded
+      // terms ('ta%' -> table) as a literal
+      ("intervals", () => Intervals.matchDocs(idx, pos, IAllOf(Seq(
+        IPrefix("ta"), IMatch(Seq("join"))), maxGaps = 2, ordered = true)), 6))
+    val measured = rows.map { case (name, q, _) =>
+      val p = plan(q())
+      assert("CoGroup".r.findAllIn(p).size == 1, s"$name: " + p.take(3000))
+      assert("BroadcastHashJoin \\[bucket#\\d+L\\], \\[bucket#\\d+L\\]".r.findFirstIn(p).isDefined,
+        s"$name: docLens must join the matched buckets by broadcast: " + p.take(3000))
+      // msearch ranks its <= k rows per request with a Window ABOVE the
+      // kernel; below the CoGroup no plan may window or sort globally
+      val checked = if (name == "msearch") p.substring(p.indexOf("CoGroup")) else p
+      assert(!checked.contains("Window"), s"$name: " + p.take(3000))
+      assert("Sort \\[[^\\]]*\\], true".r.findFirstIn(checked).isEmpty &&
+        !checked.contains("rangepartitioning"), s"$name: no global sort: " + p.take(3000))
+      if (name == "intervals")
+        assert(p.contains("table"), "the expanded term must appear as a literal scan filter: " +
+          p.take(3000))
+      q().collect() // warm: the first collect of a plan pays one-off caching
+      name -> jobsOf(q().collect())._2
+    }
+    val want = rows.map { case (name, _, jobs) => name -> jobs }
+    assert(measured == want, s"jobs per call: measured $measured")
   }
 }

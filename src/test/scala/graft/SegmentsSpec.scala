@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.corpus.Corpus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.index.{InvertedIndex, PostingCodec, Segments, TermStat}
 import graft.query.Bm25
 
@@ -41,35 +40,6 @@ class SegmentsSpec extends SparkSpec {
     val got = statsMap(merged.termStats)
     assert(got.nonEmpty)
     assert(got == statsMap(InvertedIndex.termStatsOf(merged.postings)))
-  }
-
-  /** The Spark jobs `f` starts. Listener events arrive asynchronously, so
-   *  a marker job before and after `f` brackets them: the count closes
-   *  once the listener has seen the second marker. */
-  private def jobsOf[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"segspec-marker-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markers = new java.util.concurrent.atomic.AtomicInteger
-    val closed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == tag)) {
-          if (markers.incrementAndGet() == 2) closed.countDown()
-        } else if (markers.get == 1) jobs.incrementAndGet()
-    }
-    def marker(): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker()
-      val r = f
-      marker()
-      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener missed a marker job")
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("merge of 3 segments is identical to the single-shot build") {

@@ -114,4 +114,26 @@ class StreamingIndexSpec extends SparkSpec {
     val full = InvertedIndex.build(docs, "doc_id", "text")
     assert(merged.stats == full.stats)
   }
+
+  test("staging a corpus evicts only its own older generations, never a " +
+    "sibling corpus whose store key extends its own") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("stage-root").toString
+    val stores = s"$root/stores"
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    val Seq(sf1, backup) = Seq(s"$root/sf1", s"$root/sf1_backup")
+    Seq(sf1, backup).foreach(d => docs.write.parquet(s"$d/documents.parquet"))
+    // an older generation of sf1's store: the next staging must evict it
+    val stale = new java.io.File(stores, sf1.replaceAll("[^a-zA-Z0-9.]", "_") + "_deadbeef")
+    assert(stale.mkdirs())
+    val a = CorpusEntries.stagedStreamStore(spark, sf1, stores)
+    val b = CorpusEntries.stagedStreamStore(spark, backup, stores)
+    assert(!stale.exists(), "an older generation of the same corpus must be evicted")
+    // staging sf1 again must leave sf1_backup's live store alone
+    assert(CorpusEntries.stagedStreamStore(spark, sf1, stores) == a)
+    Seq(a, b).foreach { st =>
+      assert(new java.io.File(s"$st/corpus/_SUCCESS").exists(), s"store $st was deleted")
+      assert(spark.read.parquet(s"$st/corpus").count() == 2)
+    }
+  }
 }
