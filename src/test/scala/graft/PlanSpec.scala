@@ -243,13 +243,11 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p.take(3000))
   }
 
-  test("every bucket-kernel user plans one CoGroup over a broadcast bucket " +
-    "semi-join on docLens, no Window or global Sort, at a fixed job count") {
-    import graft.query.{Intervals, Phrase, Search}
-    import Intervals.{IAllOf, IMatch, IPrefix}
-    // intervals pattern expansion is dictionary-only: the prefix predicate
-    // reaches the disk-backed termStats scan as a pushed StartsWith, so the
-    // expansion never touches postings
+  test("intervals pattern expansion is dictionary-only; the positional cogroup " +
+    "prunes by the EXPANDED term set") {
+    import graft.query.Intervals
+    // expansion side: the prefix predicate reaches the disk-backed termStats
+    // scan as a pushed StartsWith — the expansion never touches postings
     val tmp = java.nio.file.Files.createTempDirectory("plan-iv-").toString
     import spark.implicits._
     val docs = (0L until 200L).map(i => (i, s"alpha beta w$i")).toDF("doc_id", "text")
@@ -259,8 +257,37 @@ class PlanSpec extends SparkSpec {
     assert(ep.contains("PushedFilters") &&
       (ep.contains("StringStartsWith(term") || ep.contains("StartsWith(term")),
       "expansion predicate must reach the termStats scan: " + ep.take(3000))
-    assert(Intervals.resolve(disk, IPrefix("al")) == Intervals.ITermSet(Seq("alpha")))
+    assert(Intervals.resolve(disk, Intervals.IPrefix("al")) ==
+      Intervals.ITermSet(Seq("alpha")))
+    // match side: after resolve, the positional scan filters by the CONCRETE
+    // expanded terms (bounded isin), evaluated in the same cogroup kernel as
+    // every positional matcher — no Window, no global sort
+    val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
+    val p = plan(Intervals.matchDocs(idx, pos, Intervals.IAllOf(Seq(
+      Intervals.IPrefix("ta"), Intervals.IMatch(Seq("join"))),
+      maxGaps = 2, ordered = true)))
+    assert(p.contains("CoGroup"), p.take(3000))
+    assert(!p.contains("Window"), p.take(3000))
+    assert(!p.contains("rangepartitioning"), p.take(3000))
+    assert(p.contains("table"), // 'ta%' expands to the concrete term
+      "the expanded term must appear as a literal scan filter: " + p.take(3000))
+  }
 
+  test("span_near matched set stays a cogroup over pruned positional blocks — no Window, no global sort") {
+    val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
+    val p = plan(graft.query.Phrase.spanNearMatch(
+      idx, pos, Seq("table", "hash"), slop = 2, inOrder = false))
+    assert(p.contains("CoGroup"), p.take(3000))
+    assert(!p.contains("Window"), p.take(3000))
+    // partition-local sorts feed the cogroup; a GLOBAL sort would show as a
+    // range-partitioned exchange
+    assert(!p.contains("rangepartitioning"), p.take(3000))
+  }
+
+  test("every bucket-kernel user plans one CoGroup over a broadcast bucket " +
+    "semi-join on docLens, no Window or global Sort, at a fixed job count") {
+    import graft.query.{Intervals, Phrase, Search}
+    import Intervals.{IAllOf, IMatch, IPrefix}
     val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
     // (name, query, Spark jobs of one warm call + collect): the term-stats
     // lookups plus the kernel stage's jobs — pinned, so an added scan, join
