@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.corpus.Corpus
-import graft.index.{Deletes, Index, IndexCache, Segments}
+import graft.index.{BoundedCache, Deletes, Index, IndexCache, Segments}
 import graft.query.Bm25
 
 /**
@@ -15,11 +15,11 @@ import graft.query.Bm25
  */
 object CorpusEntries {
 
-  /** Cheap corpus identity (file names + sizes + mtimes of the documents
-   *  table, hashed) — on-disk streaming stores key their path on it so a
-   *  REGENERATED corpus at the same dir gets a fresh staging + checkpoint
-   *  instead of serving stale state (documents.parquet may be a single
-   *  file or a Spark-written directory). */
+  /** Cheap corpus identity: the SHA-256 hex of the documents table's file
+   *  names + sizes + mtimes — on-disk stores key their path (or marker) on
+   *  it so a REGENERATED corpus at the same dir gets a fresh store instead
+   *  of serving stale state (documents.parquet may be a single file or a
+   *  Spark-written directory). */
   private[graft] def corpusIdent(dir: String): String = {
     val src = new java.io.File(s"$dir/documents.parquet")
     val files =
@@ -27,7 +27,8 @@ object CorpusEntries {
       else Seq(src)
     val ident = files.map(f => s"${f.getName}|${f.length}|${f.lastModified}")
       .sorted.mkString("\n")
-    java.lang.Integer.toHexString(ident.hashCode)
+    java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(ident.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   /** Ident-keyed streaming store with the corpus staged as a DIRECTORY of
@@ -36,20 +37,24 @@ object CorpusEntries {
    *  corpus dir are evicted (they would otherwise accumulate one full
    *  staged corpus copy + checkpoint per regeneration), and a
    *  half-written staging (no _SUCCESS — e.g. a crash mid-write)
-   *  restages instead of latching a partial corpus forever. Returns the
-   *  store dir; staged files live at `<store>/corpus`. */
+   *  restages instead of latching a partial corpus forever. Registry
+   *  entries built over an evicted generation are evicted with it. Returns
+   *  the store dir; staged files live at `<store>/corpus`. */
   private[graft] def stagedStreamStore(s: SparkSession, dir: String,
                                        root: String): String = {
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val store = s"$root/${key}_${corpusIdent(dir)}"
+    val base = BoundedCache.storePath(root, dir)
+    val store = s"${base}_${corpusIdent(dir)}"
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     // this corpus's generations only: `<key>_<hex ident>` exactly — a prefix
     // match would also take a sibling corpus whose key extends this one
     // (`sf1` vs `sf1_backup`)
-    val generation = (java.util.regex.Pattern.quote(key) + "_[0-9a-f]+").r
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => generation.matches(f.getName) && f.getName != new java.io.File(store).getName)
-      .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f.getPath), true))
+    val generation = (java.util.regex.Pattern.quote(base) + "_[0-9a-f]+").r
+    Option(new java.io.File(root).list()).getOrElse(Array.empty).map(g => s"$root/$g")
+      .filter(g => generation.matches(g) && g != store)
+      .foreach { g =>
+        fs.delete(new org.apache.hadoop.fs.Path(g), true)
+        BoundedCache.session.invalidate(_.dir == g)
+      }
     val corpusDir = s"$store/corpus"
     if (!new java.io.File(s"$corpusDir/_SUCCESS").exists()) {
       s.read.parquet(s"$dir/documents.parquet")
@@ -64,24 +69,15 @@ object CorpusEntries {
 
   /** Store layout version — bump when the on-disk block schema changes so a
    *  stale store from an older build is never merged against new readers. */
-  private def segStore(dir: String) =
-    s"target/segstore/v2/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+  private def segStore(dir: String) = BoundedCache.storePath("target/segstore/v2", dir)
 
-  /** One segmented build per (session, sfDir), committed under target/.
-   *  Keyed by the SparkContext's applicationId too: a cached Index bound to
-   *  a stopped context would fail at action time (Bench cycles sessions). */
-  private val segCache = scala.collection.concurrent.TrieMap.empty[(String, String), Index]
-
-  private def segmented(s: SparkSession, dir: String): Index = {
-    segCache.keySet.filter(_._1 != s.sparkContext.applicationId).foreach(segCache.remove)
-    segCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
+  /** One segmented build per (session, sfDir), committed under target/. */
+  private def segmented(s: SparkSession, dir: String): Index =
+    IndexCache.cachedIndex(s, "segments", dir) {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Segments.buildResumable(docs, "doc_id", "text", Analyzer.Simple, segStore(dir), NSeg)
-      val idx = Segments.merge(s, segStore(dir), NSeg)
-      Index(idx.postings.persist(), idx.docLens.persist(), idx.termStats.persist(),
-        idx.stats, idx.analyzer)
-    })
-  }
+      Right(Segments.merge(s, segStore(dir), NSeg))
+    }
 
   private def lineageDf(s: SparkSession, dir: String): DataFrame = {
     segmented(s, dir) // ensure built
@@ -113,9 +109,8 @@ object CorpusEntries {
     "segments_snapshot_restore" -> ((s, dir) => {
       import s.implicits._
       segmented(s, dir) // ensure built
-      val tag = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-      val repo = s"target/snaprepo/$tag"
-      val rest = s"target/snaprest/$tag"
+      val repo = BoundedCache.storePath("target/snaprepo", dir)
+      val rest = BoundedCache.storePath("target/snaprest", dir)
       val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(repo), true)
       fs.delete(new org.apache.hadoop.fs.Path(rest), true)
@@ -156,7 +151,7 @@ object CorpusEntries {
     // emitting its merged term stats against the fresh-build oracle
     "segments_tiered_compact" -> ((s, dir) => {
       segmented(s, dir) // ensure built
-      val dst = s"target/tiercompact/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+      val dst = BoundedCache.storePath("target/tiercompact", dir)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val actions = Segments.tieredCompact(docs, "doc_id", "text",
         segStore(dir), dst, NSeg)
@@ -296,20 +291,15 @@ object CorpusEntries {
     // incremental build: Structured Streaming micro-batches -> segments ->
     // merge; stats must equal the batch build's (same oracle as term_stats)
     "stream_index_term_stats" -> ((s, dir) => {
-      streamCache.keySet.filter(_._1 != s.sparkContext.applicationId).foreach(streamCache.remove)
-      // cache keyed on the ident-bearing STORE path: a regenerated corpus
-      // at the same dir misses the cache and builds a fresh store
+      // keyed on the ident-bearing STORE path: a regenerated corpus at the
+      // same dir misses and builds a fresh store
       val store = stagedStreamStore(s, dir, "target/streamstore/v2")
-      val idx = streamCache.getOrElseUpdate((s.sparkContext.applicationId, store), {
-        val i = graft.streaming.StreamingIndex.buildAvailableNow(
-          s, s"$store/corpus", store, "doc_id", "text")
-        Index(i.postings.persist(), i.docLens.persist(), i.termStats.persist(), i.stats, i.analyzer)
-      })
+      val idx = IndexCache.cachedIndex(s, "stream-index", store)(Right(
+        graft.streaming.StreamingIndex.buildAvailableNow(
+          s, s"$store/corpus", store, "doc_id", "text")))
       idx.termStats.toDF().select(col("term"), col("df"), col("ttf"))
     })
   )
-
-  private val streamCache = scala.collection.concurrent.TrieMap.empty[(String, String), Index]
 
   def oracles(tokCte: String): Map[String, String] = Map(
     "corpus_ingest" ->

@@ -7,6 +7,7 @@ import graft.ops.{Ann, Chunkers, Dedup, Multimodal, Rerank, Sample, Semantic, Sp
 import graft.hybrid._
 import graft.functions.Combine
 import graft.stats.EventStats
+import graft.index.BoundedCache
 
 /** Typed rows for the sessionization stream (flatMapGroupsWithState). */
 case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long)
@@ -163,7 +164,7 @@ object DataEntries {
     // same search against the persisted (partitioned-by-centroid) build
     // artifact: probes prune to nProbe partitions at the storage layer
     "ann_ivf_persisted" -> ((s, dir) => {
-      val path = s"target/ivfstore/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+      val path = BoundedCache.storePath("target/ivfstore", dir)
       val asg = Ann.ivfBuild(emb(s, dir), "vec_id", "embedding", 16, path)
       Ann.ivfTopK(emb(s, dir), "vec_id", "embedding", queryId = 2L,
         nCentroids = 16, nProbe = 4, k = 10, assigned = Some(asg))
@@ -177,7 +178,7 @@ object DataEntries {
     // iterations scan a quarter of the corpus; only the final assignment
     // pass is full — exactness at nProbe = C is centroid-independent.
     "ann_ivf_kmeans" -> ((s, dir) => {
-      val path = s"target/ivfkmeans/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+      val path = BoundedCache.storePath("target/ivfkmeans", dir)
       val (cents, asg) =
         Ann.ivfBuildLearned(emb(s, dir), "vec_id", "embedding", 16, path, iters = 3,
           trainSampleMod = 4)
@@ -246,20 +247,12 @@ object DataEntries {
     // trailing partitions are never scanned (Lucene index.sort +
     // TopFieldCollector early exit as storage layout)
     "sorted_index_topk" -> ((s, dir) => {
-      val path = s"target/sortstore/${dir.replace('/', '_')}"
+      val path = BoundedCache.storePath("target/sortstore", dir)
       // the on-disk sorted store is keyed on CORPUS IDENTITY (source file
       // names + sizes + mtimes), not just _SUCCESS presence — a changed
       // corpus at the same path invalidates and rewrites instead of
-      // serving stale results. documents.parquet may be a single file
-      // (DuckDB COPY, the testdata dirs) or a Spark-written directory —
-      // identity covers both.
-      val src = new java.io.File(s"$dir/documents.parquet")
-      val files =
-        if (src.isDirectory) Option(src.listFiles()).getOrElse(Array.empty).toSeq
-        else Seq(src)
-      val ident = files
-        .map(f => s"${f.getName}|${f.length}|${f.lastModified}")
-        .sorted.mkString("\n")
+      // serving stale results
+      val ident = CorpusEntries.corpusIdent(dir)
       val marker = new java.io.File(s"$path/_corpus_id")
       val fresh = marker.exists() &&
         new String(java.nio.file.Files.readAllBytes(marker.toPath),
@@ -465,15 +458,9 @@ object DataEntries {
   /** IVF assignment as a once-per-dir build artifact (it is a function of
    *  the corpus, not the query — recomputing it per query would be
    *  O(corpus x centroids) per search). */
-  private val ivfCache = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def ivfAssignment(s: SparkSession, dir: String): DataFrame = {
-    ivfCache.keySet.filter(_._1 != s.sparkContext.applicationId).foreach(ivfCache.remove)
-    ivfCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val a = Ann.ivfAssign(emb(s, dir), "vec_id", "embedding", 16).cache()
-      a.count()
-      a
-    })
-  }
+  private def ivfAssignment(s: SparkSession, dir: String): DataFrame =
+    BoundedCache.dataset(s, "ivf-assignment", dir)(
+      Ann.ivfAssign(emb(s, dir), "vec_id", "embedding", 16))
 
   /** Structured Streaming over the events table (Trigger-free replay via
    *  processAllAvailable; memory sink), producing the same hourly windowed

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Bound, BoundMode, Combine}
 import graft.hybrid._
-import graft.index.IndexCache
+import graft.index.{BoundedCache, IndexCache}
 import graft.ops.Sparse
 import graft.query.Bm25
 
@@ -126,18 +126,19 @@ object HybridEntries {
           dims = 8, ivf = Some(IvfSource(cents, vecs)), ivfProbe = 16)
       }))
 
-  /** Build-once dense ANN structure for [[DenseIvf]] clauses: fixed
-   *  deterministic centroids (ids < 16, as `ann_ivf_topk` uses) and the
-   *  by-centroid partitioned vector artifact, so the clause's probe is a
-   *  partition-pruned scan instead of a brute corpus pass. */
-  private def ivfSource(s: SparkSession, dir: String): IvfSource = {
-    val path = s"target/ivfhybrid/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-    val e = s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").as("doc_id"), col("embedding").as("vec"))
-    val cents = e.where(col("doc_id") < 16)
-      .select(col("doc_id").as("c_id"), col("vec").as("cv"))
-    IvfSource(cents, graft.ops.Ann.ivfBuildVectors(e, "doc_id", "vec", cents, path))
-  }
+  /** Build-once (per session and dir) dense ANN structure for [[DenseIvf]]
+   *  clauses: fixed deterministic centroids (ids < 16, as `ann_ivf_topk`
+   *  uses) and the by-centroid partitioned vector artifact, so the clause's
+   *  probe is a partition-pruned scan instead of a brute corpus pass. */
+  private def ivfSource(s: SparkSession, dir: String): IvfSource =
+    BoundedCache.artifact(s, "ivf-hybrid", dir) {
+      val e = s.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id").as("doc_id"), col("embedding").as("vec"))
+      val cents = e.where(col("doc_id") < 16)
+        .select(col("doc_id").as("c_id"), col("vec").as("cv"))
+      (IvfSource(cents, graft.ops.Ann.ivfBuildVectors(e, "doc_id", "vec", cents,
+        BoundedCache.storePath("target/ivfhybrid", dir))), Nil)
+    }
 
   private def run(query: HybridQuery, langFilter: Option[String] = None)(
       s: SparkSession, dir: String): DataFrame = {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.IndexCache
+import graft.index.{BoundedCache, IndexCache}
 import graft.ops.{Chunkers, Seismic, Sparse, TextOps}
 
 /**
@@ -21,18 +21,11 @@ object PipelineEntries {
   /** One exact-mode clustered index per corpus dir per session. Cluster ratio
    *  0.02 keeps the assignment O(n x 0.02n) while still exercising the full
    *  clustering path; exactness never depends on the cluster count. */
-  private val seismicCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.Dataset[graft.ops.ClusteredPosting]]
-  private def seismicExact(s: SparkSession, dir: String) = {
-    seismicCache.keySet.filter(_._1 != s.sparkContext.applicationId).foreach(seismicCache.remove)
-    seismicCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val cidx = Seismic.buildClusteredIndex(tw(s, dir), nPostings = Int.MaxValue,
+  private def seismicExact(s: SparkSession, dir: String) =
+    BoundedCache.dataset(s, "seismic-exact", dir)(
+      Seismic.buildClusteredIndex(tw(s, dir), nPostings = Int.MaxValue,
         clusterRatio = 0.02, summaryPruneRatio = 1.0, maxClusters = 32,
-        hashAssign = true).cache()
-      cidx.count()
-      cidx
-    })
-  }
+        hashAssign = true))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- parent-child join field ----

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /**
  * Memory-accounted LRU over persisted session artifacts — the Spark analogue
@@ -18,110 +18,131 @@ import org.apache.spark.sql.Dataset
  *    serves the read from storage.
  *
  * Spark-side the "cache" is `persist()` and the "storage" is the artifact's
- * lineage: an evicted entry unpersists (its blocks are dropped, the plan
- * stays valid), and a breaker-refused admission returns the UNPERSISTED
- * Dataset — every read still succeeds, it just recomputes from source,
- * exactly the gated reader's fallback. This bound matters at scale: the
- * per-field / semantic-chunk artifacts this guards are each a meaningful
- * fraction of executor storage memory, and an unbounded cache map defers to
- * Spark's own storage-memory eviction, which drops the wrong BLOCKS
- * (per-partition, no artifact-level recency) instead of whole cold
- * artifacts. The LRU decision has to live at the layer that knows the
- * artifact boundaries and their access order.
+ * lineage. An entry is a built artifact (one Dataset, an [[Index]], a pair
+ * of IVF tables) with every Dataset it keeps persisted: eviction unpersists
+ * them all (the blocks are dropped, the plans stay valid), and a
+ * breaker-refused admission returns the artifact UNPERSISTED — every read
+ * still succeeds, it just recomputes from source, exactly the gated
+ * reader's fallback. The LRU decision lives at the layer that knows the
+ * artifact boundaries: Spark's own storage-memory eviction drops BLOCKS
+ * (per-partition, no artifact-level recency), not whole cold artifacts.
  *
- * Accounting follows the reference's Accountable pattern — bytes are
- * recorded once at admission so release always matches the charge
- * (RamBytesRecorder's contract). The charge is MEASURED, not estimated:
- * the artifact materializes first and its actual cached block bytes (the
- * storage-info delta across the persist) are weighed, like ramBytesUsed on
- * a built structure. An artifact that alone exceeds the limit is
- * un-persisted again and counted as a breaker rejection — the same
- * discover-mid-write-and-release path the reference's cacheable writers
- * take when the breaker trips partway through. (A plan-statistics estimate
- * would be cheaper but degrades to Long.MaxValue whenever any operator in
- * the artifact's plan cannot be estimated, which would silently reject
- * every admission.) Tests and deterministic entries pass an explicit
- * weigher. All operations are synchronized; the artifact count is
- * session-scale (tens), never data-scale.
+ * The charge is MEASURED, not estimated, and recorded once at admission
+ * so release always matches it (RamBytesRecorder's contract): the storage
+ * snapshot is taken before the build runs, and the cached block bytes it
+ * added — less what nested builds were charged — are weighed, like
+ * ramBytesUsed on a built structure. An artifact that alone exceeds the
+ * limit is un-persisted again and counted as a breaker rejection. (A
+ * plan-statistics estimate degrades to Long.MaxValue whenever any operator
+ * cannot be estimated, which would silently reject every admission.) Tests
+ * and deterministic entries pass an explicit weigher.
+ *
+ * Builds run one at a time, so a key is built once however many callers
+ * ask for it, and a build's storage delta holds only its own blocks; hits
+ * never wait for a build of another key.
  */
 class BoundedCache[K](val limitBytes: Long,
                       weigher: Option[Dataset[_] => Long] = None) {
   require(limitBytes > 0, "limitBytes must be positive")
 
-  private case class Entry(ds: Dataset[_], bytes: Long)
+  private case class Entry(value: Any, held: Seq[Dataset[_]], bytes: Long)
   // accessOrder=true: iteration is least-recently-used first, the same
   // recency order AbstractLruCache keeps in its ConcurrentLinkedHashMap
   private val entries = new java.util.LinkedHashMap[K, Entry](16, 0.75f, true)
-  private var usedBytes = 0L
+  // monitors are reentrant: a build may get the entries it is built from
+  private val building = new Object
+  private var usedBytes, admittedBytes = 0L
   private var hitN, missN, evictN, rejectN = 0L
 
-  /** Two-tier read (CacheGatedPostingsReader): cached Dataset on hit;
-   *  on miss, `build` runs and the result is admitted if the breaker
-   *  allows — evicting least-recent entries first — else returned
-   *  unpersisted (the read-from-storage fallback). */
-  def get[T](key: K)(build: => Dataset[T]): Dataset[T] = synchronized {
-    val hit = entries.get(key)
-    if (hit != null) { hitN += 1; hit.ds.asInstanceOf[Dataset[T]] }
-    else {
-      missN += 1
-      val ds = build
-      val sc = ds.sparkSession.sparkContext
-      val before = sc.getRDDStorageInfo.map(_.id).toSet
-      val p = ds.persist()
-      p.count()
-      val bytes = weigher match {
-        case Some(w) => math.max(w(p), 0L)
-        case None => sc.getRDDStorageInfo.filterNot(r => before(r.id))
-          .map(r => r.memSize + r.diskSize).sum
-      }
+  /** Two-tier read (CacheGatedPostingsReader) of a one-Dataset artifact:
+   *  the cached Dataset on hit; on miss `build` runs, is persisted and
+   *  materialized, and is admitted if the breaker allows — evicting
+   *  least-recent entries first — else returned unpersisted (the
+   *  read-from-storage fallback). */
+  def get[T](key: K)(build: => Dataset[T]): Dataset[T] =
+    getOrBuild(key)(BoundedCache.materialized(build))
+
+  /** Atomic get-or-build of any artifact: `build` returns the artifact and
+   *  every Dataset it keeps persisted. One build per key even under
+   *  concurrent callers; a build that throws leaves no entry. */
+  def getOrBuild[A](key: K)(build: => (A, Seq[Dataset[_]])): A =
+    lookup[A](key).getOrElse(building.synchronized {
+      lookup[A](key).getOrElse(admit(key, build))
+    })
+
+  private def lookup[A](key: K): Option[A] = synchronized {
+    Option(entries.get(key)).map { e => hitN += 1; e.value.asInstanceOf[A] }
+  }
+
+  private def admit[A](key: K, build: => (A, Seq[Dataset[_]])): A = {
+    synchronized { missN += 1 }
+    val sc = Option.when(weigher.isEmpty)(SparkSession.active.sparkContext)
+    val before = sc.fold(Set.empty[Int])(_.getRDDStorageInfo.map(_.id).toSet)
+    val nested = synchronized(admittedBytes)
+    val (value, held) = build
+    val bytes = weigher match {
+      case Some(w) => held.map(d => math.max(w(d), 0L)).sum
+      case None => math.max(0L, sc.get.getRDDStorageInfo.filterNot(r => before(r.id))
+        .map(r => r.memSize + r.diskSize).sum - (synchronized(admittedBytes) - nested))
+    }
+    synchronized {
       if (bytes > limitBytes) {
         // even an empty cache cannot hold it: the breaker refuses
         // (CircuitBreakerManager.addMemoryUsage -> false), the blocks are
         // released again, and the caller reads through to the lineage
         rejectN += 1
-        scala.util.Try(p.unpersist())
-        ds
+        held.foreach(d => scala.util.Try(d.unpersist()))
       } else {
         evict(bytes - (limitBytes - usedBytes))
-        entries.put(key, Entry(p, bytes))
+        entries.put(key, Entry(value, held, bytes))
         usedBytes += bytes
-        p
+        admittedBytes += bytes
       }
     }
+    value
   }
 
   /** Evict least-recently-used entries until at least `ramBytesToRelease`
-   *  bytes are freed or the cache is empty (AbstractLruCache.evict). Evicted
-   *  artifacts unpersist; a dead SparkContext (session cycling) only needs
-   *  the accounting dropped, so unpersist failures are swallowed. */
+   *  bytes are freed or the cache is empty (AbstractLruCache.evict).
+   *  Evicted artifacts unpersist every Dataset they hold. */
   def evict(ramBytesToRelease: Long): Long = synchronized {
-    var released = 0L
-    val it = entries.entrySet().iterator()
-    while (released < ramBytesToRelease && it.hasNext) {
-      val e = it.next()
-      scala.util.Try(e.getValue.ds.unpersist())
-      released += e.getValue.bytes
-      usedBytes -= e.getValue.bytes
-      evictN += 1
-      it.remove()
-    }
-    released
+    var left = ramBytesToRelease
+    dropWhere(release = true)((_, e) => left > 0 && { left -= e.bytes; true })
   }
 
   /** Drop everything — the clear-cache action
    *  (rest/RestNeuralSparseClearCacheHandler.java's transport chain). */
-  def clear(): Unit = synchronized { evict(Long.MaxValue) }
+  def clear(): Unit = evict(Long.MaxValue)
+
+  /** Evict (unpersist and drop) the entries whose key is `stale` — e.g.
+   *  every entry built over an on-disk store that was just deleted. */
+  def invalidate(stale: K => Boolean): Unit = dropWhere(release = true)((k, _) => stale(k))
 
   /** Drop entries whose key fails the predicate WITHOUT unpersisting —
    *  for artifacts bound to an already-stopped SparkContext, whose blocks
-   *  died with it (IndexCache.evictOthers semantics). */
-  def retainKeys(keep: K => Boolean): Unit = synchronized {
+   *  died with it. */
+  def retainKeys(keep: K => Boolean): Unit = dropWhere(release = false)((k, _) => !keep(k))
+
+  /** Drops the entries `p` selects, in LRU order, and returns their bytes.
+   *  A dead SparkContext (session cycling) only needs the accounting
+   *  dropped, so unpersist failures are swallowed. */
+  private def dropWhere(release: Boolean)(p: (K, Entry) => Boolean): Long = synchronized {
+    var dropped = 0L
     val it = entries.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (!keep(e.getKey)) { usedBytes -= e.getValue.bytes; it.remove() }
+      val v = e.getValue
+      if (p(e.getKey, v)) {
+        if (release) { v.held.foreach(d => scala.util.Try(d.unpersist())); evictN += 1 }
+        usedBytes -= v.bytes
+        dropped += v.bytes
+        it.remove()
+      }
     }
+    dropped
   }
+
+  def contains(key: K): Boolean = synchronized { entries.containsKey(key) }
 
   /** (stat_name, value) rows — the cache slice of the reference's stats
    *  surface (cache/MemMonitoredCache + stats managers). */
@@ -136,3 +157,46 @@ class BoundedCache[K](val limitBytes: Long,
   }
 }
 
+object BoundedCache {
+
+  /** Registry key: the artifact `kind` built over corpus (or store) `dir`
+   *  with `params`, in the application `app`. */
+  case class Key(app: String, kind: String, dir: String, params: String)
+
+  /** The one session artifact registry: every index, positional table,
+   *  semantic chunk table and ANN structure a session builds lives here.
+   *  The limit is effectively unbounded on a local host unless configured
+   *  (-Dgraft.cache.limitBytes); on a memory-tight cluster the bound turns
+   *  cold artifacts back into recomputable lineage instead of letting
+   *  Spark's block-level storage eviction shred hot ones. */
+  val session: BoundedCache[Key] = new BoundedCache(
+    sys.props.get("graft.cache.limitBytes").map(_.toLong).getOrElse(1L << 40))
+
+  /** Get-or-build `kind` over `dir` in `spark`'s application (see
+   *  [[BoundedCache.getOrBuild]]). Entries of any other application are
+   *  dropped first without unpersisting: they are bound to a stopped
+   *  SparkContext (the bench cycles sessions in one JVM), whose blocks died
+   *  with it, and would otherwise pin dead plans for the JVM's lifetime. */
+  def artifact[A](spark: SparkSession, kind: String, dir: String, params: String = "")(
+      build: => (A, Seq[Dataset[_]])): A = {
+    val app = spark.sparkContext.applicationId
+    session.retainKeys(_.app == app)
+    session.getOrBuild(Key(app, kind, dir, params))(build)
+  }
+
+  /** A one-Dataset artifact, persisted and materialized at its build. */
+  def dataset[T](spark: SparkSession, kind: String, dir: String, params: String = "")(
+      build: => Dataset[T]): Dataset[T] =
+    artifact(spark, kind, dir, params)(materialized(build))
+
+  private def materialized[T](ds: Dataset[T]): (Dataset[T], Seq[Dataset[_]]) = {
+    val p = ds.persist()
+    p.count()
+    (p, Seq(p))
+  }
+
+  /** The on-disk store of an artifact under `root` for corpus `dir`:
+   *  `<root>/<dir with every character outside [a-zA-Z0-9.] as _>`. */
+  def storePath(root: String, dir: String): String =
+    s"$root/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+}

@@ -1,61 +1,66 @@
 package graft.index
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.analysis.Analyzer
 
 /**
- * Session-lifetime cache of built indexes keyed by (corpus dir, analyzer) —
- * the analogue of the reference's warmed posting cache
+ * Session-lifetime indexes and index-time artifacts over a corpus dir — the
+ * analogue of the reference's warmed posting cache
  * (reference: transport/NeuralSparseWarmupTransportAction.java; sparse cache pkg),
- * realized as Spark `persist()`. The merged block Dataset (the one
- * analyze+shuffle pass) is persisted FIRST and every index table derives from
- * it, so warming runs the expensive pass exactly once.
+ * realized as Spark `persist()` entries of the session registry
+ * ([[BoundedCache.session]]: LRU recency, byte accounting against a limit,
+ * breaker-refused admissions reading through).
  */
 object IndexCache {
-  // keyed by applicationId too: a persisted Index bound to a stopped
-  // SparkContext would fail at action time when sessions cycle in one JVM
-  private val cache = scala.collection.concurrent.TrieMap.empty[(String, String, String), Index]
 
-  /** Drop every cached entry that belongs to another (stopped) application —
-   *  session-cycling JVMs (the bench) would otherwise pin dead plans and
-   *  cached-DataFrame references for the JVM's lifetime. */
-  def evictOthers(appId: String): Unit =
-    cache.keySet.filter(_._1 != appId).foreach(cache.remove)
+  /** The one Index registry entry. `Left(blocks)`: a merged block table
+   *  (the one analyze + fragment shuffle) — persisted and materialized
+   *  FIRST, and every index table derives from it, so warming runs the
+   *  expensive pass exactly once. `Right(idx)`: an index read back from a
+   *  committed store, its three tables persisted. Eviction unpersists every
+   *  Dataset the entry holds. */
+  private[graft] def cachedIndex(spark: SparkSession, kind: String, dir: String,
+                                 params: String = "")(
+      source: => Either[(Dataset[BuildBlock], String), Index]): Index =
+    BoundedCache.artifact(spark, kind, dir, params) {
+      source match {
+        case Left((merged, analyzer)) =>
+          val blocks = merged.persist()
+          blocks.count()
+          val postings = InvertedIndex.postingsFromBlocks(blocks).persist()
+          val docLens = InvertedIndex.docLensFromBlocks(blocks).persist()
+          val termStats = InvertedIndex.termStatsOf(postings).persist()
+          val stats = InvertedIndex.statsOf(docLens)
+          (Index(postings, docLens, termStats, stats, analyzer),
+            Seq(blocks, postings, docLens, termStats))
+        case Right(i) =>
+          val idx = Index(i.postings.persist(), i.docLens.persist(),
+            i.termStats.persist(), i.stats, i.analyzer)
+          (idx, Seq(idx.postings, idx.docLens, idx.termStats))
+      }
+    }
 
-  /** The single-Dataset session artifacts (positions, semantic chunk
-   *  tables) live behind the memory-accounted LRU tier ([[BoundedCache]] —
-   *  the reference's cache/ package: LRU recency, byte accounting against a
-   *  limit, breaker-refused admissions reading through). The limit is
-   *  effectively unbounded on the 128 GiB local harness unless configured
-   *  (-Dgraft.cache.limitBytes); on a memory-tight cluster the bound turns
-   *  cold artifacts back into recomputable lineage instead of letting
-   *  Spark's block-level storage eviction shred hot ones. */
-  val artifacts: BoundedCache[(String, String, String)] =
-    new BoundedCache(
-      sys.props.get("graft.cache.limitBytes").map(_.toLong).getOrElse(1L << 40))
+  private def blocksOf(docs: DataFrame, column: String, analyzer: String) =
+    Left((InvertedIndex.mergedBlocksOf(docs, "doc_id", column, analyzer), analyzer))
 
   /** Positional block table over `documents.parquet` (the `.pos` analogue),
    *  warmed once per session like the main index. */
   def positions(spark: SparkSession, sfDir: String,
-                analyzer: String = Analyzer.Simple): org.apache.spark.sql.Dataset[PosBlock] = {
-    artifacts.retainKeys(_._1 == spark.sparkContext.applicationId)
-    artifacts.get((spark.sparkContext.applicationId, s"$sfDir/documents.parquet#pos", analyzer)) {
+                analyzer: String = Analyzer.Simple): Dataset[PosBlock] =
+    BoundedCache.dataset(spark, "positions", sfDir, analyzer) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       Positions.build(docs, "doc_id", "text", analyzer)
     }
-  }
 
   /** Positional blocks over a NON-text corpus column ([[corpusField]]'s
    *  positional analogue) — multi_match type=phrase verifies per-field
    *  adjacency against these. */
   def corpusFieldPositions(spark: SparkSession, sfDir: String, column: String,
-                           analyzer: String = Analyzer.Simple): org.apache.spark.sql.Dataset[PosBlock] = {
-    artifacts.retainKeys(_._1 == spark.sparkContext.applicationId)
-    artifacts.get((spark.sparkContext.applicationId, s"$sfDir#$column#pos", analyzer)) {
+                           analyzer: String = Analyzer.Simple): Dataset[PosBlock] =
+    BoundedCache.dataset(spark, "field-positions", sfDir, s"$column/$analyzer") {
       val corpus = graft.corpus.Corpus.ingest(spark, sfDir)
       Positions.build(corpus, "doc_id", column, analyzer)
     }
-  }
 
   /** Session-cached semantic chunk sub-field tables. These are INDEX-time
    *  artifacts — the reference's semantic field mapper generates the chunk
@@ -63,41 +68,31 @@ object IndexCache {
    *  re-encode the corpus. Entries/benches that measure the ingest itself
    *  call the builders directly. */
   def semanticDense(spark: SparkSession, sfDir: String,
-                    tokenLimit: Int = 20): org.apache.spark.sql.DataFrame = {
-    artifacts.retainKeys(_._1 == spark.sparkContext.applicationId)
-    artifacts.get((spark.sparkContext.applicationId, s"$sfDir#dense", s"$tokenLimit")) {
+                    tokenLimit: Int = 20): DataFrame =
+    BoundedCache.dataset(spark, "semantic-dense", sfDir, s"$tokenLimit") {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       graft.ops.Semantic.ingestDense(docs, "doc_id", "text", tokenLimit)
     }
-  }
 
   /** Chunk-vector IVF artifact for the PROBE-ROUTED dense semantic path
    *  ([[graft.ops.Semantic.denseChunkIvf]]) — built once per (session,
    *  sfDir) like every index-time structure; queries only read probed
    *  `c_id` partitions off it. */
-  private val denseIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-
   def semanticDenseIvf(spark: SparkSession, sfDir: String, tokenLimit: Int = 20,
-                       dims: Int = 8, nCentroids: Int = 16):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val app = spark.sparkContext.applicationId
-    denseIvfCache.keySet.filter(_._1 != app).foreach(denseIvfCache.remove)
-    denseIvfCache.getOrElseUpdate((app, s"$sfDir#denseivf/$tokenLimit/$dims/$nCentroids"), {
-      val path = s"target/semivf/${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}_$dims"
-      graft.ops.Semantic.denseChunkIvf(
-        semanticDense(spark, sfDir, tokenLimit), "doc_id", dims, nCentroids, path)
-    })
-  }
+                       dims: Int = 8, nCentroids: Int = 16): (DataFrame, DataFrame) =
+    BoundedCache.artifact(spark, "semantic-dense-ivf", sfDir,
+        s"$tokenLimit/$dims/$nCentroids") {
+      val path = s"${BoundedCache.storePath("target/semivf", sfDir)}_$dims"
+      (graft.ops.Semantic.denseChunkIvf(
+        semanticDense(spark, sfDir, tokenLimit), "doc_id", dims, nCentroids, path), Nil)
+    }
 
   def semanticSparse(spark: SparkSession, sfDir: String,
-                     tokenLimit: Int = 20): org.apache.spark.sql.DataFrame = {
-    artifacts.retainKeys(_._1 == spark.sparkContext.applicationId)
-    artifacts.get((spark.sparkContext.applicationId, s"$sfDir#sparse", s"$tokenLimit")) {
+                     tokenLimit: Int = 20): DataFrame =
+    BoundedCache.dataset(spark, "semantic-sparse", sfDir, s"$tokenLimit") {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       graft.ops.Semantic.ingestSparse(docs, "doc_id", "text", tokenLimit)
     }
-  }
 
   /** Index over a NON-text column of the north-rule corpus projection
    *  ([[graft.corpus.Corpus.ingest]]) — e.g. `path` for multi_match
@@ -106,19 +101,9 @@ object IndexCache {
    *  build shares the single-pass fragment shape with the primary index
    *  and is warmed/persisted per session the same way. */
   def corpusField(spark: SparkSession, sfDir: String, column: String,
-                  analyzer: String = Analyzer.Simple): Index = {
-    evictOthers(spark.sparkContext.applicationId)
-    cache.getOrElseUpdate((spark.sparkContext.applicationId, s"$sfDir#$column", analyzer), {
-      val corpus = graft.corpus.Corpus.ingest(spark, sfDir)
-      val blocks = InvertedIndex.mergedBlocksOf(corpus, "doc_id", column, analyzer).persist()
-      blocks.count()
-      val postings = InvertedIndex.postingsFromBlocks(blocks).persist()
-      val docLens = InvertedIndex.docLensFromBlocks(blocks).persist()
-      val termStats = InvertedIndex.termStatsOf(postings).persist()
-      val stats = InvertedIndex.statsOf(docLens)
-      Index(postings, docLens, termStats, stats, analyzer)
-    })
-  }
+                  analyzer: String = Analyzer.Simple): Index =
+    cachedIndex(spark, "field-index", sfDir, s"$column/$analyzer")(
+      blocksOf(graft.corpus.Corpus.ingest(spark, sfDir), column, analyzer))
 
   /** Index over the derived `title` field of the documents corpus — the
    *  first 5 whitespace tokens of `text`. A short sibling field whose
@@ -128,35 +113,14 @@ object IndexCache {
    *  cannot exercise). Built and warmed like any per-field index. */
   def documentsTitle(spark: SparkSession, sfDir: String): Index = {
     import org.apache.spark.sql.functions.{col, concat_ws, slice, split}
-    evictOthers(spark.sparkContext.applicationId)
-    cache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$sfDir#title", Analyzer.Simple), {
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"),
-            concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("title"))
-        val blocks = InvertedIndex.mergedBlocksOf(docs, "doc_id", "title",
-          Analyzer.Simple).persist()
-        blocks.count()
-        val postings = InvertedIndex.postingsFromBlocks(blocks).persist()
-        val docLens = InvertedIndex.docLensFromBlocks(blocks).persist()
-        val termStats = InvertedIndex.termStatsOf(postings).persist()
-        val stats = InvertedIndex.statsOf(docLens)
-        Index(postings, docLens, termStats, stats, Analyzer.Simple)
-      })
+    cachedIndex(spark, "title-index", sfDir, Analyzer.Simple)(blocksOf(
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), concat_ws(" ", slice(split(col("text"), " "), 1, 5)).as("title")),
+      "title", Analyzer.Simple))
   }
 
   /** Index over `documents.parquet` in sfDir (doc_id, text). */
-  def documents(spark: SparkSession, sfDir: String, analyzer: String = Analyzer.Simple): Index = {
-    evictOthers(spark.sparkContext.applicationId)
-    cache.getOrElseUpdate((spark.sparkContext.applicationId, s"$sfDir/documents.parquet", analyzer), {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val blocks = InvertedIndex.mergedBlocksOf(docs, "doc_id", "text", analyzer).persist()
-      blocks.count() // one materialization of the analyze + fragment shuffle
-      val postings = InvertedIndex.postingsFromBlocks(blocks).persist()
-      val docLens = InvertedIndex.docLensFromBlocks(blocks).persist()
-      val termStats = InvertedIndex.termStatsOf(postings).persist()
-      val stats = InvertedIndex.statsOf(docLens)
-      Index(postings, docLens, termStats, stats, analyzer)
-    })
-  }
+  def documents(spark: SparkSession, sfDir: String, analyzer: String = Analyzer.Simple): Index =
+    cachedIndex(spark, "index", sfDir, analyzer)(
+      blocksOf(spark.read.parquet(s"$sfDir/documents.parquet"), "text", analyzer))
 }

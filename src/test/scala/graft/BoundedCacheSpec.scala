@@ -71,4 +71,66 @@ class BoundedCacheSpec extends SparkSpec {
     c.clear()
     assert(c.stats.toMap.apply("cache_ram_bytes_used") == 0L)
   }
+
+  test("concurrent callers of one key: the build runs once, all get the same instance") {
+    val c = new BoundedCache[String](1000L, Some(_ => 10L))
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]
+    val threads = (1 to 8).map(_ => new Thread(() => {
+      start.await()
+      got.add(c.get("k") { builds.incrementAndGet(); Thread.sleep(200); art(1) })
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join(60000))
+    assert(builds.get == 1, "one build per key")
+    assert(got.size == 8 && got.toArray.forall(_ eq got.peek()), "every caller got the one entry")
+    assert(c.stats.toMap.apply("cache_misses") == 1L && c.stats.toMap.apply("cache_hits") == 7L)
+    c.clear()
+  }
+
+  test("a build that throws leaves no entry; the next get builds again") {
+    val c = new BoundedCache[String](1000L, Some(_ => 10L))
+    intercept[IllegalStateException](
+      c.get[org.apache.spark.sql.Row]("x")(throw new IllegalStateException("build failed")))
+    assert(!c.contains("x") && c.stats.toMap.apply("cache_entries") == 0L)
+    var built = false
+    val x = c.get("x") { built = true; art(1) }
+    assert(built && c.contains("x") && x.storageLevel != StorageLevel.NONE)
+    c.clear()
+  }
+
+  test("a session artifact drops other applications' entries without unpersisting") {
+    val other = BoundedCache.Key("app-stopped", "spec", "/corpus", "")
+    val stale = BoundedCache.session.getOrBuild(other) {
+      val p = art(3).persist()
+      p.count()
+      (p, Seq(p))
+    }
+    val mine = BoundedCache.dataset(spark, "spec", "/corpus")(art(4))
+    assert(!BoundedCache.session.contains(other), "another application's entry is dropped")
+    assert(stale.storageLevel != StorageLevel.NONE, "its blocks are left alone")
+    assert(BoundedCache.session.contains(
+      BoundedCache.Key(spark.sparkContext.applicationId, "spec", "/corpus", "")))
+    stale.unpersist()
+    BoundedCache.session.invalidate(_.kind == "spec")
+    assert(mine.storageLevel == StorageLevel.NONE)
+  }
+
+  test("evicting an Index entry unpersists its blocks, postings, docLens and termStats") {
+    val dir = java.nio.file.Files.createTempDirectory("cache-index").toString
+    Seq((1L, "alpha beta"), (2L, "beta gamma"), (3L, "gamma delta alpha"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val idx = graft.index.IndexCache.documents(spark, dir)
+    idx.postings.count(); idx.docLens.count(); idx.termStats.count()
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size == 4, s"blocks + three tables are cached: $held")
+    BoundedCache.session.invalidate(_.dir == dir)
+    assert(Seq(idx.postings, idx.docLens, idx.termStats).forall(_.storageLevel == StorageLevel.NONE))
+    assert((sc.getPersistentRDDs.keySet intersect held).isEmpty,
+      "every Dataset the entry held is unpersisted, the block table included")
+  }
 }

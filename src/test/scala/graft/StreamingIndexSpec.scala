@@ -136,4 +136,46 @@ class StreamingIndexSpec extends SparkSpec {
       assert(spark.read.parquet(s"$st/corpus").count() == 2)
     }
   }
+
+  test("deleting an older stream-store generation evicts the index built over it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("stream-gen").toString
+    def generate(n: Int): Unit = (1 to n).map(i => (i.toLong, s"alpha beta w$i"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val sc = spark.sparkContext
+    generate(20)
+    val before = sc.getPersistentRDDs.keySet
+    // generation A: staged, streamed and held as a session entry
+    CorpusEntries.queries("stream_index_term_stats")(spark, dir).collect()
+    val genA = sc.getPersistentRDDs.keySet -- before
+    assert(genA.nonEmpty, "the stream entry persists its index tables")
+    // the corpus is regenerated: staging generation B deletes A's store
+    generate(30)
+    val storeB = CorpusEntries.stagedStreamStore(spark, dir, "target/streamstore/v2")
+    try assert((sc.getPersistentRDDs.keySet intersect genA).isEmpty,
+      "an entry over a deleted store must not stay persisted")
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(storeB))
+  }
+
+  test("corpusIdent is the SHA-256 of the documents listing: names, lengths and mtimes") {
+    def corpus(files: (String, String, Long)*): String = {
+      val dir = java.nio.file.Files.createTempDirectory("ident").toString
+      val docs = new java.io.File(s"$dir/documents.parquet")
+      assert(docs.mkdirs())
+      files.foreach { case (name, body, mtime) =>
+        val f = new java.io.File(docs, name)
+        java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
+        assert(f.setLastModified(mtime))
+      }
+      CorpusEntries.corpusIdent(dir)
+    }
+    val base = corpus(("a.parquet", "xxxx", 1000000L), ("b.parquet", "yy", 2000000L))
+    assert(base.matches("[0-9a-f]{64}"), base)
+    assert(corpus(("b.parquet", "zz", 2000000L), ("a.parquet", "wwww", 1000000L)) == base,
+      "equal listings (same names, lengths, mtimes) give equal digests")
+    assert(corpus(("a.parquet", "xxxxx", 1000000L), ("b.parquet", "yy", 2000000L)) != base,
+      "one file's length changed")
+    assert(corpus(("a.parquet", "xxxx", 1000000L), ("b.parquet", "yy", 3000000L)) != base,
+      "one file's mtime changed")
+  }
 }
