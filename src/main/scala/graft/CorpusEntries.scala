@@ -67,9 +67,10 @@ object CorpusEntries {
 
   private val NSeg = 4
 
-  /** Store layout version — bump when the on-disk block schema changes so a
-   *  stale store from an older build is never merged against new readers. */
-  private def segStore(dir: String) = BoundedCache.storePath("target/segstore/v2", dir)
+  /** Store layout version — bump when the on-disk block schema or commit
+   *  layout changes so a stale store from an older build is never merged
+   *  against new readers. */
+  private def segStore(dir: String) = BoundedCache.storePath("target/segstore/v3", dir)
 
   /** One segmented build per (session, sfDir), committed under target/. */
   private def segmented(s: SparkSession, dir: String): Index =
@@ -293,7 +294,7 @@ object CorpusEntries {
     "stream_index_term_stats" -> ((s, dir) => {
       // keyed on the ident-bearing STORE path: a regenerated corpus at the
       // same dir misses and builds a fresh store
-      val store = stagedStreamStore(s, dir, "target/streamstore/v2")
+      val store = stagedStreamStore(s, dir, "target/streamstore/v3")
       val idx = IndexCache.cachedIndex(s, "stream-index", store)(Right(
         graft.streaming.StreamingIndex.buildAvailableNow(
           s, s"$store/corpus", store, "doc_id", "text")))

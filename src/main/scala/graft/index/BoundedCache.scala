@@ -29,8 +29,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
  *
  * The charge is MEASURED, not estimated, and recorded once at admission
  * so release always matches it (RamBytesRecorder's contract): the storage
- * snapshot is taken before the build runs, and the cached block bytes it
- * added — less what nested builds were charged — are weighed, like
+ * snapshot is taken before the build runs, every Dataset the entry holds
+ * is materialized, and the cached block bytes they added — less what
+ * nested builds were charged — are weighed, like
  * ramBytesUsed on a built structure. An artifact that alone exceeds the
  * limit is un-persisted again and counted as a breaker rejection. (A
  * plan-statistics estimate degrades to Long.MaxValue whenever any operator
@@ -56,15 +57,16 @@ class BoundedCache[K](val limitBytes: Long,
 
   /** Two-tier read (CacheGatedPostingsReader) of a one-Dataset artifact:
    *  the cached Dataset on hit; on miss `build` runs, is persisted and
-   *  materialized, and is admitted if the breaker allows — evicting
+   *  admitted if the breaker allows — evicting
    *  least-recent entries first — else returned unpersisted (the
    *  read-from-storage fallback). */
   def get[T](key: K)(build: => Dataset[T]): Dataset[T] =
-    getOrBuild(key)(BoundedCache.materialized(build))
+    getOrBuild(key)(BoundedCache.persisted(build))
 
   /** Atomic get-or-build of any artifact: `build` returns the artifact and
-   *  every Dataset it keeps persisted. One build per key even under
-   *  concurrent callers; a build that throws leaves no entry. */
+   *  every Dataset it keeps persisted, which admission materializes before
+   *  weighing them. One build per key even under concurrent callers; a
+   *  build that throws leaves no entry. */
   def getOrBuild[A](key: K)(build: => (A, Seq[Dataset[_]])): A =
     lookup[A](key).getOrElse(building.synchronized {
       lookup[A](key).getOrElse(admit(key, build))
@@ -80,6 +82,7 @@ class BoundedCache[K](val limitBytes: Long,
     val before = sc.fold(Set.empty[Int])(_.getRDDStorageInfo.map(_.id).toSet)
     val nested = synchronized(admittedBytes)
     val (value, held) = build
+    held.foreach(_.count())
     val bytes = weigher match {
       case Some(w) => held.map(d => math.max(w(d), 0L)).sum
       case None => math.max(0L, sc.get.getRDDStorageInfo.filterNot(r => before(r.id))
@@ -184,19 +187,24 @@ object BoundedCache {
     session.getOrBuild(Key(app, kind, dir, params))(build)
   }
 
-  /** A one-Dataset artifact, persisted and materialized at its build. */
+  /** A one-Dataset artifact, persisted and materialized at its admission. */
   def dataset[T](spark: SparkSession, kind: String, dir: String, params: String = "")(
       build: => Dataset[T]): Dataset[T] =
-    artifact(spark, kind, dir, params)(materialized(build))
+    artifact(spark, kind, dir, params)(persisted(build))
 
-  private def materialized[T](ds: Dataset[T]): (Dataset[T], Seq[Dataset[_]]) = {
+  private def persisted[T](ds: Dataset[T]): (Dataset[T], Seq[Dataset[_]]) = {
     val p = ds.persist()
-    p.count()
     (p, Seq(p))
   }
 
   /** The on-disk store of an artifact under `root` for corpus `dir`:
-   *  `<root>/<dir with every character outside [a-zA-Z0-9.] as _>`. */
-  def storePath(root: String, dir: String): String =
-    s"$root/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+   *  `<root>/<dir with every character outside [a-zA-Z0-9.] as _>_<hex>`,
+   *  where `<hex>` is the first 16 hex digits of the SHA-256 of `dir`, so
+   *  two dirs that spell the same with `_` (`/a/b_c`, `/a_b/c`) get two
+   *  stores. */
+  def storePath(root: String, dir: String): String = {
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    s"$root/${dir.replaceAll("[^a-zA-Z0-9.]", "_")}_${java.util.HexFormat.of().formatHex(sha, 0, 8)}"
+  }
 }

@@ -125,46 +125,6 @@ object Deletes {
       InvertedIndex.statsOf(docLens), idx.analyzer)
   }
 
-  /** Block-level union-merge of two posting tables (same shape as
-   *  Segments.mergeIds: one (term, bucket) shuffle, groups bounded by the
-   *  4096-posting block span x 2 sides). */
-  private def mergePostings(a: Dataset[PostingBlock], b: Dataset[PostingBlock]): Dataset[PostingBlock] = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.union(b).groupByKey(x => (x.term, x.bucket)).mapGroups { (key, it) =>
-      val blocks = it.toArray
-      if (blocks.length == 1) blocks(0)
-      else {
-        val pairs = blocks.flatMap { blk =>
-          PostingCodec.decodeDeltas(blk.docs, blk.cnt)
-            .zip(PostingCodec.decodeInts(blk.tfs, blk.cnt))
-        }.sortBy(_._1)
-        PostingBlock(key._1, key._2, pairs.length, pairs.map(_._2).max,
-          pairs.map(_._2.toLong).sum,
-          PostingCodec.encodeDeltas(pairs.map(_._1)),
-          PostingCodec.encodeInts(pairs.map(_._2)))
-      }
-    }
-  }
-
-  private def mergeDocLens(a: Dataset[DocLenBlock], b: Dataset[DocLenBlock]): Dataset[DocLenBlock] = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.union(b).groupByKey(_.bucket).mapGroups { (bucket, it) =>
-      val blocks = it.toArray
-      if (blocks.length == 1) blocks(0)
-      else {
-        val pairs = blocks.flatMap { blk =>
-          PostingCodec.decodeDeltas(blk.ids, blk.cnt)
-            .zip(PostingCodec.decodeInts(blk.dls, blk.cnt))
-        }.sortBy(_._1)
-        DocLenBlock(bucket, pairs.length, pairs.map(_._2).min,
-          PostingCodec.encodeDeltas(pairs.map(_._1)),
-          PostingCodec.encodeInts(pairs.map(_._2)))
-      }
-    }
-  }
-
   /**
    * Update = delete + add, Lucene's only update primitive: purge the updated
    * ids from the committed index, build a delta index over the NEW row
@@ -175,8 +135,11 @@ object Deletes {
   def applyUpdate(idx: Index, updatedDocs: DataFrame, idCol: String, textCol: String): Index = {
     val purged = compact(idx, updatedDocs.select(idCol), idCol)
     val delta = InvertedIndex.build(updatedDocs, idCol, textCol, idx.analyzer)
-    val postings = mergePostings(purged.postings, delta.postings)
-    val docLens = mergeDocLens(purged.docLens, delta.docLens)
+    // the block merge of the build, one shuffle per table
+    val postings = InvertedIndex.postingsFromBlocks(InvertedIndex.mergeBlocks(
+      InvertedIndex.postingsAsBlocks(purged.postings).union(InvertedIndex.postingsAsBlocks(delta.postings))))
+    val docLens = InvertedIndex.docLensFromBlocks(InvertedIndex.mergeBlocks(
+      InvertedIndex.docLensAsBlocks(purged.docLens).union(InvertedIndex.docLensAsBlocks(delta.docLens))))
     Index(postings, docLens, InvertedIndex.termStatsOf(postings),
       InvertedIndex.statsOf(docLens), idx.analyzer)
   }

@@ -14,11 +14,11 @@ import graft.analysis.Analyzer
 object IndexCache {
 
   /** The one Index registry entry. `Left(blocks)`: a merged block table
-   *  (the one analyze + fragment shuffle) — persisted and materialized
-   *  FIRST, and every index table derives from it, so warming runs the
-   *  expensive pass exactly once. `Right(idx)`: an index read back from a
-   *  committed store, its three tables persisted. Eviction unpersists every
-   *  Dataset the entry holds. */
+   *  (the one analyze + fragment shuffle) — persisted, and every index
+   *  table derives from it, so warming runs the expensive pass exactly
+   *  once. `Right(idx)`: an index read back from a committed store, its
+   *  three tables persisted. Admission materializes every Dataset the entry
+   *  holds; eviction unpersists them. */
   private[graft] def cachedIndex(spark: SparkSession, kind: String, dir: String,
                                  params: String = "")(
       source: => Either[(Dataset[BuildBlock], String), Index]): Index =
@@ -26,7 +26,6 @@ object IndexCache {
       source match {
         case Left((merged, analyzer)) =>
           val blocks = merged.persist()
-          blocks.count()
           val postings = InvertedIndex.postingsFromBlocks(blocks).persist()
           val docLens = InvertedIndex.docLensFromBlocks(blocks).persist()
           val termStats = InvertedIndex.termStatsOf(postings).persist()

@@ -233,28 +233,58 @@ object InvertedIndex {
     }
   }
 
-  /** All index blocks (postings + doclens) in one analyze pass + one
-   *  compressed-fragment shuffle. */
-  def mergedBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String): Dataset[BuildBlock] = {
-    val spark = docs.sparkSession
+  /** The one block merge: fragments of the same (kind, term, bucket) —
+   *  from the partitions of one build, or from the segments of a store —
+   *  become one block. */
+  def mergeBlocks(fragments: Dataset[BuildBlock]): Dataset[BuildBlock] = {
+    val spark = fragments.sparkSession
     import spark.implicits._
-    buildBlocksOf(docs, idCol, textCol, analyzer)
-      .groupByKey(b => (b.kind, b.term, b.bucket))
+    fragments.groupByKey(b => (b.kind, b.term, b.bucket))
       .mapGroups((_, it) => mergeFragments(it.toArray))
   }
 
+  /** All index blocks (postings + doclens) in one analyze pass + one
+   *  compressed-fragment shuffle. */
+  def mergedBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String): Dataset[BuildBlock] =
+    mergeBlocks(buildBlocksOf(docs, idCol, textCol, analyzer))
+
+  /** The postings (kind 0) of a block table. Over a table on disk the
+   *  kind=0 directory alone is read, and term predicates push into parquet
+   *  row-group stats. */
   def postingsFromBlocks(blocks: Dataset[BuildBlock]): Dataset[PostingBlock] = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    blocks.filter(_.kind == 0.toByte)
-      .map(b => PostingBlock(b.term, b.bucket, b.cnt, b.max_tf, b.sum_tf, b.docs, b.tfs))
+    blocks.filter(col("kind") === 0)
+      .select(col("term"), col("bucket"), col("cnt"), col("max_tf"),
+        col("sum_tf"), col("docs"), col("tfs")).as[PostingBlock]
   }
 
+  /** The doc lengths (kind 1) of a block table. */
   def docLensFromBlocks(blocks: Dataset[BuildBlock]): Dataset[DocLenBlock] = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    blocks.filter(_.kind == 1.toByte)
-      .map(b => DocLenBlock(b.bucket, b.cnt, b.min_v, b.docs, b.tfs))
+    blocks.filter(col("kind") === 1)
+      .select(col("bucket"), col("cnt"), col("min_v").as("min_dl"),
+        col("docs").as("ids"), col("tfs").as("dls")).as[DocLenBlock]
+  }
+
+  /** Postings as kind-0 blocks, so [[mergeBlocks]] can merge them. A
+   *  posting row keeps no `min_v`; the merge recomputes it and
+   *  [[postingsFromBlocks]] drops it. */
+  private[graft] def postingsAsBlocks(postings: Dataset[PostingBlock]): Dataset[BuildBlock] = {
+    val spark = postings.sparkSession
+    import spark.implicits._
+    postings.select(lit(0.toByte).as("kind"), col("term"), col("bucket"), col("cnt"),
+      col("max_tf"), lit(0).as("min_v"), col("sum_tf"), col("docs"), col("tfs")).as[BuildBlock]
+  }
+
+  /** Doc lengths as kind-1 blocks (the inverse of [[docLensFromBlocks]]). */
+  private[graft] def docLensAsBlocks(docLens: Dataset[DocLenBlock]): Dataset[BuildBlock] = {
+    val spark = docLens.sparkSession
+    import spark.implicits._
+    docLens.select(lit(1.toByte).as("kind"), lit("").as("term"), col("bucket"), col("cnt"),
+      lit(0).as("max_tf"), col("min_dl").as("min_v"), lit(0L).as("sum_tf"),
+      col("ids").as("docs"), col("dls").as("tfs")).as[BuildBlock]
   }
 
   /** All live doc ids, decoded block-locally from the forward (doc-length)
@@ -313,8 +343,7 @@ object InvertedIndex {
         (b.cnt.toLong, s)
       }
       .toDF("c", "s").agg(sum($"c"), sum($"s")).as[(Option[Long], Option[Long])].head()
-    val (n, sd) = (row._1.getOrElse(0L), row._2.getOrElse(0L))
-    CorpusStats(n, sd, if (n == 0) 0.0 else sd.toDouble / n)
+    corpusStats(row._1.getOrElse(0L), row._2.getOrElse(0L))
   }
 
   def build(docs: DataFrame, idCol: String, textCol: String, analyzer: String = Analyzer.Simple): Index = {
@@ -335,14 +364,23 @@ object InvertedIndex {
    */
   def buildAndWrite(docs: DataFrame, idCol: String, textCol: String, dir: String,
                     analyzer: String = Analyzer.Simple): Index =
-    buildAndWriteReport(docs, idCol, textCol, dir, analyzer)._1
+    writeStore(mergedBlocksOf(docs, idCol, textCol, analyzer), dir, analyzer)(
+      (st, _) => StoreManifest(st))._1
 
-  /** [[buildAndWrite]], also returning the row counts of the tables it wrote
-   *  and the wall time of each write, all taken from the write jobs. */
-  private[graft] def buildAndWriteReport(docs: DataFrame, idCol: String, textCol: String,
-                                         dir: String, analyzer: String): (Index, WriteReport) = {
-    val spark = docs.sparkSession
+  /**
+   * The one index-store writer. A store dir holds the kind-partitioned
+   * `blocks` table, the `termstats` table and, written last, the
+   * [[StoreManifest]] that `commit` makes from the corpus stats and the
+   * [[WriteReport]] of the two writes. A store without a readable manifest
+   * is not committed, so the old manifest is deleted before the tables are
+   * overwritten. `commit` runs after both tables are written: a caller can
+   * verify them there, and a throw leaves the store uncommitted.
+   */
+  private[graft] def writeStore(blocks: Dataset[BuildBlock], dir: String, analyzer: String)(
+      commit: (CorpusStats, WriteReport) => StoreManifest): (Index, StoreManifest) = {
+    val spark = blocks.sparkSession
     import spark.implicits._
+    StoreManifest.delete(spark, dir)
     // ONE job does tokenize + fragment shuffle + the kind-partitioned block
     // write — no persist and no separate materialize pass. The earlier
     // cache-then-derive design paid the whole pipeline twice (once into the
@@ -369,50 +407,32 @@ object InvertedIndex {
       count(when($"kind" === 0, 1)).as("postings"),
       count(when($"kind" === 1, 1)).as("doclens"))
     val obs = new org.apache.spark.sql.Observation("graft-corpus-stats")
-    val blocksMs = timedMs(mergedBlocksOf(docs, idCol, textCol, analyzer)
+    val blocksMs = timedMs(blocks
       .observe(obs, tallies.head, tallies.tail: _*)
       .sortWithinPartitions("kind", "term", "bucket")
       .write.mode("overwrite").partitionBy("kind").parquet(s"$dir/blocks"))
     val meta = table[BuildBlock](spark, s"$dir/blocks")
       .select($"kind", $"term", $"cnt", $"sum_tf")
-    // the remaining derived tables are independent metadata-scale jobs:
-    // commit them concurrently so the post-write tail is max(), not sum()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    val fTs = Future {
-      val tsObs = new org.apache.spark.sql.Observation("graft-termstats-rows")
-      val ms = timedMs(meta.filter($"kind" === 0)
-        .groupBy($"term").agg(sum($"cnt").as("df"), sum($"sum_tf").as("ttf"))
-        .observe(tsObs, count(lit(1)).as("rows"))
-        .write.mode("overwrite").parquet(s"$dir/termstats"))
-      val rows = observed(tsObs).map(_.getLong(0))
-        .getOrElse(table[TermStat](spark, s"$dir/termstats").count())
-      (rows, ms)
-    }
-    val fStats = Future {
-      // an observation that does not arrive (or saw no rows) falls back to
-      // one scan of the metadata columns
-      val row = observed(obs).filterNot(_.isNullAt(0))
-        .getOrElse(meta.agg(tallies.head, tallies.tail: _*).head())
-      def long(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
-      val (n, sd) = (long(0), long(1))
-      val st = CorpusStats(n, sd, if (n == 0) 0.0 else sd.toDouble / n)
-      Seq(st).toDS().write.mode("overwrite").parquet(s"$dir/stats")
-      (st, long(2), long(3))
-    }
-    val ((tsRows, tsMs), (stats, postingRows, docLenRows)) = try {
-      (Await.result(fTs, scala.concurrent.duration.Duration.Inf),
-        Await.result(fStats, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
-    (Index(
-      postingsFromDir(spark, dir),
-      docLensFromDir(spark, dir),
-      table[TermStat](spark, s"$dir/termstats"),
-      stats, analyzer),
-      WriteReport(postingRows, docLenRows, tsRows, blocksMs, tsMs))
+    val tsObs = new org.apache.spark.sql.Observation("graft-termstats-rows")
+    val tsMs = timedMs(meta.filter($"kind" === 0)
+      .groupBy($"term").agg(sum($"cnt").as("df"), sum($"sum_tf").as("ttf"))
+      .observe(tsObs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(s"$dir/termstats"))
+    // an observation that does not arrive (or saw no rows) falls back to
+    // one scan of what was written
+    val tsRows = observed(tsObs).map(_.getLong(0))
+      .getOrElse(table[TermStat](spark, s"$dir/termstats").count())
+    val row = observed(obs).filterNot(_.isNullAt(0))
+      .getOrElse(meta.agg(tallies.head, tallies.tail: _*).head())
+    def long(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
+    val stats = corpusStats(long(0), long(1))
+    val manifest = commit(stats, WriteReport(long(2), long(3), tsRows, blocksMs, tsMs))
+    StoreManifest.write(spark, dir, manifest)
+    (open(spark, dir, stats, analyzer), manifest)
   }
+
+  private[graft] def corpusStats(docCount: Long, sumDl: Long): CorpusStats =
+    CorpusStats(docCount, sumDl, if (docCount == 0) 0.0 else sumDl.toDouble / docCount)
 
   private def timedMs(f: => Unit): Long = {
     val t0 = System.nanoTime()
@@ -435,55 +455,19 @@ object InvertedIndex {
     spark.read.schema(enc.schema).parquet(paths: _*).as[T](enc)
   }
 
-  /** Does `dir` hold the unified kind-partitioned block table (current
-   *  layout), vs the legacy separate postings/doclens dirs? Hadoop FS check
-   *  so resume works on any FS a committed segment store lives on. */
-  private def hasUnifiedBlocks(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/blocks")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** The kind-partitioned block table of the store at `dir`. */
+  private[graft] def blocksAt(spark: SparkSession, dir: String): Dataset[BuildBlock] =
+    table[BuildBlock](spark, s"$dir/blocks")
+
+  private def open(spark: SparkSession, dir: String, stats: CorpusStats, analyzer: String): Index = {
+    val blocks = blocksAt(spark, dir)
+    Index(postingsFromBlocks(blocks), docLensFromBlocks(blocks),
+      table[TermStat](spark, s"$dir/termstats"), stats, analyzer)
   }
 
-  /** Postings view over an on-disk index dir: the kind=0 partition of the
-   *  unified block table (directory-pruned; term predicates push into
-   *  parquet row-group stats), falling back to a legacy postings dir. */
-  def postingsFromDir(spark: SparkSession, dir: String): Dataset[PostingBlock] = {
-    import spark.implicits._
-    if (hasUnifiedBlocks(spark, dir))
-      table[BuildBlock](spark, s"$dir/blocks").filter(col("kind") === 0)
-        .select(col("term"), col("bucket"), col("cnt"), col("max_tf"),
-          col("sum_tf"), col("docs"), col("tfs")).as[PostingBlock]
-    else table[PostingBlock](spark, s"$dir/postings")
-  }
-
-  /** Doc-length view over an on-disk index dir (kind=1 partition or the
-   *  legacy doclens dir). */
-  def docLensFromDir(spark: SparkSession, dir: String): Dataset[DocLenBlock] = {
-    import spark.implicits._
-    if (hasUnifiedBlocks(spark, dir))
-      table[BuildBlock](spark, s"$dir/blocks").filter(col("kind") === 1)
-        .select(col("bucket"), col("cnt"), col("min_v").as("min_dl"),
-          col("docs").as("ids"), col("tfs").as("dls")).as[DocLenBlock]
-    else table[DocLenBlock](spark, s"$dir/doclens")
-  }
-
-  /** Persist all index tables (sorted by term so Parquet row-group min/max
-   *  statistics prune term lookups, the analogue of the reference's term
-   *  dictionary seek in sparse/codec/SparseTermsLuceneReader.java). */
-  def write(idx: Index, dir: String): Unit = {
-    idx.postings.sortWithinPartitions("term").write.mode("overwrite").parquet(s"$dir/postings")
-    idx.docLens.write.mode("overwrite").parquet(s"$dir/doclens")
-    idx.termStats.write.mode("overwrite").parquet(s"$dir/termstats")
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    Seq(idx.stats).toDS().write.mode("overwrite").parquet(s"$dir/stats")
-  }
-
+  /** The committed index at `dir`. Its corpus stats come from the store's
+   *  manifest, so opening it runs no Spark job. */
   def read(spark: SparkSession, dir: String, analyzer: String = Analyzer.Simple): Index =
-    Index(
-      postingsFromDir(spark, dir),
-      docLensFromDir(spark, dir),
-      table[TermStat](spark, s"$dir/termstats"),
-      table[CorpusStats](spark, s"$dir/stats").head(),
-      analyzer
-    )
+    open(spark, dir, StoreManifest.read(spark, dir)
+      .getOrElse(throw new IllegalArgumentException(s"no committed index at $dir")).stats, analyzer)
 }

@@ -4,6 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 
+/** Per-stage build metrics committed with each segment (north rule:
+ *  "resumable from checkpoint with per-partition lineage + metrics"):
+ *  `rows` of the stage's table and `wall_ms` of the write that produced it,
+ *  both taken from that write job (postings and doc lengths share the
+ *  blocks write). */
+case class SegmentMetric(segment_id: Int, stage: String, rows: Long, wall_ms: Long)
+
 /**
  * Per-segment lineage row — the checkpoint unit of the build
  * (BASELINE.json north rule: "checkpoints per-partition lineage (segment id,
@@ -15,13 +22,6 @@ import graft.analysis.Analyzer
  * and order-independently (a sorted-concat digest would not scale to 10^12
  * rows; min/max/count-distinct are single-pass partial aggregates).
  */
-/** Per-stage build metrics committed with each segment (north rule:
- *  "resumable from checkpoint with per-partition lineage + metrics"):
- *  `rows` of the stage's table and `wall_ms` of the write that produced it,
- *  both taken from that write job (postings and doc lengths share the
- *  blocks write). */
-case class SegmentMetric(segment_id: Int, stage: String, rows: Long, wall_ms: Long)
-
 case class SegmentLineage(
     segment_id: Int,
     row_lo: Long,
@@ -43,17 +43,20 @@ case class SegmentLineage(
  *
  * Spark-first differences:
  *  - a "segment" is a doc-id range slice of the corpus written as its own
- *    postings/doclens parquet dir — at cluster scale each spark-submit
- *    increment appends one segment, exactly the reference's flush;
+ *    index store dir (block table, term stats and a [[StoreManifest]]
+ *    holding its stats, metrics and lineage) by the same writer a
+ *    single-shot build uses — at cluster scale each spark-submit increment
+ *    appends one segment, exactly the reference's flush;
  *  - doc ids are globally dense, so merge needs NO docId remap (the
  *    reference's `mergeState.docMaps` exists only because Lucene renumbers);
- *    merging = union of block Datasets + one (term, bucket) shuffle that
- *    re-encodes only the boundary buckets two segments share;
+ *    merging = union of the segments' block tables + the build's own
+ *    (kind, term, bucket) fragment merge, which re-encodes only the
+ *    boundary buckets two segments share;
  *  - merged term stats are the per-term sums of the segments' own `termstats`
  *    tables: segments hold disjoint doc ranges, so df and ttf add up and the
  *    merge never re-aggregates the merged postings;
- *  - resume: a segment is committed iff its lineage row exists AND matches
- *    the recomputed range stats; `buildResumable` skips committed segments,
+ *  - resume: a segment is committed iff its manifest parses AND its lineage
+ *    matches the recomputed range; `buildResumable` skips committed segments,
  *    so a killed run redoes only the in-flight slice.
  */
 object Segments {
@@ -64,14 +67,11 @@ object Segments {
 
   private def segDir(dir: String, id: Int) = s"$dir/seg$id"
 
-  /** Commit discovery goes through the SAME filesystem layer the segment
-   *  writes use (Spark's Hadoop FS), so lineage markers work on HDFS/S3/
-   *  local alike — a java.io.File check silently reports "nothing
-   *  committed" on any non-local store. */
-  private def fsExists(spark: SparkSession, p: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-  }
+  /** The lineage committed in the manifest of the store at `dir`. Commit
+   *  discovery goes through the SAME filesystem layer the segment writes use
+   *  (Spark's Hadoop FS), so it works on HDFS/S3/local alike. */
+  private def lineageAt(spark: SparkSession, dir: String): Option[SegmentLineage] =
+    StoreManifest.read(spark, dir).flatMap(_.lineage.headOption)
 
   /** Content checksums of one segment's rows and the doc ids they span:
    *  the lineage row's sha columns, plus the bounds a segment with unknown
@@ -98,8 +98,8 @@ object Segments {
   }
 
   /** Build ONE segment (docs with doc_id in [lo, hi]) and commit it with its
-   *  lineage row. Idempotent: overwrite-mode writes + lineage-last ordering
-   *  make the commit atomic at the segment granularity. */
+   *  lineage row. Idempotent: overwrite-mode writes + a manifest written
+   *  last make the commit atomic at the segment granularity. */
   def buildSegment(
       docs: DataFrame,
       idCol: String,
@@ -109,35 +109,39 @@ object Segments {
       id: Int,
       lo: Long,
       hi: Long
-  ): SegmentLineage =
-    buildSegmentWith(docs, idCol, textCol, analyzer, dir, id, lo, hi,
-      digests(docs.filter(inSlice(col(idCol), lo, hi)), idCol, textCol, lit(id))
-        .getOrElse(id, EmptyDigest))
+  ): SegmentLineage = {
+    val slice = docs.filter(inSlice(col(idCol), lo, hi))
+    writeSegment(slice, idCol, textCol, analyzer, dir, id, Some((lo, hi)),
+      digests(slice, idCol, textCol, lit(id)).getOrElse(id, EmptyDigest))
+  }
 
   /** The slice filter of segment [lo, hi]. */
   private def inSlice(id: Column, lo: Long, hi: Long): Column = id >= lo && id <= hi
 
-  /** [[buildSegment]] with its content digest supplied by the caller; it is
-   *  awaited only after the segment's tables are written. */
-  private def buildSegmentWith(docs: DataFrame, idCol: String, textCol: String,
-                               analyzer: String, dir: String, id: Int, lo: Long, hi: Long,
-                               digest: => Digest): SegmentLineage = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val slice = docs.filter(inSlice(col(idCol), lo, hi))
-    val (idx, rep) = InvertedIndex.buildAndWriteReport(slice, idCol, textCol, segDir(dir, id), analyzer)
-    Seq(
-      SegmentMetric(id, "postings", rep.postings, rep.blocksMs),
-      SegmentMetric(id, "doclens", rep.docLens, rep.blocksMs),
-      SegmentMetric(id, "termstats", rep.termStats, rep.termStatsMs)
-    ).toDS().write.mode("overwrite").parquet(s"${segDir(dir, id)}/metrics")
+  /** Build and commit segment `id` of `slice`. Its content digest is
+   *  awaited only after the segment's tables are written; a segment whose
+   *  range is not known up front (a streamed micro-batch) records the id
+   *  bounds of its digest. */
+  private[graft] def writeSegment(slice: DataFrame, idCol: String, textCol: String,
+                                  analyzer: String, dir: String, id: Int,
+                                  range: Option[(Long, Long)], digest: => Digest): SegmentLineage =
+    commit(InvertedIndex.mergedBlocksOf(slice, idCol, textCol, analyzer), segDir(dir, id), id,
+      analyzer) { st =>
+      val d = digest
+      val (lo, hi) = range.getOrElse((d.id_min, d.id_max))
+      SegmentLineage(id, lo, hi, st.doc_count, st.sum_dl, d.sha_min, d.sha_max, d.sha_distinct)
+    }
 
-    val d = digest
-    val lineage = SegmentLineage(id, lo, hi, idx.stats.doc_count, idx.stats.sum_dl,
-      d.sha_min, d.sha_max, d.sha_distinct)
-    Seq(lineage).toDS().write.mode("overwrite").parquet(s"${segDir(dir, id)}/lineage")
-    lineage
-  }
+  /** Write `blocks` as segment `id` at `dir` and commit it with the
+   *  writer's metrics and the lineage `lineage` makes from its stats. */
+  private def commit(blocks: Dataset[BuildBlock], dir: String, id: Int, analyzer: String)(
+      lineage: CorpusStats => SegmentLineage): SegmentLineage =
+    InvertedIndex.writeStore(blocks, dir, analyzer) { (st, rep) =>
+      StoreManifest(st, Seq(
+        SegmentMetric(id, "postings", rep.postings, rep.blocksMs),
+        SegmentMetric(id, "doclens", rep.docLens, rep.blocksMs),
+        SegmentMetric(id, "termstats", rep.termStats, rep.termStatsMs)), Seq(lineage(st)))
+    }._2.lineage.head
 
   /** One segment's snapshot outcome: `copied` on first capture,
    *  `skipped` when the repository already holds this lineage (the
@@ -149,14 +153,13 @@ object Segments {
    *  INCREMENTAL at segment granularity: Lucene segments are immutable, so
    *  a segment whose lineage row (content checksums included) already sits
    *  in the repository is skipped, and only new/changed segments copy. A
-   *  manifest (the lineage rows) is written last, making the snapshot
+   *  [[StoreManifest]] listing the lineage rows is written last, making the snapshot
    *  atomic-by-manifest: a reader only trusts segments the manifest names.
    *  Per-segment file copies are driver-side FileSystem ops over the
    *  segment DIRECTORY (metadata-scale, one per segment — never row
    *  data through the driver). */
   def snapshot(spark: SparkSession, srcDir: String, repoDir: String,
                name: String, nSegments: Int): Seq[SnapshotAction] = {
-    import spark.implicits._
     val lineage = readLineage(spark, srcDir, nSegments)
     require(lineage.nonEmpty, s"nothing committed under $srcDir to snapshot")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -164,10 +167,7 @@ object Segments {
       .getFileSystem(conf)
     val actions = lineage.toSeq.sortBy(_._1).map { case (id, lin) =>
       val dst = new org.apache.hadoop.fs.Path(s"$repoDir/$name/seg$id")
-      val already = fsExists(spark, s"$repoDir/$name/seg$id/lineage") &&
-        scala.util.Try(InvertedIndex.table[SegmentLineage](spark,
-          s"$repoDir/$name/seg$id/lineage").head()).toOption.contains(lin)
-      if (already) SnapshotAction(id, "skipped")
+      if (lineageAt(spark, s"$repoDir/$name/seg$id").contains(lin)) SnapshotAction(id, "skipped")
       else {
         fs.delete(dst, true)
         org.apache.hadoop.fs.FileUtil.copy(
@@ -177,9 +177,8 @@ object Segments {
       }
     }
     // manifest written LAST: the snapshot exists only once it does
-    lineage.values.toSeq.sortBy(_.segment_id).toDS()
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$repoDir/$name/manifest")
+    val rows = lineage.values.toSeq.sortBy(_.segment_id)
+    StoreManifest.write(spark, s"$repoDir/$name", StoreManifest(statsOf(rows), Nil, rows))
     actions
   }
 
@@ -191,19 +190,13 @@ object Segments {
    *  (segment_id, action) with action `restored` or `present`. */
   def restore(spark: SparkSession, repoDir: String, name: String,
               dstDir: String): Seq[SnapshotAction] = {
-    import spark.implicits._
-    val manifestPath = s"$repoDir/$name/manifest"
-    require(fsExists(spark, manifestPath), s"no snapshot [$name] in $repoDir")
-    val manifest = InvertedIndex.table[SegmentLineage](spark, manifestPath)
-      .collect().sortBy(_.segment_id)
+    val manifest = StoreManifest.read(spark, s"$repoDir/$name")
+      .getOrElse(throw new IllegalArgumentException(s"no snapshot [$name] in $repoDir")).lineage
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dstDir).getFileSystem(conf)
-    val actions = manifest.toSeq.map { lin =>
+    val actions = manifest.map { lin =>
       val id = lin.segment_id
-      val present = fsExists(spark, s"${segDir(dstDir, id)}/lineage") &&
-        scala.util.Try(InvertedIndex.table[SegmentLineage](spark,
-          s"${segDir(dstDir, id)}/lineage").head()).toOption.contains(lin)
-      if (present) SnapshotAction(id, "present")
+      if (lineageAt(spark, segDir(dstDir, id)).contains(lin)) SnapshotAction(id, "present")
       else {
         val dst = new org.apache.hadoop.fs.Path(segDir(dstDir, id))
         fs.delete(dst, true)
@@ -216,9 +209,8 @@ object Segments {
     // verification: every manifest row must now be readable at the target
     // and equal the manifest's lineage (content checksums included)
     manifest.foreach { lin =>
-      val got = InvertedIndex.table[SegmentLineage](spark,
-        s"${segDir(dstDir, lin.segment_id)}/lineage").head()
-      require(got == lin,
+      val got = lineageAt(spark, segDir(dstDir, lin.segment_id))
+      require(got.contains(lin),
         s"restore verification failed for segment ${lin.segment_id}: $got != $lin")
     }
     actions
@@ -226,27 +218,18 @@ object Segments {
 
   /** Metrics rows of all committed segments under `dir`. */
   def readMetrics(spark: SparkSession, dir: String, nSegments: Int): Seq[SegmentMetric] =
-    readAll[SegmentMetric](spark, (0 until nSegments).map(id => s"${segDir(dir, id)}/metrics"))
-      .sortBy(_.segment_id)
+    (0 until nSegments).flatMap(id => StoreManifest.read(spark, segDir(dir, id)).toSeq.flatMap(_.metrics))
 
   /** Lineage rows of all committed segments under `dir` (empty if none). */
   def readLineage(spark: SparkSession, dir: String, nSegments: Int): Map[Int, SegmentLineage] =
-    lineageOf(spark, (0 until nSegments).map(id => s"${segDir(dir, id)}/lineage"))
+    lineageOf(spark, dir, 0 until nSegments)
 
-  private def lineageOf(spark: SparkSession, paths: Seq[String]): Map[Int, SegmentLineage] =
-    readAll[SegmentLineage](spark, paths).map(l => l.segment_id -> l).toMap
+  private def lineageOf(spark: SparkSession, dir: String, ids: Seq[Int]): Map[Int, SegmentLineage] =
+    ids.flatMap(id => lineageAt(spark, segDir(dir, id)).map(id -> _)).toMap
 
-  /** The rows of every existing table among `paths`, in one read. Should that
-   *  read fail (an unreadable table), each table is read alone and the
-   *  unreadable ones count as absent. */
-  private def readAll[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      spark: SparkSession, paths: Seq[String]): Seq[T] = {
-    val present = paths.filter(fsExists(spark, _))
-    if (present.isEmpty) Nil
-    else scala.util.Try(InvertedIndex.table[T](spark, present: _*).collect().toSeq)
-      .getOrElse(present.flatMap(p =>
-        scala.util.Try(InvertedIndex.table[T](spark, p).collect().toSeq).getOrElse(Nil)))
-  }
+  /** Corpus stats of disjoint segments: the sums of their lineage counts. */
+  private def statsOf(lineage: Seq[SegmentLineage]): CorpusStats =
+    InvertedIndex.corpusStats(lineage.map(_.doc_count).sum, lineage.map(_.sum_dl).sum)
 
   /**
    * Build all n segments, skipping segments whose lineage is already
@@ -281,7 +264,7 @@ object Segments {
     // seismic thread pool, plugin/NeuralSearch.java:296-308). The content
     // digests of all of them are ONE grouped aggregate, submitted first so
     // it owns a thread of its own and runs alongside the builds, which
-    // await it only to write their lineage. A row's segment is id div span
+    // await it only to commit their lineage. A row's segment is id div span
     // on [0, maxId], which gives each segment exactly the rows its slice
     // filter selects; rows outside [0, maxId] belong to none.
     if (todo.nonEmpty) {
@@ -297,8 +280,8 @@ object Segments {
         Future {
           val lo = id.toLong * sp
           val hi = math.min(lo + sp - 1, maxId)
-          buildSegmentWith(docs, idCol, textCol, analyzer, dir, id, lo, hi,
-            Await.result(fDigests, Duration.Inf).getOrElse(id, EmptyDigest))
+          writeSegment(docs.filter(inSlice(col(idCol), lo, hi)), idCol, textCol, analyzer,
+            dir, id, Some((lo, hi)), Await.result(fDigests, Duration.Inf).getOrElse(id, EmptyDigest))
         }
       }
       try Await.result(Future.sequence(fs), Duration.Inf)
@@ -308,8 +291,8 @@ object Segments {
   }
 
   /**
-   * Merge committed segments into one global Index. One (term, bucket)
-   * shuffle over block rows — every group is <= nSegments blocks of <= 4096
+   * Merge committed segments into one global Index. One (kind, term,
+   * bucket) shuffle over block rows — every group is <= nSegments blocks of <= 4096
    * postings, so merge work per reducer is bounded regardless of corpus
    * size; term stats are the per-term sums of the segments' term stats.
    */
@@ -364,14 +347,14 @@ object Segments {
    *
    *  - unselected segments copy verbatim (segments are immutable — same
    *    driver-side directory copy the snapshot path uses);
-   *  - each selected group runs the bounded (term, bucket) block merge
-   *    ([[mergeIds]] — work per reducer <= group-size blocks of <= 4096
-   *    postings, independent of corpus size) and lands as ONE fresh
-   *    segment with the next free id;
+   *  - each selected group runs the bounded (kind, term, bucket) block
+   *    merge (work per reducer <= group-size blocks of <= 4096 postings,
+   *    independent of corpus size) and lands through the segment writer as
+   *    ONE fresh segment with the next free id and the writer's metrics;
    *  - the fresh segment's doc_count / sum_dl are RE-DERIVED from its
    *    merged doc-length blocks and verified against the member lineage
-   *    sums — a dropped or duplicated posting fails loudly here, not at
-   *    query time;
+   *    sums before its manifest is written — a dropped or duplicated
+   *    posting fails loudly here, not at query time;
    *  - sha_min/max/distinct recompute over the members' doc ranges of
    *    `docs` (distinct-sha does not compose from member summaries), the
    *    same content pass [[buildSegment]] makes — so the compacted store's
@@ -396,7 +379,6 @@ object Segments {
     require(lineage.nonEmpty, s"tieredCompact: nothing committed under $srcDir")
     val linSeq = lineage.values.toSeq.sortBy(_.segment_id)
     val plan = tieredMergePlan(linSeq, segmentsPerTier, tierFactor)
-    val tierOf = plan.map(p => p._1 -> p._3).toMap
     val groups = plan.flatMap { case (id, _, _, g) => g.map(_ -> id) }
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toSeq.sortBy(_._1)
 
@@ -415,31 +397,27 @@ object Segments {
     var nextId = linSeq.map(_.segment_id).max
     val mergedActions = groups.flatMap { case (tier, ids) =>
       nextId += 1
+      val id = nextId
       val members = ids.map(lineage)
-      val idx = mergeIds(spark, srcDir, ids, members, analyzer)
-      val out = segDir(dstDir, nextId)
-      InvertedIndex.write(idx, out)
-
-      // re-verify from what was WRITTEN, not from the inputs: decode the
-      // merged doc-length blocks back off disk and require the re-derived
-      // doc_count / sum_dl to equal the member lineage sums
-      val (gotN, gotDl) = InvertedIndex.docLensFromDir(spark, out)
-        .map(b => (b.cnt.toLong, PostingCodec.decodeInts(b.dls, b.cnt).map(_.toLong).sum))
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      val (wantN, wantDl) = (members.map(_.doc_count).sum, members.map(_.sum_dl).sum)
-      require(gotN == wantN && gotDl == wantDl,
-        s"tieredCompact verification failed for merged segment $nextId: " +
-          s"re-derived (docs=$gotN, sum_dl=$gotDl) != member sums (docs=$wantN, sum_dl=$wantDl)")
-
-      val inRange = members.map(l => inSlice(col(idCol), l.row_lo, l.row_hi))
-        .reduce(_ || _)
-      val sha = digests(docs.filter(inRange), idCol, textCol, lit(nextId))
-        .getOrElse(nextId, EmptyDigest)
-      val lin = SegmentLineage(nextId, members.map(_.row_lo).min,
-        members.map(_.row_hi).max, gotN, gotDl, sha.sha_min, sha.sha_max, sha.sha_distinct)
-      Seq(lin).toDS().write.mode("overwrite").parquet(s"$out/lineage")
-      Seq(SegmentMetric(nextId, "compact_merge", gotN, 0L))
-        .toDS().write.mode("overwrite").parquet(s"$out/metrics")
+      val out = segDir(dstDir, id)
+      commit(mergedBlocks(spark, srcDir, ids), out, id, analyzer) { _ =>
+        // re-verify from what was WRITTEN, not from the inputs: decode the
+        // merged doc-length blocks back off disk and require the re-derived
+        // doc_count / sum_dl to equal the member lineage sums
+        val (gotN, gotDl) = InvertedIndex.docLensFromBlocks(InvertedIndex.blocksAt(spark, out))
+          .map(b => (b.cnt.toLong, PostingCodec.decodeInts(b.dls, b.cnt).map(_.toLong).sum))
+          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+        val want = statsOf(members)
+        require(gotN == want.doc_count && gotDl == want.sum_dl,
+          s"tieredCompact verification failed for merged segment $id: re-derived " +
+            s"(docs=$gotN, sum_dl=$gotDl) != member sums (docs=${want.doc_count}, sum_dl=${want.sum_dl})")
+        val inRange = members.map(l => inSlice(col(idCol), l.row_lo, l.row_hi))
+          .reduce(_ || _)
+        val sha = digests(docs.filter(inRange), idCol, textCol, lit(id))
+          .getOrElse(id, EmptyDigest)
+        SegmentLineage(id, members.map(_.row_lo).min,
+          members.map(_.row_hi).max, gotN, gotDl, sha.sha_min, sha.sha_max, sha.sha_distinct)
+      }
 
       ids.map(i => CompactAction(i, tier, "merged", nextId)) :+
         CompactAction(nextId, tier, "written", nextId)
@@ -457,72 +435,32 @@ object Segments {
       (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
         .filter(st => st.isDirectory && st.getPath.getName.matches("seg\\d+"))
         .map(_.getPath.getName.drop(3).toInt).sorted
-    val lineage = lineageOf(spark, dirIds.map(id => s"${segDir(dir, id)}/lineage"))
+    val lineage = lineageOf(spark, dir, dirIds)
     val ids = dirIds.filter(lineage.contains)
     require(ids.nonEmpty, s"mergeAll: no committed segments under $dir")
     mergeIds(spark, dir, ids, ids.map(lineage), analyzer)
   }
 
+  /** The segments' block rows that `keep` selects (a `kind` predicate reads
+   *  only that kind's directories), merged per (kind, term, bucket). The
+   *  union goes by name: an empty segment's table has no `kind=`
+   *  directory, so its partition column is not moved last. */
+  private def mergedBlocks(spark: SparkSession, dir: String, ids: Seq[Int],
+                           keep: Column = lit(true)): Dataset[BuildBlock] =
+    InvertedIndex.mergeBlocks(ids.map(id =>
+      InvertedIndex.blocksAt(spark, segDir(dir, id)).filter(keep)).reduce(_ unionByName _))
+
   private def mergeIds(spark: SparkSession, dir: String, ids: Seq[Int],
                        lineage: Seq[SegmentLineage], analyzer: String): Index = {
     import spark.implicits._
-
-    def mergeBlocks(grouped: Dataset[PostingBlock]): Dataset[PostingBlock] =
-      grouped.groupByKey(b => (b.term, b.bucket)).mapGroups { (key, it) =>
-        val blocks = it.toArray
-        if (blocks.length == 1) blocks(0)
-        else {
-          val (term, bucket) = key
-          val n = blocks.map(_.cnt).sum
-          val ids = new Array[Int](n)
-          val tfs = new Array[Int](n)
-          var off = 0
-          for (b <- blocks) {
-            val bi = PostingCodec.decodeDeltas(b.docs, b.cnt)
-            val bt = PostingCodec.decodeInts(b.tfs, b.cnt)
-            System.arraycopy(bi, 0, ids, off, b.cnt)
-            System.arraycopy(bt, 0, tfs, off, b.cnt)
-            off += b.cnt
-          }
-          // same bucket from different segments holds disjoint local ids;
-          // a single sort restores the monotone order delta-encoding needs
-          val ord = ids.indices.toArray.sortBy(ids(_))
-          val sIds = ord.map(ids(_))
-          val sTfs = ord.map(tfs(_))
-          PostingBlock(term, bucket, n, sTfs.max, sTfs.map(_.toLong).sum,
-            PostingCodec.encodeDeltas(sIds), PostingCodec.encodeInts(sTfs))
-        }
-      }
-
-    val postings = mergeBlocks(
-      ids.map(id => InvertedIndex.postingsFromDir(spark, segDir(dir, id)))
-        .reduce(_ union _))
-
-    val docLens = ids.map(id => InvertedIndex.docLensFromDir(spark, segDir(dir, id)))
-      .reduce(_ union _)
-      .groupByKey(_.bucket).mapGroups { (bucket, it) =>
-        val blocks = it.toArray
-        if (blocks.length == 1) blocks(0)
-        else {
-          val pairs = blocks.flatMap { b =>
-            val ids = PostingCodec.decodeDeltas(b.ids, b.cnt)
-            val dls = PostingCodec.decodeInts(b.dls, b.cnt)
-            ids.zip(dls)
-          }.sortBy(_._1)
-          DocLenBlock(bucket, pairs.length,
-            if (pairs.isEmpty) 0 else pairs.map(_._2).min,
-            PostingCodec.encodeDeltas(pairs.map(_._1)), PostingCodec.encodeInts(pairs.map(_._2)))
-        }
-      }
-
+    // each kind is merged on its own, so the lazy merged doc lengths never
+    // shuffle a posting block
+    val postings = InvertedIndex.postingsFromBlocks(mergedBlocks(spark, dir, ids, $"kind" === 0))
+    val docLens = InvertedIndex.docLensFromBlocks(mergedBlocks(spark, dir, ids, $"kind" === 1))
     // segments hold disjoint doc ranges: df and ttf are sums over segments
     val termStats = ids.map(id => InvertedIndex.table[TermStat](spark, s"${segDir(dir, id)}/termstats"))
       .reduce(_ union _)
       .groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf")).as[TermStat]
-
-    val docCount = lineage.map(_.doc_count).sum
-    val sumDl = lineage.map(_.sum_dl).sum
-    val stats = CorpusStats(docCount, sumDl, if (docCount == 0) 0.0 else sumDl.toDouble / docCount)
-    Index(postings, docLens, termStats, stats, analyzer)
+    Index(postings, docLens, termStats, statsOf(lineage), analyzer)
   }
 }

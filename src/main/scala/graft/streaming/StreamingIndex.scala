@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.analysis.Analyzer
-import graft.index.{Index, InvertedIndex, SegmentLineage, Segments}
+import graft.index.{Index, Segments}
 
 /**
  * Incremental index build as a Structured Streaming job — the design slot
@@ -14,9 +14,9 @@ import graft.index.{Index, InvertedIndex, SegmentLineage, Segments}
  * (reference: processor/InferenceProcessor.java:63-66 batching,
  * sparse/codec/SparsePostingsConsumer.java:184-197 per-segment flush).
  *
- * Each micro-batch becomes one committed segment (buildAndWrite + lineage),
- * so the streaming path and the batch path share the exact same on-disk
- * layout and merge job. `Trigger.AvailableNow` drains the backlog and stops —
+ * Each micro-batch becomes one committed segment through the batch path's
+ * segment writer, so both paths share the exact same on-disk layout,
+ * commit manifest and merge job. `Trigger.AvailableNow` drains the backlog and stops —
  * the "incremental build mode" of a recurring spark-submit; a continuous
  * trigger turns the same code into a live indexer. Exactly-once comes from
  * the streaming checkpoint (batch replay) + idempotent overwrite-mode segment
@@ -67,17 +67,10 @@ object StreamingIndex {
   ): StreamingQuery =
     drainEachBatch(spark, corpusDir, schema, storeDir, "_checkpoint",
       maxFilesPerTrigger) { (batch, batchId) =>
-      val spark2 = batch.sparkSession
-      import spark2.implicits._
       val id = batchId.toInt
-      val dir = s"$storeDir/seg$id"
-      val idx = InvertedIndex.buildAndWrite(batch, idCol, textCol, dir, analyzer)
       // the batch's id range is not known up front: its digest records it
-      val d = Segments.digests(batch, idCol, textCol, lit(id))(id)
-      Seq(SegmentLineage(id, d.id_min, d.id_max,
-        idx.stats.doc_count, idx.stats.sum_dl,
-        d.sha_min, d.sha_max, d.sha_distinct))
-        .toDS().write.mode("overwrite").parquet(s"$dir/lineage")
+      Segments.writeSegment(batch, idCol, textCol, analyzer, storeDir, id, None,
+        Segments.digests(batch, idCol, textCol, lit(id))(id))
     }
 
   /** Drain whatever is currently in `corpusDir` into segments and merge to a

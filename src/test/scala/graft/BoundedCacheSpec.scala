@@ -133,4 +133,34 @@ class BoundedCacheSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet intersect held).isEmpty,
       "every Dataset the entry held is unpersisted, the block table included")
   }
+
+  test("storePath keeps apart two dirs that spell the same with '_'") {
+    val a = BoundedCache.storePath("root", "/a/b_c")
+    assert(a != BoundedCache.storePath("root", "/a_b/c"))
+    assert(a.matches("root/_a_b_c_[0-9a-f]{16}"), a)
+    assert(BoundedCache.storePath("root", "/a/b_c") == a, "one dir, one store")
+  }
+
+  test("an Index entry is charged the cached bytes of every Dataset it holds") {
+    val sc = spark.sparkContext
+    def charged = BoundedCache.session.stats.toMap.apply("cache_ram_bytes_used")
+    def check(what: String)(build: => graft.index.Index): Unit = {
+      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val c0 = charged
+      val idx = build
+      val charge = charged - c0
+      idx.postings.count(); idx.docLens.count(); idx.termStats.count()
+      val held = sc.getRDDStorageInfo.filterNot(r => before(r.id)).map(r => r.memSize + r.diskSize).sum
+      assert(charge > 0 && charge == held, s"$what: charged $charge B, holds $held B")
+    }
+    val dir = "/root/testdata/sf0.001"
+    BoundedCache.session.invalidate(k => k.kind == "index" && k.dir == dir)
+    check("IndexCache.documents")(graft.index.IndexCache.documents(spark, dir))
+    val store = java.nio.file.Files.createTempDirectory("cache-store").toString
+    graft.index.InvertedIndex.buildAndWrite(
+      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", store)
+    check("an index read back from a store")(graft.index.IndexCache.cachedIndex(
+      spark, "spec-store", store)(Right(graft.index.InvertedIndex.read(spark, store))))
+    BoundedCache.session.invalidate(_.kind == "spec-store")
+  }
 }

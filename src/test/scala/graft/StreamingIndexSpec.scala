@@ -124,7 +124,7 @@ class StreamingIndexSpec extends SparkSpec {
     val Seq(sf1, backup) = Seq(s"$root/sf1", s"$root/sf1_backup")
     Seq(sf1, backup).foreach(d => docs.write.parquet(s"$d/documents.parquet"))
     // an older generation of sf1's store: the next staging must evict it
-    val stale = new java.io.File(stores, sf1.replaceAll("[^a-zA-Z0-9.]", "_") + "_deadbeef")
+    val stale = new java.io.File(graft.index.BoundedCache.storePath(stores, sf1) + "_deadbeef")
     assert(stale.mkdirs())
     val a = CorpusEntries.stagedStreamStore(spark, sf1, stores)
     val b = CorpusEntries.stagedStreamStore(spark, backup, stores)
@@ -151,7 +151,7 @@ class StreamingIndexSpec extends SparkSpec {
     assert(genA.nonEmpty, "the stream entry persists its index tables")
     // the corpus is regenerated: staging generation B deletes A's store
     generate(30)
-    val storeB = CorpusEntries.stagedStreamStore(spark, dir, "target/streamstore/v2")
+    val storeB = CorpusEntries.stagedStreamStore(spark, dir, "target/streamstore/v3")
     try assert((sc.getPersistentRDDs.keySet intersect genA).isEmpty,
       "an entry over a deleted store must not stay persisted")
     finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(storeB))
