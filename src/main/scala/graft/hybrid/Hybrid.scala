@@ -1434,8 +1434,8 @@ object Hybrid {
         // over fields, avgdl' from the weighted sum of field lengths. The
         // work is bounded by the query terms' postings across the fields:
         // per field the term-pruned postings decode to (doc, term, w·tf)
-        // rows, doc lengths ship only for buckets any field matched (the
-        // same semi-join contract as the single-field scorer). Per-field
+        // rows, doc lengths ship only for buckets any field matched (a
+        // broadcast semi-join of each field's doc lengths). Per-field
         // contributions and per-term scores both combine through
         // fixed-order pivot folds — deterministic FP at any parallelism.
         val spark = src.idx.postings.sparkSession

@@ -13,42 +13,45 @@ import graft.analysis.Analyzer
  */
 object IndexCache {
 
-  /** The one Index registry entry. `Left(blocks)`: a merged block table
-   *  (the one analyze + fragment shuffle) — persisted, and every index
-   *  table derives from it, so warming runs the expensive pass exactly
-   *  once. `Right(idx)`: an index read back from a committed store, its
-   *  three tables persisted. Admission materializes every Dataset the entry
-   *  holds; eviction unpersists them. */
+  /** The one Index registry entry, laid out on `bucket`
+   *  ([[InvertedIndex.bucketLaid]]) so no per-bucket kernel over it
+   *  shuffles. `Left(blocks)`: a merged block table (the one analyze +
+   *  fragment shuffle) — it and the term stats are persisted, and postings
+   *  and doc lengths are views of it, so no byte is held twice. `Right(idx)`:
+   *  an index read back from a committed store, its three tables persisted.
+   *  Admission materializes every Dataset the entry holds and the term
+   *  dictionary; eviction unpersists them. */
   private[graft] def cachedIndex(spark: SparkSession, kind: String, dir: String,
                                  params: String = "")(
       source: => Either[(Dataset[BuildBlock], String), Index]): Index =
     BoundedCache.artifact(spark, kind, dir, params) {
-      source match {
+      val (idx, held) = source match {
         case Left((merged, analyzer)) =>
-          val blocks = merged.persist()
-          val postings = InvertedIndex.postingsFromBlocks(blocks).persist()
-          val docLens = InvertedIndex.docLensFromBlocks(blocks).persist()
+          val blocks = InvertedIndex.bucketLaid(merged, "kind", "term").persist()
+          val postings = InvertedIndex.postingsFromBlocks(blocks)
+          val docLens = InvertedIndex.docLensFromBlocks(blocks)
           val termStats = InvertedIndex.termStatsOf(postings).persist()
-          val stats = InvertedIndex.statsOf(docLens)
-          (Index(postings, docLens, termStats, stats, analyzer),
-            Seq(blocks, postings, docLens, termStats))
+          (Index(postings, docLens, termStats, InvertedIndex.statsOf(docLens), analyzer),
+            Seq(blocks, termStats))
         case Right(i) =>
-          val idx = Index(i.postings.persist(), i.docLens.persist(),
-            i.termStats.persist(), i.stats, i.analyzer)
+          val idx = Index(InvertedIndex.bucketLaid(i.postings, "term").persist(),
+            InvertedIndex.bucketLaid(i.docLens).persist(), i.termStats.persist(), i.stats, i.analyzer)
           (idx, Seq(idx.postings, idx.docLens, idx.termStats))
       }
+      idx.dictionary
+      (idx, held)
     }
 
   private def blocksOf(docs: DataFrame, column: String, analyzer: String) =
     Left((InvertedIndex.mergedBlocksOf(docs, "doc_id", column, analyzer), analyzer))
 
   /** Positional block table over `documents.parquet` (the `.pos` analogue),
-   *  warmed once per session like the main index. */
+   *  warmed once per session and laid out on `bucket` like the main index. */
   def positions(spark: SparkSession, sfDir: String,
                 analyzer: String = Analyzer.Simple): Dataset[PosBlock] =
     BoundedCache.dataset(spark, "positions", sfDir, analyzer) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      Positions.build(docs, "doc_id", "text", analyzer)
+      InvertedIndex.bucketLaid(Positions.build(docs, "doc_id", "text", analyzer), "term")
     }
 
   /** Positional blocks over a NON-text corpus column ([[corpusField]]'s
@@ -58,7 +61,7 @@ object IndexCache {
                            analyzer: String = Analyzer.Simple): Dataset[PosBlock] =
     BoundedCache.dataset(spark, "field-positions", sfDir, s"$column/$analyzer") {
       val corpus = graft.corpus.Corpus.ingest(spark, sfDir)
-      Positions.build(corpus, "doc_id", column, analyzer)
+      InvertedIndex.bucketLaid(Positions.build(corpus, "doc_id", column, analyzer), "term")
     }
 
   /** Session-cached semantic chunk sub-field tables. These are INDEX-time

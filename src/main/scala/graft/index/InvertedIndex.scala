@@ -79,7 +79,13 @@ case class Index(
     termStats: Dataset[TermStat],
     stats: CorpusStats,
     analyzer: String
-)
+) {
+  /** The term dictionary (term -> df), collected from `termStats` once per
+   *  handle — the driver-side TermStatistics lookup every BM25 weight
+   *  reads, so a query over a warm index runs no term-stats job. */
+  @transient lazy val dictionary: Map[String, Long] =
+    termStats.collect().map(t => t.term -> t.df).toMap
+}
 
 object InvertedIndex {
 
@@ -89,9 +95,9 @@ object InvertedIndex {
   val BucketSpan: Int = 1 << BucketBits
 
   /** Growable primitive int buffer (no boxing in the build hot loop). */
-  private final class IntBuf(initial: Int = 8) {
-    var arr = new Array[Int](initial)
-    var n = 0
+  private[index] final class IntBuf(initial: Int = 8) {
+    private var arr = new Array[Int](initial)
+    private var n = 0
     def add(v: Int): Unit = {
       if (n == arr.length) {
         val bigger = new Array[Int](arr.length * 2)
@@ -247,6 +253,16 @@ object InvertedIndex {
    *  compressed-fragment shuffle. */
   def mergedBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String): Dataset[BuildBlock] =
     mergeBlocks(buildBlocksOf(docs, idCol, textCol, analyzer))
+
+  /** The resident layout of an index table (Hadoop++'s co-partitioned
+   *  load): hash-partitioned on `bucket` into the session's shuffle
+   *  partition count — explicit, so adaptive execution never coalesces it —
+   *  and sorted by `bucket`, then `sortCols`. A per-bucket join or co-group
+   *  of two laid-out tables plans no exchange and no sort. */
+  private[graft] def bucketLaid[T](table: Dataset[T], sortCols: String*): Dataset[T] = {
+    val p = table.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    table.repartition(p, col("bucket")).sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+  }
 
   /** The postings (kind 0) of a block table. Over a table on disk the
    *  kind=0 directory alone is read, and term predicates push into parquet

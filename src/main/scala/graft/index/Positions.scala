@@ -83,7 +83,7 @@ object Positions {
     val fragments = rows.mapPartitions { it =>
       val out = scala.collection.mutable.ArrayBuffer.empty[PosBlock]
       val cur = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[(Int, Array[Int])]]()
-      val docPos = new java.util.HashMap[String, InvBuf]()
+      val docPos = new java.util.HashMap[String, InvertedIndex.IntBuf]()
       var curBucket = Long.MinValue
       def flush(): Unit = if (curBucket != Long.MinValue) {
         val e = cur.entrySet().iterator()
@@ -102,7 +102,7 @@ object Positions {
         var i = 0
         while (i < toks.length) {
           var cell = docPos.get(toks(i))
-          if (cell == null) { cell = new InvBuf(); docPos.put(toks(i), cell) }
+          if (cell == null) { cell = new InvertedIndex.IntBuf(4); docPos.put(toks(i), cell) }
           cell.add(i)
           i += 1
         }
@@ -127,21 +127,5 @@ object Positions {
         if (blocks.length == 1) blocks(0)
         else encode(key._1, key._2, blocks.flatMap(decodeEntries))
       }
-  }
-
-  /** Growable primitive int buffer (no boxing in the build hot loop). */
-  private final class InvBuf(initial: Int = 4) {
-    private var arr = new Array[Int](initial)
-    private var n = 0
-    def add(v: Int): Unit = {
-      if (n == arr.length) {
-        val bigger = new Array[Int](arr.length * 2)
-        System.arraycopy(arr, 0, bigger, 0, n)
-        arr = bigger
-      }
-      arr(n) = v
-      n += 1
-    }
-    def toArray: Array[Int] = java.util.Arrays.copyOfRange(arr, 0, n)
   }
 }

@@ -17,7 +17,8 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PostingBlock, PostingCode
  *
  * Execution: every scorer here but [[topKWand]] runs on [[BucketKernel]]
  * (matched posting blocks co-grouped per 4096-doc bucket with that bucket's
- * doc-length window), scores into a dense per-bucket float window, and
+ * doc-length window; over a registry-resident index one Spark job with no
+ * exchange), scores into a dense per-bucket float window, and
  * [[topK]] reduces each bucket through a [[BoundedTopK]] heap before the
  * global TakeOrderedAndProject. [[topKWand]] streams the same buckets with
  * one running heap per partition and skips buckets whose block-max upper
@@ -40,8 +41,8 @@ object Bm25 {
   def tfNorm(tf: Double, dl: Int, avgdl: Double): Double =
     tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
-  /** Per-term BM25 weight map for a query (idf x boost), from the broadcast-
-   *  sized term-stats lookup — the Lucene TermStatistics analogue. */
+  /** Per-term BM25 weight map for a query (idf x boost), from the index's
+   *  driver term dictionary — the Lucene TermStatistics analogue. */
   private def termWeights(idx: Index, terms: Seq[String], boosts: Map[String, Double]): Map[String, Double] = {
     // non-positive boosts are rejected like Lucene rejects negative boosts:
     // topKWand's bucket upper bound (sum of w x tfNorm(max_tf, min_dl)) only
@@ -55,14 +56,10 @@ object Bm25 {
     }.toMap
   }
 
-  /** Broadcast-sized df lookup for a bag of terms (absent terms omitted) —
-   *  the TermStatistics fetch more_like_this's term selection needs. */
-  def termDfs(idx: Index, terms: Seq[String]): Map[String, Long] = {
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    idx.termStats.filter($"term".isin(terms.distinct: _*))
-      .collect().map(t => t.term -> t.df).toMap
-  }
+  /** The dfs of a bag of terms (absent terms omitted), read from the
+   *  index's driver term dictionary ([[Index.dictionary]]) — no Spark job. */
+  def termDfs(idx: Index, terms: Seq[String]): Map[String, Long] =
+    terms.distinct.flatMap(t => idx.dictionary.get(t).map(t -> _)).toMap
 
   /**
    * Score a bag of query terms (OR semantics, per-term scores summed — the
@@ -285,22 +282,17 @@ object Bm25 {
   }
 
   /**
-   * Cost-based scorer choice from one tiny aggregate over the (persisted)
-   * term-stats table: the fused WAND's upper-bound bookkeeping and the
-   * per-row dl-block join only pay off when the candidate posting volume is
-   * large enough that skipping block decodes wins; tiny queries route to the
-   * plain scorer. Mirrors Lucene's cost-aware scorer selection
+   * Cost-based scorer choice from the query terms' summed dfs in the driver
+   * term dictionary (no Spark job): the fused WAND's upper-bound bookkeeping
+   * and the per-row dl-block join only pay off when the candidate posting
+   * volume is large enough that skipping block decodes wins; tiny queries
+   * route to the plain scorer. Mirrors Lucene's cost-aware scorer selection
    * (reference: query/HybridQueryScorer.java:222-299 orders two-phase
    * iterators by matchCost).
    */
   def topKAuto(idx: Index, terms: Seq[String], k: Int, boosts: Map[String, Double] = Map.empty,
                wandThreshold: Long = 1000000L): DataFrame = {
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    val row = idx.termStats
-      .filter($"term".isin(terms.distinct: _*))
-      .agg(org.apache.spark.sql.functions.sum($"df")).head()
-    val volume = if (row.isNullAt(0)) 0L else row.getLong(0)
+    val volume = termDfs(idx, terms).values.sum
     if (volume >= wandThreshold) topKWand(idx, terms, k, boosts)
     else topK(idx, terms, k, boosts)
   }
@@ -314,10 +306,11 @@ object Bm25 {
    *
    * FUSED single-job design (replacing the earlier two-pass + driver-frontier
    * scheme, whose 2 extra scheduling rounds cost more than they saved): the
-   * matched blocks join their bucket's doc-length block, land hash-shuffled
-   * by bucket, and each partition streams its buckets with a RUNNING bounded
-   * top-k heap — exactly the reference's collector/threshold loop, one per
-   * partition:
+   * matched blocks sort-merge join their bucket's doc-length block — in
+   * place over a registry-resident index, whose tables are co-partitioned on
+   * `bucket`; through a `bucket` shuffle of both sides otherwise — and each
+   * partition streams its buckets with a RUNNING bounded top-k heap —
+   * exactly the reference's collector/threshold loop, one per partition:
    *
    *  - bucket upper bound from block METADATA only: sum over terms of
    *    w x tfNorm(max_tf, min_dl). For any doc in the bucket tf <= max_tf
@@ -350,14 +343,15 @@ object Bm25 {
     val kk = k
 
     val matched = idx.postings.filter($"term".isin(weightPerTerm.keys.toSeq: _*))
-    val joined = matched.joinWith(idx.docLens, matched("bucket") === idx.docLens("bucket"))
-    // ALL of a bucket's term blocks must land in one partition (the cached
-    // postings keep the build's (term, bucket) layout, so a broadcast join
-    // would leave a bucket's blocks scattered and scores partial) — hash
-    // repartition on bucket, then make same-bucket rows adjacent; term-asc
-    // fixes the FP accumulation order (shuffle arrival order must not shift
+    // ALL of a bucket's term blocks must land in one partition, so the join
+    // is a sort-merge on bucket (a broadcast join would leave a bucket's
+    // blocks wherever the postings lie, and scores partial over a store
+    // read from disk); then same-bucket rows are made adjacent, term-asc,
+    // which fixes the FP accumulation order (arrival order must not shift
     // near-ties)
-    val rows = joined.repartition($"_1.bucket").sortWithinPartitions($"_1.bucket", $"_1.term")
+    val docLens = idx.docLens.hint("shuffle_merge")
+    val rows = matched.joinWith(docLens, matched("bucket") === docLens("bucket"))
+      .sortWithinPartitions($"_1.bucket", $"_1.term")
 
     val topped: Dataset[(Long, Double)] = rows.mapPartitions { it =>
       val buf = it.buffered

@@ -1,7 +1,8 @@
 package graft.query
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingBlock, PostingCodec}
+import org.apache.spark.sql.functions.when
+import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingCodec}
 
 /**
  * The one per-bucket execution shape every BM25, phrase, span and
@@ -9,12 +10,16 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingBlock, P
  * bulk-scoring window (reference: query/HybridBulkScorer.java:75-100):
  *
  *  - the matched block rows (postings or positions, already filtered to the
- *    query's terms) are co-grouped on `bucket` with the forward doc-length
- *    blocks of ONLY the buckets they touch (a broadcast semi-join of
- *    `docLens` on the matched bucket set), so the per-query shuffle is
- *    proportional to the query's posting volume, never to corpus size;
- *  - each bucket decodes its dense doc-length window ([[dlWindow]]) once
- *    and hands it, with the bucket's blocks, to the matcher's own loop;
+ *    query's terms) are co-grouped on their `bucket` column with the
+ *    forward doc-length blocks. Over a registry-resident index both sides
+ *    are laid out on `bucket` ([[graft.index.InvertedIndex.bucketLaid]]),
+ *    so the co-group reads the two cached scans in place — no exchange, no
+ *    sort, one Spark job. Over any other index Catalyst shuffles both sides
+ *    on `bucket`: the same groups, so the same results;
+ *  - a bucket without matched blocks is skipped before its doc lengths
+ *    decode; each other bucket decodes its dense doc-length window
+ *    ([[dlWindow]]) once and hands it, with the bucket's blocks, to the
+ *    matcher's own loop;
  *  - `dlArr(local) == 0` is the liveDocs gate: a live doc with any posting
  *    has dl >= 1, a tombstoned one (Deletes.maskDocLens) has no forward
  *    entry.
@@ -24,38 +29,29 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingBlock, P
  */
 object BucketKernel {
 
-  /** The bucket key of a block table the kernel can co-group. */
-  sealed abstract class Bucketed[B] extends Serializable { def bucket(b: B): Long }
-  object Bucketed {
-    implicit object Postings extends Bucketed[PostingBlock] {
-      def bucket(b: PostingBlock): Long = b.bucket
-    }
-    implicit object Positions extends Bucketed[PosBlock] {
-      def bucket(b: PosBlock): Long = b.bucket
-    }
-  }
-
   /** Per-bucket call: `f(bucket, blocks, dlArr)` for every bucket holding at
    *  least one matched block; `dlArr` is the bucket's dense doc-length
    *  window indexed by local doc id. */
-  def apply[B, O: Encoder](idx: Index, matched: Dataset[B])(
-      f: (Long, Iterator[B], Array[Int]) => Iterator[O])(implicit key: Bucketed[B]): Dataset[O] = {
+  def apply[B: Encoder, O: Encoder](idx: Index, matched: Dataset[B])(
+      f: (Long, Iterator[B], Array[Int]) => Iterator[O]): Dataset[O] = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    // the semi join re-reads only the column-pruned bucket metadata of the
-    // matched scan, so the payload bytes are not scanned twice
-    val docLens = idx.docLens
-      .join(matched.select($"bucket").distinct().hint("broadcast"), "bucket")
-      .as[DocLenBlock]
-    matched.groupByKey(key.bucket _)
-      .cogroup(docLens.groupByKey(_.bucket)) { (bucket, blocksIt, dlIt) =>
-        if (!blocksIt.hasNext) Iterator.empty
-        else {
-          val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-          dlIt.foreach(decodeInto(dlArr, _))
-          f(bucket, blocksIt, dlArr)
-        }
+    // co-group keys must have one type, and a parquet read's `bucket` is
+    // nullable while an in-memory table's is not: a mixed pair groups its
+    // non-nullable side on a nullable copy (a computed key, so it shuffles)
+    val mixed = matched.schema("bucket").nullable != idx.docLens.schema("bucket").nullable
+    def keyed[T: Encoder](ds: Dataset[T]) =
+      (if (!mixed || ds.schema("bucket").nullable) ds
+       else ds.withColumn("bucket", when($"bucket".isNotNull, $"bucket")).as[T])
+        .groupBy($"bucket").as[Long, T]
+    keyed(matched).cogroup(keyed(idx.docLens)) { (bucket, blocksIt, dlIt) =>
+      if (!blocksIt.hasNext) Iterator.empty
+      else {
+        val dlArr = new Array[Int](InvertedIndex.BucketSpan)
+        dlIt.foreach(decodeInto(dlArr, _))
+        f(bucket, blocksIt, dlArr)
       }
+    }
   }
 
   /** Dense doc-length window of one bucket, indexed by local doc id. */

@@ -288,11 +288,9 @@ object Phrase {
     val spark = idx.postings.sparkSession
     import spark.implicits._
 
-    // bounded driver fetch: <= maxExpansions dictionary rows
-    val expansions: Seq[(String, Long)] = idx.termStats
-      .filter($"term".startsWith(prefix))
-      .select($"term", $"df").orderBy($"term".asc).limit(maxExpansions)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // from the driver term dictionary, in Spark's (UTF-8 byte) term order
+    val expansions: Seq[(String, Long)] = idx.dictionary.toSeq.filter(_._1.startsWith(prefix))
+      .sortBy(t => org.apache.spark.unsafe.types.UTF8String.fromString(t._1)).take(maxExpansions)
     val fixedWeight = slotWeight(idx, fixed)
     if (expansions.isEmpty || fixedWeight.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")

@@ -148,9 +148,10 @@ object Search {
    *  both: the postings scan is filtered ONCE to the union of every
    *  request's terms, each matched block is decoded ONCE, tfNorm is
    *  computed ONCE per posting, and every request sharing a term scores
-   *  from the same decode. The (query, doc) shuffle stays proportional to
-   *  total posting volume; the per-request top-k is the salted bounded
-   *  TopN, so no request's result depends on another's. Accumulation order
+   *  from the same decode. Each bucket keeps a bounded top-k per request
+   *  (one [[BoundedTopK]] each), so the one shuffle — into the per-request
+   *  rank — moves at most requests x buckets x k rows, and no request's
+   *  result depends on another's. Accumulation order
    *  is fixed (blocks sorted by (term, bucket), requests in given order),
    *  making scores bit-identical to the one-request scorer's.
    *
@@ -209,23 +210,23 @@ object Search {
         i += 1
       }
       val base = bucket << InvertedIndex.BucketBits
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
-      var q = 0
-      while (q < nQ) {
+      (0 until nQ).iterator.flatMap { q =>
+        val top = new BoundedTopK(k)
         var d = 0
         while (d < span) {
           // dl gate = liveDocs (a tombstoned doc has no forward entry)
-          if (seen(q)(d) && dlArr(d) > 0) out += ((q, base + d, scores(q)(d)))
+          if (seen(q)(d) && dlArr(d) > 0) top.offer(base + d, scores(q)(d))
           d += 1
         }
-        q += 1
+        top.iterator.map { case (id, sc) => (q, id, sc) }
       }
-      out.iterator
     }.toDF("qi", "doc_id", "score")
     val named = scored.withColumn("query_id",
       element_at(lit(requests.map(_._1).toArray), col("qi") + 1))
+    // <= k rows per (request, bucket) already: a salt pass would only add
+    // a second exchange
     graft.ops.TopN.perGroupRanked(named, Seq("query_id"), "doc_id", k,
-        Seq(col("score").desc, col("doc_id").asc), "rank")
+        Seq(col("score").desc, col("doc_id").asc), "rank", saltBuckets = 1)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 

@@ -127,7 +127,7 @@ class BoundedCacheSpec extends SparkSpec {
     val idx = graft.index.IndexCache.documents(spark, dir)
     idx.postings.count(); idx.docLens.count(); idx.termStats.count()
     val held = sc.getPersistentRDDs.keySet -- before
-    assert(held.size == 4, s"blocks + three tables are cached: $held")
+    assert(held.size == 2, s"the laid-out blocks and termStats are cached: $held")
     BoundedCache.session.invalidate(_.dir == dir)
     assert(Seq(idx.postings, idx.docLens, idx.termStats).forall(_.storageLevel == StorageLevel.NONE))
     assert((sc.getPersistentRDDs.keySet intersect held).isEmpty,

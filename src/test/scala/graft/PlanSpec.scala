@@ -4,15 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.hybrid._
-import graft.index.{InvertedIndex, IndexCache}
+import graft.index.{BoundedCache, InvertedIndex, IndexCache}
 import graft.query.Bm25
 
 /**
  * Physical-plan shape assertions — the scale claims as executable checks:
  * bounded top-k collection (TakeOrderedAndProject, never a global sort of
  * scored rows into <= numSubQueries partitions), parquet filter pushdown on
- * the disk-backed postings term seek, and no forced broadcast on the
- * non-scoring hybrid filter.
+ * the disk-backed postings term seek, no forced broadcast on the
+ * non-scoring hybrid filter, and per-bucket scoring in place over a
+ * registry-resident index (its tables co-partitioned on `bucket`: no
+ * Exchange below the scorer, one Spark job per BM25 query) with the same
+ * rows as over the same index read without that layout.
  */
 class PlanSpec extends SparkSpec {
 
@@ -26,12 +29,18 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
   }
 
-  test("fused WAND is one shuffle stage ending in TakeOrderedAndProject") {
-    val p = plan(Bm25.topKWand(idx, Seq("join", "merge"), 10))
+  test("fused WAND is one job with no Exchange, ending in TakeOrderedAndProject") {
+    val q = () => Bm25.topKWand(idx, Seq("join", "merge"), 10)
+    val p = plan(q())
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
-    // the scorer runs inside mapPartitions after one bucket exchange; there
-    // must be no per-bucket Window sort anywhere in the WAND plan
+    // the scorer runs inside mapPartitions over a sort-merge join of the two
+    // co-partitioned cached scans: no exchange, no broadcast, and no
+    // per-bucket Window sort anywhere in the WAND plan
+    assert(p.contains("SortMergeJoin"), p.take(2000))
+    inPlace("topKWand", p, "TakeOrderedAndProject")
     assert(!p.contains("Window"), p.take(2000))
+    q().collect()
+    assert(jobsOf(q().collect())._2 == 1)
   }
 
   test("disk-backed postings scan pushes the term filter into parquet") {
@@ -284,41 +293,65 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("rangepartitioning"), p.take(3000))
   }
 
-  test("every bucket-kernel user plans one CoGroup over a broadcast bucket " +
-    "semi-join on docLens, no Window or global Sort, at a fixed job count") {
+  /** The plan below its first `scorer` node (a CoGroup or a join), without
+   *  the plans that filled the cached tables it scans. */
+  private def belowScorer(p: String, scorer: String): String = {
+    val at = p.indexOf(scorer)
+    assert(at >= 0, s"no $scorer: " + p.take(3000))
+    def depth(line: String) = line.indexWhere(c => !" :+-|".contains(c))
+    val out = new StringBuilder
+    var cached = Int.MaxValue
+    for (line <- p.substring(at).linesIterator) {
+      if (depth(line) <= cached) {
+        cached = if (line.contains("InMemoryRelation")) depth(line) else Int.MaxValue
+        out ++= line += '\n'
+      }
+    }
+    out.toString
+  }
+
+  /** The scorer reads the resident tables in place. */
+  private def inPlace(name: String, p: String, scorer: String = "CoGroup"): Unit = {
+    val below = belowScorer(p, scorer)
+    assert(!below.contains("Exchange") && !below.contains("BroadcastHashJoin"),
+      s"$name: no exchange or broadcast below the $scorer: " + p.take(3000))
+    assert("InMemoryTableScan".r.findAllIn(below).size >= 2, s"$name: " + p.take(3000))
+  }
+
+  test("every bucket-kernel user is one CoGroup over resident scans at a fixed job count") {
     import graft.query.{Intervals, Phrase, Search}
     import Intervals.{IAllOf, IMatch, IPrefix}
     val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
-    // (name, query, Spark jobs of one warm call + collect): the term-stats
-    // lookups plus the kernel stage's jobs — pinned, so an added scan, join
-    // or collect shows
+    // (name, query, Spark jobs of one warm call + collect): the kernel
+    // stage, plus msearch's per-request rank exchange and the termStats
+    // scan of an intervals pattern — pinned, so an added scan, join or
+    // collect shows
     val rows: Seq[(String, () => DataFrame, Int)] = Seq(
-      ("bm25 plain", () => Bm25.topK(idx, Seq("join", "merge"), 10), 6),
-      ("bm25 synonym", () => Bm25.synonymTopK(idx, Seq("join", "merge"), 10), 6),
-      ("bm25 matchLike", () => Bm25.matchLike(idx, "ta%"), 5),
+      ("bm25 plain", () => Bm25.topK(idx, Seq("join", "merge"), 10), 1),
+      ("bm25 synonym", () => Bm25.synonymTopK(idx, Seq("join", "merge"), 10), 1),
+      ("bm25 matchLike", () => Bm25.matchLike(idx, "ta%"), 1),
       ("msearch", () => Search.msearch(idx,
-        Seq("q1" -> Seq("join", "merge"), "q2" -> Seq("hash")), 10), 8),
-      ("phrase exact", () => Phrase.score(idx, pos, Seq("hash", "join")), 6),
-      ("phrase sloppy", () => Phrase.sloppyScore(idx, pos, Seq("hash", "join"), 2), 6),
-      ("phrase prefix", () => Phrase.phrasePrefixScore(idx, pos, Seq("hash"), "jo"), 7),
+        Seq("q1" -> Seq("join", "merge"), "q2" -> Seq("hash")), 10), 2),
+      ("phrase exact", () => Phrase.score(idx, pos, Seq("hash", "join")), 1),
+      ("phrase sloppy", () => Phrase.sloppyScore(idx, pos, Seq("hash", "join"), 2), 1),
+      ("phrase prefix", () => Phrase.phrasePrefixScore(idx, pos, Seq("hash"), "jo"), 1),
       ("span_near", () => Phrase.spanNearMatch(
-        idx, pos, Seq("table", "hash"), slop = 2, inOrder = false), 5),
-      ("span_first", () => Phrase.spanFirstMatch(idx, pos, "join", 3), 5),
-      ("span_not", () => Phrase.spanNotMatch(idx, pos, "join", "hash", 1, 1), 5),
+        idx, pos, Seq("table", "hash"), slop = 2, inOrder = false), 1),
+      ("span_first", () => Phrase.spanFirstMatch(idx, pos, "join", 3), 1),
+      ("span_not", () => Phrase.spanNotMatch(idx, pos, "join", "hash", 1, 1), 1),
       ("span_containing", () => Phrase.spanContainingMatch(
-        idx, pos, Seq("hash", "join"), 2, inOrder = false, "table"), 5),
+        idx, pos, Seq("hash", "join"), 2, inOrder = false, "table"), 1),
       // after resolve, the positional scan filters by the CONCRETE expanded
       // terms ('ta%' -> table) as a literal
       ("intervals", () => Intervals.matchDocs(idx, pos, IAllOf(Seq(
-        IPrefix("ta"), IMatch(Seq("join"))), maxGaps = 2, ordered = true)), 6))
+        IPrefix("ta"), IMatch(Seq("join"))), maxGaps = 2, ordered = true)), 2))
     val measured = rows.map { case (name, q, _) =>
       val p = plan(q())
       assert("CoGroup".r.findAllIn(p).size == 1, s"$name: " + p.take(3000))
-      assert("BroadcastHashJoin \\[bucket#\\d+L\\], \\[bucket#\\d+L\\]".r.findFirstIn(p).isDefined,
-        s"$name: docLens must join the matched buckets by broadcast: " + p.take(3000))
+      inPlace(name, p)
       // msearch ranks its <= k rows per request with a Window ABOVE the
       // kernel; below the CoGroup no plan may window or sort globally
-      val checked = if (name == "msearch") p.substring(p.indexOf("CoGroup")) else p
+      val checked = belowScorer(p, "CoGroup")
       assert(!checked.contains("Window"), s"$name: " + p.take(3000))
       assert("Sort \\[[^\\]]*\\], true".r.findFirstIn(checked).isEmpty &&
         !checked.contains("rangepartitioning"), s"$name: no global sort: " + p.take(3000))
@@ -330,5 +363,80 @@ class PlanSpec extends SparkSpec {
     }
     val want = rows.map { case (name, _, jobs) => name -> jobs }
     assert(measured == want, s"jobs per call: measured $measured")
+  }
+
+  test("every registry index entry is co-partitioned with its doc lengths") {
+    import graft.query.Phrase
+    val dir = "/root/testdata/sf0.001"
+    val store = java.nio.file.Files.createTempDirectory("plan-store-").toString
+    InvertedIndex.buildAndWrite(spark.read.parquet(s"$dir/documents.parquet"),
+      "doc_id", "text", store)
+    val entries = Seq(
+      "documents" -> IndexCache.documents(spark, dir),
+      "corpusField" -> IndexCache.corpusField(spark, dir, "path"),
+      "documentsTitle" -> IndexCache.documentsTitle(spark, dir),
+      "store entry" -> IndexCache.cachedIndex(spark, "plan-store", store)(
+        Right(InvertedIndex.read(spark, store))))
+    for ((name, i) <- entries) {
+      val term = i.termStats.orderBy(col("df").desc, col("term")).first().term
+      inPlace(s"$name topK", plan(Bm25.topK(i, Seq(term), 10)))
+      inPlace(s"$name topKWand", plan(Bm25.topKWand(i, Seq(term), 10)), "SortMergeJoin")
+    }
+    val pos = IndexCache.positions(spark, dir)
+    inPlace("positions", plan(Phrase.score(idx, pos, Seq("hash", "join"))))
+    val fieldPos = IndexCache.corpusFieldPositions(spark, dir, "path")
+    val pathIdx = IndexCache.corpusField(spark, dir, "path")
+    val pathTerms = pathIdx.termStats.orderBy(col("df").desc, col("term")).take(2).map(_.term)
+      .toSeq
+    inPlace("field positions", plan(Phrase.score(pathIdx, fieldPos, pathTerms)))
+    BoundedCache.session.invalidate(_.kind == "plan-store")
+  }
+
+  test("the resident layout changes speed only: non-resident reads return the same bits") {
+    import graft.query.{Phrase, Search}
+    import graft.index.{Deletes, Index, PosBlock, Positions}
+    import spark.implicits._
+    // 3,000 docs over ids 0..20,993: six 4096-doc buckets spread over the
+    // session's partitions
+    val rnd = new scala.util.Random(7)
+    val vocab = Array.tabulate(60)(i => s"w$i")
+    val rows = (0 until 3000).map { i =>
+      (i * 7L, Seq.fill(3 + rnd.nextInt(12))(vocab(math.min(59, (rnd.nextGaussian().abs * 15).toInt)))
+        .mkString(" "))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("plan-layout-").toString
+    rows.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val resident = IndexCache.documents(spark, dir)
+    val store = s"$dir/store"
+    InvertedIndex.buildAndWrite(docs, "doc_id", "text", store)
+    val variants = Seq(
+      "store read" -> InvertedIndex.read(spark, store),
+      "deletes view" -> Deletes.withDeletes(resident, docs.filter($"doc_id" < 0).select("doc_id"),
+        "doc_id"))
+    val pos = IndexCache.positions(spark, dir)
+    val rawPos = Positions.build(docs, "doc_id", "text")
+    def bits(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case v => String.valueOf(v)
+    }.mkString(","))
+    val queries: Seq[(String, (Index, org.apache.spark.sql.Dataset[PosBlock]) => DataFrame)] = Seq(
+      "topK" -> ((i, _) => Bm25.topK(i, Seq("w0", "w3", "w20"), 25)),
+      "topKWand" -> ((i, _) => Bm25.topKWand(i, Seq("w0", "w3", "w20"), 25)),
+      "msearch" -> ((i, _) => Search.msearch(i,
+        Seq("a" -> Seq("w1", "w2"), "b" -> Seq("w30"), "c" -> Seq("w5", "w40")), 20)
+        .orderBy("query_id", "rank")),
+      "phrase" -> ((i, p) => Phrase.score(i, p, Seq("w0", "w1"))
+        .orderBy(col("score").desc, col("doc_id"))))
+    for ((qname, q) <- queries) {
+      val want = bits(q(resident, pos))
+      assert(want.nonEmpty, qname)
+      assert("Exchange".r.findFirstIn(belowScorer(plan(q(variants(0)._2, rawPos)),
+        if (qname == "topKWand") "SortMergeJoin" else "CoGroup")).isDefined,
+        s"$qname: the store read is not laid out, so its plan shuffles")
+      for ((vname, v) <- variants)
+        assert(bits(q(v, rawPos)) == want, s"$qname over the $vname")
+    }
+    BoundedCache.session.invalidate(_.dir == dir)
   }
 }
