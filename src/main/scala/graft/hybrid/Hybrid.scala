@@ -1315,7 +1315,7 @@ object Hybrid {
         val terms =
           if (tf.isEmpty) Seq.empty[String]
           else {
-            val dfMap = Bm25.termDfs(src.idx, tf.keys.toSeq)
+            val dfMap = src.idx.dfs(tf.keys.toSeq)
             val n = src.idx.stats.doc_count
             tf.toSeq
               .flatMap { case (t, f) =>
@@ -1398,7 +1398,7 @@ object Hybrid {
         val idxOf = fields.map { case (f, _) =>
           f -> (if (f == "text") src.idx else src.fieldIdx(f)) }.toMap
         val dfsOf = fields.map { case (f, _) =>
-          f -> Bm25.termDfs(idxOf(f), terms) }.toMap
+          f -> idxOf(f).dfs(terms) }.toMap
         val uniq = terms.distinct
         val blend = uniq.flatMap { t =>
           val ds = fields.flatMap { case (f, _) => dfsOf(f).get(t) }
@@ -1444,7 +1444,7 @@ object Hybrid {
           f -> (if (f == "text") src.idx else src.fieldIdx(f)) }.toMap
         val uniq = terms.distinct
         val dfsOf = fields.map { case (f, _) =>
-          f -> Bm25.termDfs(idxOf(f), uniq) }.toMap
+          f -> idxOf(f).dfs(uniq) }.toMap
         // merged TermStatistics: docFreq = max over fields (absent = 0)
         val mergedDf = uniq.flatMap { t =>
           val ds = fields.flatMap { case (f, _) => dfsOf(f).get(t) }

@@ -31,9 +31,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
  * so release always matches it (RamBytesRecorder's contract): the storage
  * snapshot is taken before the build runs, every Dataset the entry holds
  * is materialized, and the cached block bytes they added — less what
- * nested builds were charged — are weighed, like
- * ramBytesUsed on a built structure. An artifact that alone exceeds the
- * limit is un-persisted again and counted as a breaker rejection. (A
+ * nested builds were charged — plus a [[BoundedCache.DriverHeld]]'s driver
+ * bytes — are weighed, like ramBytesUsed on a built structure. An artifact
+ * that alone exceeds the limit is un-persisted again and counted as a breaker rejection. (A
  * plan-statistics estimate degrades to Long.MaxValue whenever any operator
  * cannot be estimated, which would silently reject every admission.) Tests
  * and deterministic entries pass an explicit weigher.
@@ -83,11 +83,12 @@ class BoundedCache[K](val limitBytes: Long,
     val nested = synchronized(admittedBytes)
     val (value, held) = build
     held.foreach(_.count())
-    val bytes = weigher match {
+    val driver = value match { case d: BoundedCache.DriverHeld => d.driverBytes; case _ => 0L }
+    val bytes = driver + (weigher match {
       case Some(w) => held.map(d => math.max(w(d), 0L)).sum
       case None => math.max(0L, sc.get.getRDDStorageInfo.filterNot(r => before(r.id))
         .map(r => r.memSize + r.diskSize).sum - (synchronized(admittedBytes) - nested))
-    }
+    })
     synchronized {
       if (bytes > limitBytes) {
         // even an empty cache cannot hold it: the breaker refuses
@@ -161,6 +162,10 @@ class BoundedCache[K](val limitBytes: Long,
 }
 
 object BoundedCache {
+
+  /** An artifact that also keeps driver memory (an [[Index]]'s term
+   *  dictionary): admission charges its `driverBytes` too. */
+  trait DriverHeld { def driverBytes: Long }
 
   /** Registry key: the artifact `kind` built over corpus (or store) `dir`
    *  with `params`, in the application `app`. */

@@ -19,8 +19,8 @@ object IndexCache {
    *  fragment shuffle) — it and the term stats are persisted, and postings
    *  and doc lengths are views of it, so no byte is held twice. `Right(idx)`:
    *  an index read back from a committed store, its three tables persisted.
-   *  Admission materializes every Dataset the entry holds and the term
-   *  dictionary; eviction unpersists them. */
+   *  Admission materializes every Dataset the entry holds and loads the
+   *  driver term dictionary, charging both; eviction unpersists them. */
   private[graft] def cachedIndex(spark: SparkSession, kind: String, dir: String,
                                  params: String = "")(
       source: => Either[(Dataset[BuildBlock], String), Index]): Index =
@@ -38,7 +38,7 @@ object IndexCache {
             InvertedIndex.bucketLaid(i.docLens).persist(), i.termStats.persist(), i.stats, i.analyzer)
           (idx, Seq(idx.postings, idx.docLens, idx.termStats))
       }
-      idx.dictionary
+      idx.loadDictionary()
       (idx, held)
     }
 

@@ -79,12 +79,34 @@ case class Index(
     termStats: Dataset[TermStat],
     stats: CorpusStats,
     analyzer: String
-) {
-  /** The term dictionary (term -> df), collected from `termStats` once per
-   *  handle — the driver-side TermStatistics lookup every BM25 weight
-   *  reads, so a query over a warm index runs no term-stats job. */
-  @transient lazy val dictionary: Map[String, Long] =
-    termStats.collect().map(t => t.term -> t.df).toMap
+) extends BoundedCache.DriverHeld {
+  // the whole term dictionary (term -> df) and its estimated bytes: loaded
+  // at registry admission, null on any other handle (a store read, a copy)
+  @transient @volatile private var dictionary: Map[String, Long] = _
+  @transient @volatile private var bytes = 0L
+  def driverBytes: Long = bytes
+
+  private[index] def loadDictionary(): Unit = {
+    dictionary = fetch(termStats)
+    bytes = org.apache.spark.util.SizeEstimator.estimate(dictionary)
+  }
+
+  private def fetch(rows: Dataset[TermStat]) = rows.collect().map(t => t.term -> t.df).toMap
+
+  /** The dfs of `terms` (absent terms omitted) — the TermStatistics lookup
+   *  every BM25 weight reads: no Spark job on a resident handle; any other
+   *  handle fetches only these terms' rows. */
+  def dfs(terms: Seq[String]): Map[String, Long] = {
+    val d = Option(dictionary).getOrElse(fetch(termStats.filter(col("term").isin(terms.distinct: _*))))
+    terms.distinct.flatMap(t => d.get(t).map(t -> _)).toMap
+  }
+
+  /** The first `max` (term, df) pairs whose term starts with `prefix`, in
+   *  Spark's (UTF-8 byte) term order. */
+  def prefixed(prefix: String, max: Int): Seq[(String, Long)] =
+    Option(dictionary).getOrElse(fetch(termStats.filter(col("term").startsWith(prefix))
+      .orderBy("term").limit(max))).toSeq.filter(_._1.startsWith(prefix))
+      .sortBy(t => org.apache.spark.unsafe.types.UTF8String.fromString(t._1)).take(max)
 }
 
 object InvertedIndex {

@@ -46,11 +46,6 @@ object Dedup {
       countDistinct(md5(col(text))).as("n_distinct"))
       .withColumn("n_dup_rows", col("n_total") - col("n_distinct"))
 
-  /** Exact dedup groups: representative id + count per distinct text. */
-  def exactGroups(docs: DataFrame, id: String, text: String): DataFrame =
-    docs.groupBy(md5(col(text)).as("text_hash"))
-      .agg(min(col(id)).as("rep_id"), count(lit(1)).as("cnt"))
-
   /** Duplicate-substring spans — the SPAN-level exact dedup rule
    *  ("Deduplicating Training Data Makes Language Models Better", Lee et
    *  al. 2022: a k-token window occurring more than once across the corpus
@@ -382,13 +377,6 @@ object Dedup {
     }
     agg.select(col("id") +: words: _*)
   }
-
-  /** 64-bit SimHash signature as two 32-bit halves (id, hi, lo) — the
-   *  default width of [[simhashSignaturesWide]] under its historical
-   *  column names. */
-  def simhashSignatures64(docs: DataFrame, id: String, text: String): DataFrame =
-    simhashSignaturesWide(docs, id, text, 64)
-      .select(col("id"), col("w0").as("hi"), col("w1").as("lo"))
 
   /** SimHash near-dup pairs with PIGEONHOLE multi-band blocking: the
    *  `bits`-wide signature splits into (maxHamming + 1) bands, and any pair

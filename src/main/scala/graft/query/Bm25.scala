@@ -2,7 +2,8 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.index.{DocLenBlock, Index, InvertedIndex, PostingBlock, PostingCodec}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.index.{Index, InvertedIndex, PostingCodec}
 
 /**
  * Exact BM25 (k1=1.2, b=0.75 — the Lucene BM25Similarity defaults the
@@ -15,14 +16,14 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PostingBlock, PostingCode
  * lengths rather than Lucene's lossy SmallFloat-encoded norms (SURVEY.md
  * §7.4) so the engine is self-consistent and oracle-checkable.
  *
- * Execution: every scorer here but [[topKWand]] runs on [[BucketKernel]]
- * (matched posting blocks co-grouped per 4096-doc bucket with that bucket's
- * doc-length window; over a registry-resident index one Spark job with no
- * exchange), scores into a dense per-bucket float window, and
- * [[topK]] reduces each bucket through a [[BoundedTopK]] heap before the
- * global TakeOrderedAndProject. [[topKWand]] streams the same buckets with
- * one running heap per partition and skips buckets whose block-max upper
- * bound cannot beat it (block-max WAND, reference:
+ * Execution: every scorer here runs on [[BucketKernel]] (matched posting
+ * blocks co-grouped per 4096-doc bucket with that bucket's doc-length
+ * window; over a registry-resident index one Spark job with no exchange).
+ * Most score into a dense per-bucket float window, and [[topK]] reduces
+ * each bucket through a [[BoundedTopK]] heap before the global
+ * TakeOrderedAndProject. [[topKWand]] streams the same co-grouped buckets
+ * with one running heap per partition and skips buckets whose block-max
+ * upper bound cannot beat it (block-max WAND, reference:
  * query/HybridQueryScorer.java:155-176).
  */
 object Bm25 {
@@ -42,24 +43,19 @@ object Bm25 {
     tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
   /** Per-term BM25 weight map for a query (idf x boost), from the index's
-   *  driver term dictionary — the Lucene TermStatistics analogue. */
+   *  term dictionary — the Lucene TermStatistics analogue. */
   private def termWeights(idx: Index, terms: Seq[String], boosts: Map[String, Double]): Map[String, Double] = {
     // non-positive boosts are rejected like Lucene rejects negative boosts:
     // topKWand's bucket upper bound (sum of w x tfNorm(max_tf, min_dl)) only
     // dominates real scores when every term weight is non-negative — a
     // negative weight would make pruning silently drop true top-k docs
     boosts.foreach { case (t, b) => require(b > 0, s"boost for '$t' must be > 0, got $b") }
-    val statsMap = termDfs(idx, terms)
+    val statsMap = idx.dfs(terms)
     val n = idx.stats.doc_count
     terms.distinct.flatMap { t =>
       statsMap.get(t).map(df => t -> idf(df, n) * boosts.getOrElse(t, 1.0))
     }.toMap
   }
-
-  /** The dfs of a bag of terms (absent terms omitted), read from the
-   *  index's driver term dictionary ([[Index.dictionary]]) — no Spark job. */
-  def termDfs(idx: Index, terms: Seq[String]): Map[String, Long] =
-    terms.distinct.flatMap(t => idx.dictionary.get(t).map(t -> _)).toMap
 
   /**
    * Score a bag of query terms (OR semantics, per-term scores summed — the
@@ -251,7 +247,7 @@ object Bm25 {
     val spark = idx.postings.sparkSession
     import spark.implicits._
     val avgdl = idx.stats.avgdl
-    val dfs = termDfs(idx, synonyms)
+    val dfs = idx.dfs(synonyms)
     if (dfs.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
     val w = idf(dfs.values.max, idx.stats.doc_count)
@@ -282,17 +278,17 @@ object Bm25 {
   }
 
   /**
-   * Cost-based scorer choice from the query terms' summed dfs in the driver
-   * term dictionary (no Spark job): the fused WAND's upper-bound bookkeeping
-   * and the per-row dl-block join only pay off when the candidate posting
-   * volume is large enough that skipping block decodes wins; tiny queries
-   * route to the plain scorer. Mirrors Lucene's cost-aware scorer selection
+   * Cost-based scorer choice from the query terms' summed dfs in the term
+   * dictionary (no Spark job over a resident index): the fused WAND's
+   * upper-bound bookkeeping and per-bucket dl-block pairing only pay off
+   * when the candidate posting volume is large enough that skipping block
+   * decodes wins; tiny queries route to the plain scorer. Mirrors Lucene's cost-aware scorer selection
    * (reference: query/HybridQueryScorer.java:222-299 orders two-phase
    * iterators by matchCost).
    */
   def topKAuto(idx: Index, terms: Seq[String], k: Int, boosts: Map[String, Double] = Map.empty,
                wandThreshold: Long = 1000000L): DataFrame = {
-    val volume = termDfs(idx, terms).values.sum
+    val volume = idx.dfs(terms).values.sum
     if (volume >= wandThreshold) topKWand(idx, terms, k, boosts)
     else topK(idx, terms, k, boosts)
   }
@@ -306,11 +302,12 @@ object Bm25 {
    *
    * FUSED single-job design (replacing the earlier two-pass + driver-frontier
    * scheme, whose 2 extra scheduling rounds cost more than they saved): the
-   * matched blocks sort-merge join their bucket's doc-length block — in
-   * place over a registry-resident index, whose tables are co-partitioned on
-   * `bucket`; through a `bucket` shuffle of both sides otherwise — and each
-   * partition streams its buckets with a RUNNING bounded top-k heap —
-   * exactly the reference's collector/threshold loop, one per partition:
+   * matched blocks pair with their bucket's doc-length block through the
+   * [[BucketKernel]] co-group — in place over a registry-resident index,
+   * whose tables are co-partitioned on `bucket`; through a `bucket` shuffle
+   * of both sides otherwise — and each partition streams its buckets with a
+   * RUNNING bounded top-k heap — exactly the reference's
+   * collector/threshold loop, one per partition:
    *
    *  - bucket upper bound from block METADATA only: sum over terms of
    *    w x tfNorm(max_tf, min_dl). For any doc in the bucket tf <= max_tf
@@ -343,35 +340,26 @@ object Bm25 {
     val kk = k
 
     val matched = idx.postings.filter($"term".isin(weightPerTerm.keys.toSeq: _*))
-    // ALL of a bucket's term blocks must land in one partition, so the join
-    // is a sort-merge on bucket (a broadcast join would leave a bucket's
-    // blocks wherever the postings lie, and scores partial over a store
-    // read from disk); then same-bucket rows are made adjacent, term-asc,
-    // which fixes the FP accumulation order (arrival order must not shift
-    // near-ties)
-    val docLens = idx.docLens.hint("shuffle_merge")
-    val rows = matched.joinWith(docLens, matched("bucket") === docLens("bucket"))
-      .sortWithinPartitions($"_1.bucket", $"_1.term")
+    // the kernel's co-group hands each bucket's blocks over whole (a join's
+    // skewed partition may be split, leaving scores partial); Spark's term
+    // order fixes the FP accumulation order, so near-ties never shift.
+    // A bucket whose docs are all deleted has no doc-length block.
+    val buckets = BucketKernel.grouped(idx, matched) { (bucket, blocksIt, dlIt) =>
+      if (!dlIt.hasNext) Iterator.empty
+      else Iterator((bucket, blocksIt.toArray.sortBy(b => UTF8String.fromString(b.term)), dlIt.next()))
+    }
 
-    val topped: Dataset[(Long, Double)] = rows.mapPartitions { it =>
-      val buf = it.buffered
+    val topped: Dataset[(Long, Double)] = buckets.mapPartitions { it =>
       val top = new BoundedTopK(kk)
-      val group = scala.collection.mutable.ArrayBuffer.empty[(PostingBlock, DocLenBlock)]
-      while (buf.hasNext) {
-        group.clear()
-        val bucket = buf.head._1.bucket
-        while (buf.hasNext && buf.head._1.bucket == bucket) group += buf.next()
-        val dlb = group.head._2
+      it.foreach { case (bucket, group, dlb) =>
         var ub = 0.0
-        group.foreach { case (b, _) =>
-          ub += weightPerTerm(b.term) * tfNorm(b.max_tf, dlb.min_dl, avgdl)
-        }
+        group.foreach(b => ub += weightPerTerm(b.term) * tfNorm(b.max_tf, dlb.min_dl, avgdl))
         val skip = top.full && ub < top.threshold
         if (!skip) {
           val dlArr = BucketKernel.dlWindow(dlb)
           val scores = new Array[Double](span)
           val seen = new Array[Boolean](span)
-          group.foreach { case (b, _) =>
+          group.foreach { b =>
             val w = weightPerTerm(b.term)
             val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
             val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)

@@ -33,7 +33,18 @@ object BucketKernel {
    *  least one matched block; `dlArr` is the bucket's dense doc-length
    *  window indexed by local doc id. */
   def apply[B: Encoder, O: Encoder](idx: Index, matched: Dataset[B])(
-      f: (Long, Iterator[B], Array[Int]) => Iterator[O]): Dataset[O] = {
+      f: (Long, Iterator[B], Array[Int]) => Iterator[O]): Dataset[O] =
+    grouped(idx, matched) { (bucket, blocksIt, dlIt) =>
+      val dlArr = new Array[Int](InvertedIndex.BucketSpan)
+      dlIt.foreach(decodeInto(dlArr, _))
+      f(bucket, blocksIt, dlArr)
+    }
+
+  /** The co-group itself, doc-length blocks undecoded. Buckets arrive in
+   *  key order within a partition, each whole in one task (adaptive
+   *  execution splits skewed join partitions, never a co-group's). */
+  def grouped[B: Encoder, O: Encoder](idx: Index, matched: Dataset[B])(
+      f: (Long, Iterator[B], Iterator[DocLenBlock]) => Iterator[O]): Dataset[O] = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
     // co-group keys must have one type, and a parquet read's `bucket` is
@@ -45,12 +56,7 @@ object BucketKernel {
        else ds.withColumn("bucket", when($"bucket".isNotNull, $"bucket")).as[T])
         .groupBy($"bucket").as[Long, T]
     keyed(matched).cogroup(keyed(idx.docLens)) { (bucket, blocksIt, dlIt) =>
-      if (!blocksIt.hasNext) Iterator.empty
-      else {
-        val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-        dlIt.foreach(decodeInto(dlArr, _))
-        f(bucket, blocksIt, dlArr)
-      }
+      if (!blocksIt.hasNext) Iterator.empty else f(bucket, blocksIt, dlIt)
     }
   }
 

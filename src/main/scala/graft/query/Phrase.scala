@@ -84,7 +84,7 @@ object Phrase {
 
   /** idf summed per slot; None when any term is unindexed. */
   private def slotWeight(idx: Index, phrase: Seq[String]): Option[Double] = {
-    val dfs = Bm25.termDfs(idx, phrase)
+    val dfs = idx.dfs(phrase)
     val n = idx.stats.doc_count
     if (phrase.exists(t => !dfs.contains(t))) None
     else Some(phrase.foldLeft(0.0)((acc, t) => acc + Bm25.idf(dfs(t), n)))
@@ -288,9 +288,8 @@ object Phrase {
     val spark = idx.postings.sparkSession
     import spark.implicits._
 
-    // from the driver term dictionary, in Spark's (UTF-8 byte) term order
-    val expansions: Seq[(String, Long)] = idx.dictionary.toSeq.filter(_._1.startsWith(prefix))
-      .sortBy(t => org.apache.spark.unsafe.types.UTF8String.fromString(t._1)).take(maxExpansions)
+    // <= maxExpansions dictionary terms, in Spark's term order
+    val expansions = idx.prefixed(prefix, maxExpansions)
     val fixedWeight = slotWeight(idx, fixed)
     if (expansions.isEmpty || fixedWeight.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")

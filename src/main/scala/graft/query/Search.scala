@@ -166,7 +166,7 @@ object Search {
     val avgdl = idx.stats.avgdl
     val nDocs = idx.stats.doc_count
     val union = requests.flatMap(_._2).distinct
-    val dfs = Bm25.termDfs(idx, union)
+    val dfs = idx.dfs(union)
     // per term: the (request index, idf weight) list — request order fixed
     val qTerms: Map[String, Array[(Int, Double)]] = union.flatMap { t =>
       dfs.get(t).map { df =>

@@ -151,7 +151,10 @@ class BoundedCacheSpec extends SparkSpec {
       val charge = charged - c0
       idx.postings.count(); idx.docLens.count(); idx.termStats.count()
       val held = sc.getRDDStorageInfo.filterNot(r => before(r.id)).map(r => r.memSize + r.diskSize).sum
-      assert(charge > 0 && charge == held, s"$what: charged $charge B, holds $held B")
+      // plus the driver term dictionary the entry keeps
+      assert(idx.driverBytes > 0, s"$what: the term dictionary is charged")
+      assert(charge > 0 && charge == held + idx.driverBytes,
+        s"$what: charged $charge B, holds $held B cached and ${idx.driverBytes} B on the driver")
     }
     val dir = "/root/testdata/sf0.001"
     BoundedCache.session.invalidate(k => k.kind == "index" && k.dir == dir)

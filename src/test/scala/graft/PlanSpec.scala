@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CoGroupExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.hybrid._
@@ -31,13 +36,13 @@ class PlanSpec extends SparkSpec {
 
   test("fused WAND is one job with no Exchange, ending in TakeOrderedAndProject") {
     val q = () => Bm25.topKWand(idx, Seq("join", "merge"), 10)
-    val p = plan(q())
+    val df = q()
+    val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
-    // the scorer runs inside mapPartitions over a sort-merge join of the two
-    // co-partitioned cached scans: no exchange, no broadcast, and no
+    // the scorer runs inside mapPartitions over the kernel's co-group of the
+    // two co-partitioned cached scans: no exchange, no broadcast, and no
     // per-bucket Window sort anywhere in the WAND plan
-    assert(p.contains("SortMergeJoin"), p.take(2000))
-    inPlace("topKWand", p, "TakeOrderedAndProject")
+    inPlace("topKWand", df)
     assert(!p.contains("Window"), p.take(2000))
     q().collect()
     assert(jobsOf(q().collect())._2 == 1)
@@ -293,29 +298,25 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("rangepartitioning"), p.take(3000))
   }
 
-  /** The plan below its first `scorer` node (a CoGroup or a join), without
-   *  the plans that filled the cached tables it scans. */
-  private def belowScorer(p: String, scorer: String): String = {
-    val at = p.indexOf(scorer)
-    assert(at >= 0, s"no $scorer: " + p.take(3000))
-    def depth(line: String) = line.indexWhere(c => !" :+-|".contains(c))
-    val out = new StringBuilder
-    var cached = Int.MaxValue
-    for (line <- p.substring(at).linesIterator) {
-      if (depth(line) <= cached) {
-        cached = if (line.contains("InMemoryRelation")) depth(line) else Int.MaxValue
-        out ++= line += '\n'
-      }
-    }
-    out.toString
-  }
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The executed plan of `df` from its bucket kernel's CoGroup down. A
+   *  cached table's scan is a leaf there: the plans that filled it are not
+   *  among its children. */
+  private def scorer(df: DataFrame): SparkPlan =
+    Plans.collectFirst(df.queryExecution.executedPlan) { case c: CoGroupExec => c }
+      .getOrElse(fail("no CoGroup: " + plan(df).take(3000)))
+
+  /** The exchanges and broadcast joins below the scorer. */
+  private def moved(df: DataFrame): Seq[SparkPlan] =
+    Plans.collect(scorer(df)) { case e: Exchange => e; case j: BroadcastHashJoinExec => j }
 
   /** The scorer reads the resident tables in place. */
-  private def inPlace(name: String, p: String, scorer: String = "CoGroup"): Unit = {
-    val below = belowScorer(p, scorer)
-    assert(!below.contains("Exchange") && !below.contains("BroadcastHashJoin"),
-      s"$name: no exchange or broadcast below the $scorer: " + p.take(3000))
-    assert("InMemoryTableScan".r.findAllIn(below).size >= 2, s"$name: " + p.take(3000))
+  private def inPlace(name: String, df: DataFrame): Unit = {
+    assert(moved(df).isEmpty,
+      s"$name: no exchange or broadcast below the CoGroup: " + plan(df).take(3000))
+    assert(Plans.collect(scorer(df)) { case t: InMemoryTableScanExec => t }.size >= 2,
+      s"$name: " + plan(df).take(3000))
   }
 
   test("every bucket-kernel user is one CoGroup over resident scans at a fixed job count") {
@@ -346,12 +347,13 @@ class PlanSpec extends SparkSpec {
       ("intervals", () => Intervals.matchDocs(idx, pos, IAllOf(Seq(
         IPrefix("ta"), IMatch(Seq("join"))), maxGaps = 2, ordered = true)), 2))
     val measured = rows.map { case (name, q, _) =>
-      val p = plan(q())
+      val df = q()
+      val p = plan(df)
       assert("CoGroup".r.findAllIn(p).size == 1, s"$name: " + p.take(3000))
-      inPlace(name, p)
+      inPlace(name, df)
       // msearch ranks its <= k rows per request with a Window ABOVE the
       // kernel; below the CoGroup no plan may window or sort globally
-      val checked = belowScorer(p, "CoGroup")
+      val checked = if (name == "msearch") p.substring(p.indexOf("CoGroup")) else p
       assert(!checked.contains("Window"), s"$name: " + p.take(3000))
       assert("Sort \\[[^\\]]*\\], true".r.findFirstIn(checked).isEmpty &&
         !checked.contains("rangepartitioning"), s"$name: no global sort: " + p.take(3000))
@@ -379,16 +381,16 @@ class PlanSpec extends SparkSpec {
         Right(InvertedIndex.read(spark, store))))
     for ((name, i) <- entries) {
       val term = i.termStats.orderBy(col("df").desc, col("term")).first().term
-      inPlace(s"$name topK", plan(Bm25.topK(i, Seq(term), 10)))
-      inPlace(s"$name topKWand", plan(Bm25.topKWand(i, Seq(term), 10)), "SortMergeJoin")
+      inPlace(s"$name topK", Bm25.topK(i, Seq(term), 10))
+      inPlace(s"$name topKWand", Bm25.topKWand(i, Seq(term), 10))
     }
     val pos = IndexCache.positions(spark, dir)
-    inPlace("positions", plan(Phrase.score(idx, pos, Seq("hash", "join"))))
+    inPlace("positions", Phrase.score(idx, pos, Seq("hash", "join")))
     val fieldPos = IndexCache.corpusFieldPositions(spark, dir, "path")
     val pathIdx = IndexCache.corpusField(spark, dir, "path")
     val pathTerms = pathIdx.termStats.orderBy(col("df").desc, col("term")).take(2).map(_.term)
       .toSeq
-    inPlace("field positions", plan(Phrase.score(pathIdx, fieldPos, pathTerms)))
+    inPlace("field positions", Phrase.score(pathIdx, fieldPos, pathTerms))
     BoundedCache.session.invalidate(_.kind == "plan-store")
   }
 
@@ -409,7 +411,25 @@ class PlanSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val resident = IndexCache.documents(spark, dir)
     val store = s"$dir/store"
-    InvertedIndex.buildAndWrite(docs, "doc_id", "text", store)
+    def withConf[A](kvs: (String, String)*)(f: => A): A = {
+      val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    // one file per shuffle partition and kind, each holding some blocks of
+    // every bucket
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      InvertedIndex.buildAndWrite(docs, "doc_id", "text", store)
+    }
+    // adaptive execution may split a skewed partition of a shuffled join by
+    // map ranges: with the store read one map task per file and every
+    // partition above the median counted as skewed, it must still score
+    // each bucket whole, in one task
+    def skewSplit[A](f: => A): A = withConf(
+      "spark.sql.files.openCostInBytes" -> "128m",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(f)
     val variants = Seq(
       "store read" -> InvertedIndex.read(spark, store),
       "deletes view" -> Deletes.withDeletes(resident, docs.filter($"doc_id" < 0).select("doc_id"),
@@ -431,11 +451,12 @@ class PlanSpec extends SparkSpec {
     for ((qname, q) <- queries) {
       val want = bits(q(resident, pos))
       assert(want.nonEmpty, qname)
-      assert("Exchange".r.findFirstIn(belowScorer(plan(q(variants(0)._2, rawPos)),
-        if (qname == "topKWand") "SortMergeJoin" else "CoGroup")).isDefined,
+      assert(moved(q(variants(0)._2, rawPos)).exists(_.isInstanceOf[Exchange]),
         s"$qname: the store read is not laid out, so its plan shuffles")
       for ((vname, v) <- variants)
         assert(bits(q(v, rawPos)) == want, s"$qname over the $vname")
+      assert(skewSplit(bits(q(variants(0)._2, rawPos))) == want,
+        s"$qname over the store read, skewed partitions split")
     }
     BoundedCache.session.invalidate(_.dir == dir)
   }
