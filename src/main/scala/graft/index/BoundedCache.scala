@@ -171,8 +171,9 @@ object BoundedCache {
    *  with `params`, in the application `app`. */
   case class Key(app: String, kind: String, dir: String, params: String)
 
-  /** The one session artifact registry: every index, positional table,
-   *  semantic chunk table and ANN structure a session builds lives here.
+  /** The one session artifact registry: every index (its positions a view
+   *  of its blocks), semantic chunk table and ANN structure a session
+   *  builds lives here.
    *  The limit is effectively unbounded on a local host unless configured
    *  (-Dgraft.cache.limitBytes); on a memory-tight cluster the bound turns
    *  cold artifacts back into recomputable lineage instead of letting

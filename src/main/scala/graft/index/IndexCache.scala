@@ -9,15 +9,19 @@ import graft.analysis.Analyzer
  * (reference: transport/NeuralSparseWarmupTransportAction.java; sparse cache pkg),
  * realized as Spark `persist()` entries of the session registry
  * ([[BoundedCache.session]]: LRU recency, byte accounting against a limit,
- * breaker-refused admissions reading through).
+ * breaker-refused admissions reading through). A corpus index is built
+ * with positions, as Lucene indexes a `text` field by default: its posting
+ * blocks carry them, and the positional table is a view of those blocks,
+ * not a second build or a second entry.
  */
 object IndexCache {
 
   /** The one Index registry entry, laid out on `bucket`
    *  ([[InvertedIndex.bucketLaid]]) so no per-bucket kernel over it
-   *  shuffles. `Left(blocks)`: a merged block table (the one analyze +
-   *  fragment shuffle) — it and the term stats are persisted, and postings
-   *  and doc lengths are views of it, so no byte is held twice. `Right(idx)`:
+   *  shuffles. `Left(blocks)`: a merged positional block table (the one
+   *  analyze + fragment shuffle) — it and the term stats are persisted, and
+   *  postings, doc lengths and positions are views of it, so no byte is
+   *  held twice. `Right(idx)`:
    *  an index read back from a committed store, its three tables persisted.
    *  Admission materializes every Dataset the entry holds and loads the
    *  driver term dictionary, charging both; eviction unpersists them. */
@@ -31,8 +35,9 @@ object IndexCache {
           val postings = InvertedIndex.postingsFromBlocks(blocks)
           val docLens = InvertedIndex.docLensFromBlocks(blocks)
           val termStats = InvertedIndex.termStatsOf(postings).persist()
-          (Index(postings, docLens, termStats, InvertedIndex.statsOf(docLens), analyzer),
-            Seq(blocks, termStats))
+          val idx = Index(postings, docLens, termStats, InvertedIndex.statsOf(docLens), analyzer)
+          idx.positions = InvertedIndex.positionsFromBlocks(blocks)
+          (idx, Seq(blocks, termStats))
         case Right(i) =>
           val idx = Index(InvertedIndex.bucketLaid(i.postings, "term").persist(),
             InvertedIndex.bucketLaid(i.docLens).persist(), i.termStats.persist(), i.stats, i.analyzer)
@@ -43,26 +48,21 @@ object IndexCache {
     }
 
   private def blocksOf(docs: DataFrame, column: String, analyzer: String) =
-    Left((InvertedIndex.mergedBlocksOf(docs, "doc_id", column, analyzer), analyzer))
+    Left((InvertedIndex.mergedBlocksOf(docs, "doc_id", column, analyzer, positions = true), analyzer))
 
-  /** Positional block table over `documents.parquet` (the `.pos` analogue),
-   *  warmed once per session and laid out on `bucket` like the main index. */
+  /** Positional blocks over `documents.parquet` (the `.pos` analogue): a
+   *  view of [[documents]]' resident blocks, so laid out on `bucket` like
+   *  them. */
   def positions(spark: SparkSession, sfDir: String,
                 analyzer: String = Analyzer.Simple): Dataset[PosBlock] =
-    BoundedCache.dataset(spark, "positions", sfDir, analyzer) {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      InvertedIndex.bucketLaid(Positions.build(docs, "doc_id", "text", analyzer), "term")
-    }
+    documents(spark, sfDir, analyzer).positions
 
-  /** Positional blocks over a NON-text corpus column ([[corpusField]]'s
-   *  positional analogue) — multi_match type=phrase verifies per-field
+  /** Positional blocks over a NON-text corpus column: a view of
+   *  [[corpusField]]'s blocks — multi_match type=phrase verifies per-field
    *  adjacency against these. */
   def corpusFieldPositions(spark: SparkSession, sfDir: String, column: String,
                            analyzer: String = Analyzer.Simple): Dataset[PosBlock] =
-    BoundedCache.dataset(spark, "field-positions", sfDir, s"$column/$analyzer") {
-      val corpus = graft.corpus.Corpus.ingest(spark, sfDir)
-      InvertedIndex.bucketLaid(Positions.build(corpus, "doc_id", column, analyzer), "term")
-    }
+    corpusField(spark, sfDir, column, analyzer).positions
 
   /** Session-cached semantic chunk sub-field tables. These are INDEX-time
    *  artifacts — the reference's semantic field mapper generates the chunk
@@ -98,10 +98,9 @@ object IndexCache {
 
   /** Index over a NON-text column of the north-rule corpus projection
    *  ([[graft.corpus.Corpus.ingest]]) — e.g. `path` for multi_match
-   *  queries. Each field is its own full index (postings, doc lengths,
-   *  collection stats), exactly Lucene's per-field inverted index; the
-   *  build shares the single-pass fragment shape with the primary index
-   *  and is warmed/persisted per session the same way. */
+   *  queries. Each field is its own full index (postings with positions,
+   *  doc lengths, collection stats), exactly Lucene's per-field inverted
+   *  index, built and warmed like the primary index. */
   def corpusField(spark: SparkSession, sfDir: String, column: String,
                   analyzer: String = Analyzer.Simple): Index =
     cachedIndex(spark, "field-index", sfDir, s"$column/$analyzer")(

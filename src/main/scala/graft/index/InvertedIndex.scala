@@ -46,7 +46,10 @@ case class TermStat(term: String, df: Long, ttf: Long)
 /**
  * One partition-local compressed fragment emitted by the single-pass build:
  * kind 0 = posting fragment of (term, bucket), payload tfs; kind 1 = doc-length
- * fragment of bucket (term empty), payload dls. Fragments are the unit shipped
+ * fragment of bucket (term empty), payload dls. A positional build also fills
+ * a kind-0 fragment's `poss` — per doc, its first position then the gaps, as
+ * varints (`sum_tf` values, segmented by `tfs`), the wire format of
+ * [[PosBlock.poss]]; it is null otherwise. Fragments are the unit shipped
  * through the shuffle — already delta-varint compressed, so the shuffle moves
  * ~10x fewer bytes than raw (doc, term, tf) rows would. This mirrors the
  * reference's per-segment flush-then-merge lifecycle (reference:
@@ -62,7 +65,8 @@ case class BuildBlock(
     min_v: Int,
     sum_tf: Long,
     docs: Array[Byte],
-    tfs: Array[Byte]
+    tfs: Array[Byte],
+    poss: Array[Byte]
 )
 
 case class CorpusStats(doc_count: Long, sum_dl: Long, avgdl: Double)
@@ -85,6 +89,9 @@ case class Index(
   @transient @volatile private var dictionary: Map[String, Long] = _
   @transient @volatile private var bytes = 0L
   def driverBytes: Long = bytes
+  // the positional view of the block table a registry entry was built
+  // from (IndexCache.positions), null on any other handle
+  @transient @volatile private[index] var positions: Dataset[PosBlock] = _
 
   private[index] def loadDictionary(): Unit = {
     dictionary = fetch(termStats)
@@ -129,6 +136,8 @@ object InvertedIndex {
       arr(n) = v
       n += 1
     }
+    def size: Int = n
+    def apply(i: Int): Int = arr(i)
     def toArray: Array[Int] = java.util.Arrays.copyOfRange(arr, 0, n)
   }
 
@@ -138,8 +147,14 @@ object InvertedIndex {
    * buffers, emit compressed fragments. The downstream (kind, term, bucket)
    * shuffle then only moves varint blocks. Memory per task is bounded by the
    * partition's vocabulary x bucket span, independent of corpus size.
+   * With `positions`, each posting also keeps the doc's occurrence
+   * positions of the term (the `.pos` payload, in `poss`): the indexes of
+   * the ANALYZED token sequence (post stop/empty filtering), the
+   * convention Lucene's analyzers use, taken from the same tokens that
+   * count its tf.
    */
-  def buildBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String): Dataset[BuildBlock] = {
+  def buildBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String,
+                    positions: Boolean = false): Dataset[BuildBlock] = {
     val spark = docs.sparkSession
     import spark.implicits._
     // lang-tagged dispatch: the third column carries each ROW's analyzer
@@ -164,16 +179,20 @@ object InvertedIndex {
       // revisited bucket just emits another fragment for the same
       // (term, bucket) key and the merge shuffle combines them.
       val out = scala.collection.mutable.ArrayBuffer.empty[BuildBlock]
-      val cur = new java.util.HashMap[String, (IntBuf, IntBuf)]()
+      // term -> (local ids, tfs, position gaps or null)
+      val cur = new java.util.HashMap[String, (IntBuf, IntBuf, IntBuf)]()
       val doclens = new java.util.HashMap[Long, (IntBuf, IntBuf)]()
-      val docTf = new java.util.HashMap[String, Array[Int]]()
+      // the current doc's positions of each of its terms
+      val docPos = new java.util.HashMap[String, IntBuf]()
       var curBucket = Long.MinValue
       var dlCell: (IntBuf, IntBuf) = null
       def flush(): Unit = if (curBucket != Long.MinValue) {
         val it = cur.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
-          out += encodeFragment(0, e.getKey, curBucket, e.getValue._1.toArray, e.getValue._2.toArray)
+          val (ids, tfs, gaps) = e.getValue
+          out += encodeFragment(0, e.getKey, curBucket, ids.toArray, tfs.toArray,
+            if (gaps == null) null else gaps.toArray)
         }
         cur.clear()
       }
@@ -189,43 +208,60 @@ object InvertedIndex {
         }
         dlCell._1.add(local)
         dlCell._2.add(toks.length)
-        docTf.clear()
+        docPos.clear()
         var i = 0
         while (i < toks.length) {
-          val cell = docTf.get(toks(i))
-          if (cell == null) docTf.put(toks(i), Array(1)) else cell(0) += 1
+          var cell = docPos.get(toks(i))
+          if (cell == null) { cell = new IntBuf(2); docPos.put(toks(i), cell) }
+          cell.add(i)
           i += 1
         }
-        val it = docTf.entrySet().iterator()
+        val it = docPos.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
           var pCell = cur.get(e.getKey)
-          if (pCell == null) { pCell = (new IntBuf(4), new IntBuf(4)); cur.put(e.getKey, pCell) }
+          if (pCell == null) {
+            pCell = (new IntBuf(4), new IntBuf(4), if (positions) new IntBuf(4) else null)
+            cur.put(e.getKey, pCell)
+          }
+          val ps = e.getValue
           pCell._1.add(local)
-          pCell._2.add(e.getValue()(0))
+          pCell._2.add(ps.size)
+          if (positions) {
+            var prev = 0
+            var j = 0
+            while (j < ps.size) { pCell._3.add(ps(j) - prev); prev = ps(j); j += 1 }
+          }
         }
       }
       flush()
       val dit = doclens.entrySet().iterator()
       while (dit.hasNext) {
         val e = dit.next()
-        out += encodeFragment(1, "", e.getKey, e.getValue._1.toArray, e.getValue._2.toArray)
+        out += encodeFragment(1, "", e.getKey, e.getValue._1.toArray, e.getValue._2.toArray, null)
       }
       out.iterator
     }
   }
 
-  /** Sort parallel (ids, vals) by id and delta/varint-encode into a fragment. */
+  /** Sort parallel (ids, vals) by id — with each id's `vals(i)` position
+   *  gaps in `gaps`, when not null — and delta/varint-encode them into a
+   *  fragment. */
   private def encodeFragment(kind: Byte, term: String, bucket: Long,
-                             ids: Array[Int], vals: Array[Int]): BuildBlock = {
+                             ids: Array[Int], vals: Array[Int], gaps: Array[Int]): BuildBlock = {
     // insertion order is usually already ascending (range-partitioned doc
     // ids); sort defensively via index permutation
     var sorted = true
     var i = 1
     while (sorted && i < ids.length) { sorted = ids(i - 1) < ids(i); i += 1 }
-    val (sIds, sVals) = if (sorted) (ids, vals) else {
+    val (sIds, sVals, sGaps) = if (sorted) (ids, vals, gaps) else {
       val ord = ids.indices.toArray.sortBy(ids(_))
-      (ord.map(ids(_)), ord.map(vals(_)))
+      // each id's gaps move as one run
+      val sGaps = if (gaps == null) null else {
+        val from = vals.scanLeft(0)(_ + _)
+        ord.flatMap(j => gaps.slice(from(j), from(j + 1)))
+      }
+      (ord.map(ids(_)), ord.map(vals(_)), sGaps)
     }
     var maxV = 0
     var minV = Int.MaxValue
@@ -239,7 +275,8 @@ object InvertedIndex {
     }
     if (sVals.isEmpty) minV = 0
     BuildBlock(kind, term, bucket, sIds.length, maxV, minV, sumV,
-      PostingCodec.encodeDeltas(sIds), PostingCodec.encodeInts(sVals))
+      PostingCodec.encodeDeltas(sIds), PostingCodec.encodeInts(sVals),
+      if (sGaps == null) null else PostingCodec.encodeInts(sGaps))
   }
 
   /** Merge same-key fragments from different partitions into one block. */
@@ -249,15 +286,22 @@ object InvertedIndex {
       val n = blocks.map(_.cnt).sum
       val ids = new Array[Int](n)
       val vals = new Array[Int](n)
+      val gaps = if (blocks(0).poss == null) null else new Array[Int](blocks.map(_.sum_tf.toInt).sum)
       var off = 0
+      var gOff = 0
       for (b <- blocks) {
         val bi = PostingCodec.decodeDeltas(b.docs, b.cnt)
         val bv = PostingCodec.decodeInts(b.tfs, b.cnt)
         System.arraycopy(bi, 0, ids, off, b.cnt)
         System.arraycopy(bv, 0, vals, off, b.cnt)
         off += b.cnt
+        if (gaps != null) {
+          val npos = b.sum_tf.toInt
+          System.arraycopy(PostingCodec.decodeInts(b.poss, npos), 0, gaps, gOff, npos)
+          gOff += npos
+        }
       }
-      encodeFragment(blocks(0).kind, blocks(0).term, blocks(0).bucket, ids, vals)
+      encodeFragment(blocks(0).kind, blocks(0).term, blocks(0).bucket, ids, vals, gaps)
     }
   }
 
@@ -271,10 +315,12 @@ object InvertedIndex {
       .mapGroups((_, it) => mergeFragments(it.toArray))
   }
 
-  /** All index blocks (postings + doclens) in one analyze pass + one
-   *  compressed-fragment shuffle. */
-  def mergedBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String): Dataset[BuildBlock] =
-    mergeBlocks(buildBlocksOf(docs, idCol, textCol, analyzer))
+  /** All index blocks (postings + doclens, and with `positions` the
+   *  postings' positions) in one analyze pass + one compressed-fragment
+   *  shuffle. */
+  def mergedBlocksOf(docs: DataFrame, idCol: String, textCol: String, analyzer: String,
+                     positions: Boolean = false): Dataset[BuildBlock] =
+    mergeBlocks(buildBlocksOf(docs, idCol, textCol, analyzer, positions))
 
   /** The resident layout of an index table (Hadoop++'s co-partitioned
    *  load): hash-partitioned on `bucket` into the session's shuffle
@@ -306,6 +352,16 @@ object InvertedIndex {
         col("docs").as("ids"), col("tfs").as("dls")).as[DocLenBlock]
   }
 
+  /** The positional blocks of a positional build's block table: a view of
+   *  its kind-0 rows, whose position counts are their tfs. */
+  def positionsFromBlocks(blocks: Dataset[BuildBlock]): Dataset[PosBlock] = {
+    val spark = blocks.sparkSession
+    import spark.implicits._
+    blocks.filter(col("kind") === 0)
+      .select(col("term"), col("bucket"), col("cnt"), col("sum_tf").cast("int").as("npos"),
+        col("docs"), col("tfs").as("lens"), col("poss")).as[PosBlock]
+  }
+
   /** Postings as kind-0 blocks, so [[mergeBlocks]] can merge them. A
    *  posting row keeps no `min_v`; the merge recomputes it and
    *  [[postingsFromBlocks]] drops it. */
@@ -313,7 +369,8 @@ object InvertedIndex {
     val spark = postings.sparkSession
     import spark.implicits._
     postings.select(lit(0.toByte).as("kind"), col("term"), col("bucket"), col("cnt"),
-      col("max_tf"), lit(0).as("min_v"), col("sum_tf"), col("docs"), col("tfs")).as[BuildBlock]
+      col("max_tf"), lit(0).as("min_v"), col("sum_tf"), col("docs"), col("tfs"), noPositions)
+      .as[BuildBlock]
   }
 
   /** Doc lengths as kind-1 blocks (the inverse of [[docLensFromBlocks]]). */
@@ -322,8 +379,10 @@ object InvertedIndex {
     import spark.implicits._
     docLens.select(lit(1.toByte).as("kind"), lit("").as("term"), col("bucket"), col("cnt"),
       lit(0).as("max_tf"), col("min_dl").as("min_v"), lit(0L).as("sum_tf"),
-      col("ids").as("docs"), col("dls").as("tfs")).as[BuildBlock]
+      col("ids").as("docs"), col("dls").as("tfs"), noPositions).as[BuildBlock]
   }
+
+  private def noPositions = lit(null).cast("binary").as("poss")
 
   /** All live doc ids, decoded block-locally from the forward (doc-length)
    *  table — the MatchAllDocsQuery universe. Tombstoned docs never appear
@@ -445,7 +504,7 @@ object InvertedIndex {
       count(when($"kind" === 0, 1)).as("postings"),
       count(when($"kind" === 1, 1)).as("doclens"))
     val obs = new org.apache.spark.sql.Observation("graft-corpus-stats")
-    val blocksMs = timedMs(blocks
+    val blocksMs = timedMs(blocks.drop("poss") // a store never carries positions
       .observe(obs, tallies.head, tallies.tail: _*)
       .sortWithinPartitions("kind", "term", "bucket")
       .write.mode("overwrite").partitionBy("kind").parquet(s"$dir/blocks"))

@@ -319,6 +319,7 @@ object Seismic {
       heapFactor: Double = 1.0,
       filterDocs: Option[DataFrame] = None
   ): DataFrame = {
+    require(k > 0, s"k must be > 0, got $k")
     EventStats.increment("seismic_query_requests")
     val spark = index.sparkSession
     import spark.implicits._

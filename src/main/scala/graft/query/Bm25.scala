@@ -220,6 +220,7 @@ object Bm25 {
   /** Top-k by (score desc, doc_id asc) — Spark plans this as
    *  TakeOrderedAndProject, the distributed HitQueue merge. */
   def topK(idx: Index, terms: Seq[String], k: Int, boosts: Map[String, Double] = Map.empty): DataFrame = {
+    require(k > 0, s"k must be > 0, got $k")
     scoreTerms(idx, terms, boosts, limitPerBucket = k)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
@@ -328,6 +329,7 @@ object Bm25 {
    * no bucket-count cap — O(one bucket) memory above the stream.
    */
   def topKWand(idx: Index, terms: Seq[String], k: Int, boosts: Map[String, Double] = Map.empty): DataFrame = {
+    require(k > 0, s"k must be > 0, got $k")
     val spark = idx.postings.sparkSession
     import spark.implicits._
 

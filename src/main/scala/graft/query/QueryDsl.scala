@@ -1169,7 +1169,10 @@ object QueryDsl {
         def intP(k: String, d: Int): Int = {
           val n = mp.path(k)
           if (n.isMissingNode) d
-          else { require(n.isIntegralNumber, s"[$k] must be an integer"); n.asInt() }
+          else {
+            require(n.isIntegralNumber && n.asInt() >= 1, s"[$k] must be an integer >= 1")
+            n.asInt()
+          }
         }
         val hfNode = mp.path("heap_factor")
         val hf =

@@ -134,6 +134,30 @@ class BoundedCacheSpec extends SparkSpec {
       "every Dataset the entry held is unpersisted, the block table included")
   }
 
+  test("positions are a view of the warm index entry: no registry entry, no cached RDD") {
+    val sc = spark.sparkContext
+    def entries = BoundedCache.session.stats.toMap.apply("cache_entries")
+    def check(what: String)(warm: => graft.index.Index)(
+        positions: => org.apache.spark.sql.Dataset[graft.index.PosBlock]): Unit = {
+      val idx = warm
+      idx.postings.count()
+      val (n0, rdds0) = (entries, sc.getPersistentRDDs.keySet)
+      val pos = positions
+      assert(pos.count() == idx.postings.count(), s"$what: one positional block per posting block")
+      assert(entries == n0, s"$what: positions add no registry entry")
+      assert(sc.getPersistentRDDs.keySet == rdds0, s"$what: positions cache no RDD of their own")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("cache-positions").toString
+    Seq((1L, "alpha beta alpha"), (2L, "beta gamma"), (5000L, "gamma delta alpha"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    check("documents")(graft.index.IndexCache.documents(spark, dir))(
+      graft.index.IndexCache.positions(spark, dir))
+    BoundedCache.session.invalidate(_.dir == dir)
+    val sf = "/root/testdata/sf0.001"
+    check("corpusField")(graft.index.IndexCache.corpusField(spark, sf, "path"))(
+      graft.index.IndexCache.corpusFieldPositions(spark, sf, "path"))
+  }
+
   test("storePath keeps apart two dirs that spell the same with '_'") {
     val a = BoundedCache.storePath("root", "/a/b_c")
     assert(a != BoundedCache.storePath("root", "/a_b/c"))

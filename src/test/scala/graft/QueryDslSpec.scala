@@ -83,6 +83,21 @@ class QueryDslSpec extends SparkSpec {
       """{"query":{"hybrid":{"queries":[{"term":{"text":{"value":"a","boost":-1.0}}}]}}}"""))
   }
 
+  test("neural_sparse method_parameters k / top_n < 1 are rejected at parse; annTopK rejects k <= 0") {
+    for (key <- Seq("k", "top_n"); v <- Seq(0, -3)) {
+      val e = intercept[IllegalArgumentException](QueryDsl.parse(
+        s"""{"query":{"hybrid":{"queries":[
+           |  {"neural_sparse":{"sf":{"query_tokens":{"join":1.0},
+           |     "method_parameters":{"$key":$v}}}}]}}}""".stripMargin))
+      assert(e.getMessage.contains(s"[$key] must be an integer >= 1"), e.getMessage)
+    }
+    import spark.implicits._
+    val cidx = Seq(graft.ops.ClusteredPosting("alpha", 0, Array(1L), Array(Array("alpha")),
+      Array(Array(1.0)), Array("alpha"), Array(1.0))).toDS()
+    intercept[IllegalArgumentException](graft.ops.Seismic.annTopK(cidx, Map("alpha" -> 1.0), 0))
+    assert(graft.ops.Seismic.annTopK(cidx, Map("alpha" -> 1.0), 1).count() == 1)
+  }
+
   test("match_phrase parses both forms; bad slop and 1-term phrases rejected") {
     // plain-text form
     val p1 = QueryDsl.parse(

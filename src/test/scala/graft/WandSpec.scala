@@ -25,6 +25,16 @@ class WandSpec extends SparkSpec {
   test("wand == plain mixed known/unknown") { run(Seq("join", "zzzznotaterm"), 10) }
   test("wand == plain k exceeds matches")   { run(Seq("dup"), 5000) }
 
+  test("k <= 0 is rejected on the driver, by every top-k entry point") {
+    for (k <- Seq(0, -1)) {
+      val plain = intercept[IllegalArgumentException](Bm25.topK(idx, Seq("join"), k))
+      assert(plain.getMessage.contains("k must be > 0"), plain.getMessage)
+      intercept[IllegalArgumentException](Bm25.topKWand(idx, Seq("join"), k))
+      for (threshold <- Seq(1L, Long.MaxValue))
+        intercept[IllegalArgumentException](Bm25.topKAuto(idx, Seq("join"), k, wandThreshold = threshold))
+    }
+  }
+
   test("topKAuto picks either path and stays exact") {
     for (threshold <- Seq(1L, Long.MaxValue)) {
       val auto = Bm25.topKAuto(idx, Seq("join", "merge"), 10, wandThreshold = threshold)
