@@ -61,14 +61,9 @@ case class MinMaxNorm(
   override def nullable: Boolean = true
   override def prettyName: String = "minmax_norm"
 
-  private def modeId(b: Option[Bound]): Int = b.map(_.mode) match {
-    case Some(BoundMode.Apply) => 1
-    case Some(BoundMode.Clip)  => 2
-    case _                     => 0
-  }
-  private val lbm = modeId(lower)
+  private val lbm = ScoreMath.boundMode(lower)
   private val lb = lower.map(_.score).getOrElse(0.0)
-  private val ubm = modeId(upper)
+  private val ubm = ScoreMath.boundMode(upper)
   private val ub = upper.map(_.score).getOrElse(0.0)
 
   override protected def nullSafeEval(s0: Any, mn0: Any, mx0: Any): Any = {
@@ -182,6 +177,15 @@ object Combine {
   val Geometric = "geometric_mean"
   val Harmonic = "harmonic_mean"
   val Rrf = "rrf"
+
+  /** The technique id [[ScoreMath.combine]] takes. */
+  def id(technique: String): Int = technique match {
+    case Arithmetic => 0
+    case Geometric  => 1
+    case Harmonic   => 2
+    case Rrf        => 3
+    case other => throw new IllegalArgumentException(s"unknown combination technique: $other")
+  }
 }
 
 /** Combine the per-sub-query normalized score array into one score.
@@ -195,22 +199,16 @@ case class CombineScores(scores: Expression, technique: String, weights: Seq[Dou
   override def nullable: Boolean = true
   override def prettyName: String = "combine_scores"
 
-  private val techId: Int = technique match {
-    case Combine.Arithmetic => 0
-    case Combine.Geometric  => 1
-    case Combine.Harmonic   => 2
-    case Combine.Rrf        => 3
-    case other => throw new IllegalArgumentException(s"unknown combination technique: $other")
-  }
+  private val techId: Int = Combine.id(technique)
   private lazy val weightArr: Array[Double] = weights.toArray
 
   override protected def nullSafeEval(a: Any): Any =
-    ScoreMath.combine(a.asInstanceOf[ArrayData], techId, weightArr, useFloat)
+    ScoreMath.combine(a.asInstanceOf[ArrayData].toDoubleArray(), techId, weightArr, useFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wRef = ctx.addReferenceObj("combineWeights", weightArr, "double[]")
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.ScoreMath.combine($a, $techId, $wRef, $useFloat);")
+      s"${ev.value} = graft.functions.ScoreMath.combine($a.toDoubleArray(), $techId, $wRef, $useFloat);")
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(scores = c)

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.ArrayData
-
 /**
  * Scalar score math shared by the Catalyst expressions' interpreted `eval`
  * AND their generated code (the codegen emits static calls into this object,
@@ -74,9 +72,15 @@ object ScoreMath {
     if (useFloat) bd.floatValue().toDouble else bd.doubleValue()
   }
 
-  /** technique ids: 0 arithmetic, 1 geometric, 2 harmonic, 3 rrf. */
-  def combine(a: ArrayData, tech: Int, weights: Array[Double], useFloat: Boolean): Double = {
-    val arr = a.toDoubleArray()
+  /** Bound mode id of an optional min-max bound. */
+  def boundMode(b: Option[Bound]): Int = b.map(_.mode) match {
+    case Some(BoundMode.Apply) => 1
+    case Some(BoundMode.Clip)  => 2
+    case _                     => 0
+  }
+
+  /** technique ids ([[Combine.id]]): 0 arithmetic, 1 geometric, 2 harmonic, 3 rrf. */
+  def combine(arr: Array[Double], tech: Int, weights: Array[Double], useFloat: Boolean): Double = {
     @inline def w(i: Int): Double = if (i < weights.length) weights(i) else 1.0
     if (useFloat) {
       tech match {

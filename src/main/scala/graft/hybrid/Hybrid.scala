@@ -1,12 +1,13 @@
 package graft.hybrid
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import graft.functions.{Bound, Combine, ScoreFunctions}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import graft.functions.{Bound, Combine, ScoreMath}
 import graft.index.Index
 import graft.ops.{Ann, Sparse, TopN}
-import graft.query.Bm25
+import graft.query.{Bm25, BoundedTopK}
 
 /**
  * The hybrid-query pipeline: N scored sub-queries -> per-sub-query top-depth
@@ -24,15 +25,16 @@ import graft.query.Bm25
  *    distributions with genuinely different scales (BM25 in [0, ~idf-sum),
  *    sparse dot products unbounded, cosine in [-1, 1]);
  *  - sub-query scoring + per-sub-query top-k collection
- *    (reference: search/collector/HybridTopScoreDocCollector.java:135-190)
- *    = each scorer's bounded output fed to a TakeOrdered top-depth
- *    (`pagination_depth`, reference: query/HybridQueryBuilder.java:61-68) —
- *    a per-partition heap + single merge of <= depth rows, never a global
- *    sort partitioned by sub-query index;
+ *    (reference: search/collector/HybridTopScoreDocCollector.java:135-190,
+ *    query/HybridQueryScorer.java:105-120) = one Spark job: every `match`
+ *    clause in one bucket-kernel pass, the other clauses by their own
+ *    scorers, and one bounded heap of `depth` (`pagination_depth`,
+ *    reference: query/HybridQueryBuilder.java:61-68) per sub-query per
+ *    partition, collected once;
  *  - filter pushed into every sub-query as a non-scoring clause
  *    (reference: query/HybridQueryBuilder.java:116-127) = a left-semi join
- *    applied before top-depth selection (no broadcast hint: the filter can
- *    be half the corpus, so the join strategy is AQE's call);
+ *    applied before the heaps (no broadcast hint: the filter can be half
+ *    the corpus, so the join strategy is AQE's call);
  *  - collapse with `docs_per_group_per_subquery`: during collection each
  *    sub-query keeps the best n docs per group value, and the final page
  *    keeps one doc per group (reference:
@@ -40,20 +42,15 @@ import graft.query.Bm25
  *    plugin/NeuralSearch.java:367) — the per-group keep is a salted
  *    two-level rank, never a one-task-per-group sort;
  *  - normalization across the whole collected set per sub-query
- *    (reference: processor/NormalizationProcessorWorkflow.java:66-124) =
- *    a per-subQueryIdx aggregate broadcast-joined back, feeding the Catalyst
- *    normalization expressions;
- *  - per-doc score alignment with missing entries as 0.0
- *    (reference: processor/combination/ScoreCombiner.java:361-375) = one hash
- *    aggregate building the dense score array (no N-way outer join);
- *  - combination + min_score filter + pagination
- *    (reference: ScoreCombiner.java:377-395, NormalizationProcessorWorkflow.java:276-282).
- *
- * Scale notes: everything after sub-query collection operates on at most
- * depth x numSubQueries rows, so the only scale-bearing stages are the
- * scorers themselves; stats aggregates are single-row-per-subquery and
- * broadcast. The collection stage is TakeOrdered (per-partition bounded
- * heap), so no stage sorts an unbounded row set in <= numSubQueries tasks.
+ *    (reference: processor/NormalizationProcessorWorkflow.java:66-124),
+ *    per-doc score alignment with missing entries as 0.0
+ *    (reference: processor/combination/ScoreCombiner.java:361-375),
+ *    combination + min_score filter + pagination
+ *    (reference: ScoreCombiner.java:377-395, NormalizationProcessorWorkflow.java:276-282)
+ *    = the coordinator: a driver function over the <= nSub x depth x
+ *    partitions collected rows, calling the same [[graft.functions.ScoreMath]]
+ *    as the Catalyst normalization expressions the SQL functions register.
+ *    Only the scorers touch corpus-sized data.
  */
 sealed trait Normalization
 case class MinMaxNormTech(lower: Option[Seq[Bound]] = None, upper: Option[Seq[Bound]] = None) extends Normalization
@@ -922,19 +919,24 @@ object Hybrid {
   }
 
   /**
-   * Execute a hybrid query. @param filterDocs optional non-scoring filter: a
-   * DataFrame with a `doc_id` column; only those docs may match any sub-query.
-   * @return DataFrame(doc_id, score) — the final page, ordered.
+   * Execute a hybrid query, eagerly: one Spark job collects every clause's
+   * top `depth` ([[collection]]), and the driver normalizes, combines and
+   * pages the collected rows ([[fuse]]).
+   * @param filterDocs optional non-scoring filter: a DataFrame with a
+   * `doc_id` column; only those docs may match any sub-query.
+   * @return a local DataFrame(doc_id, score) — the final page, ordered.
    */
   def execute(idx: Index, q: HybridQuery, filterDocs: Option[DataFrame] = None): DataFrame =
     execute(HybridSources(idx), q, filterDocs)
 
   def execute(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame]): DataFrame =
-    full(src, q, filterDocs).select($"doc_id", $"score")
+    local(src, page(full(src, q, filterDocs)._1, q).map(d => Row(d.id, d.score)),
+      "doc_id" -> LongType, "score" -> DoubleType)
 
   /**
-   * Execute with total-hits reporting: the final page plus a `total_hits`
-   * column carrying the matched-doc count AFTER the min_score filter, and the
+   * Execute with total-hits reporting, eagerly and in one Spark job like
+   * [[execute]]: the final page plus a `total_hits` column carrying the
+   * matched-doc count AFTER the min_score filter, and the
    * TotalHits.Relation in `relation` under the reference's rule
    * (reference: processor/combination/ScoreCombiner.java:136-159,377-395):
    *
@@ -947,32 +949,19 @@ object Hybrid {
    * A merged count >= depth does NOT imply truncation (two sub-queries each
    * fully collecting 30 docs merge past a depth of 50 while both counts are
    * exact), so the relation derives from per-sub-query collection counts,
-   * not from the merged size. Everything here operates on the collected set
-   * (<= nSub x depth rows), localCheckpointed once so the count and the page
-   * share one computation of the scorers.
+   * not from the merged size. Counts, flag and page all come from the one
+   * collected array.
    */
   def executeWithTotal(src: HybridSources, q: HybridQuery,
                        filterDocs: Option[DataFrame] = None): DataFrame = {
-    record(src, q, filterDocs)
-    validate(src, q)
-    // collected set is <= nSub x depth rows: pin it so the truncation check,
-    // the pre/post counts and the final page run the sub-query scorers once
-    val collected = collectSubQueries(src, q, filterDocs).localCheckpoint(true)
-    val truncated = collected.groupBy($"subq").agg(count(lit(1)).as("n"))
-      .collect().exists(_.getAs[Long]("n") >= q.depth)
-    val combined = combineStage(collected, src, q).select($"doc_id", $"score")
-      .localCheckpoint(true)
-    val pre = combined.count()
-    val filtered = q.minScore.fold(combined)(ms => combined.filter($"score" >= ms))
-    val post = filtered.count()
+    val (kept, pre, truncated) = full(src, q, filterDocs)
     val relation =
-      if (post < pre) "eq" // min_score recount is exact (ScoreCombiner.getTotalHits)
+      if (kept.size < pre) "eq" // min_score recount is exact (ScoreCombiner.getTotalHits)
       else if (truncated) "gte"
       else "eq"
-    page(filtered
-      .withColumn("total_hits", lit(post))
-      .withColumn("relation", lit(relation))
-      .orderBy($"score".desc, $"doc_id".asc), q)
+    local(src, page(kept, q).map(d => Row(d.id, d.score, kept.size.toLong, relation)),
+      "doc_id" -> LongType, "score" -> DoubleType, "total_hits" -> LongType,
+      "relation" -> StringType)
   }
 
   /** Explain mode: the final page plus the per-sub-query normalized scores
@@ -983,11 +972,11 @@ object Hybrid {
   def executeExplain(idx: Index, q: HybridQuery, filterDocs: Option[DataFrame] = None): DataFrame =
     executeExplain(HybridSources(idx), q, filterDocs)
 
-  def executeExplain(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame]): DataFrame = {
-    val normCols = q.subQueries.indices.map(i =>
-      element_at($"scores", i + 1).as(s"norm$i"))
-    full(src, q, filterDocs).select(($"doc_id" +: normCols :+ $"score"): _*)
-  }
+  def executeExplain(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame]): DataFrame =
+    local(src, page(full(src, q, filterDocs)._1, q).map(d =>
+      Row.fromSeq(d.id +: d.norms.toSeq :+ d.score)),
+      ("doc_id" -> LongType) +: q.subQueries.indices.map(i => s"norm$i" -> DoubleType) :+
+        ("score" -> DoubleType): _*)
 
   /** Per-stage technique description attached to explain output — the
    *  reference emits these strings per processor stage
@@ -1078,9 +1067,8 @@ object Hybrid {
         // filters at combination time, so the group winner is picked from
         // the unfiltered scored set and min_score then drops whole groups
         // whose winner fails it
-        val collected = collectSubQueries(src, q, filterDocs)
-        val scored = combineStage(collected, src, q.copy(collapse = None, minScore = None))
-          .select(col("doc_id"), col("score"))
+        val scored = local(src, fuse(src, q, filterDocs, finalCollapse = false)._1
+          .map(d => Row(d.id, d.score)), "doc_id" -> LongType, "score" -> DoubleType)
         val joined = if (fieldNames.isEmpty) scored else scored.join(fieldCols, "doc_id")
         // cursor filter: scores exist only after combination, so the skip
         // happens here; the collection depth bounds earlier stages exactly
@@ -1122,7 +1110,8 @@ object Hybrid {
     val msFiltered =
       if (byScore) q.minScore.fold(collapsed)(ms => collapsed.filter(col("score") >= ms))
       else collapsed
-    page(msFiltered.orderBy(sortCols: _*), q)
+    val ordered = msFiltered.orderBy(sortCols: _*)
+    (if (q.from > 0) ordered.offset(q.from) else ordered).limit(q.k)
   }
 
   /** Score a [[SparseAnn]] clause: the clause-level filter (a predicate
@@ -1836,137 +1825,136 @@ object Hybrid {
     withFlags.select($"doc_id", score.as("score"))
   }
 
-  /** Stages 1-2 of the pipeline: per-sub-query scoring, filter, per-group
-   *  keep, top-depth collection, collection rank. Output is <= nSub x depth
-   *  rows (doc_id, score, subq, rank). */
-  private[graft] def collectSubQueries(src: HybridSources, q: HybridQuery,
-                                       filterDocs: Option[DataFrame]): DataFrame = {
-    // 1. per-sub-query scoring; non-scoring filter applied before collection.
+  /** The collection plan — the shard side of the reference's lifecycle
+   *  (search/collector/HybridTopScoreDocCollector.java:135-190): every
+   *  `match` clause (with no synonym rewrite) scored in ONE
+   *  [[Bm25.scoreBatch]] kernel pass, each other clause by its own scorer,
+   *  the request filter as one semi-join over the subq-tagged union, the
+   *  collapse keep (best n per (sub-query, group), carrying `_grp`), then one
+   *  [[BoundedTopK]] of `depth` per sub-query per partition. Rows
+   *  (subq, doc_id, score[, _grp]): at most nSub x depth x partitions. */
+  private[graft] def collection(src: HybridSources, q: HybridQuery,
+                                filterDocs: Option[DataFrame]): DataFrame = {
     // The per-bucket bound inside the BM25 scorer is only safe when nothing
     // after scoring can resurrect a below-bound doc (no filter, no collapse).
-    val boundPerBucket = if (filterDocs.isEmpty && q.collapse.isEmpty) q.depth else 0
-    val order = Seq($"score".desc, $"doc_id".asc)
-    val scoredPerSub: Seq[DataFrame] = q.subQueries.zipWithIndex.map { case (sq, i) =>
-      val filtered = sq match {
-        // a sparse ANN clause is k-BOUNDED inside its scorer, so the
-        // request filter must reach the ANN search (post-filtering a
-        // bounded top-k would under-fill it) — exactly the reference's
-        // filter-during-search contract
-        case sa: SparseAnn => scoreSparseAnn(src, sa, filterDocs)
-        case _ =>
-          val raw = scoreClause(src, sq, boundPerBucket)
-          filterDocs match {
-            case Some(f) => raw.join(f.select("doc_id"), Seq("doc_id"), "left_semi")
-            case None    => raw
-          }
-      }
-      filtered.withColumn("subq", lit(i))
+    val bound = if (filterDocs.isEmpty && q.collapse.isEmpty) q.depth else 0
+    val batch = q.subQueries.map {
+      case Lexical(terms, boosts) if !src.synonyms.exists(kv => terms.contains(kv._1)) =>
+        Some(Bm25.TermClause(terms, boosts))
+      case LexicalMsm(terms, m, boosts) => Some(Bm25.TermClause(terms, boosts, m))
+      case _ => None
     }
-    q.collapse match {
+    def tagged(i: Int, df: DataFrame) = df.select(lit(i).as("subq"),
+      $"doc_id".cast("long").as("doc_id"), $"score".cast("double").as("score"))
+    // empty placeholders keep each batch clause's index = its sub-query's
+    val lexical = if (batch.forall(_.isEmpty)) None else Some(Bm25.scoreBatch(src.idx,
+      batch.map(_.getOrElse(Bm25.TermClause(Nil))), bound).toDF("subq", "doc_id", "score"))
+    val others = q.subQueries.zipWithIndex.collect {
+      case (sq, i) if batch(i).isEmpty && !sq.isInstanceOf[SparseAnn] =>
+        tagged(i, scoreClause(src, sq, bound))
+    }
+    val scored = (lexical.toSeq ++ others).reduceOption(_ unionByName _).map(u =>
+      filterDocs.fold(u)(f => u.join(f.select("doc_id"), Seq("doc_id"), "left_semi")))
+    // a sparse ANN clause is k-BOUNDED inside its scorer, so the request
+    // filter must reach the ANN search (post-filtering a bounded top-k
+    // would under-fill it) — exactly the reference's filter-during-search
+    // contract
+    val anns = q.subQueries.zipWithIndex.collect {
+      case (sa: SparseAnn, i) => tagged(i, scoreSparseAnn(src, sa, filterDocs))
+    }
+    val all = (scored.toSeq ++ anns).reduce(_ unionByName _)
+    val kept = q.collapse match {
       case Some(c) =>
-        // collapse collection bound: best n per group per sub-query. The
-        // tagged UNION of matched sets joins the collapse column ONCE (the
-        // fields-side scan + exchange happen once, not once per sub-query),
-        // one salted per-(subq, group) keep trims to n, and a fused
-        // top-depth window emits the collection rank in the same pass —
-        // per-sub-query joins + TakeOrdereds would run ~2x the stages for
-        // the identical shuffle volume.
-        val union = scoredPerSub.reduce(_ unionByName _)
+        // collapse collection bound: best n per group per sub-query — the
+        // tagged union joins the collapse column once, and one salted
+        // per-(subq, group) keep trims it
         val g = src.fields.get.select(col("doc_id"), col(c.field).as("_grp"))
-        val trimmed = TopN.perGroup(union.join(g, "doc_id"), Seq("subq", "_grp"),
-          "doc_id", c.docsPerGroupPerSubquery, order).drop("_grp")
-        // 2. top-depth per sub-query (the collector's HitQueue bound),
-        // bounded two-level; the final window's row_number IS the rank
-        TopN.perGroupRanked(trimmed, Seq("subq"), "doc_id", q.depth, order, "rank")
-      case None =>
-        // 2. top-depth per sub-query: TakeOrdered = bounded per-partition
-        // heap + one <=depth-row merge
-        val collectedPerSub = scoredPerSub.map(_.orderBy(order: _*).limit(q.depth))
-        val union = collectedPerSub.reduce(_ unionByName _)
-        // rank within each sub-query (feeds RRF); <= nSub x depth rows
-        val byRank = Window.partitionBy($"subq").orderBy(order: _*)
-        union.withColumn("rank", row_number().over(byRank))
+        TopN.perGroup(all.join(g, "doc_id"), Seq("subq", "_grp"), "doc_id",
+          c.docsPerGroupPerSubquery, Seq($"score".desc, $"doc_id".asc))
+          .select("subq", "doc_id", "score", "_grp")
+      case None => all.select("subq", "doc_id", "score")
     }
+    BoundedTopK.perPartition(kept, q.depth)
   }
 
-  /** Stages 3-5 minus min_score: normalize, align, combine, collapse — all
-   *  over the <= nSub x depth collected rows. */
-  private def combineStage(collected0: DataFrame, src: HybridSources, q: HybridQuery): DataFrame = {
-    // min_max/l2/z_score need per-sub-query stats over the collected set.
-    // Those stats are WINDOW aggregates partitioned by subq — the collected
-    // set is <= nSub x depth rows, so the window's one tiny shuffle is free —
-    // rather than a groupBy + self-join second branch: a second lineage
-    // branch would re-run every sub-query scorer (index scans, dense cosine,
-    // ...) inside one job unless the collected set were checkpointed, and
-    // checkpointing (even lazily) forces physical planning at plan
-    // CONSTRUCTION, charging real driver/codegen cost to callers that only
-    // build plans (the stats-counter scenario constructs 7 requests without
-    // running them). A single lineage needs no materialization barrier at
-    // all: the scorers run exactly once per action by construction.
-    val collected = collected0
-    val bySubq = Window.partitionBy($"subq")
-    // 3. normalize
-    val normalized: DataFrame = q.norm match {
-      case MinMaxNormTech(lower, upper) =>
-        val joined = collected
-          .withColumn("mn", min($"score").over(bySubq))
-          .withColumn("mx", max($"score").over(bySubq))
-        val ns = (lb: Option[Bound], ub: Option[Bound]) =>
-          ScoreFunctions.minmaxNorm($"score", $"mn", $"mx", lb, ub, q.useFloat)
-        val withBounds =
-          if (lower.isEmpty && upper.isEmpty) joined.withColumn("nscore", ns(None, None))
-          else {
-            // bounds are per-sub-query: build a CASE over subq index
-            val expr = q.subQueries.indices.foldLeft(lit(null).cast("double")) { (acc, i) =>
-              when($"subq" === i, ns(lower.map(_(i)), upper.map(_(i)))).otherwise(acc)
-            }
-            joined.withColumn("nscore", expr)
-          }
-        withBounds
-      case L2NormTech =>
-        collected
-          .withColumn("l2", sqrt(sum($"score" * $"score").over(bySubq)))
-          .withColumn("nscore", ScoreFunctions.l2Normalize($"score", $"l2", q.useFloat))
-      case ZScoreNormTech =>
-        collected
-          .withColumn("mean", avg($"score").over(bySubq))
-          .withColumn("sd", coalesce(stddev_samp($"score").over(bySubq), lit(0.0)))
-          .withColumn("mx", max($"score").over(bySubq))
-          .withColumn("mn", min($"score").over(bySubq))
-          .withColumn("nscore",
-            ScoreFunctions.zscoreNorm($"score", $"mean", $"sd", $"mx", $"mn", q.useFloat))
-      case RrfNormTech(rc) =>
-        // global rank per sub-query: score desc, doc_id asc (the single-
-        // collection analogue of the reference's cross-shard PQ merge,
-        // RRFNormalizationTechnique.java:94-134)
-        collected.withColumn("nscore", ScoreFunctions.rrfScore($"rank", rc, q.useFloat))
-    }
+  /** One combined doc: its per-sub-query normalized scores (0.0 where the
+   *  sub-query did not collect it) and its combined score. */
+  private case class Fused(id: Long, norms: Array[Double], score: Double)
 
-    // 4. align per-doc scores (missing -> 0.0) and combine
+  /** The coordinator (reference: processor/NormalizationProcessorWorkflow
+   *  .java:66-124, ScoreCombiner.java:361-395), on the driver over the one
+   *  collect of [[collection]]: per sub-query its top `depth` (the
+   *  collection rank), min/max, L2 norm and mean/sd; the normalized scores;
+   *  per-doc alignment with missing entries as 0.0; the combination; and,
+   *  when `finalCollapse`, one doc per group. The math is [[ScoreMath]], the
+   *  code the Catalyst normalization expressions' eval and codegen call, and
+   *  the statistics replay Spark's aggregates over the rows in collection
+   *  rank order: running double sums for avg and for the L2 sum of squares,
+   *  `CentralMomentAgg`'s (n, avg, m2) update for stddev_samp (null at
+   *  n = 1, read as 0.0); `useFloat` narrows as the expressions cast.
+   *  @return the combined docs best first, and whether some sub-query's
+   *          collection was truncated at `depth` */
+  private def fuse(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame],
+                   finalCollapse: Boolean): (Seq[Fused], Boolean) = {
+    val bySub = collection(src, q, filterDocs).collect().toSeq.groupBy(_.getInt(0))
     val nSub = q.subQueries.size
-    val aligned = normalized
-      .groupBy($"doc_id")
-      .agg(map_from_entries(collect_list(struct($"subq", $"nscore"))).as("m"))
-      .withColumn("scores",
-        transform(sequence(lit(0), lit(nSub - 1)), i => coalesce(element_at($"m", i), lit(0.0))))
-      .withColumn("score",
-        ScoreFunctions.combineScores($"scores", q.comb.technique, q.comb.weights, q.useFloat))
-      .select($"doc_id", $"scores", $"score")
-
-    // 5. final collapse (one doc per group, best combined score) — min_score
-    // applies AFTER collapse, in fullUnpaged (the reference collapses at
-    // collection time and filters at combination time, so a group whose best
-    // member fails min_score drops entirely rather than surviving via a
-    // lower-ranked member)
-    q.collapse match {
-      case Some(c) =>
-        val g = src.fields.get.select(col("doc_id"), col(c.field).as("_grp"))
-        val wg = Window.partitionBy($"_grp").orderBy($"score".desc, $"doc_id".asc)
-        aligned.join(g, "doc_id")
-          .withColumn("_rn", row_number().over(wg))
-          .filter($"_rn" === 1).drop("_rn", "_grp")
-      case None => aligned
+    val f = q.useFloat
+    val norms = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
+    val groups = scala.collection.mutable.HashMap.empty[Long, Any]
+    var truncated = false
+    for (i <- 0 until nSub) {
+      val ranked = BoundedTopK.ranked(bySub.getOrElse(i, Nil), q.depth)
+      truncated ||= ranked.size >= q.depth
+      var (mn, mx, sum, sumSq, n, cmAvg, m2) = (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+      ranked.foreach { r =>
+        val x = r.getDouble(2)
+        if (n == 0.0 || SQLOrderingUtil.compareDoubles(x, mn) < 0) mn = x
+        if (n == 0.0 || SQLOrderingUtil.compareDoubles(x, mx) > 0) mx = x
+        sum += x
+        sumSq += x * x
+        val delta = x - cmAvg
+        val deltaN = delta / (n + 1.0)
+        cmAvg += deltaN
+        m2 += delta * (delta - deltaN)
+        n += 1.0
+      }
+      val mean = sum / n
+      val sd = if (n > 1.0) math.sqrt(m2 / (n - 1.0)) else 0.0
+      ranked.zipWithIndex.foreach { case (r, rank0) =>
+        val x = r.getDouble(2)
+        val ns = q.norm match {
+          case MinMaxNormTech(lower, upper) =>
+            val (lb, ub) = (lower.map(_(i)), upper.map(_(i)))
+            val (lbm, lbs) = (ScoreMath.boundMode(lb), lb.fold(0.0)(_.score))
+            val (ubm, ubs) = (ScoreMath.boundMode(ub), ub.fold(0.0)(_.score))
+            if (f) ScoreMath.minmaxF(x.toFloat, mn.toFloat, mx.toFloat, lbm, lbs, ubm, ubs).toDouble
+            else ScoreMath.minmaxD(x, mn, mx, lbm, lbs, ubm, ubs)
+          case L2NormTech =>
+            val l2 = math.sqrt(sumSq)
+            if (f) ScoreMath.l2F(x.toFloat, l2.toFloat).toDouble else ScoreMath.l2D(x, l2)
+          case ZScoreNormTech =>
+            if (f) ScoreMath.zF(x.toFloat, mean.toFloat, sd.toFloat, mx.toFloat, mn.toFloat).toDouble
+            else ScoreMath.zD(x, mean, sd, mx, mn)
+          case RrfNormTech(rc) => ScoreMath.rrf(rank0 + 1, rc, f)
+        }
+        norms.getOrElseUpdate(r.getLong(1), new Array[Double](nSub))(i) = ns
+        if (q.collapse.nonEmpty) groups(r.getLong(1)) = r.get(3)
+      }
     }
+    val tech = Combine.id(q.comb.technique)
+    val weights = q.comb.weights.toArray
+    val combined = norms.toSeq.map { case (id, ns) =>
+      Fused(id, ns, ScoreMath.combine(ns, tech, weights, f))
+    }
+    def best(a: Fused, b: Fused) = BoundedTopK.before(a.score, a.id, b.score, b.id)
+    // the final collapse: one doc per group, best combined score; min_score
+    // applies after it, so a group whose best member fails min_score drops
+    // entirely rather than surviving via a lower-ranked member
+    val collapsed =
+      if (!finalCollapse || q.collapse.isEmpty) combined
+      else combined.groupBy(d => groups(d.id)).values
+        .map(_.reduce((a, b) => if (best(a, b)) a else b)).toSeq
+    (collapsed.sortWith(best), truncated)
   }
 
   /** Driver-side event counters for one request, using the reference's stat
@@ -2023,20 +2011,24 @@ object Hybrid {
     }
   }
 
-  private def fullUnpaged(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame]): DataFrame = {
+  /** [[fuse]] for one request: the combined docs min_score keeps, best
+   *  first, the count before min_score, and the truncation flag. */
+  private def full(src: HybridSources, q: HybridQuery,
+                   filterDocs: Option[DataFrame]): (Seq[Fused], Int, Boolean) = {
     record(src, q, filterDocs)
     validate(src, q)
-    val combined = combineStage(collectSubQueries(src, q, filterDocs), src, q)
-    q.minScore.fold(combined)(ms => combined.filter($"score" >= ms))
+    val (docs, truncated) = fuse(src, q, filterDocs, finalCollapse = true)
+    val kept = q.minScore.fold(docs)(ms =>
+      docs.filter(d => SQLOrderingUtil.compareDoubles(d.score, ms) >= 0))
+    (kept, docs.size, truncated)
   }
 
-  private def full(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame]): DataFrame =
-    page(fullUnpaged(src, q, filterDocs).orderBy($"score".desc, $"doc_id".asc), q)
+  private def page(docs: Seq[Fused], q: HybridQuery): Seq[Fused] = docs.drop(q.from).take(q.k)
 
-  private def page(ordered: DataFrame, q: HybridQuery): DataFrame = {
-    val paged = if (q.from > 0) ordered.offset(q.from) else ordered
-    paged.limit(q.k)
-  }
+  /** A local DataFrame of driver rows — no Spark job to collect it. */
+  private def local(src: HybridSources, rows: Seq[Row], cols: (String, DataType)*): DataFrame =
+    src.idx.postings.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(cols.map { case (c, t) => StructField(c, t, nullable = c != "doc_id") }))
 
   // Column shorthand used above
   private def $(name: String): Column = col(name)

@@ -42,24 +42,34 @@ object Bm25 {
   def tfNorm(tf: Double, dl: Int, avgdl: Double): Double =
     tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
-  /** Per-term BM25 weight map for a query (idf x boost), from the index's
-   *  term dictionary — the Lucene TermStatistics analogue. */
-  private def termWeights(idx: Index, terms: Seq[String], boosts: Map[String, Double]): Map[String, Double] = {
+  /** One `match`-shaped clause of a [[scoreBatch]]: OR over `terms`,
+   *  per-term multiplicative boosts, and the `operator: and` /
+   *  minimum_should_match gate of at least `minTermsMatch` DISTINCT matched
+   *  terms. A query term absent from the index can never match, so a clause
+   *  with fewer indexed terms than its gate matches nothing — Lucene's
+   *  MatchQuery-with-AND, where one zero-df MUST TermQuery empties it. */
+  case class TermClause(terms: Seq[String], boosts: Map[String, Double] = Map.empty,
+                        minTermsMatch: Int = 0)
+
+  /** Per-clause BM25 weight maps (idf x boost) from one term-dictionary
+   *  lookup over every clause's terms — the Lucene TermStatistics analogue. */
+  private def termWeights(idx: Index, clauses: Seq[TermClause]): Seq[Map[String, Double]] = {
     // non-positive boosts are rejected like Lucene rejects negative boosts:
     // topKWand's bucket upper bound (sum of w x tfNorm(max_tf, min_dl)) only
     // dominates real scores when every term weight is non-negative — a
     // negative weight would make pruning silently drop true top-k docs
-    boosts.foreach { case (t, b) => require(b > 0, s"boost for '$t' must be > 0, got $b") }
-    val statsMap = idx.dfs(terms)
+    clauses.foreach(_.boosts.foreach { case (t, b) => require(b > 0, s"boost for '$t' must be > 0, got $b") })
+    val statsMap = idx.dfs(clauses.flatMap(_.terms))
     val n = idx.stats.doc_count
-    terms.distinct.flatMap { t =>
-      statsMap.get(t).map(df => t -> idf(df, n) * boosts.getOrElse(t, 1.0))
-    }.toMap
+    clauses.map(c => c.terms.distinct.flatMap { t =>
+      statsMap.get(t).map(df => t -> idf(df, n) * c.boosts.getOrElse(t, 1.0))
+    }.toMap)
   }
 
   /**
    * Score a bag of query terms (OR semantics, per-term scores summed — the
-   * Lucene BooleanQuery-of-TermQuery shape a `match` query compiles to).
+   * Lucene BooleanQuery-of-TermQuery shape a `match` query compiles to):
+   * [[scoreBatch]] of one clause.
    *
    * @param boosts  per-term multiplicative boost (default 1.0)
    * @param limitPerBucket if >0, keep only the top `limitPerBucket` candidates
@@ -73,75 +83,97 @@ object Bm25 {
       boosts: Map[String, Double] = Map.empty,
       limitPerBucket: Int = 0,
       minTermsMatch: Int = 0
-  ): DataFrame = {
+  ): DataFrame =
+    scoreBatch(idx, Seq(TermClause(terms, boosts, minTermsMatch)), limitPerBucket)
+      .toDF("clause", "doc_id", "score").select("doc_id", "score")
+
+  /**
+   * Score a batch of term clauses in ONE [[BucketKernel]] pass — the
+   * reference's one disjunctive pass over every sub-query of a request
+   * (query/HybridQueryScorer.java:105-120). The postings scan is filtered
+   * once to the union of the clauses' terms, each matched block is decoded
+   * once, tfNorm is computed once per posting, and every clause holding the
+   * term accumulates `w * tfNorm` into its own per-bucket window. Blocks run
+   * in (term, bucket) order — shuffle arrival order varies run to run, and
+   * a different FP summation order shifts near-tied scores by an ulp,
+   * enough to flip a rank at a page boundary — so each clause's scores are
+   * bit-identical to its one-clause run, and no clause depends on another.
+   *
+   * @param limitPerBucket if >0, each clause keeps a [[BoundedTopK]] of that
+   *        many candidates per bucket
+   * @return (clause index, doc_id, score) — every doc each clause matches
+   */
+  def scoreBatch(idx: Index, clauses: Seq[TermClause],
+                 limitPerBucket: Int = 0): Dataset[(Int, Long, Double)] = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-
     val avgdl = idx.stats.avgdl
-    val weightPerTerm = termWeights(idx, terms, boosts)
-    // `operator: and` / minimum_should_match over the query's terms: a doc
-    // must match at least `minTermsMatch` DISTINCT query terms. A query term
-    // absent from the index can never be matched, so if fewer than
-    // minTermsMatch terms exist at all, nothing can qualify — exactly
-    // Lucene's MatchQuery-with-AND compiling to a MUST TermQuery per term,
-    // where one zero-df term empties the whole query.
-    if (weightPerTerm.isEmpty || weightPerTerm.size < minTermsMatch)
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
+    val weights = termWeights(idx, clauses)
+    val live = clauses.indices.filter(c =>
+      weights(c).nonEmpty && weights(c).size >= clauses(c).minTermsMatch).toArray
+    // per term: the (clause, weight) list of every live clause holding it
+    val byTerm: Map[String, Array[(Int, Double)]] =
+      live.toSeq.flatMap(c => weights(c).map { case (t, w) => (t, (c, w)) })
+        .groupBy(_._1).map { case (t, cws) => t -> cws.map(_._2).toArray }
+    if (byTerm.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
 
-    val matched = idx.postings.filter($"term".isin(weightPerTerm.keys.toSeq: _*))
+    val matched = idx.postings.filter($"term".isin(byTerm.keys.toSeq: _*))
     val lim = limitPerBucket
-    val minTerms = minTermsMatch
+    val msm = clauses.map(_.minTermsMatch).toArray
+    val nC = clauses.size
     val span = InvertedIndex.BucketSpan
 
-    val scored: Dataset[(Long, Double)] = BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
-      // deterministic accumulation order: shuffle arrival order varies run
-      // to run, and a different FP summation order shifts near-tied scores
-      // by an ulp — enough to flip a rank at a page boundary
+    BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
       val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-      val scores = new Array[Double](span)
-      val seen = new Array[Boolean](span)
+      val scores = new Array[Array[Double]](nC)
+      val seen = new Array[Array[Boolean]](nC)
       // distinct matched query terms per doc (one merged block per
       // (term, bucket), so one increment per term) — the msm gate
-      val cnts = if (minTerms > 1) new Array[Int](span) else null
+      val cnts = new Array[Array[Int]](nC)
+      live.foreach { c =>
+        scores(c) = new Array[Double](span)
+        seen(c) = new Array[Boolean](span)
+        if (msm(c) > 1) cnts(c) = new Array[Int](span)
+      }
       var i = 0
       while (i < blocks.length) {
         val b = blocks(i)
-        val w = weightPerTerm(b.term)
+        val cws = byTerm(b.term)
         val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
         val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
         var j = 0
         while (j < b.cnt) {
           val local = ids(j)
-          scores(local) += w * tfNorm(tfs(j), dlArr(local), avgdl)
-          seen(local) = true
-          if (cnts != null) cnts(local) += 1
+          val tfn = tfNorm(tfs(j), dlArr(local), avgdl)
+          var q = 0
+          while (q < cws.length) {
+            val (c, w) = cws(q)
+            scores(c)(local) += w * tfn
+            seen(c)(local) = true
+            if (cnts(c) != null) cnts(c)(local) += 1
+            q += 1
+          }
           j += 1
         }
         i += 1
       }
       val base = bucket << InvertedIndex.BucketBits
-      @inline def qualifies(d: Int): Boolean =
-        seen(d) && dlArr(d) > 0 && (cnts == null || cnts(d) >= minTerms)
-      if (lim <= 0) {
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-        var d = 0
-        while (d < span) {
-          if (qualifies(d)) out += ((base + d, scores(d)))
-          d += 1
+      live.iterator.flatMap { c =>
+        @inline def qualifies(d: Int): Boolean =
+          seen(c)(d) && dlArr(d) > 0 && (cnts(c) == null || cnts(c)(d) >= msm(c))
+        if (lim <= 0) (0 until span).iterator.collect {
+          case d if qualifies(d) => (c, base + d, scores(c)(d))
+        } else {
+          val top = new BoundedTopK(lim)
+          var d = 0
+          while (d < span) {
+            if (qualifies(d)) top.offer(base + d, scores(c)(d))
+            d += 1
+          }
+          top.iterator.map { case (id, s) => (c, id, s) }
         }
-        out.iterator
-      } else {
-        val top = new BoundedTopK(lim)
-        var d = 0
-        while (d < span) {
-          if (qualifies(d)) top.offer(base + d, scores(d))
-          d += 1
-        }
-        top.iterator
       }
     }
-
-    scored.toDF("doc_id", "score")
   }
 
   /**
@@ -333,7 +365,7 @@ object Bm25 {
     val spark = idx.postings.sparkSession
     import spark.implicits._
 
-    val weightPerTerm = termWeights(idx, terms, boosts)
+    val weightPerTerm = termWeights(idx, Seq(TermClause(terms, boosts))).head
     if (weightPerTerm.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
 

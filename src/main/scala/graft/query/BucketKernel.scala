@@ -1,6 +1,7 @@
 package graft.query
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.when
 import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingCodec}
 
@@ -115,14 +116,14 @@ object BucketKernel {
 }
 
 /** Bounded top-k collector by (score desc, doc_id asc): a min-heap of the
- *  best `k` (doc_id, score) pairs seen — the reference's HitQueue
- *  (search/collector/HybridTopScoreDocCollector.java:135-190). */
+ *  best `k` (doc_id, score) pairs seen, each with an optional payload — the
+ *  reference's HitQueue (search/collector/HybridTopScoreDocCollector.java:135-190). */
 final class BoundedTopK(k: Int) {
-  private val ord = Ordering.by[(Long, Double), (Double, Long)] { case (id, s) => (s, -id) }
-  private val pq = new scala.collection.mutable.PriorityQueue[(Long, Double)]()(ord.reverse)
+  private val ord = Ordering.by[BoundedTopK.Hit, (Double, Long)](h => (h.score, -h.id))
+  private val pq = new scala.collection.mutable.PriorityQueue[BoundedTopK.Hit]()(ord.reverse)
 
-  def offer(id: Long, score: Double): Unit = {
-    val cand = (id, score)
+  def offer(id: Long, score: Double, payload: Any = null): Unit = {
+    val cand = BoundedTopK.Hit(id, score, payload)
     if (pq.size < k) pq.enqueue(cand)
     else if (ord.gt(cand, pq.head)) { pq.dequeue(); pq.enqueue(cand) }
   }
@@ -131,7 +132,38 @@ final class BoundedTopK(k: Int) {
   def full: Boolean = pq.size == k
 
   /** The k-th best score held — the pruning threshold once [[full]]. */
-  def threshold: Double = pq.head._2
+  def threshold: Double = pq.head.score
 
-  def iterator: Iterator[(Long, Double)] = pq.iterator
+  def iterator: Iterator[(Long, Double)] = pq.iterator.map(h => (h.id, h.score))
+
+  def payloads: Iterator[Any] = pq.iterator.map(_.payload)
+}
+
+object BoundedTopK {
+  final case class Hit(id: Long, score: Double, payload: Any)
+
+  /** The per-partition HitQueues before the one merge ("Cache-Efficient
+   *  Top-k Aggregation", VLDB 2023): rows (key: Int, doc_id: Long,
+   *  score: Double, payload columns...) keep the best `k` of each key in
+   *  each partition, so collecting the result brings at most
+   *  keys x k x partitions rows to the driver. */
+  def perPartition(df: DataFrame, k: Int): DataFrame =
+    df.mapPartitions { it =>
+      val heaps = scala.collection.mutable.HashMap.empty[Int, BoundedTopK]
+      it.foreach(r => heaps.getOrElseUpdate(r.getInt(0), new BoundedTopK(k))
+        .offer(r.getLong(1), r.getDouble(2), r))
+      heaps.valuesIterator.flatMap(_.payloads.map(_.asInstanceOf[Row]))
+    }(Encoders.row(df.schema))
+
+  /** The driver-side merge of collected [[perPartition]] rows of one key:
+   *  the best `k` by (score desc, doc_id asc) under Spark SQL's double
+   *  order (0.0 equals -0.0, NaN sorts highest), as an `orderBy` ranks. */
+  def ranked(rows: Seq[Row], k: Int): Seq[Row] =
+    rows.sortWith((a, b) => before(a.getDouble(2), a.getLong(1), b.getDouble(2), b.getLong(1))).take(k)
+
+  /** (score desc, doc_id asc) under Spark SQL's double order. */
+  def before(s1: Double, id1: Long, s2: Double, id2: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(s1, s2)
+    if (c != 0) c > 0 else id1 < id2
+  }
 }

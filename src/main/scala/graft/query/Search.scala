@@ -141,93 +141,35 @@ object Search {
         round(idf * tfNorm, 4).as("contribution"))
   }
 
-  /** `_msearch`: N independent BM25 requests answered in ONE postings pass.
-   *  The reference's transport loops the sub-requests through the search
-   *  path one by one; on Spark the dominant per-query cost at cluster scale
-   *  is the scan plus its scheduling round, so the batch form amortizes
-   *  both: the postings scan is filtered ONCE to the union of every
-   *  request's terms, each matched block is decoded ONCE, tfNorm is
-   *  computed ONCE per posting, and every request sharing a term scores
-   *  from the same decode. Each bucket keeps a bounded top-k per request
-   *  (one [[BoundedTopK]] each), so the one shuffle — into the per-request
-   *  rank — moves at most requests x buckets x k rows, and no request's
-   *  result depends on another's. Accumulation order
-   *  is fixed (blocks sorted by (term, bucket), requests in given order),
-   *  making scores bit-identical to the one-request scorer's.
+  /** `_msearch`: N independent BM25 requests answered in ONE postings pass
+   *  and ONE Spark job, where the reference's transport loops them through
+   *  the search path one by one: one [[Bm25.scoreBatch]] (each matched block
+   *  decoded once, each request bit-identical to its one-request score), one
+   *  [[BoundedTopK]] of k per request per partition, and a driver-side rank
+   *  of the collected requests x k x partitions rows.
    *
-   *  Returns DataFrame(query_id, rank, doc_id, score). */
+   *  Returns a local DataFrame(query_id, rank, doc_id, score). */
   def msearch(idx: Index, requests: Seq[(String, Seq[String])], k: Int): DataFrame = {
+    val spark = idx.postings.sparkSession
+    import spark.implicits._
+    val hits = msearchCollection(idx, requests, k).collect().toSeq.groupBy(_.getInt(0))
+    requests.indices.flatMap { qi =>
+      BoundedTopK.ranked(hits.getOrElse(qi, Nil), k).zipWithIndex.map { case (r, i) =>
+        (requests(qi)._1, i + 1, r.getLong(1), r.getDouble(2))
+      }
+    }.toDF("query_id", "rank", "doc_id", "score")
+  }
+
+  /** [[msearch]]'s Spark side: rows (request index, doc_id, score), at most
+   *  k per request per partition. */
+  private[graft] def msearchCollection(idx: Index, requests: Seq[(String, Seq[String])],
+                                       k: Int): DataFrame = {
     require(requests.nonEmpty, "msearch requires at least one request")
     require(requests.map(_._1).distinct.size == requests.size,
       "msearch request ids must be unique")
     require(k > 0, s"k must be > 0, got $k")
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    val avgdl = idx.stats.avgdl
-    val nDocs = idx.stats.doc_count
-    val union = requests.flatMap(_._2).distinct
-    val dfs = idx.dfs(union)
-    // per term: the (request index, idf weight) list — request order fixed
-    val qTerms: Map[String, Array[(Int, Double)]] = union.flatMap { t =>
-      dfs.get(t).map { df =>
-        val w = Bm25.idf(df, nDocs)
-        t -> requests.zipWithIndex
-          .collect { case ((_, ts), qi) if ts.contains(t) => (qi, w) }
-          .toArray
-      }
-    }.toMap
-    val empty = spark.emptyDataset[(String, Int, Long, Double)]
-      .toDF("query_id", "rank", "doc_id", "score")
-    if (qTerms.isEmpty) return empty
-    val matched = idx.postings.filter($"term".isin(qTerms.keys.toSeq: _*))
-    val span = InvertedIndex.BucketSpan
-    val nQ = requests.size
-    val scored = BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
-      val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-      val scores = Array.ofDim[Double](nQ, span)
-      val seen = Array.ofDim[Boolean](nQ, span)
-      var i = 0
-      while (i < blocks.length) {
-        val b = blocks(i)
-        val qws = qTerms(b.term)
-        val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-        val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-        var j = 0
-        while (j < b.cnt) {
-          val local = ids(j)
-          // one decode + one tfNorm per posting, shared by every
-          // request containing this term
-          val tfn = Bm25.tfNorm(tfs(j), dlArr(local), avgdl)
-          var q = 0
-          while (q < qws.length) {
-            val (qi, w) = qws(q)
-            scores(qi)(local) += w * tfn
-            seen(qi)(local) = true
-            q += 1
-          }
-          j += 1
-        }
-        i += 1
-      }
-      val base = bucket << InvertedIndex.BucketBits
-      (0 until nQ).iterator.flatMap { q =>
-        val top = new BoundedTopK(k)
-        var d = 0
-        while (d < span) {
-          // dl gate = liveDocs (a tombstoned doc has no forward entry)
-          if (seen(q)(d) && dlArr(d) > 0) top.offer(base + d, scores(q)(d))
-          d += 1
-        }
-        top.iterator.map { case (id, sc) => (q, id, sc) }
-      }
-    }.toDF("qi", "doc_id", "score")
-    val named = scored.withColumn("query_id",
-      element_at(lit(requests.map(_._1).toArray), col("qi") + 1))
-    // <= k rows per (request, bucket) already: a salt pass would only add
-    // a second exchange
-    graft.ops.TopN.perGroupRanked(named, Seq("query_id"), "doc_id", k,
-        Seq(col("score").desc, col("doc_id").asc), "rank", saltBuckets = 1)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
+    val scored = Bm25.scoreBatch(idx, requests.map(r => Bm25.TermClause(r._2)), limitPerBucket = k)
+    BoundedTopK.perPartition(scored.toDF("qi", "doc_id", "score"), k)
   }
 
   /** Join ranked (doc_id, score) hits to their stored fields, keeping rank

@@ -36,3 +36,36 @@ class EventStatsSpec extends AnyFunSuite {
     assert(EventStats.value("evspec_conc") == 8000L)
   }
 }
+
+/** Every hybrid entry point runs its request once and counts it once. */
+class HybridEventStatsSpec extends SparkSpec {
+
+  test("each hybrid entry point raises the request and norm/comb counters by exactly 1 per call") {
+    import graft.hybrid._
+    val dir = "/root/testdata/sf0.001"
+    val idx = graft.index.IndexCache.documents(spark, dir)
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val src = HybridSources(idx, fields = Some(docs))
+    val q = HybridQuery(Seq(Lexical(Seq("join")), Lexical(Seq("merge", "hash"))),
+      MinMaxNormTech(), Combination(graft.functions.Combine.Arithmetic), k = 5, depth = 20)
+    val json =
+      """{"query":{"hybrid":{"queries":[{"match":{"text":"join"}},{"match":{"text":"merge hash"}}]}},
+        |"search_pipeline":{"normalization":{"technique":"min_max"},
+        |"combination":{"technique":"arithmetic_mean"}}}""".stripMargin
+    val counters = Seq("hybrid_query_requests", "normalization_processor_executions",
+      "norm_minmax_executions", "comb_arithmetic_executions")
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "execute" -> (() => Hybrid.execute(src, q, None)),
+      "executeWithTotal" -> (() => Hybrid.executeWithTotal(src, q)),
+      "executeExplain" -> (() => Hybrid.executeExplain(src, q, None)),
+      "executeSorted by _score" -> (() => Hybrid.executeSorted(src, q, Seq("_score" -> false))),
+      "executeSorted by field" -> (() => Hybrid.executeSorted(src, q, Seq("lang" -> true))),
+      "QueryDsl.execute" -> (() => graft.query.QueryDsl.execute(src, json, docs)))
+    for ((name, call) <- calls) {
+      val before = counters.map(EventStats.value)
+      call().collect()
+      assert(counters.map(EventStats.value).zip(before).map { case (a, b) => a - b } ==
+        counters.map(_ => 1L), s"$name: ${counters.zip(counters.map(EventStats.value))}")
+    }
+  }
+}

@@ -89,23 +89,53 @@ class PlanSpec extends SparkSpec {
       p.take(3000))
   }
 
-  test("hybrid sub-query collection is TakeOrdered per clause, not a subq-partitioned window over scored rows") {
-    val q = HybridQuery(Seq(Lexical(Seq("join")), Lexical(Seq("merge"))),
+  test("bounded per-partition collection; no Window, Exchange or broadcast below the heaps") {
+    val q = HybridQuery(Seq(Lexical(Seq("join")), Lexical(Seq("merge")),
+      LexicalMsm(Seq("hash", "join"), 2)),
       MinMaxNormTech(), Combination(graft.functions.Combine.Arithmetic), k = 5, depth = 20)
-    val p = plan(Hybrid.execute(idx, q))
-    assert(p.contains("TakeOrderedAndProject"), p.take(2000))
-    // the only Window allowed is the rank over the <= nSub x depth collected
-    // rows (feeds RRF); it must sit ABOVE a TakeOrdered/limit boundary, which
-    // holds iff no Window appears below the union of bounded collections.
-    // Cheap structural proxy: scored-row count entering any Window is bounded
-    // by nSub x depth = 40 here, so the plan's Window input must descend from
-    // a GlobalLimit/TakeOrdered, never directly from the posting cogroup.
-    val windowIdx = p.indexOf("Window")
-    if (windowIdx >= 0) {
-      val below = p.substring(windowIdx)
-      assert(below.contains("TakeOrderedAndProject") || below.contains("GlobalLimit"),
-        "Window must be fed by bounded (limited) collections: " + p.take(3000))
+    val df = Hybrid.collection(HybridSources(idx), q, None)
+    // every `match` clause scores in ONE bucket-kernel pass, and the
+    // per-partition heaps (MapPartitions) sit directly on it: nothing
+    // between windows, shuffles or broadcasts the scored rows
+    val heaps = Plans.collectFirst(df.queryExecution.executedPlan) {
+      case m: org.apache.spark.sql.execution.MapPartitionsExec => m
+    }.getOrElse(fail("no per-partition heaps: " + plan(df).take(3000)))
+    assert(Plans.collect(heaps) { case c: CoGroupExec => c }.size == 1, plan(df).take(3000))
+    val between = Plans.collect(heaps) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+      case e: Exchange => e
+      case j: BroadcastHashJoinExec => j
     }
+    assert(between.isEmpty, s"${between.map(_.nodeName)} between the scorers and the heaps: " +
+      plan(df).take(3000))
+  }
+
+  test("warm Spark jobs per call: one per hybrid request and per msearch") {
+    import graft.query.Search
+    val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
+    val src = HybridSources(idx, positions = Some(pos))
+    val lex = HybridQuery(Seq(Lexical(Seq("join")), Lexical(Seq("merge", "hash"))),
+      MinMaxNormTech(), Combination(graft.functions.Combine.Arithmetic), k = 5, depth = 20)
+    val phrase = lex.copy(subQueries = Seq(Lexical(Seq("join")), LexicalPhrase(Seq("hash", "join"))))
+    val filt = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .where(col("lang") === "en").select("doc_id")
+    // (name, call, expected jobs of one warm call + collect of its result)
+    val rows: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("all-lexical execute", () => Hybrid.execute(src, lex, None), 1),
+      ("all-lexical executeWithTotal", () => Hybrid.executeWithTotal(src, lex), 1),
+      ("all-lexical executeExplain", () => Hybrid.executeExplain(src, lex, None), 1),
+      ("match + match_phrase", () => Hybrid.execute(src, phrase, None), 1),
+      ("msearch", () => Search.msearch(idx,
+        Seq("q1" -> Seq("join", "merge"), "q2" -> Seq("hash")), 10), 1))
+    val measured = rows.map { case (name, call, _) =>
+      call().collect() // warm
+      name -> jobsOf(call().collect())._2
+    }
+    assert(measured == rows.map { case (name, _, jobs) => name -> jobs },
+      s"jobs per call: measured $measured")
+    Hybrid.execute(src, lex, Some(filt)).collect()
+    val filtered = jobsOf(Hybrid.execute(src, lex, Some(filt)).collect())._2
+    assert(filtered <= 2, s"a filtered lexical hybrid ran $filtered jobs")
   }
 
   test("IVF probe prunes assignment partitions at the storage layer") {
@@ -162,10 +192,9 @@ class PlanSpec extends SparkSpec {
       k = 5, depth = 20)
     // the probed c_ids must reach the artifact scan as a STATIC
     // PartitionFilter (c_id IN (...)) — only nProbe of the 8 c_id=
-    // directories are read. The combine stage is a single lineage over the
-    // collected set (no checkpoint barrier), so the probe scan is visible
-    // in the FULL execute plan.
-    val p = plan(Hybrid.execute(src, q, None))
+    // directories are read. The probe scan is part of the one collection
+    // plan.
+    val p = plan(Hybrid.collection(src, q, None))
     assert(p.contains("PartitionFilters: [c_id"), p.take(3000))
   }
 
@@ -185,7 +214,7 @@ class PlanSpec extends SparkSpec {
       k = 5, depth = 20)
     // the probed c_ids must reach the artifact scan as a STATIC
     // PartitionFilter — only ivfProbe of the 8 c_id= directories are read
-    val p = plan(Hybrid.execute(src, q, None))
+    val p = plan(Hybrid.collection(src, q, None))
     assert(p.contains("PartitionFilters: [c_id"), p.take(3000))
 
     // and exact-probe routing (ivfProbe = centroid count) returns the exact
@@ -202,18 +231,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("hybrid combine stage is a single lineage: normalization stats add no second scan of the scorers") {
-    // min_max/l2/z_score per-sub-query stats are window aggregates over the
-    // collected rows, not a groupBy + self-join second branch — so a stats-
-    // bearing plan must scan each clause's sources exactly as many times as
-    // the stats-free rrf plan over the same clauses. A second lineage branch
-    // would double every scorer scan inside one job at corpus scale.
+    // min_max/l2/z_score per-sub-query stats are computed on the driver over
+    // the collected rows, not by a second branch over the scorers — so a
+    // stats-bearing request's collection must scan each clause's sources
+    // exactly as many times as the stats-free rrf request's over the same
+    // clauses. A second lineage branch would double every scorer scan inside
+    // one job at corpus scale.
     def scans(p: String): Int =
       "InMemoryTableScan|Scan parquet|Scan ExistingRDD".r.findAllIn(p).length
     val subs = Seq(Lexical(Seq("join")), Lexical(Seq("merge")))
-    val minmax = plan(Hybrid.execute(idx, HybridQuery(subs, MinMaxNormTech(),
-      Combination(graft.functions.Combine.Arithmetic), k = 5, depth = 20)))
-    val rrf = plan(Hybrid.execute(idx, HybridQuery(subs, RrfNormTech(),
-      Combination(graft.functions.Combine.Rrf), k = 5, depth = 20)))
+    val minmax = plan(Hybrid.collection(HybridSources(idx), HybridQuery(subs, MinMaxNormTech(),
+      Combination(graft.functions.Combine.Arithmetic), k = 5, depth = 20), None))
+    val rrf = plan(Hybrid.collection(HybridSources(idx), HybridQuery(subs, RrfNormTech(),
+      Combination(graft.functions.Combine.Rrf), k = 5, depth = 20), None))
     assert(scans(minmax) == scans(rrf),
       s"min_max plan has ${scans(minmax)} scans vs rrf's ${scans(rrf)}:\n" + minmax.take(3000))
     assert(scans(rrf) > 0, rrf.take(2000))
@@ -229,7 +259,7 @@ class PlanSpec extends SparkSpec {
     // into a driver broadcast). Catalyst erases hints it applies, so the
     // optimized plan of the collection stage (the stage holding the filter
     // join) must simply contain the LeftSemi join.
-    val lp = Hybrid.collectSubQueries(HybridSources(idx), q, Some(filt))
+    val lp = Hybrid.collection(HybridSources(idx), q, Some(filt))
       .queryExecution.optimizedPlan.toString
     assert(lp.contains("LeftSemi"), lp.take(3000))
   }
@@ -324,15 +354,15 @@ class PlanSpec extends SparkSpec {
     import Intervals.{IAllOf, IMatch, IPrefix}
     val pos = IndexCache.positions(spark, "/root/testdata/sf0.001")
     // (name, query, Spark jobs of one warm call + collect): the kernel
-    // stage, plus msearch's per-request rank exchange and the termStats
-    // scan of an intervals pattern — pinned, so an added scan, join or
-    // collect shows
+    // stage, plus the termStats scan of an intervals pattern — pinned, so an
+    // added scan, join or collect shows. msearch ranks on the driver, so its
+    // plan is read from its collection, and its jobs from the call itself.
+    val msReqs = Seq("q1" -> Seq("join", "merge"), "q2" -> Seq("hash"))
     val rows: Seq[(String, () => DataFrame, Int)] = Seq(
       ("bm25 plain", () => Bm25.topK(idx, Seq("join", "merge"), 10), 1),
       ("bm25 synonym", () => Bm25.synonymTopK(idx, Seq("join", "merge"), 10), 1),
       ("bm25 matchLike", () => Bm25.matchLike(idx, "ta%"), 1),
-      ("msearch", () => Search.msearch(idx,
-        Seq("q1" -> Seq("join", "merge"), "q2" -> Seq("hash")), 10), 2),
+      ("msearch", () => Search.msearchCollection(idx, msReqs, 10), 1),
       ("phrase exact", () => Phrase.score(idx, pos, Seq("hash", "join")), 1),
       ("phrase sloppy", () => Phrase.sloppyScore(idx, pos, Seq("hash", "join"), 2), 1),
       ("phrase prefix", () => Phrase.phrasePrefixScore(idx, pos, Seq("hash"), "jo"), 1),
@@ -351,17 +381,17 @@ class PlanSpec extends SparkSpec {
       val p = plan(df)
       assert("CoGroup".r.findAllIn(p).size == 1, s"$name: " + p.take(3000))
       inPlace(name, df)
-      // msearch ranks its <= k rows per request with a Window ABOVE the
-      // kernel; below the CoGroup no plan may window or sort globally
-      val checked = if (name == "msearch") p.substring(p.indexOf("CoGroup")) else p
-      assert(!checked.contains("Window"), s"$name: " + p.take(3000))
-      assert("Sort \\[[^\\]]*\\], true".r.findFirstIn(checked).isEmpty &&
-        !checked.contains("rangepartitioning"), s"$name: no global sort: " + p.take(3000))
+      // no plan may window or sort globally
+      assert(!p.contains("Window"), s"$name: " + p.take(3000))
+      assert("Sort \\[[^\\]]*\\], true".r.findFirstIn(p).isEmpty &&
+        !p.contains("rangepartitioning"), s"$name: no global sort: " + p.take(3000))
       if (name == "intervals")
         assert(p.contains("table"), "the expanded term must appear as a literal scan filter: " +
           p.take(3000))
-      q().collect() // warm: the first collect of a plan pays one-off caching
-      name -> jobsOf(q().collect())._2
+      val call = () =>
+        if (name == "msearch") Search.msearch(idx, msReqs, 10).collect() else q().collect()
+      call() // warm: the first collect of a plan pays one-off caching
+      name -> jobsOf(call())._2
     }
     val want = rows.map { case (name, _, jobs) => name -> jobs }
     assert(measured == want, s"jobs per call: measured $measured")
@@ -448,10 +478,15 @@ class PlanSpec extends SparkSpec {
         .orderBy("query_id", "rank")),
       "phrase" -> ((i, p) => Phrase.score(i, p, Seq("w0", "w1"))
         .orderBy(col("score").desc, col("doc_id"))))
+    // msearch ranks on the driver: its plan is its collection's
+    def planned(qname: String, i: Index, p: org.apache.spark.sql.Dataset[PosBlock]): DataFrame =
+      if (qname == "msearch") Search.msearchCollection(i,
+        Seq("a" -> Seq("w1", "w2"), "b" -> Seq("w30"), "c" -> Seq("w5", "w40")), 20)
+      else queries.toMap.apply(qname)(i, p)
     for ((qname, q) <- queries) {
       val want = bits(q(resident, pos))
       assert(want.nonEmpty, qname)
-      assert(moved(q(variants(0)._2, rawPos)).exists(_.isInstanceOf[Exchange]),
+      assert(moved(planned(qname, variants(0)._2, rawPos)).exists(_.isInstanceOf[Exchange]),
         s"$qname: the store read is not laid out, so its plan shuffles")
       for ((vname, v) <- variants)
         assert(bits(q(v, rawPos)) == want, s"$qname over the $vname")
