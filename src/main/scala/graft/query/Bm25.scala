@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.index.{Index, InvertedIndex, PostingCodec}
+import graft.index.{Index, InvertedIndex, PostingBlock, PostingCodec}
 
 /**
  * Exact BM25 (k1=1.2, b=0.75 — the Lucene BM25Similarity defaults the
@@ -19,12 +19,17 @@ import graft.index.{Index, InvertedIndex, PostingCodec}
  * Execution: every scorer here runs on [[BucketKernel]] (matched posting
  * blocks co-grouped per 4096-doc bucket with that bucket's doc-length
  * window; over a registry-resident index one Spark job with no exchange).
- * Most score into a dense per-bucket float window, and [[topK]] reduces
- * each bucket through a [[BoundedTopK]] heap before the global
- * TakeOrderedAndProject. [[topKWand]] streams the same co-grouped buckets
+ * Every `match`-shaped scorer — [[scoreTerms]], [[scoreBatch]], [[topK]]
+ * and [[topKWand]] — accumulates through ONE loop ([[Accumulator]]):
+ * blocks in Spark's term order, `w * tfNorm` per clause holding the term,
+ * then the msm and liveDocs gates. [[topK]] reduces each bucket through a
+ * [[BoundedTopK]] heap before the global TakeOrderedAndProject; it is the
+ * plain reference scorer. [[topKWand]] streams the same co-grouped buckets
  * with one running heap per partition and skips buckets whose block-max
  * upper bound cannot beat it (block-max WAND, reference:
- * query/HybridQueryScorer.java:155-176).
+ * query/HybridQueryScorer.java:155-176), scoring every other bucket
+ * through that loop. [[synonymScore]] keeps its own loop: its tf is summed
+ * across the synonym set before saturation.
  */
 object Bm25 {
 
@@ -91,12 +96,8 @@ object Bm25 {
    * Score a batch of term clauses in ONE [[BucketKernel]] pass — the
    * reference's one disjunctive pass over every sub-query of a request
    * (query/HybridQueryScorer.java:105-120). The postings scan is filtered
-   * once to the union of the clauses' terms, each matched block is decoded
-   * once, tfNorm is computed once per posting, and every clause holding the
-   * term accumulates `w * tfNorm` into its own per-bucket window. Blocks run
-   * in (term, bucket) order — shuffle arrival order varies run to run, and
-   * a different FP summation order shifts near-tied scores by an ulp,
-   * enough to flip a rank at a page boundary — so each clause's scores are
+   * once to the union of the clauses' terms, and every bucket runs the one
+   * accumulation loop ([[Accumulator]]), so each clause's scores are
    * bit-identical to its one-clause run, and no clause depends on another.
    *
    * @param limitPerBucket if >0, each clause keeps a [[BoundedTopK]] of that
@@ -107,29 +108,65 @@ object Bm25 {
                  limitPerBucket: Int = 0): Dataset[(Int, Long, Double)] = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val avgdl = idx.stats.avgdl
-    val weights = termWeights(idx, clauses)
-    val live = clauses.indices.filter(c =>
-      weights(c).nonEmpty && weights(c).size >= clauses(c).minTermsMatch).toArray
-    // per term: the (clause, weight) list of every live clause holding it
-    val byTerm: Map[String, Array[(Int, Double)]] =
-      live.toSeq.flatMap(c => weights(c).map { case (t, w) => (t, (c, w)) })
-        .groupBy(_._1).map { case (t, cws) => t -> cws.map(_._2).toArray }
-    if (byTerm.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
-
-    val matched = idx.postings.filter($"term".isin(byTerm.keys.toSeq: _*))
+    val acc = new Accumulator(clauses, termWeights(idx, clauses), idx.stats.avgdl)
+    if (acc.terms.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
+    val matched = idx.postings.filter($"term".isin(acc.terms: _*))
     val lim = limitPerBucket
-    val msm = clauses.map(_.minTermsMatch).toArray
     val nC = clauses.size
-    val span = InvertedIndex.BucketSpan
-
     BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
-      val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-      val scores = new Array[Array[Double]](nC)
-      val seen = new Array[Array[Boolean]](nC)
+      val base = bucket << InvertedIndex.BucketBits
+      if (lim <= 0) {
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
+        acc.score(inTermOrder(blocksIt), dlArr)((c, d, s) => out += ((c, base + d, s)))
+        out.iterator
+      } else {
+        val tops = Array.fill(nC)(new BoundedTopK(lim))
+        acc.score(inTermOrder(blocksIt), dlArr)((c, d, s) => tops(c).offer(base + d, s))
+        acc.live.iterator.flatMap(c => tops(c).iterator.map { case (id, s) => (c, id, s) })
+      }
+    }
+  }
+
+  /** A bucket's matched blocks in Spark's term order. Shuffle arrival order
+   *  varies run to run, and another FP summation order shifts near-tied
+   *  scores by an ulp, enough to flip a rank at a page boundary. */
+  private def inTermOrder(blocks: Iterator[PostingBlock]): Array[PostingBlock] =
+    blocks.toArray.sortBy(b => UTF8String.fromString(b.term))
+
+  /** Receives (clause, local doc, score) from [[Accumulator.score]]; a
+   *  single-method type, so the lambdas passed for it box no argument. */
+  private trait Emit { def apply(clause: Int, local: Int, score: Double): Unit }
+
+  /**
+   * The one BM25 accumulation loop, over one bucket for a batch of clauses:
+   * each matched block is decoded once, tfNorm is computed once per
+   * posting, and every clause holding the term adds `w * tfNorm` to its own
+   * window; a doc then qualifies for a clause if it matched one of its
+   * terms, passes its msm gate and is live.
+   */
+  private final class Accumulator(clauses: Seq[TermClause], weights: Seq[Map[String, Double]],
+                                  avgdl: Double) extends Serializable {
+    private val msm = clauses.map(_.minTermsMatch).toArray
+    /** The clauses that can match: a weighted term, and at least as many
+     *  indexed terms as their gate. */
+    val live: Array[Int] = clauses.indices.filter(c =>
+      weights(c).nonEmpty && weights(c).size >= msm(c)).toArray
+    // per term: the clauses holding it, and their weights
+    private val byTerm: Map[String, (Array[Int], Array[Double])] =
+      live.toSeq.flatMap(c => weights(c).map { case (t, w) => (t, c, w) })
+        .groupBy(_._1).map { case (t, cws) => t -> ((cws.map(_._2).toArray, cws.map(_._3).toArray)) }
+    val terms: Seq[String] = byTerm.keys.toSeq
+
+    /** `emit(clause, local doc, score)` for every doc each live clause keeps
+     *  in this bucket, clause by clause, in local-id order. `blocks` come
+     *  in [[inTermOrder]]. */
+    def score(blocks: Array[PostingBlock], dlArr: Array[Int])(emit: Emit): Unit = {
+      val span = InvertedIndex.BucketSpan
+      val scores = new Array[Array[Double]](clauses.size)
+      val seen = new Array[Array[Boolean]](clauses.size)
       // distinct matched query terms per doc (one merged block per
       // (term, bucket), so one increment per term) — the msm gate
-      val cnts = new Array[Array[Int]](nC)
+      val cnts = new Array[Array[Int]](clauses.size)
       live.foreach { c =>
         scores(c) = new Array[Double](span)
         seen(c) = new Array[Boolean](span)
@@ -138,7 +175,7 @@ object Bm25 {
       var i = 0
       while (i < blocks.length) {
         val b = blocks(i)
-        val cws = byTerm(b.term)
+        val (cs, ws) = byTerm(b.term)
         val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
         val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
         var j = 0
@@ -146,9 +183,9 @@ object Bm25 {
           val local = ids(j)
           val tfn = tfNorm(tfs(j), dlArr(local), avgdl)
           var q = 0
-          while (q < cws.length) {
-            val (c, w) = cws(q)
-            scores(c)(local) += w * tfn
+          while (q < cs.length) {
+            val c = cs(q)
+            scores(c)(local) += ws(q) * tfn
             seen(c)(local) = true
             if (cnts(c) != null) cnts(c)(local) += 1
             q += 1
@@ -157,20 +194,13 @@ object Bm25 {
         }
         i += 1
       }
-      val base = bucket << InvertedIndex.BucketBits
-      live.iterator.flatMap { c =>
-        @inline def qualifies(d: Int): Boolean =
-          seen(c)(d) && dlArr(d) > 0 && (cnts(c) == null || cnts(c)(d) >= msm(c))
-        if (lim <= 0) (0 until span).iterator.collect {
-          case d if qualifies(d) => (c, base + d, scores(c)(d))
-        } else {
-          val top = new BoundedTopK(lim)
-          var d = 0
-          while (d < span) {
-            if (qualifies(d)) top.offer(base + d, scores(c)(d))
-            d += 1
-          }
-          top.iterator.map { case (id, s) => (c, id, s) }
+      live.foreach { c =>
+        var d = 0
+        while (d < span) {
+          // liveDocs gate — see BucketKernel: dl slot 0 == tombstoned
+          if (seen(c)(d) && dlArr(d) > 0 && (cnts(c) == null || cnts(c)(d) >= msm(c)))
+            emit(c, d, scores(c)(d))
+          d += 1
         }
       }
     }
@@ -311,76 +341,50 @@ object Bm25 {
   }
 
   /**
-   * Cost-based scorer choice from the query terms' summed dfs in the term
-   * dictionary (no Spark job over a resident index): the fused WAND's
-   * upper-bound bookkeeping and per-bucket dl-block pairing only pay off
-   * when the candidate posting volume is large enough that skipping block
-   * decodes wins; tiny queries route to the plain scorer. Mirrors Lucene's cost-aware scorer selection
-   * (reference: query/HybridQueryScorer.java:222-299 orders two-phase
-   * iterators by matchCost).
-   */
-  def topKAuto(idx: Index, terms: Seq[String], k: Int, boosts: Map[String, Double] = Map.empty,
-               wandThreshold: Long = 1000000L): DataFrame = {
-    val volume = idx.dfs(terms).values.sum
-    if (volume >= wandThreshold) topKWand(idx, terms, k, boosts)
-    else topK(idx, terms, k, boosts)
-  }
-
-  /**
-   * Block-max-WAND top-k: exact results, but non-competitive posting blocks
-   * are never decoded. The reference's collector feeds its heap threshold
-   * back into the scorers so blocks whose max impact cannot beat it are
-   * skipped (reference: search/collector/HybridTopScoreDocCollector.java:
-   * 160-171, query/HybridQueryScorer.java:155-176 advanceShallow/getMaxScore).
-   *
-   * FUSED single-job design (replacing the earlier two-pass + driver-frontier
-   * scheme, whose 2 extra scheduling rounds cost more than they saved): the
-   * matched blocks pair with their bucket's doc-length block through the
-   * [[BucketKernel]] co-group — in place over a registry-resident index,
-   * whose tables are co-partitioned on `bucket`; through a `bucket` shuffle
-   * of both sides otherwise — and each partition streams its buckets with a
-   * RUNNING bounded top-k heap — exactly the reference's
-   * collector/threshold loop, one per partition:
+   * Block-max-WAND top-k: exact results, but non-competitive buckets are
+   * never decoded. The reference's collector feeds its heap threshold back
+   * into the scorers so blocks whose max impact cannot beat it are skipped
+   * (reference: search/collector/HybridTopScoreDocCollector.java:160-171,
+   * query/HybridQueryScorer.java:155-176 advanceShallow/getMaxScore). Each
+   * partition streams its [[BucketKernel.grouped]] buckets through one
+   * RUNNING bounded heap, in one Spark job:
    *
    *  - bucket upper bound from block METADATA only: sum over terms of
    *    w x tfNorm(max_tf, min_dl). For any doc in the bucket tf <= max_tf
    *    and dl >= min_dl, and tfNorm is increasing in tf / decreasing in dl,
-   *    so the bound dominates every real contribution — no payload decode
-   *    to compute it;
-   *  - once the partition's heap holds k docs, a bucket with ub < theta
-   *    (the k-th best real score so far) is skipped without decoding;
-   *    ub == theta still decodes, because a theta-tied doc with a smaller
-   *    doc_id wins the tie — exactness is per-bucket provable;
+   *    so the bound dominates every real score;
+   *  - once the heap holds k docs, a bucket with ub < theta (the k-th best
+   *    score so far) is skipped; ub == theta still scores, because a
+   *    theta-tied doc with a smaller doc_id wins the tie. Every other
+   *    bucket scores through the one [[Accumulator]] loop;
    *  - the per-partition heaps merge through one TakeOrderedAndProject.
    *
    * The partition-local theta is <= the global theta, so pruning is only
-   * ever conservative (exact by construction). Skips compound with the
-   * impact-ordered index (Reorder.denseIds): short high-impact docs cluster
-   * in early buckets, the heap saturates high immediately, and the long tail
-   * of low-bound buckets is skipped. One Spark job, no driver-side frontier,
-   * no bucket-count cap — O(one bucket) memory above the stream.
+   * ever conservative. Skips compound with the impact-ordered index
+   * (Reorder.denseIds): short high-impact docs cluster in early buckets,
+   * the heap saturates early, and the tail of low-bound buckets is skipped.
    */
   def topKWand(idx: Index, terms: Seq[String], k: Int, boosts: Map[String, Double] = Map.empty): DataFrame = {
     require(k > 0, s"k must be > 0, got $k")
     val spark = idx.postings.sparkSession
     import spark.implicits._
 
-    val weightPerTerm = termWeights(idx, Seq(TermClause(terms, boosts))).head
-    if (weightPerTerm.isEmpty)
+    val clause = Seq(TermClause(terms, boosts))
+    val weights = termWeights(idx, clause)
+    val acc = new Accumulator(clause, weights, idx.stats.avgdl)
+    if (acc.terms.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-
+    val weightPerTerm = weights.head
     val avgdl = idx.stats.avgdl
-    val span = InvertedIndex.BucketSpan
     val kk = k
 
-    val matched = idx.postings.filter($"term".isin(weightPerTerm.keys.toSeq: _*))
+    val matched = idx.postings.filter($"term".isin(acc.terms: _*))
     // the kernel's co-group hands each bucket's blocks over whole (a join's
-    // skewed partition may be split, leaving scores partial); Spark's term
-    // order fixes the FP accumulation order, so near-ties never shift.
-    // A bucket whose docs are all deleted has no doc-length block.
+    // skewed partition may be split, leaving scores partial). A bucket whose
+    // docs are all deleted has no doc-length block.
     val buckets = BucketKernel.grouped(idx, matched) { (bucket, blocksIt, dlIt) =>
       if (!dlIt.hasNext) Iterator.empty
-      else Iterator((bucket, blocksIt.toArray.sortBy(b => UTF8String.fromString(b.term)), dlIt.next()))
+      else Iterator((bucket, inTermOrder(blocksIt), dlIt.next()))
     }
 
     val topped: Dataset[(Long, Double)] = buckets.mapPartitions { it =>
@@ -388,30 +392,9 @@ object Bm25 {
       it.foreach { case (bucket, group, dlb) =>
         var ub = 0.0
         group.foreach(b => ub += weightPerTerm(b.term) * tfNorm(b.max_tf, dlb.min_dl, avgdl))
-        val skip = top.full && ub < top.threshold
-        if (!skip) {
-          val dlArr = BucketKernel.dlWindow(dlb)
-          val scores = new Array[Double](span)
-          val seen = new Array[Boolean](span)
-          group.foreach { b =>
-            val w = weightPerTerm(b.term)
-            val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-            val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-            var j = 0
-            while (j < b.cnt) {
-              val l = ids(j)
-              scores(l) += w * tfNorm(tfs(j), dlArr(l), avgdl)
-              seen(l) = true
-              j += 1
-            }
-          }
+        if (!(top.full && ub < top.threshold)) {
           val base = bucket << InvertedIndex.BucketBits
-          var d = 0
-          while (d < span) {
-            // liveDocs gate — see BucketKernel: dl slot 0 == tombstoned
-            if (seen(d) && dlArr(d) > 0) top.offer(base + d, scores(d))
-            d += 1
-          }
+          acc.score(group, BucketKernel.dlWindow(dlb))((_, d, s) => top.offer(base + d, s))
         }
       }
       top.iterator

@@ -115,11 +115,15 @@ object BucketKernel {
     }
 }
 
-/** Bounded top-k collector by (score desc, doc_id asc): a min-heap of the
- *  best `k` (doc_id, score) pairs seen, each with an optional payload — the
- *  reference's HitQueue (search/collector/HybridTopScoreDocCollector.java:135-190). */
+/** Bounded top-k collector by (score desc, doc_id asc) under Spark SQL's
+ *  double order: a min-heap of the best `k` (doc_id, score) pairs seen,
+ *  each with an optional payload — the reference's HitQueue
+ *  (search/collector/HybridTopScoreDocCollector.java:135-190). */
 final class BoundedTopK(k: Int) {
-  private val ord = Ordering.by[BoundedTopK.Hit, (Double, Long)](h => (h.score, -h.id))
+  private val ord: Ordering[BoundedTopK.Hit] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(a.score, b.score)
+    if (c != 0) c else java.lang.Long.compare(b.id, a.id)
+  }
   private val pq = new scala.collection.mutable.PriorityQueue[BoundedTopK.Hit]()(ord.reverse)
 
   def offer(id: Long, score: Double, payload: Any = null): Unit = {
@@ -144,22 +148,35 @@ object BoundedTopK {
 
   /** The per-partition HitQueues before the one merge ("Cache-Efficient
    *  Top-k Aggregation", VLDB 2023): rows (key: Int, doc_id: Long,
-   *  score: Double, payload columns...) keep the best `k` of each key in
-   *  each partition, so collecting the result brings at most
+   *  score: Double, payload columns...) go through [[kept]] in each
+   *  partition, so collecting the result brings at most
    *  keys x k x partitions rows to the driver. */
-  def perPartition(df: DataFrame, k: Int): DataFrame =
-    df.mapPartitions { it =>
-      val heaps = scala.collection.mutable.HashMap.empty[Int, BoundedTopK]
-      it.foreach(r => heaps.getOrElseUpdate(r.getInt(0), new BoundedTopK(k))
+  def perPartition(df: DataFrame, k: Int, perGroup: Int = 0): DataFrame =
+    df.mapPartitions(it => kept(it, k, perGroup))(Encoders.row(df.schema))
+
+  /** The best `k` rows of each key; with `perGroup` > 0 (collapse, group in
+   *  column 3), of the best `perGroup` of each (key, group). Exact run per
+   *  partition and again over the survivors: a row that loses its place in
+   *  a partition to `k` better rows is below, for each of their groups, as
+   *  many globally kept rows as that group lent — `k` in all. */
+  def kept(rows: Iterator[Row], k: Int, perGroup: Int = 0): Iterator[Row] = {
+    def best(rs: Iterator[Row], n: Int)(key: Row => Any): Iterator[Row] = {
+      val heaps = scala.collection.mutable.HashMap.empty[Any, BoundedTopK]
+      rs.foreach(r => heaps.getOrElseUpdate(key(r), new BoundedTopK(n))
         .offer(r.getLong(1), r.getDouble(2), r))
       heaps.valuesIterator.flatMap(_.payloads.map(_.asInstanceOf[Row]))
-    }(Encoders.row(df.schema))
+    }
+    val inGroups = if (perGroup <= 0) rows else best(rows, perGroup)(r => (r.getInt(0), r.get(3)))
+    best(inGroups, k)(_.getInt(0))
+  }
 
   /** The driver-side merge of collected [[perPartition]] rows of one key:
-   *  the best `k` by (score desc, doc_id asc) under Spark SQL's double
-   *  order (0.0 equals -0.0, NaN sorts highest), as an `orderBy` ranks. */
-  def ranked(rows: Seq[Row], k: Int): Seq[Row] =
-    rows.sortWith((a, b) => before(a.getDouble(2), a.getLong(1), b.getDouble(2), b.getLong(1))).take(k)
+   *  the same keep, then the best `k` by (score desc, doc_id asc) under
+   *  Spark SQL's double order (0.0 equals -0.0, NaN sorts highest), as an
+   *  `orderBy` ranks. */
+  def ranked(rows: Seq[Row], k: Int, perGroup: Int = 0): Seq[Row] =
+    (if (perGroup <= 0) rows else kept(rows.iterator, k, perGroup).toSeq)
+      .sortWith((a, b) => before(a.getDouble(2), a.getLong(1), b.getDouble(2), b.getLong(1))).take(k)
 
   /** (score desc, doc_id asc) under Spark SQL's double order. */
   def before(s1: Double, id1: Long, s2: Double, id2: Long): Boolean = {

@@ -145,6 +145,27 @@ class HybridModelSpec extends SparkSpec {
 
   // ---- random cases -------------------------------------------------------
 
+  /** Runs `q` through `executeWithTotal`, `execute` and `executeSorted` by
+   *  `_score` and asserts each against the model; returns its answer. */
+  private def check(c: Int, docs: Seq[Doc], src: HybridSources, q: HybridQuery,
+                    filter: Option[Set[Long]]): Expected = {
+    val want = model(docs, q, filter)
+    val filterDf = filter.map(_.toSeq.toDF("doc_id"))
+    val got = Hybrid.executeWithTotal(src, q, filterDf).collect()
+    val page = got.map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val what = s"case $c: $q filter=${filter.map(_.size)}\n got $page\n exp ${want.page}"
+    assert(page.map(_._1) == want.page.map(_._1), what)
+    page.zip(want.page).foreach { case ((_, g), (_, e)) => assert(math.abs(g - e) < 1e-9, what) }
+    got.foreach { r =>
+      assert(r.getLong(2) == want.total && r.getString(3) == want.relation, what) }
+    val plain = Hybrid.execute(src, q, filterDf).collect().map(r => r.getLong(0) -> r.getDouble(1))
+    assert(plain.toSeq == page, what)
+    // a sort by _score desc is the same order, collapse and min_score
+    val sorted = Hybrid.executeSorted(src, q, Seq("_score" -> false), filterDf).collect()
+    assert(sorted.map(r => r.getLong(0) -> r.getDouble(1)).toSeq == page, what)
+    want
+  }
+
   private def terms(): Seq[String] = Seq.fill(1 + rnd.nextInt(3))(vocab(rnd.nextInt(vocab.size)))
 
   private def clause(): SubQuery = rnd.nextInt(6) match {
@@ -197,21 +218,46 @@ class HybridModelSpec extends SparkSpec {
         val ss = model(docs, base.copy(from = 0, k = 1000), filter).page.map(_._2).distinct
         if (ss.size < 2) base else base.copy(minScore = Some((ss(ss.size / 2) + ss(ss.size / 2 - 1)) / 2))
       }
-      val want = model(docs, q, filter)
-      val filterDf = filter.map(_.toSeq.toDF("doc_id"))
-      val got = Hybrid.executeWithTotal(src, q, filterDf).collect()
-      val page = got.map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-      val what = s"case $c: $q filter=${filter.map(_.size)}\n got $page\n exp ${want.page}"
-      assert(page.map(_._1) == want.page.map(_._1), what)
-      page.zip(want.page).foreach { case ((_, g), (_, e)) => assert(math.abs(g - e) < 1e-9, what) }
-      got.foreach { r =>
-        assert(r.getLong(2) == want.total && r.getString(3) == want.relation, what) }
-      val plain = Hybrid.execute(src, q, filterDf).collect().map(r => r.getLong(0) -> r.getDouble(1))
-      assert(plain.toSeq == page, what)
+      val want = check(c, docs, src, q, filter)
       if (want.page.nonEmpty) shown += 1
       relations += want.relation
     }
     // the random stream must reach real pages and both total-hits relations
     assert(shown >= 12 && relations == Set("eq", "gte"), s"$shown non-empty pages, $relations")
+  }
+
+  test("collapse across partitions: groups split over buckets match the model (12 cases)") {
+    // ids over 4-5 buckets of 4096 and 2-3 group values, so each group's
+    // docs score in several tasks; no partition coalescing, so the
+    // per-partition keeps really run apart and fuse must replay them
+    val old = spark.conf.getOption("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val norms: Seq[Int => Normalization] = Seq(_ => MinMaxNormTech(), _ => L2NormTech,
+        _ => ZScoreNormTech, _ => RrfNormTech(60))
+      var shown = 0
+      val tasks = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      for (c <- 0 until 12) {
+        val nGroups = 2 + rnd.nextInt(2)
+        val docs = (0 until 40 + rnd.nextInt(20)).map(i => Doc(i * 331L + rnd.nextInt(3),
+          Seq.fill(1 + rnd.nextInt(7))(vocab(rnd.nextInt(vocab.size))), s"g${rnd.nextInt(nGroups)}"))
+        val fields = docs.map(d => (d.id, d.toks.mkString(" "), d.grp)).toDF("doc_id", "text", "grp")
+        val src = HybridSources(InvertedIndex.build(fields, "doc_id", "text"), fields = Some(fields))
+        val subs = Seq.fill(1 + rnd.nextInt(3))(clause())
+        val norm = norms(c % norms.size)(subs.size)
+        val q = HybridQuery(subs, norm,
+          Combination(if (norm == ZScoreNormTech) Combine.Arithmetic
+                      else Seq(Combine.Arithmetic, Combine.Harmonic, Combine.Geometric)(rnd.nextInt(3))),
+          k = 3 + rnd.nextInt(6), depth = 2 + rnd.nextInt(6), from = rnd.nextInt(2),
+          collapse = Some(Collapse("grp", 1 + c % 2)))
+        val filter = if (c % 3 == 2) Some(docs.map(_.id).filter(_ => rnd.nextInt(3) > 0).toSet) else None
+        if (check(c, docs, src, q, filter).page.nonEmpty) shown += 1
+        tasks += c -> Hybrid.collection(src, q, filter.map(_.toSeq.toDF("doc_id"))).rdd
+          .mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
+      }
+      assert(shown >= 9, s"$shown non-empty pages")
+      assert(tasks.forall(_._2 >= 2), s"(case, partitions the collection kept rows in): $tasks")
+    } finally old.fold(spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled"))(
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", _))
   }
 }

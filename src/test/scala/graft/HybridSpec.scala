@@ -162,6 +162,9 @@ class HybridSpec extends SparkSpec {
     // one doc per group in the final page
     val grp = fields.as[(Long, String)].collect().toMap
     assert(rows.map(grp).distinct.length == rows.length)
+    // a keep of no docs per group is rejected, not an empty page
+    intercept[IllegalArgumentException](
+      Hybrid.execute(src, q.copy(collapse = Some(Collapse("source", 0))), None))
   }
 
   test("total-hits relation: merged count >= depth without truncation stays eq") {

@@ -138,6 +138,47 @@ class PlanSpec extends SparkSpec {
     assert(filtered <= 2, s"a filtered lexical hybrid ran $filtered jobs")
   }
 
+  test("collapse keeps in the per-partition heaps (no Window); a _score sort pages on the driver") {
+    val fields = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val src = HybridSources(idx, fields = Some(fields))
+    val q = HybridQuery(Seq(Lexical(Seq("join")), Lexical(Seq("merge", "hash"))),
+      MinMaxNormTech(), Combination(graft.functions.Combine.Arithmetic), k = 5, depth = 20,
+      collapse = Some(Collapse("lang")))
+    val df = Hybrid.collection(src, q, None)
+    val heaps = Plans.collectFirst(df.queryExecution.executedPlan) {
+      case m: org.apache.spark.sql.execution.MapPartitionsExec => m
+    }.getOrElse(fail("no per-partition heaps: " + plan(df).take(3000)))
+    assert(Plans.collect(heaps) { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+      .isEmpty, plan(df).take(3000))
+    // (name, call, expected jobs of one warm call + collect of its result)
+    val rows: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("collapsed execute", () => Hybrid.execute(src, q, None), 2),
+      ("executeSorted by _score", () => Hybrid.executeSorted(src, q.copy(collapse = None),
+        Seq("_score" -> false)), 1),
+      ("executeSorted by _score after a cursor", () => Hybrid.executeSorted(src,
+        q.copy(collapse = None), Seq("_score" -> false), None, Seq(0.5, 100L)), 1))
+    val measured = rows.map { case (name, call, _) =>
+      call().collect() // warm
+      name -> jobsOf(call().collect())._2
+    }
+    assert(measured == rows.map { case (name, _, jobs) => name -> jobs },
+      s"jobs per call: measured $measured")
+  }
+
+  test("cross_fields scores each field in one bucket-kernel pass") {
+    val title = IndexCache.documentsTitle(spark, "/root/testdata/sf0.001")
+    val src = HybridSources(idx, fieldIdx = Map("title" -> title))
+    // three terms indexed in both fields: one CoGroup per field, not one per
+    // (field, term)
+    val terms = (idx.termStats.collect().map(_.term).toSet intersect
+      title.termStats.collect().map(_.term).toSet).toSeq.sorted.take(3)
+    assert(terms.size == 3, terms)
+    val df = Hybrid.scoreClause(src,
+      LexicalMulti(Seq("text" -> 1.0, "title" -> 2.0), terms, CrossFields), 0)
+    assert(Plans.collect(df.queryExecution.executedPlan) { case c: CoGroupExec => c }.size == 2,
+      plan(df).take(3000))
+  }
+
   test("IVF probe prunes assignment partitions at the storage layer") {
     import spark.implicits._
     val emb = (0L until 200L).map(i =>

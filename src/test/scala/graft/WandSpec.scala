@@ -30,18 +30,6 @@ class WandSpec extends SparkSpec {
       val plain = intercept[IllegalArgumentException](Bm25.topK(idx, Seq("join"), k))
       assert(plain.getMessage.contains("k must be > 0"), plain.getMessage)
       intercept[IllegalArgumentException](Bm25.topKWand(idx, Seq("join"), k))
-      for (threshold <- Seq(1L, Long.MaxValue))
-        intercept[IllegalArgumentException](Bm25.topKAuto(idx, Seq("join"), k, wandThreshold = threshold))
-    }
-  }
-
-  test("topKAuto picks either path and stays exact") {
-    for (threshold <- Seq(1L, Long.MaxValue)) {
-      val auto = Bm25.topKAuto(idx, Seq("join", "merge"), 10, wandThreshold = threshold)
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      val plain = Bm25.topK(idx, Seq("join", "merge"), 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      assert(auto.toSeq == plain.toSeq, s"threshold=$threshold")
     }
   }
 
