@@ -623,7 +623,10 @@ case class HybridSources(
      *  `method_parameters` probes (reference: a SEISMIC-enabled
      *  sparse_tokens field carries its clustered codec artifact). */
     seismic: Option[org.apache.spark.sql.Dataset[graft.ops.ClusteredPosting]] = None
-)
+) {
+  /** The index of field `f`: "text" is the primary [[idx]]. */
+  def field(f: String): Index = if (f == "text") idx else fieldIdx(f)
+}
 
 case class HybridQuery(
     subQueries: Seq[SubQuery],
@@ -1129,45 +1132,34 @@ object Hybrid {
       queryCut = sa.topN, heapFactor = sa.heapFactor, filterDocs = fd)
   }
 
+  /** The [[Bm25.scoreBatch]] clause a `match`-shaped sub-query compiles
+   *  to, if it is one. A `match` over a token with an index-configured
+   *  synonym entry (Lucene SynonymGraphFilter on the search_analyzer)
+   *  rewrites into one SynonymQuery group per distinct token — the DSL
+   *  never mentions synonyms, the index config injects them. */
+  private def batchClause(src: HybridSources, sq: SubQuery): Option[Bm25.Clause] = sq match {
+    case Lexical(terms, boosts) if src.synonyms.exists(kv => terms.contains(kv._1)) =>
+      Some(Bm25.SynonymClause(terms.distinct.map(t =>
+        ((t +: src.synonyms.getOrElse(t, Nil)).distinct, boosts.getOrElse(t, 1.0)))))
+    case Lexical(terms, boosts) => Some(Bm25.TermClause(terms, boosts))
+    case LexicalMsm(terms, m, boosts) => Some(Bm25.TermClause(terms, boosts, m))
+    case LexicalSyn(groups) => Some(Bm25.SynonymClause(groups))
+    case LexicalMulti(fields, terms, CrossFields) =>
+      Some(Bm25.CrossFieldsClause(fields.map { case (f, b) => (src.field(f), b) }, terms))
+    case LexicalMulti(fields, terms, CombinedFields(msm)) =>
+      Some(Bm25.CombinedFieldsClause(fields.map { case (f, w) => (src.field(f), w) }, terms, msm))
+    case _ => None
+  }
+
   /** Score one sub-query clause: DataFrame(doc_id, score), unbounded rows. */
   private[graft] def scoreClause(src: HybridSources, sq: SubQuery, boundPerBucket: Int): DataFrame =
     sq match {
-      case Lexical(terms, boosts) if src.synonyms.exists(kv => terms.contains(kv._1)) =>
-        // index-configured synonym graph (Lucene SynonymGraphFilter on the
-        // search_analyzer): rewrite each query position into its synonym
-        // group — the DSL never mentions synonyms, the index config injects
-        // them. Per-bucket trim is disabled: a bound valid per group is not
-        // a valid upper set for the cross-group sum.
-        val groups = terms.map { t =>
-          ((t +: src.synonyms.getOrElse(t, Nil)).distinct, boosts.getOrElse(t, 1.0))
-        }
-        scoreClause(src, LexicalSyn(groups), boundPerBucket = 0)
-      case Lexical(terms, boosts) =>
-        Bm25.scoreTerms(src.idx, terms, boosts, limitPerBucket = boundPerBucket)
-      case LexicalSyn(groups) =>
-        // each position scores as ONE SynonymQuery — tf summed across the
-        // group BEFORE saturation, df = the max member df (Bm25
-        // .synonymScore); positions then sum like the BooleanQuery a match
-        // compiles to. The pivot keeps the FP sum in fixed position order.
-        import org.apache.spark.sql.functions.{coalesce, max, when}
-        val tagged = groups.zipWithIndex.map { case ((g, b), gi) =>
-          val scored =
-            if (g.size == 1) Bm25.scoreTerms(src.idx, g, Map.empty)
-            else Bm25.synonymScore(src.idx, g)
-          scored.select($"doc_id", ($"score" * b).as("score"), lit(gi).as("gid"))
-        }
-        val u = tagged.reduce(_ unionByName _)
-        val pivots = groups.indices.map(gi =>
-          max(when($"gid" === gi, $"score")).as(s"_g$gi"))
-        val agg = u.groupBy($"doc_id").agg(pivots.head, pivots.tail: _*)
-        val sum = groups.indices.map(gi => coalesce(col(s"_g$gi"), lit(0.0)))
-          .reduceLeft(_ + _)
-        agg.select($"doc_id", sum.as("score"))
-      case LexicalMsm(terms, m, boosts) =>
-        // the msm gate applies inside the bucket scorer BEFORE any per-bucket
-        // top-k trim, so the bound stays a valid upper set for global top-k
-        Bm25.scoreTerms(src.idx, terms, boosts, limitPerBucket = boundPerBucket,
-          minTermsMatch = m)
+      case _: Lexical | _: LexicalSyn | _: LexicalMsm |
+           LexicalMulti(_, _, CrossFields | _: CombinedFields) =>
+        // one batch clause: its whole score forms inside the bucket, so
+        // the per-bucket bound is a valid upper set for the global top-k
+        Bm25.scoreBatch(src.idx, Seq(batchClause(src, sq).get), boundPerBucket)
+          .toDF("clause", "doc_id", "score").select("doc_id", "score")
       case TermsSetFieldQ(terms, msmField, boost) =>
         // per-doc msm from the stored field: the full scored set joins its
         // distinct-matched-term counts and the field — no per-bucket trim
@@ -1199,7 +1191,7 @@ object Hybrid {
         Bm25.matchWhere(src.idx, $"term".rlike(s"^(?:$p)$$"))
           .select($"doc_id", lit(boost).as("score"))
       case ExistsQ(f, boost) =>
-        val fi = if (f == "text") src.idx else src.fieldIdx(f)
+        val fi = src.field(f)
         graft.index.InvertedIndex.existsDocIds(fi.docLens)
           .select($"doc_id", lit(boost).as("score"))
       case SpanNearQ(ts, slop, ord, boost) =>
@@ -1375,145 +1367,6 @@ object Hybrid {
           case "linear"  => w
         }
         tw.select($"doc_id", (s * r.boost).as("score"))
-      case LexicalMulti(fields, terms, CrossFields) =>
-        // term-centric blending: per term the df blends to the MAX across
-        // fields (BlendedTermQuery), each field scores with the blended idf
-        // over its own tf/dl/avgdl (imposed through the boost channel:
-        // boost_eff = (b * idf_blend) / idf_field, so the fused scorer's
-        // idf_field * boost_eff carries the blend), the doc keeps the best
-        // field PER TERM, terms sum in fixed query order. df lookups are the
-        // broadcast-sized TermStatistics fetch; each field is one scoreBatch
-        // of one clause per term (the same bits as one scoreTerms per
-        // term), then one union + one aggregation.
-        val idxOf = fields.map { case (f, _) =>
-          f -> (if (f == "text") src.idx else src.fieldIdx(f)) }.toMap
-        val dfsOf = fields.map { case (f, _) =>
-          f -> idxOf(f).dfs(terms) }.toMap
-        val uniq = terms.distinct
-        val blend = uniq.flatMap { t =>
-          val ds = fields.flatMap { case (f, _) => dfsOf(f).get(t) }
-          if (ds.isEmpty) None else Some(t -> ds.max)
-        }.toMap
-        // clause i is uniq(i); a term the field lacks is a clause that
-        // cannot match
-        val tagged = fields.filter { case (f, _) => dfsOf(f).nonEmpty }.map { case (f, b) =>
-          val nF = idxOf(f).stats.doc_count
-          val clauses = uniq.map(t => Bm25.TermClause(Seq(t), dfsOf(f).get(t).map(dfF =>
-            t -> b * Bm25.idf(blend(t), src.idx.stats.doc_count) / Bm25.idf(dfF, nF)).toMap))
-          Bm25.scoreBatch(idxOf(f), clauses).toDF("tid", "doc_id", "score")
-        }
-        if (tagged.isEmpty)
-          src.idx.postings.sparkSession.emptyDataFrame
-            .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-        else {
-          val u = tagged.reduce(_ unionByName _)
-          val pivots = uniq.indices.map(ti =>
-            max(when($"tid" === ti, $"score")).as(s"_t$ti"))
-          val agg = u.groupBy($"doc_id").agg(pivots.head, pivots.tail: _*)
-          val score = uniq.indices
-            .map(ti => coalesce(col(s"_t$ti"), lit(0.0))).reduceLeft(_ + _)
-          agg.select($"doc_id", score.as("score"))
-        }
-      case LexicalMulti(fields, terms, CombinedFields(msm)) =>
-        // combined_fields: ONE pseudo-field built from merged statistics —
-        // tf' = Σ w_f·tf_f and dl' = Σ w_f·dl_f merge BEFORE saturation
-        // (Lucene CombinedFieldQuery / MultiNormsLeafSimScorer), df' = max
-        // over fields, avgdl' from the weighted sum of field lengths. The
-        // work is bounded by the query terms' postings across the fields:
-        // per field the term-pruned postings decode to (doc, term, w·tf)
-        // rows, doc lengths ship only for buckets any field matched (a
-        // broadcast semi-join of each field's doc lengths). Per-field
-        // contributions and per-term scores both combine through
-        // fixed-order pivot folds — deterministic FP at any parallelism.
-        val spark = src.idx.postings.sparkSession
-        import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-        val idxOf = fields.map { case (f, _) =>
-          f -> (if (f == "text") src.idx else src.fieldIdx(f)) }.toMap
-        val uniq = terms.distinct
-        val dfsOf = fields.map { case (f, _) =>
-          f -> idxOf(f).dfs(uniq) }.toMap
-        // merged TermStatistics: docFreq = max over fields (absent = 0)
-        val mergedDf = uniq.flatMap { t =>
-          val ds = fields.flatMap { case (f, _) => dfsOf(f).get(t) }
-          if (ds.isEmpty) None else Some(t -> ds.max)
-        }.toMap
-        val gate = math.max(msm, 1)
-        if (mergedDf.isEmpty || mergedDf.size < gate)
-          spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-        else {
-          val n = src.idx.stats.doc_count
-          // merged collection stats: avgdl' = Σ w_f·sumdl_f / docCount
-          val avgdlC = fields.map { case (f, w) =>
-            w * idxOf(f).stats.sum_dl }.sum / n
-          val termSeq = uniq.filter(mergedDf.contains)
-          val idfOf = mergedDf.map { case (t, d) => t -> Bm25.idf(d, n) }
-          // per-field decode of term-pruned postings -> (doc, term, w·tf)
-          val wtfTagged = fields.zipWithIndex.map { case ((f, w), j) =>
-            idxOf(f).postings.filter(col("term").isin(termSeq: _*))
-              .flatMap { b =>
-                val base = b.bucket << graft.index.InvertedIndex.BucketBits
-                val ids = graft.index.PostingCodec.decodeDeltas(b.docs, b.cnt)
-                val tfs = graft.index.PostingCodec.decodeInts(b.tfs, b.cnt)
-                val t = b.term
-                ids.indices.iterator.map(i2 => (base + ids(i2), t, w * tfs(i2)))
-              }.toDF("doc_id", "term", "wtf").withColumn("fid", lit(j))
-          }
-          // candidate buckets across ALL fields (broadcast-sized: bounded
-          // by the query terms' posting blocks), so every matched doc gets
-          // every field's length contribution
-          val bkts = fields.map { case (f, _) =>
-            idxOf(f).postings.filter(col("term").isin(termSeq: _*))
-              .select(col("bucket")) }
-            .reduce(_ union _).distinct()
-          val wdlTagged = fields.zipWithIndex.map { case ((f, w), j) =>
-            idxOf(f).docLens
-              .join(bkts.hint("broadcast"), "bucket")
-              .as[graft.index.DocLenBlock]
-              .flatMap { b =>
-                val base = b.bucket << graft.index.InvertedIndex.BucketBits
-                val ids = graft.index.PostingCodec.decodeDeltas(b.ids, b.cnt)
-                val dls = graft.index.PostingCodec.decodeInts(b.dls, b.cnt)
-                ids.indices.iterator.map(i2 => (base + ids(i2), w * dls(i2)))
-              }.toDF("doc_id", "wdl").withColumn("fid", lit(j))
-          }
-          // tf' and dl' via per-field pivots (fixed field-order FP folds)
-          val fPivTf = fields.indices.map(j =>
-            max(when(col("fid") === j, col("wtf"))).as(s"_f$j"))
-          val tfC = wtfTagged.reduce(_ unionByName _)
-            .groupBy(col("doc_id"), col("term"))
-            .agg(fPivTf.head, fPivTf.tail: _*)
-            .select(col("doc_id"), col("term"),
-              fields.indices.map(j => coalesce(col(s"_f$j"), lit(0.0)))
-                .reduceLeft(_ + _).as("ctf"))
-          val fPivDl = fields.indices.map(j =>
-            max(when(col("fid") === j, col("wdl"))).as(s"_f$j"))
-          val dlC = wdlTagged.reduce(_ unionByName _)
-            .groupBy(col("doc_id"))
-            .agg(fPivDl.head, fPivDl.tail: _*)
-            .select(col("doc_id"),
-              fields.indices.map(j => coalesce(col(s"_f$j"), lit(0.0)))
-                .reduceLeft(_ + _).as("cdl"))
-          // idf' as a term-keyed literal CASE; the inner join to dl' is the
-          // liveness gate (deleted docs have no forward entry)
-          val idfCol = termSeq.tail.foldLeft(
-            when(col("term") === termSeq.head, lit(idfOf(termSeq.head)))) {
-            (c, t) => c.when(col("term") === t, lit(idfOf(t)))
-          }
-          val perTerm = tfC.join(dlC, "doc_id").where(col("cdl") > 0)
-            .select(col("doc_id"), col("term"),
-              (idfCol * (col("ctf") / (col("ctf") +
-                lit(1.2) * (lit(1 - 0.75) + lit(0.75) * col("cdl") / lit(avgdlC)))))
-                .as("s"))
-          val tPiv = termSeq.zipWithIndex.map { case (t, ti) =>
-            max(when(col("term") === t, col("s"))).as(s"_t$ti") }
-          val agg = perTerm.groupBy(col("doc_id")).agg(tPiv.head, tPiv.tail: _*)
-          val score = termSeq.indices
-            .map(ti => coalesce(col(s"_t$ti"), lit(0.0))).reduceLeft(_ + _)
-          val matchedTerms = termSeq.indices
-            .map(ti => when(col(s"_t$ti").isNotNull, 1).otherwise(0))
-            .reduceLeft(_ + _)
-          agg.where(matchedTerms >= gate).select(col("doc_id"), score.as("score"))
-        }
       case LexicalMulti(fields, terms, pmm @ (_: PhraseFields | _: PhrasePrefixFields)) =>
         // per-field positional query (match_phrase or phrase_prefix)
         // against each field's OWN positional index and BM25 stats — the
@@ -1530,7 +1383,7 @@ object Hybrid {
           case _                        => 0.0
         }
         val tagged = fields.zipWithIndex.map { case ((f, b), i2) =>
-          val fi = if (f == "text") src.idx else src.fieldIdx(f)
+          val fi = src.field(f)
           val fp = if (f == "text") src.positions.get else src.fieldPositions(f)
           val scored = pmm match {
             case PhraseFields(_, 0) => graft.query.Phrase.score(fi, fp, terms)
@@ -1561,7 +1414,7 @@ object Hybrid {
         // No per-bucket bound on the field scorers: dismax/sum can promote a
         // doc that is below any single field's bucket-local top-k.
         val tagged = fields.zipWithIndex.map { case ((f, b), i) =>
-          val fi = if (f == "text") src.idx else src.fieldIdx(f)
+          val fi = src.field(f)
           val fieldScore = mm match {
             case BoolPrefixFields(_) =>
               // bool_prefix: leading tokens as scored TermQueries, the last
@@ -1825,8 +1678,9 @@ object Hybrid {
 
   /** The collection plan — the shard side of the reference's lifecycle
    *  (search/collector/HybridTopScoreDocCollector.java:135-190): every
-   *  `match` clause (with no synonym rewrite) scored in ONE
-   *  [[Bm25.scoreBatch]] kernel pass, each other clause by its own scorer,
+   *  `match`-shaped clause ([[batchClause]]: match, synonyms,
+   *  `cross_fields`, `combined_fields`) scored in ONE [[Bm25.scoreBatch]]
+   *  kernel pass over all their fields, each other clause by its own scorer,
    *  the request filter as one semi-join over the subq-tagged union, then
    *  per partition one [[BoundedTopK]] of `depth` per sub-query, after the
    *  collapse keep of the best n per (sub-query, group) when collapsing
@@ -1837,12 +1691,7 @@ object Hybrid {
     // The per-bucket bound inside the BM25 scorer is only safe when nothing
     // after scoring can resurrect a below-bound doc (no filter, no collapse).
     val bound = if (filterDocs.isEmpty && q.collapse.isEmpty) q.depth else 0
-    val batch = q.subQueries.map {
-      case Lexical(terms, boosts) if !src.synonyms.exists(kv => terms.contains(kv._1)) =>
-        Some(Bm25.TermClause(terms, boosts))
-      case LexicalMsm(terms, m, boosts) => Some(Bm25.TermClause(terms, boosts, m))
-      case _ => None
-    }
+    val batch = q.subQueries.map(batchClause(src, _))
     def tagged(i: Int, df: DataFrame) = df.select(lit(i).as("subq"),
       $"doc_id".cast("long").as("doc_id"), $"score".cast("double").as("score"))
     // empty placeholders keep each batch clause's index = its sub-query's

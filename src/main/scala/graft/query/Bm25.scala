@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.index.{Index, InvertedIndex, PostingBlock, PostingCodec}
+import graft.index.{Index, InvertedIndex, PostingCodec}
 
 /**
  * Exact BM25 (k1=1.2, b=0.75 — the Lucene BM25Similarity defaults the
@@ -19,17 +19,17 @@ import graft.index.{Index, InvertedIndex, PostingBlock, PostingCodec}
  * Execution: every scorer here runs on [[BucketKernel]] (matched posting
  * blocks co-grouped per 4096-doc bucket with that bucket's doc-length
  * window; over a registry-resident index one Spark job with no exchange).
- * Every `match`-shaped scorer — [[scoreTerms]], [[scoreBatch]], [[topK]]
- * and [[topKWand]] — accumulates through ONE loop ([[Accumulator]]):
- * blocks in Spark's term order, `w * tfNorm` per clause holding the term,
- * then the msm and liveDocs gates. [[topK]] reduces each bucket through a
- * [[BoundedTopK]] heap before the global TakeOrderedAndProject; it is the
- * plain reference scorer. [[topKWand]] streams the same co-grouped buckets
+ * Every BM25 scorer here — `match`, synonym, `cross_fields` and
+ * `combined_fields` clauses ([[Clause]]), several fields in one co-group —
+ * accumulates through ONE loop ([[Accumulator]]): blocks in Spark's term
+ * order, `w * tfNorm` per posting for a `match` clause, a per-doc fold of
+ * slots for the others, then the msm and liveDocs gates. [[topK]] reduces
+ * each bucket through a [[BoundedTopK]] heap before the global
+ * TakeOrderedAndProject; it is the plain reference scorer. [[topKWand]] streams the same co-grouped buckets
  * with one running heap per partition and skips buckets whose block-max
  * upper bound cannot beat it (block-max WAND, reference:
  * query/HybridQueryScorer.java:155-176), scoring every other bucket
- * through that loop. [[synonymScore]] keeps its own loop: its tf is summed
- * across the synonym set before saturation.
+ * through that loop.
  */
 object Bm25 {
 
@@ -42,33 +42,112 @@ object Bm25 {
   def tfNorm(tf: Int, dl: Int, avgdl: Double): Double =
     tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
-  /** Fractional-frequency form — sloppy phrase freq is a sum of per-match
-   *  slop factors 1/(1+matchLength), a float in Lucene's PhraseScorer. */
-  def tfNorm(tf: Double, dl: Int, avgdl: Double): Double =
+  /** Fractional form — sloppy phrase freq is a sum of per-match slop
+   *  factors 1/(1+matchLength), a float in Lucene's PhraseScorer, and a
+   *  merged slot's tf and dl are weighted sums. */
+  def tfNorm(tf: Double, dl: Double, avgdl: Double): Double =
     tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
-  /** One `match`-shaped clause of a [[scoreBatch]]: OR over `terms`,
-   *  per-term multiplicative boosts, and the `operator: and` /
-   *  minimum_should_match gate of at least `minTermsMatch` DISTINCT matched
-   *  terms. A query term absent from the index can never match, so a clause
-   *  with fewer indexed terms than its gate matches nothing — Lucene's
-   *  MatchQuery-with-AND, where one zero-df MUST TermQuery empties it. */
-  case class TermClause(terms: Seq[String], boosts: Map[String, Double] = Map.empty,
-                        minTermsMatch: Int = 0)
+  /** One clause of a [[scoreBatch]]: the Lucene query a `match`-shaped
+   *  sub-query compiles to, scored whole inside the bucket, so a per-bucket
+   *  top-k of it is exact. */
+  sealed trait Clause
 
-  /** Per-clause BM25 weight maps (idf x boost) from one term-dictionary
-   *  lookup over every clause's terms — the Lucene TermStatistics analogue. */
-  private def termWeights(idx: Index, clauses: Seq[TermClause]): Seq[Map[String, Double]] = {
-    // non-positive boosts are rejected like Lucene rejects negative boosts:
-    // topKWand's bucket upper bound (sum of w x tfNorm(max_tf, min_dl)) only
-    // dominates real scores when every term weight is non-negative — a
-    // negative weight would make pruning silently drop true top-k docs
-    clauses.foreach(_.boosts.foreach { case (t, b) => require(b > 0, s"boost for '$t' must be > 0, got $b") })
-    val statsMap = idx.dfs(clauses.flatMap(_.terms))
+  /** `match`: OR over `terms`, per-term multiplicative boosts, and the
+   *  `operator: and` / minimum_should_match gate of at least
+   *  `minTermsMatch` DISTINCT matched terms. A query term absent from the
+   *  index can never match, so a clause with fewer indexed terms than its
+   *  gate matches nothing — Lucene's MatchQuery-with-AND, where one zero-df
+   *  MUST TermQuery empties it. Scores sum in Spark's term order. */
+  case class TermClause(terms: Seq[String], boosts: Map[String, Double] = Map.empty,
+                        minTermsMatch: Int = 0) extends Clause
+
+  /** Lucene SynonymQuery per query position: a (members, boost) group is
+   *  ONE pseudo-term, tf summed BEFORE saturation, df = the max member df,
+   *  times the boost; positions sum in order ([[graft.hybrid.LexicalSyn]]). */
+  case class SynonymClause(groups: Seq[(Seq[String], Double)]) extends Clause
+
+  /** [[graft.hybrid.CrossFields]]; the primary doc count blends the idf. */
+  case class CrossFieldsClause(fields: Seq[(Index, Double)], terms: Seq[String]) extends Clause
+
+  /** [[graft.hybrid.CombinedFields]]; N is the primary doc count. */
+  case class CombinedFieldsClause(fields: Seq[(Index, Double)], terms: Seq[String],
+                                  minTermsMatch: Int = 0) extends Clause
+
+  /** Field `f`'s `term`, `w` its BM25 weight in a best slot, its field
+   *  weight on tf in a merged one. */
+  private final case class Src(f: Int, term: String, w: Double)
+
+  /** One scored unit of a slotted clause. Best: each source saturates on
+   *  its own field, the max wins. Merged: tf' = Σ w·tf in source order
+   *  saturates once on the clause's dl', times `idf` and `boost`. */
+  private final case class Slot(srcs: Array[Src], best: Boolean, idf: Double, boost: Double)
+
+  /** A resolved clause: a [[TermClause]]'s `direct` (term -> idf x boost) on
+   *  field `f`, added per posting in block order; or `slots`, folded per doc
+   *  in slot order, merged slots saturating on dl' = Σ w·dl over `norms`
+   *  (field, weight) and `avgdl`. A doc needs max(`msm`, 1) matched terms. */
+  private final case class Plan(f: Int, direct: Map[String, Double], slots: Array[Slot],
+                                norms: Array[(Int, Double)], avgdl: Double, msm: Int)
+
+  /** The fields a batch reads (the indexes its live clauses use, in first
+   *  use order) and its [[Accumulator]], from one term-dictionary lookup
+   *  per index over every clause's terms — the Lucene TermStatistics
+   *  analogue. A clause that can match nothing has a null plan. */
+  private def accumulator(idx: Index, clauses: Seq[Clause]): (Seq[Index], Accumulator) = {
+    val dfs: Map[Index, Map[String, Long]] = clauses.flatMap[(Index, Seq[String])] {
+      case c: TermClause => Seq(idx -> c.terms)
+      case SynonymClause(groups) => Seq(idx -> groups.flatMap(_._1))
+      case CrossFieldsClause(fs, ts) => fs.map(_._1 -> ts)
+      case CombinedFieldsClause(fs, ts, _) => fs.map(_._1 -> ts)
+    }.filter(_._2.nonEmpty).groupBy(_._1).map { case (i, ts) => i -> i.dfs(ts.flatMap(_._2)) }
+      .withDefaultValue(Map.empty)
+    val used = scala.collection.mutable.ArrayBuffer.empty[Index]
+    def id(i: Index): Int =
+      used.indexOf(i) match { case -1 => used += i; used.size - 1; case k => k }
     val n = idx.stats.doc_count
-    clauses.map(c => c.terms.distinct.flatMap { t =>
-      statsMap.get(t).map(df => t -> idf(df, n) * c.boosts.getOrElse(t, 1.0))
-    }.toMap)
+    val plans = clauses.map {
+      case TermClause(ts, bs, msm) =>
+        // non-positive boosts are rejected like Lucene rejects negative
+        // boosts: topKWand's bucket upper bound (sum of w x tfNorm(max_tf,
+        // min_dl)) only dominates real scores when every term weight is
+        // non-negative — a negative weight would make pruning silently drop
+        // true top-k docs
+        bs.foreach { case (t, b) => require(b > 0, s"boost for '$t' must be > 0, got $b") }
+        val w = ts.distinct.flatMap(t =>
+          dfs(idx).get(t).map(df => t -> idf(df, n) * bs.getOrElse(t, 1.0))).toMap
+        if (w.isEmpty || w.size < msm) null else Plan(id(idx), w, null, null, 0.0, msm)
+      case SynonymClause(groups) =>
+        val present = groups.map { case (g, b) => (g.distinct.filter(dfs(idx).contains), b) }
+          .filter(_._1.nonEmpty)
+        if (present.isEmpty) null
+        else {
+          val f = id(idx)
+          Plan(f, null, present.map { case (g, b) =>
+            Slot(g.map(Src(f, _, 1.0)).toArray, best = false, idf(g.map(dfs(idx)).max, n), b)
+          }.toArray, Array(f -> 1.0), idx.stats.avgdl, 0)
+        }
+      case CrossFieldsClause(fs, ts) =>
+        val slots = ts.distinct.map(t => t -> fs.flatMap { case (i, b) => dfs(i).get(t).map((i, b, _)) })
+          .filter(_._2.nonEmpty).map { case (t, in) =>
+            val blend = idf(in.map(_._3).max, n)
+            Slot(in.map { case (i, b, df) =>
+              val own = idf(df, i.stats.doc_count)
+              Src(id(i), t, own * (b * blend / own))
+            }.toArray, best = true, 0.0, 1.0)
+          }
+        if (slots.isEmpty) null else Plan(-1, null, slots.toArray, null, 0.0, 0)
+      case CombinedFieldsClause(fs, ts, msm) =>
+        val merged = ts.distinct.map(t => t -> fs.filter(f => dfs(f._1).contains(t)))
+          .filter(_._2.nonEmpty)
+        if (merged.isEmpty || merged.size < msm) null
+        else Plan(-1, null, merged.map { case (t, in) =>
+          Slot(in.map { case (i, w) => Src(id(i), t, w) }.toArray, best = false,
+            idf(in.map(f => dfs(f._1)(t)).max, n), 1.0)
+        }.toArray, fs.map { case (i, w) => (id(i), w) }.toArray,
+          fs.map { case (i, w) => w * i.stats.sum_dl }.sum / n, msm)
+    }
+    (used.toSeq, new Accumulator(plans, used.map(_.stats.avgdl).toArray))
   }
 
   /**
@@ -93,127 +172,192 @@ object Bm25 {
       .toDF("clause", "doc_id", "score").select("doc_id", "score")
 
   /**
-   * Score a batch of term clauses in ONE [[BucketKernel]] pass — the
-   * reference's one disjunctive pass over every sub-query of a request
-   * (query/HybridQueryScorer.java:105-120). The postings scan is filtered
-   * once to the union of the clauses' terms, and every bucket runs the one
+   * Score a batch of clauses in ONE [[BucketKernel]] pass — the reference's
+   * one disjunctive pass over every sub-query of a request
+   * (query/HybridQueryScorer.java:105-120). Each field's postings scan is
+   * filtered once to the union of the clauses' terms in it; a batch over
+   * several fields (`cross_fields`, `combined_fields`) co-groups them in
+   * the same pass ([[BucketKernel.fields]]). Every bucket runs the one
    * accumulation loop ([[Accumulator]]), so each clause's scores are
    * bit-identical to its one-clause run, and no clause depends on another.
    *
+   * @param idx the primary field: [[TermClause]]s and [[SynonymClause]]s
+   *        read it, and its doc count is the merged collection size
    * @param limitPerBucket if >0, each clause keeps a [[BoundedTopK]] of that
    *        many candidates per bucket
    * @return (clause index, doc_id, score) — every doc each clause matches
    */
-  def scoreBatch(idx: Index, clauses: Seq[TermClause],
+  def scoreBatch(idx: Index, clauses: Seq[Clause],
                  limitPerBucket: Int = 0): Dataset[(Int, Long, Double)] = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val acc = new Accumulator(clauses, termWeights(idx, clauses), idx.stats.avgdl)
-    if (acc.terms.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
-    val matched = idx.postings.filter($"term".isin(acc.terms: _*))
+    val (fields, acc) = accumulator(idx, clauses)
+    if (acc.live.isEmpty) return spark.emptyDataset[(Int, Long, Double)]
+    val sides = fields.zip(acc.terms).map { case (i, ts) =>
+      i -> (if (ts.isEmpty) None else Some(i.postings.filter($"term".isin(ts: _*))))
+    }
     val lim = limitPerBucket
     val nC = clauses.size
-    BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
+    BucketKernel.fields(sides) { (bucket, blocksIt, dls) =>
       val base = bucket << InvertedIndex.BucketBits
       if (lim <= 0) {
         val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
-        acc.score(inTermOrder(blocksIt), dlArr)((c, d, s) => out += ((c, base + d, s)))
+        acc.score(inTermOrder(blocksIt), dls)((c, d, s, _) => out += ((c, base + d, s)))
         out.iterator
       } else {
         val tops = Array.fill(nC)(new BoundedTopK(lim))
-        acc.score(inTermOrder(blocksIt), dlArr)((c, d, s) => tops(c).offer(base + d, s))
+        acc.score(inTermOrder(blocksIt), dls)((c, d, s, _) => tops(c).offer(base + d, s))
         acc.live.iterator.flatMap(c => tops(c).iterator.map { case (id, s) => (c, id, s) })
       }
     }
   }
 
-  /** A bucket's matched blocks in Spark's term order. Shuffle arrival order
-   *  varies run to run, and another FP summation order shifts near-tied
-   *  scores by an ulp, enough to flip a rank at a page boundary. */
-  private def inTermOrder(blocks: Iterator[PostingBlock]): Array[PostingBlock] =
-    blocks.toArray.sortBy(b => UTF8String.fromString(b.term))
+  /** A bucket's matched blocks in Spark's term order, fields in batch order
+   *  within a term. Shuffle arrival order varies run to run, and another FP
+   *  summation order shifts near-tied scores by an ulp, enough to flip a
+   *  rank at a page boundary. */
+  private def inTermOrder(blocks: Iterator[FieldBlock]): Array[FieldBlock] =
+    blocks.toArray.sortBy(b => (UTF8String.fromString(b.term), b.field))
 
-  /** Receives (clause, local doc, score) from [[Accumulator.score]]; a
-   *  single-method type, so the lambdas passed for it box no argument. */
-  private trait Emit { def apply(clause: Int, local: Int, score: Double): Unit }
+  /** Receives (clause, local doc, score, matched terms) from
+   *  [[Accumulator.score]]; a single-method type, so the lambdas passed for
+   *  it box no argument. */
+  private trait Emit { def apply(clause: Int, local: Int, score: Double, matched: Int): Unit }
 
   /**
    * The one BM25 accumulation loop, over one bucket for a batch of clauses:
-   * each matched block is decoded once, tfNorm is computed once per
-   * posting, and every clause holding the term adds `w * tfNorm` to its own
-   * window; a doc then qualifies for a clause if it matched one of its
-   * terms, passes its msm gate and is live.
+   * each matched block is decoded once; a direct clause ([[TermClause]])
+   * adds `w * tfNorm` per posting (tfNorm once per posting for every clause
+   * holding the term), and a block a slot reads fills its source's dense tf
+   * window, from which each slotted clause folds its slots per doc. A doc
+   * qualifies for a clause if it matched enough of its terms and is live.
+   * `dls(f)` is field f's doc-length window.
    */
-  private final class Accumulator(clauses: Seq[TermClause], weights: Seq[Map[String, Double]],
-                                  avgdl: Double) extends Serializable {
-    private val msm = clauses.map(_.minTermsMatch).toArray
-    /** The clauses that can match: a weighted term, and at least as many
-     *  indexed terms as their gate. */
-    val live: Array[Int] = clauses.indices.filter(c =>
-      weights(c).nonEmpty && weights(c).size >= msm(c)).toArray
-    // per term: the clauses holding it, and their weights
-    private val byTerm: Map[String, (Array[Int], Array[Double])] =
-      live.toSeq.flatMap(c => weights(c).map { case (t, w) => (t, c, w) })
-        .groupBy(_._1).map { case (t, cws) => t -> ((cws.map(_._2).toArray, cws.map(_._3).toArray)) }
-    val terms: Seq[String] = byTerm.keys.toSeq
+  private final class Accumulator(plans: Seq[Plan], avgdls: Array[Double]) extends Serializable {
+    /** The clauses that can match. */
+    val live: Array[Int] = plans.indices.filter(plans(_) != null).toArray
+    // per (field, term): the direct clauses holding it, and their weights
+    private val byTerm: Map[(Int, String), (Array[Int], Array[Double])] =
+      live.toSeq.filter(plans(_).direct != null)
+        .flatMap(c => plans(c).direct.map { case (t, w) => ((plans(c).f, t), c, w) })
+        .groupBy(_._1).map { case (k, cws) => k -> ((cws.map(_._2).toArray, cws.map(_._3).toArray)) }
+    // the (field, term) sources slots read, each a tf window per bucket
+    private val windows: Map[(Int, String), Int] = live.toSeq.flatMap(c => Option(plans(c).slots)
+      .toSeq.flatten.flatMap(_.srcs.toSeq).map(s => (s.f, s.term))).distinct.zipWithIndex.toMap
+    private val slotWins: Seq[Array[Array[Int]]] = plans.map(p =>
+      if (p == null || p.slots == null) null else p.slots.map(_.srcs.map(s => windows((s.f, s.term)))))
+    /** Clause `c`'s (term -> weight), if it is direct. */
+    def weights(c: Int): Map[String, Double] = plans(c).direct
+    /** Per field, the terms its postings scan keeps. */
+    val terms: Array[Seq[String]] = Array.tabulate(avgdls.length)(f =>
+      (byTerm.keys ++ windows.keys).filter(_._1 == f).map(_._2).toSeq.distinct)
 
-    /** `emit(clause, local doc, score)` for every doc each live clause keeps
-     *  in this bucket, clause by clause, in local-id order. `blocks` come
-     *  in [[inTermOrder]]. */
-    def score(blocks: Array[PostingBlock], dlArr: Array[Int])(emit: Emit): Unit = {
+    /** `emit(clause, local doc, score, matched terms)` for every doc each
+     *  live clause keeps in this bucket, clause by clause, in local-id
+     *  order; a direct clause counts matched terms only when gated
+     *  (minTermsMatch >= 1). `blocks` come in [[inTermOrder]]. */
+    def score(blocks: Array[FieldBlock], dls: Array[Array[Int]])(emit: Emit): Unit = {
       val span = InvertedIndex.BucketSpan
-      val scores = new Array[Array[Double]](clauses.size)
-      val seen = new Array[Array[Boolean]](clauses.size)
+      val scores = new Array[Array[Double]](plans.size)
+      val seen = new Array[Array[Boolean]](plans.size)
       // distinct matched query terms per doc (one merged block per
       // (term, bucket), so one increment per term) — the msm gate
-      val cnts = new Array[Array[Int]](clauses.size)
-      live.foreach { c =>
+      val cnts = new Array[Array[Int]](plans.size)
+      live.filter(plans(_).direct != null).foreach { c =>
         scores(c) = new Array[Double](span)
         seen(c) = new Array[Boolean](span)
-        if (msm(c) > 1) cnts(c) = new Array[Int](span)
+        if (plans(c).msm >= 1) cnts(c) = new Array[Int](span)
       }
+      val tfWin = new Array[Array[Int]](windows.size)
       var i = 0
       while (i < blocks.length) {
         val b = blocks(i)
-        val (cs, ws) = byTerm(b.term)
         val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
         val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-        var j = 0
-        while (j < b.cnt) {
-          val local = ids(j)
-          val tfn = tfNorm(tfs(j), dlArr(local), avgdl)
-          var q = 0
-          while (q < cs.length) {
-            val c = cs(q)
-            scores(c)(local) += ws(q) * tfn
-            seen(c)(local) = true
-            if (cnts(c) != null) cnts(c)(local) += 1
-            q += 1
+        byTerm.get((b.field, b.term)).foreach { case (cs, ws) =>
+          val dlArr = dls(b.field)
+          val avgdl = avgdls(b.field)
+          var j = 0
+          while (j < b.cnt) {
+            val local = ids(j)
+            val tfn = tfNorm(tfs(j), dlArr(local), avgdl)
+            var q = 0
+            while (q < cs.length) {
+              val c = cs(q)
+              scores(c)(local) += ws(q) * tfn
+              seen(c)(local) = true
+              if (cnts(c) != null) cnts(c)(local) += 1
+              q += 1
+            }
+            j += 1
           }
-          j += 1
+        }
+        windows.get((b.field, b.term)).foreach { w =>
+          tfWin(w) = new Array[Int](span)
+          var j = 0
+          while (j < b.cnt) { tfWin(w)(ids(j)) = tfs(j); j += 1 }
         }
         i += 1
       }
       live.foreach { c =>
+        val p = plans(c)
+        val need = math.max(p.msm, 1)
         var d = 0
         while (d < span) {
-          // liveDocs gate — see BucketKernel: dl slot 0 == tombstoned
-          if (seen(c)(d) && dlArr(d) > 0 && (cnts(c) == null || cnts(c)(d) >= msm(c)))
-            emit(c, d, scores(c)(d))
+          if (p.direct != null) {
+            // liveDocs gate — see BucketKernel: dl slot 0 == tombstoned
+            if (seen(c)(d) && dls(p.f)(d) > 0 && (cnts(c) == null || cnts(c)(d) >= p.msm))
+              emit(c, d, scores(c)(d), if (cnts(c) == null) 0 else cnts(c)(d))
+          } else {
+            var dl = 0.0 // the merged slots' dl', in field order
+            var k = 0
+            while (p.norms != null && k < p.norms.length) { dl += p.norms(k)._2 * dls(p.norms(k)._1)(d); k += 1 }
+            var s = 0.0
+            var n = 0
+            k = 0
+            while (k < p.slots.length) {
+              val v = slot(p, p.slots(k), slotWins(c)(k), tfWin, dls, d, dl)
+              if (!v.isNaN) { s += v; n += 1 }
+              k += 1
+            }
+            if (n >= need) emit(c, d, s, n)
+          }
           d += 1
         }
       }
+    }
+
+    /** Slot `sl`'s score for doc `d` (`dl` its clause's dl'), NaN where it
+     *  does not match: no source posting, or not live in the field it
+     *  saturates on. */
+    private def slot(p: Plan, sl: Slot, wins: Array[Int], tfWin: Array[Array[Int]],
+                     dls: Array[Array[Int]], d: Int, dl: Double): Double = {
+      var v = Double.NaN
+      var tf = 0.0
+      var q = 0
+      while (q < wins.length) {
+        val win = tfWin(wins(q))
+        val f = sl.srcs(q).f
+        if (win != null && win(d) > 0) {
+          if (!sl.best) tf += sl.srcs(q).w * win(d)
+          else if (dls(f)(d) > 0) {
+            val x = sl.srcs(q).w * tfNorm(win(d), dls(f)(d), avgdls(f))
+            if (v.isNaN || x > v) v = x
+          }
+        }
+        q += 1
+      }
+      if (sl.best || tf == 0.0 || dl <= 0) v else (sl.idf * tfNorm(tf, dl, p.avgdl)) * sl.boost
     }
   }
 
   /**
    * `terms_set` scoring: the BM25 sum over a doc's matching query terms,
    * gated by a PER-DOC minimum-match count read from a stored numeric
-   * field (Lucene CoveringQuery with a LongValuesSource msm). The scored
-   * set comes from the standard fused scorer; the distinct-matched-term
-   * counts come from ONE extra decode of the SAME bucket-pruned blocks
-   * (term-id pairs, map-side-combined count) — per-query work stays
-   * posting-proportional, and the field join is matched-set-sized. A field
+   * field (Lucene CoveringQuery with a LongValuesSource msm). One
+   * [[BucketKernel]] pass scores the terms and counts each doc's distinct
+   * matched terms in the loop's msm counter (a gate of 1, which every
+   * matched doc passes), and the field join is matched-set-sized. A field
    * value <= 1 degrades to >= 1 (docs only enter through a matching term);
    * a value above the distinct term count can never be met.
    */
@@ -221,18 +365,16 @@ object Bm25 {
                     msmField: String): DataFrame = {
     val spark = idx.postings.sparkSession
     import spark.implicits._
-    val uniq = terms.distinct
-    val scored = scoreTerms(idx, uniq)
-    val matched = idx.postings.filter($"term".isin(uniq: _*))
-    val pairs = matched.flatMap { b =>
-      val base = b.bucket << InvertedIndex.BucketBits
-      val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-      (0 until b.cnt).iterator.map(i => (base + ids(i), b.term))
-    }.toDF("doc_id", "term")
-    val nm = pairs.groupBy($"doc_id")
-      .agg(countDistinct($"term").as("_nm"))
-    scored.join(nm, "doc_id")
-      .join(fields.select($"doc_id", col(msmField).cast("long").as("_need")), "doc_id")
+    val acc = accumulator(idx, Seq(TermClause(terms.distinct, minTermsMatch = 1)))._2
+    if (acc.live.isEmpty) return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
+    val scored = BucketKernel.fields(Seq(idx -> Some(idx.postings.filter($"term".isin(acc.terms(0): _*))))) {
+      (bucket, blocksIt, dls) =>
+        val base = bucket << InvertedIndex.BucketBits
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Int)]
+        acc.score(inTermOrder(blocksIt), dls)((_, d, s, n) => out += ((base + d, s, n)))
+        out.iterator
+    }.toDF("doc_id", "score", "_nm")
+    scored.join(fields.select($"doc_id", col(msmField).cast("long").as("_need")), "doc_id")
       .where($"_nm" >= greatest($"_need", lit(1L)))
       .select($"doc_id", $"score")
   }
@@ -288,56 +430,16 @@ object Bm25 {
       .limit(k)
   }
 
-  /** Lucene SynonymQuery scoring — what a `match` compiles to when the
-   *  analysis chain emits synonyms at one position: the synonym set scores
-   *  as ONE pseudo-term, tf = the SUM of member-term frequencies per doc
-   *  (summed BEFORE the tf saturation — the whole point: two synonyms
-   *  occurring once each must score like one term occurring twice, not like
-   *  two independent terms), df = the MAX member df (Lucene's blended
-   *  docFreq upper bound). Same [[BucketKernel]] and dl/liveness gates as
-   *  every scorer here. */
+  /** Lucene SynonymQuery scoring of one synonym set ([[SynonymClause]] of
+   *  one group): tf summed across the set before saturation, df = the max
+   *  member df. */
   def synonymTopK(idx: Index, synonyms: Seq[String], k: Int): DataFrame = {
+    require(synonyms.nonEmpty, "synonym set must be non-empty")
     require(k > 0, s"k must be > 0, got $k")
-    synonymScore(idx, synonyms)
+    scoreBatch(idx, Seq(SynonymClause(Seq(synonyms -> 1.0))), limitPerBucket = k)
+      .toDF("clause", "doc_id", "score").select("doc_id", "score")
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
-  }
-
-  /** Unbounded SynonymQuery scoring — the clause shape the synonym-graph
-   *  `match` rewrite composes per query position. */
-  def synonymScore(idx: Index, synonyms: Seq[String]): DataFrame = {
-    require(synonyms.nonEmpty, "synonym set must be non-empty")
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    val avgdl = idx.stats.avgdl
-    val dfs = idx.dfs(synonyms)
-    if (dfs.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val w = idf(dfs.values.max, idx.stats.doc_count)
-    val matched = idx.postings.filter($"term".isin(dfs.keys.toSeq: _*))
-    val span = InvertedIndex.BucketSpan
-    BucketKernel(idx, matched) { (bucket, blocksIt, dlArr) =>
-      val blocks = blocksIt.toArray.sortBy(b => (b.term, b.bucket))
-      val tfSum = new Array[Int](span)
-      var i = 0
-      while (i < blocks.length) {
-        val b = blocks(i)
-        val ids = PostingCodec.decodeDeltas(b.docs, b.cnt)
-        val tfs = PostingCodec.decodeInts(b.tfs, b.cnt)
-        var j = 0
-        while (j < b.cnt) { tfSum(ids(j)) += tfs(j); j += 1 }
-        i += 1
-      }
-      val base = bucket << InvertedIndex.BucketBits
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      var d = 0
-      while (d < span) {
-        if (tfSum(d) > 0 && dlArr(d) > 0)
-          out += ((base + d, w * tfNorm(tfSum(d), dlArr(d), avgdl)))
-        d += 1
-      }
-      out.iterator
-    }.toDF("doc_id", "score")
   }
 
   /**
@@ -369,22 +471,20 @@ object Bm25 {
     val spark = idx.postings.sparkSession
     import spark.implicits._
 
-    val clause = Seq(TermClause(terms, boosts))
-    val weights = termWeights(idx, clause)
-    val acc = new Accumulator(clause, weights, idx.stats.avgdl)
-    if (acc.terms.isEmpty)
+    val acc = accumulator(idx, Seq(TermClause(terms, boosts)))._2
+    if (acc.live.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    val weightPerTerm = weights.head
+    val weightPerTerm = acc.weights(0)
     val avgdl = idx.stats.avgdl
     val kk = k
 
-    val matched = idx.postings.filter($"term".isin(acc.terms: _*))
+    val matched = idx.postings.filter($"term".isin(acc.terms(0): _*))
     // the kernel's co-group hands each bucket's blocks over whole (a join's
     // skewed partition may be split, leaving scores partial). A bucket whose
     // docs are all deleted has no doc-length block.
-    val buckets = BucketKernel.grouped(idx, matched) { (bucket, blocksIt, dlIt) =>
+    val buckets = BucketKernel.grouped(matched, idx.docLens) { (bucket, blocksIt, dlIt) =>
       if (!dlIt.hasNext) Iterator.empty
-      else Iterator((bucket, inTermOrder(blocksIt), dlIt.next()))
+      else Iterator((bucket, inTermOrder(blocksIt.map(FieldBlock.of(0, _))), dlIt.next()))
     }
 
     val topped: Dataset[(Long, Double)] = buckets.mapPartitions { it =>
@@ -394,7 +494,7 @@ object Bm25 {
         group.foreach(b => ub += weightPerTerm(b.term) * tfNorm(b.max_tf, dlb.min_dl, avgdl))
         if (!(top.full && ub < top.threshold)) {
           val base = bucket << InvertedIndex.BucketBits
-          acc.score(group, BucketKernel.dlWindow(dlb))((_, d, s) => top.offer(base + d, s))
+          acc.score(group, Array(BucketKernel.dlWindow(dlb)))((_, d, s, _) => top.offer(base + d, s))
         }
       }
       top.iterator

@@ -2,8 +2,8 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.functions.when
-import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingCodec}
+import org.apache.spark.sql.functions.{col, lit, when}
+import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingBlock, PostingCodec}
 
 /**
  * The one per-bucket execution shape every BM25, phrase, span and
@@ -23,40 +23,74 @@ import graft.index.{DocLenBlock, Index, InvertedIndex, PosBlock, PostingCodec}
  *    matcher's own loop;
  *  - `dlArr(local) == 0` is the liveDocs gate: a live doc with any posting
  *    has dl >= 1, a tombstoned one (Deletes.maskDocLens) has no forward
- *    entry.
+ *    entry;
+ *  - several fields of one document set ([[fields]]) co-group as ONE pair
+ *    of field-tagged unions (matched blocks, doc lengths): every field is
+ *    laid out on the same `bucket` and partition count, and a union of
+ *    co-partitioned children keeps their partitioning, so the co-group
+ *    still reads the cached scans in place (Hadoop++'s layout).
  *
- * Matchers keep their own inner loops and block order, so float
- * accumulation order — and every score — is the matcher's alone.
+ * BM25 scorers share `Bm25`'s one loop, positional matchers keep their
+ * own; block order in a bucket, so every float sum, is the scorer's.
  */
 object BucketKernel {
+
+  // derived once: a product encoder is built by reflection
+  private implicit val postingEncoder: Encoder[PostingBlock] = Encoders.product[PostingBlock]
+  private implicit val lensEncoder: Encoder[DocLenBlock] = Encoders.product[DocLenBlock]
+  private implicit val fieldBlockEncoder: Encoder[FieldBlock] = Encoders.product[FieldBlock]
+  private implicit val fieldLensEncoder: Encoder[FieldLens] = Encoders.product[FieldLens]
 
   /** Per-bucket call: `f(bucket, blocks, dlArr)` for every bucket holding at
    *  least one matched block; `dlArr` is the bucket's dense doc-length
    *  window indexed by local doc id. */
   def apply[B: Encoder, O: Encoder](idx: Index, matched: Dataset[B])(
       f: (Long, Iterator[B], Array[Int]) => Iterator[O]): Dataset[O] =
-    grouped(idx, matched) { (bucket, blocksIt, dlIt) =>
+    grouped(matched, idx.docLens) { (bucket, blocksIt, dlIt) =>
       val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-      dlIt.foreach(decodeInto(dlArr, _))
+      dlIt.foreach(l => decodeInto(dlArr, l.ids, l.dls, l.cnt))
       f(bucket, blocksIt, dlArr)
     }
 
-  /** The co-group itself, doc-length blocks undecoded. Buckets arrive in
-   *  key order within a partition, each whole in one task (adaptive
-   *  execution splits skewed join partitions, never a co-group's). */
-  def grouped[B: Encoder, O: Encoder](idx: Index, matched: Dataset[B])(
-      f: (Long, Iterator[B], Iterator[DocLenBlock]) => Iterator[O]): Dataset[O] = {
-    val spark = idx.postings.sparkSession
+  /** Several fields in one co-group: `sides(j)` is field j's index and its
+   *  matched blocks (None: only its doc lengths are read); `f(bucket,
+   *  blocks, dls)` gets the blocks tagged with their field and `dls(j)`,
+   *  field j's dense doc-length window. One side is [[apply]], untagged in
+   *  the plan. */
+  def fields[O: Encoder](sides: Seq[(Index, Option[Dataset[PostingBlock]])])(
+      f: (Long, Iterator[FieldBlock], Array[Array[Int]]) => Iterator[O]): Dataset[O] = {
+    def tagged(j: Int, ds: Dataset[_], cols: Seq[String]) = ds.select(lit(j).as("field") +: cols.map(col): _*)
+    if (sides.size == 1)
+      apply(sides.head._1, sides.head._2.get)((bucket, blocksIt, dlArr) =>
+        f(bucket, blocksIt.map(FieldBlock.of(0, _)), Array(dlArr)))
+    else grouped(
+      sides.zipWithIndex.flatMap { case ((_, m), j) => m.map(tagged(j, _, postingEncoder.schema.fieldNames)) }
+        .reduce(_ union _).as[FieldBlock],
+      sides.zipWithIndex.map { case ((i, _), j) => tagged(j, i.docLens, Seq("bucket", "cnt", "ids", "dls")) }
+        .reduce(_ union _).as[FieldLens]) { (bucket, blocksIt, lensIt) =>
+      val dls = Array.fill(sides.size)(new Array[Int](InvertedIndex.BucketSpan))
+      lensIt.foreach(l => decodeInto(dls(l.field), l.ids, l.dls, l.cnt))
+      f(bucket, blocksIt, dls)
+    }
+  }
+
+  /** The co-group itself, doc-length blocks undecoded; buckets without
+   *  matched blocks are skipped. Buckets arrive in key order within a
+   *  partition, each whole in one task (adaptive execution splits skewed
+   *  join partitions, never a co-group's). */
+  def grouped[B: Encoder, L: Encoder, O: Encoder](matched: Dataset[B], lens: Dataset[L])(
+      f: (Long, Iterator[B], Iterator[L]) => Iterator[O]): Dataset[O] = {
+    val spark = matched.sparkSession
     import spark.implicits._
     // co-group keys must have one type, and a parquet read's `bucket` is
     // nullable while an in-memory table's is not: a mixed pair groups its
     // non-nullable side on a nullable copy (a computed key, so it shuffles)
-    val mixed = matched.schema("bucket").nullable != idx.docLens.schema("bucket").nullable
+    val mixed = matched.schema("bucket").nullable != lens.schema("bucket").nullable
     def keyed[T: Encoder](ds: Dataset[T]) =
       (if (!mixed || ds.schema("bucket").nullable) ds
        else ds.withColumn("bucket", when($"bucket".isNotNull, $"bucket")).as[T])
         .groupBy($"bucket").as[Long, T]
-    keyed(matched).cogroup(keyed(idx.docLens)) { (bucket, blocksIt, dlIt) =>
+    keyed(matched).cogroup(keyed(lens)) { (bucket, blocksIt, dlIt) =>
       if (!blocksIt.hasNext) Iterator.empty else f(bucket, blocksIt, dlIt)
     }
   }
@@ -64,15 +98,16 @@ object BucketKernel {
   /** Dense doc-length window of one bucket, indexed by local doc id. */
   def dlWindow(dlb: DocLenBlock): Array[Int] = {
     val dlArr = new Array[Int](InvertedIndex.BucketSpan)
-    decodeInto(dlArr, dlb)
+    decodeInto(dlArr, dlb.ids, dlb.dls, dlb.cnt)
     dlArr
   }
 
-  private def decodeInto(dlArr: Array[Int], dlb: DocLenBlock): Unit = {
-    val ids = PostingCodec.decodeDeltas(dlb.ids, dlb.cnt)
-    val dls = PostingCodec.decodeInts(dlb.dls, dlb.cnt)
+  private def decodeInto(dlArr: Array[Int], idBytes: Array[Byte], dlBytes: Array[Byte],
+                         cnt: Int): Unit = {
+    val ids = PostingCodec.decodeDeltas(idBytes, cnt)
+    val dls = PostingCodec.decodeInts(dlBytes, cnt)
     var i = 0
-    while (i < dlb.cnt) { dlArr(ids(i)) = dls(i); i += 1 }
+    while (i < cnt) { dlArr(ids(i)) = dls(i); i += 1 }
   }
 
   /** A bucket's position blocks decoded per term: term -> (local, positions)
@@ -114,6 +149,20 @@ object BucketKernel {
       }
     }
 }
+
+/** A matched posting block of field `field` in a [[BucketKernel.fields]]
+ *  co-group. */
+case class FieldBlock(field: Int, term: String, bucket: Long, cnt: Int, max_tf: Int,
+                      sum_tf: Long, docs: Array[Byte], tfs: Array[Byte])
+
+object FieldBlock {
+  def of(field: Int, b: PostingBlock): FieldBlock =
+    FieldBlock(field, b.term, b.bucket, b.cnt, b.max_tf, b.sum_tf, b.docs, b.tfs)
+}
+
+/** Field `field`'s doc-length block of one bucket in a
+ *  [[BucketKernel.fields]] co-group. */
+case class FieldLens(field: Int, bucket: Long, cnt: Int, ids: Array[Byte], dls: Array[Byte])
 
 /** Bounded top-k collector by (score desc, doc_id asc) under Spark SQL's
  *  double order: a min-heap of the best `k` (doc_id, score) pairs seen,

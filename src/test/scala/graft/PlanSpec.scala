@@ -165,18 +165,29 @@ class PlanSpec extends SparkSpec {
       s"jobs per call: measured $measured")
   }
 
-  test("cross_fields scores each field in one bucket-kernel pass") {
+  test("multi-field and synonym clauses score in one bucket-kernel pass over resident scans") {
     val title = IndexCache.documentsTitle(spark, "/root/testdata/sf0.001")
-    val src = HybridSources(idx, fieldIdx = Map("title" -> title))
-    // three terms indexed in both fields: one CoGroup per field, not one per
-    // (field, term)
+    val src = HybridSources(idx, fieldIdx = Map("title" -> title),
+      synonyms = Map("join" -> Seq("merge")))
+    // three terms indexed in both fields: both fields co-group once, not
+    // once per field (or per (field, term))
     val terms = (idx.termStats.collect().map(_.term).toSet intersect
       title.termStats.collect().map(_.term).toSet).toSeq.sorted.take(3)
     assert(terms.size == 3, terms)
-    val df = Hybrid.scoreClause(src,
-      LexicalMulti(Seq("text" -> 1.0, "title" -> 2.0), terms, CrossFields), 0)
-    assert(Plans.collect(df.queryExecution.executedPlan) { case c: CoGroupExec => c }.size == 2,
-      plan(df).take(3000))
+    val fields = Seq("text" -> 1.0, "title" -> 2.0)
+    val rows: Seq[(String, SubQuery)] = Seq(
+      "cross_fields" -> LexicalMulti(fields, terms, CrossFields),
+      "combined_fields" -> LexicalMulti(fields, terms, CombinedFields()),
+      "synonym match" -> Lexical(Seq("join", "hash")))
+    for ((name, sq) <- rows) {
+      val q = () => Hybrid.scoreClause(src, sq, 0)
+      val df = q()
+      assert(Plans.collect(df.queryExecution.executedPlan) { case c: CoGroupExec => c }.size == 1,
+        s"$name: " + plan(df).take(3000))
+      inPlace(name, df)
+      q().collect() // warm
+      assert(jobsOf(q().collect())._2 == 1, name)
+    }
   }
 
   test("IVF probe prunes assignment partitions at the storage layer") {

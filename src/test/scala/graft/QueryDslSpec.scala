@@ -1081,4 +1081,19 @@ class QueryDslSpec extends SparkSpec {
         """{"query":{"hybrid":{"queries":[{"term":{"t":"a"}}]}},
           |"search_pipeline":{"normalization":{"technique":"bogus"}}}""".stripMargin))
   }
+
+  test("a repeated match token scores once, with or without a synonym rewrite") {
+    import spark.implicits._
+    val docs = Seq((0L, "fast join x"), (1L, "slow join join"), (2L, "join"),
+      (3L, "fast slow"), (4L, "x y")).toDF("doc_id", "text")
+    val idx2 = graft.index.InvertedIndex.build(docs, "doc_id", "text")
+    def run(src: HybridSources, text: String): Seq[(Long, Double)] =
+      QueryDsl.execute(src, s"""{"query":{"bool":{"must":[{"match":{"text":"$text"}}]}},"size":10}""",
+        docs).select("doc_id", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val syn = HybridSources(idx2, fields = Some(docs), synonyms = Map("fast" -> Seq("slow")))
+    val plain = HybridSources(idx2, fields = Some(docs))
+    assert(run(syn, "fast join").size == 4)
+    assert(run(syn, "fast join join") == run(syn, "fast join"))
+    assert(run(plain, "join join") == run(plain, "join"))
+  }
 }
